@@ -2,7 +2,7 @@
 """Benchmark of the TopNotch plan path, the batch catalog and streaming
 replay.
 
-    python3 perfbench/run.py --workload plans --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload plans --seed 1 --seconds 30 --trace 0
     python3 perfbench/run.py --smoke
 
 Run from the root of a checkout. One run is one driver process on
@@ -59,10 +59,16 @@ LAYERS = {
     "python.sent_mb": "MB", "python.returned_mb": "MB",
     "trace.overhead_s": "s",
 }
-# Seconds one timed pass takes on a 4-core host; the run makes
+# Seconds of ``--seconds`` that one timed pass stands for; a run makes
 # round(seconds / this) passes, so every run of a workload has the same
-# number of samples whatever its speed.
-NOMINAL_PASS_S = {"plans": 10.0, "catalog_batch": 7.0, "streaming_replay": 9.5}
+# number of samples whatever its speed. A pass takes 7-12 s on a 4-core
+# host for plans and catalog_batch and 9-15 s for streaming_replay. At 30
+# seconds plans makes four passes: its first timed pass is still warming
+# and its tail op is one plan, whose fastest of two warm runs still moved
+# with the host's load. Two streaming passes give six micro-batches each
+# and were steady enough; a third would not fit the time of ten runs per
+# workload on two commits.
+SECONDS_PER_PASS = {"plans": 7.5, "catalog_batch": 10.0, "streaming_replay": 15.0}
 DRIVER_MEMORY = "2g"
 
 
@@ -339,19 +345,20 @@ def measure(args, spark, wl, cpus, conf) -> int:
     wl.report_bytes = 0
     print(f"warm-up {time.perf_counter() - t_warm:.1f} s", file=sys.stderr)
 
-    passes = max(1, round(args.seconds / NOMINAL_PASS_S[wl.name]))
+    passes = max(1, round(args.seconds / SECONDS_PER_PASS[wl.name]))
     # a traced run brackets its traced passes with plain ones, so the
     # overhead is not confused with the warming of the first passes
     kinds = ["plain"] * passes
     if args.trace:
-        half = max(1, passes // 2)
-        kinds = ["plain"] * half + ["traced"] * max(1, passes - half) + ["plain"] * half
+        half = max(1, passes // 4)
+        kinds = ["plain"] * half + ["traced"] * max(1, passes - 2 * half) + ["plain"] * half
     plain, traced = kinds.count("plain"), kinds.count("traced")
     tracer = None
     walls: dict[str, list[float]] = {"plain": [], "traced": []}
     lat: dict[str, list[float]] = {}
     pass_groups: list[list[str]] = []
     pass_streams: list[tuple[list[str], list[dict]]] = []
+    steal0, ticks0 = probes.host_cpu_ticks()
     with probes.RssSampler() as rss:
         for k, kind in enumerate(kinds):
             if kind == "traced" and tracer is None:
@@ -389,6 +396,7 @@ def measure(args, spark, wl, cpus, conf) -> int:
             if kind == "plain":
                 pass_streams.append(progress.since(mark))
             wl.between_passes()
+    steal1, ticks1 = probes.host_cpu_ticks()
     print(f"timed passes {walls}", file=sys.stderr)
     settings = {
         "workload": wl.name, "seed": args.seed, "seconds": args.seconds,
@@ -398,6 +406,9 @@ def measure(args, spark, wl, cpus, conf) -> int:
         "passes": {"plain": plain, "traced": traced},
         "ops_per_pass": len(wl.pass_order()),
         "fail_ratio": failed / attempted,
+        # share of the host's CPU time the hypervisor gave to other
+        # guests during the timed passes: a busy host reads high here
+        "host_steal_share": (steal1 - steal0) / max(1, ticks1 - ticks0),
     }
     if args.trace:
         overhead = median(walls["traced"]) - median(walls["plain"])
@@ -496,7 +507,7 @@ def smoke() -> int:
     """Each workload once, untraced and traced: every metric present
     with its unit and no operation failed."""
     bad = 0
-    for name in NOMINAL_PASS_S:
+    for name in SECONDS_PER_PASS:
         for tr, units in ((0, E2E), (1, LAYERS)):
             cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", name,
                    "--seed", "1", "--seconds", "1", "--trace", str(tr)]
@@ -518,9 +529,9 @@ def smoke() -> int:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", choices=sorted(NOMINAL_PASS_S))
+    ap.add_argument("--workload", choices=sorted(SECONDS_PER_PASS))
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--seconds", type=int, default=30)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--smoke", action="store_true",
                     help="run every workload once and check the metrics it emits")
