@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -52,3 +53,17 @@ def df_equals(df1, df2, ignore_order=True) -> bool:
         key = lambda t: tuple(repr(x) for x in t)  # noqa: E731
         r1, r2 = sorted(r1, key=key), sorted(r2, key=key)
     return r1 == r2
+
+
+def count_jobs(spark, fn):
+    """(result of ``fn()``, Spark jobs it scheduled), counted under a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

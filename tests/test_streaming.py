@@ -583,3 +583,35 @@ def test_python_state_rounding_matches_spark_round(spark):
             )
         )
         assert row["r"] == py, v
+
+
+@pytest.mark.parametrize("runner", ["drift", "wasserstein", "assertions"])
+def test_failed_foreach_batch_leaves_no_checkpoint(
+    spark, tmp_path, monkeypatch, runner
+):
+    """A micro-batch body that raises fails the query; the run's
+    single-use checkpoint is still deleted."""
+    from pyspark.errors import StreamingQueryException
+
+    from topnotch_spark.streaming import ops
+
+    root = tmp_path / "ckpt"
+    root.mkdir()
+    monkeypatch.setattr(ops, "DEFAULT_CHECKPOINT_ROOT", str(root))
+    src = str(tmp_path / "src")
+    spark.range(20).selectExpr("id AS event_id", "CAST(id AS double) AS x") \
+        .coalesce(1).write.parquet(src)
+    stream = ops.stream_from_parquet(spark, src)
+    # the reference has "value"; the stream lacks it, so each batch's
+    # bucket count (or assertion query) raises inside foreachBatch
+    ref = spark.range(20).selectExpr("CAST(id AS double) AS value")
+    run = {
+        "drift": lambda: ops.run_streaming_drift(ref, stream, "value"),
+        "wasserstein": lambda: ops.run_streaming_wasserstein(ref, stream, "value"),
+        "assertions": lambda: ops.run_streaming_assertions(
+            stream, [AssertionRule(query="value > 0", description="v", threshold=0.0)]
+        ),
+    }[runner]
+    with pytest.raises(StreamingQueryException):
+        run()
+    assert os.listdir(root) == []

@@ -24,6 +24,8 @@ ngram-jaccard / embedding-cosine), ``similarity`` (brute-force + LSH ANN),
 assertion mode.
 """
 
+import sys
+
 __version__ = "0.1.0"
 
 
@@ -66,12 +68,16 @@ def _install_zipimport_cache_guard() -> None:
         if getattr(self, "_tn_zipdir_key", None) == key:
             return
         orig(self)
-        self._tn_zipdir_key = key
+        # a failed read drops the archive from the directory cache: do
+        # not pin its stat, so the next call re-probes it
+        if self.archive in zipimport._zip_directory_cache:
+            self._tn_zipdir_key = key
 
     invalidate_caches._tn_stat_guard = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-_install_zipimport_cache_guard()
+if sys.version_info < (3, 12):
+    _install_zipimport_cache_guard()
 
 from topnotch_spark.session import get_spark  # noqa: E402,F401

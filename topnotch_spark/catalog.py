@@ -19,6 +19,7 @@ from topnotch_spark.operators.assertions import (
 )
 from topnotch_spark.operators.diff import DiffParams, DiffSide, create_diff
 from topnotch_spark.operators.view import ViewParams, create_view
+from topnotch_spark.sources.inputs import read_parquet
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -31,37 +32,6 @@ BM25_QUERIES = [
     (2, "hash join table"),
     (3, "stream filter sort"),
 ]
-
-
-# Schema cache for the immutable source tables, keyed on the file's
-# identity (path, mtime_ns, size) — the role a table catalog/metastore
-# plays at real scale. Without it every load() re-reads the parquet
-# footer to infer the schema (measured 115-220 ms per call vs 64 ms
-# with an explicit schema): ~215 load sites x 4 bench executions is
-# tens of seconds of pure driver-side metadata sniffing per bench run,
-# and at 100 TB footer-sampling a table on every query is exactly the
-# repeated-listing cost guide §6 says to cache. ONLY the schema is
-# cached — never data, never plans: every invocation still reads and
-# computes from the parquet files. A changed file (different
-# mtime/size) misses the key and re-infers, so stale schemas are
-# impossible; non-stat-able paths skip the cache entirely.
-_SCHEMA_CACHE: dict = {}
-
-
-def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    import os
-
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return spark.read.parquet(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -77,7 +47,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = _read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -89,7 +59,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # without shifting it, matching DuckDB's naive TIMESTAMP.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return _read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # --------------------------------------------------------------------------

@@ -25,10 +25,6 @@ def tokens(col: Column | str) -> Column:
     )
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def token_char_offsets(col: Column | str) -> Column:
     """Per-token (s, e) CHARACTER offsets of every whitespace-delimited
     token in the RAW, un-normalized string — index-aligned with
@@ -86,10 +82,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     it upper-bounds and tracks real BPE token counts without a vocab."""
     c = F.col(col) if isinstance(col, str) else col
     return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
-
-
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
 
 
 def sorted_token_fingerprint(col: Column | str) -> Column:

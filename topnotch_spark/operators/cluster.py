@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from topnotch_spark.sources.inputs import write_read_back
+
 
 def _truncate_round(
     df: DataFrame, prev_path: str | None, eager: bool = True
@@ -60,8 +62,7 @@ def _truncate_round(
         return df.localCheckpoint(eager=eager), None
     _d._CHECKPOINT_SEQ += 1
     path = f"{_d._CHECKPOINT_DIR.rstrip('/')}/cc_round_{_d._CHECKPOINT_SEQ}"
-    df.write.mode("overwrite").parquet(path)
-    out = df.sparkSession.read.parquet(path)
+    out = write_read_back(df, path)
     if prev_path is not None:
         _d._delete_path(out, prev_path)
     return out, path

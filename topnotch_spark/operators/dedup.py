@@ -42,12 +42,18 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from topnotch_spark.functions.text import sorted_token_fingerprint, tokens
 from topnotch_spark.functions.vectors import srp_bucket
+from topnotch_spark.sources.inputs import (
+    nullable,
+    read_parquet,
+    record_schema,
+    write_read_back,
+)
 
 # Intermediates persisted by the operators below (and by
 # temporal.resample_timeseries, which shares this registry), in creation
@@ -156,8 +162,7 @@ def _persist(df: DataFrame) -> DataFrame:
     if _CHECKPOINT_DIR is not None:
         _CHECKPOINT_SEQ += 1
         path = f"{_CHECKPOINT_DIR.rstrip('/')}/tn_ckpt_{_CHECKPOINT_SEQ}"
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
+        out = write_read_back(df, path)
         _PERSISTED.append(out)
         _CHECKPOINTED[id(out)] = path
         return out
@@ -1560,23 +1565,55 @@ def build_dedup_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _read_partitioned_index(spark, index_path: str) -> DataFrame:
-    """Read a bucket/pfx-partitioned on-disk index with partition-value
-    type inference DISABLED: all-digit hex partition values like "00"
-    must come back as the 2-char strings they were written as, not
-    integer 0. An inferred-int partition column silently SPLITS the
-    layout on the next upsert — the merged rows coerce back to string
-    "0" and rewrite under bucket=0 while the stale bucket=00 directory
-    survives the dynamic overwrite, duplicating every key in it."""
+@contextmanager
+def _string_partitions(spark) -> Iterator[None]:
+    """Partition-value type inference DISABLED for the block: all-digit
+    hex partition values like "00" must come back as the 2-char strings
+    they were written as, not integer 0. An inferred-int partition
+    column silently SPLITS the layout on the next upsert — the merged
+    rows coerce back to string "0" and rewrite under bucket=0 while the
+    stale bucket=00 directory survives the dynamic overwrite,
+    duplicating every key in it."""
     conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     prev = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
     try:
-        # schema + partition discovery happen eagerly at read time, so
-        # restoring the conf afterwards cannot re-infer
-        return spark.read.parquet(index_path)
+        yield
     finally:
         spark.conf.set(conf_key, prev)
+
+
+def _read_partitioned_index(spark, index_path: str) -> DataFrame:
+    """Read a bucket/pfx-partitioned on-disk index with string partition
+    values (:func:`_string_partitions`), the schema served by the
+    parquet schema registry when the index is unchanged since it was
+    last read or written. Schema and partition discovery happen eagerly
+    at read time, so restoring the conf afterwards cannot re-infer."""
+    with _string_partitions(spark):
+        return read_parquet(spark, index_path)
+
+
+def _index_schema(schema, part_col: str):
+    """What :func:`_read_partitioned_index` returns for an index written
+    partitioned by ``part_col`` from a frame of ``schema``: the data
+    columns nullable and in order, then the string partition column."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    data = [f for f in nullable(schema).fields if f.name != part_col]
+    return StructType(data + [StructField(part_col, StringType(), True)])
+
+
+def _record_index_schema(spark, index_path: str, schema) -> None:
+    """Register the schema an index writer committed, for the reads of
+    :func:`_read_partitioned_index`; ``None`` drops the entry instead.
+
+    Spark infers a directory's schema from its path-first data file
+    alone, so a rewrite of some partitions may record only what every
+    candidate first file agrees on: writers pass the committed schema
+    only when it equals the schema read before the rewrite and no
+    partition directory disappeared."""
+    with _string_partitions(spark):
+        record_schema(spark, index_path, schema)
 
 
 INDEX_META_FILE = "_tn_meta.json"
@@ -1720,6 +1757,17 @@ def _staged_partition_upsert(
             F.lit(n).cast("long").alias("n_entries_written"),
         )
 
+    # the rows written are counted by the write itself, not by a job of
+    # their own: observed after the exchange, i.e. in the write's result
+    # stage, where Spark applies each partition's count once even when a
+    # task is retried or speculated
+    written = Observation()
+
+    def _counted(merged: DataFrame) -> DataFrame:
+        return merged.repartition(part_col).observe(
+            written, F.count(F.lit(1)).alias("n")
+        )
+
     try:
         # ONE aggregation job computes the touched-partition list AND
         # every layout-probe value, fully materializing the entries
@@ -1739,25 +1787,26 @@ def _staged_partition_upsert(
             # dir then receives ONE file instead of one per shuffle
             # task (32 tasks x 256 dirs = 8k tiny files otherwise —
             # commit overhead dominates the write)
-            merged.repartition(part_col).write.partitionBy(
+            _counted(merged).write.partitionBy(
                 part_col
             ).mode("overwrite").parquet(index_path)
             if meta is not None:
                 write_index_meta(spark, index_path, meta)
-            stats = merged.agg(
-                F.count_distinct(part_col).alias("p"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            return _stats_row(stats["p"], stats["n"])
+            if parts:  # an index with no data file has no schema
+                _record_index_schema(
+                    spark, index_path, _index_schema(merged.schema, part_col)
+                )
+            # the merged rows span exactly the touched partitions
+            return _stats_row(len(parts), written.get["n"])
         if meta is not None:
             _check_index_meta(spark, index_path, meta, "upsert")
         if not parts:
             return _stats_row(0, 0)
-        old = _read_partitioned_index(spark, index_path).filter(
-            F.col(part_col).isin(parts)
-        )
+        index = _read_partitioned_index(spark, index_path)
         merged = merge(
-            old.select(*entries.columns).unionByName(entries)
+            index.filter(F.col(part_col).isin(parts))
+            .select(*entries.columns)
+            .unionByName(entries)
         )
         staging = index_path.rstrip("/") + "__staging__"
         spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
@@ -1770,14 +1819,7 @@ def _staged_partition_upsert(
             # its own (each staged file holds whole partition-value
             # groups, so every write task still emits one file per
             # value it owns — same file count, one less shuffle).
-            merged.repartition(part_col).write.mode("overwrite").parquet(
-                staging
-            )
-            staged = spark.read.parquet(staging)
-            stats = staged.agg(
-                F.count_distinct(part_col).alias("p"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
+            staged = write_read_back(_counted(merged), staging)
             prev_mode = spark.conf.get(
                 "spark.sql.sources.partitionOverwriteMode", "static"
             )
@@ -1794,7 +1836,12 @@ def _staged_partition_upsert(
                 )
         finally:
             fs.delete(spath, True)
-        return _stats_row(stats["p"], stats["n"])
+        committed = _index_schema(staged.schema, part_col)
+        _record_index_schema(
+            spark, index_path, committed if committed == index.schema else None
+        )
+        # old ∪ new rows span exactly the touched partitions
+        return _stats_row(len(parts), written.get["n"])
     finally:
         entries.unpersist()
 
@@ -2371,10 +2418,12 @@ def delete_from_index(
 
     ``ids`` is a one-column frame of ids to retire (column ``id_col``).
     Execution: one scan of the SIGNATURE index (never the corpus — at
-    100 TB the index is the small table) broadcast-semi-joined with the
-    retired ids locates the touched partitions (bounded driver list);
-    only those partitions are then re-read, anti-joined, staged to a
-    sibling temp path (the upsert lineage-break discipline), and
+    100 TB the index is the small table) left-joined with the broadcast
+    retired ids and grouped by partition yields, in one job, the touched
+    partitions, the rows deleted and which touched partitions keep rows
+    (bounded driver data: one row per touched partition). Only the
+    partitions that keep rows are then re-read, anti-joined, staged to
+    a sibling temp path (the upsert lineage-break discipline), and
     rewritten via dynamic partition overwrite. A partition whose rows
     ALL retire gets its directory deleted explicitly — dynamic
     overwrite only replaces partitions present in the written data, so
@@ -2382,8 +2431,6 @@ def delete_from_index(
     Untouched partitions are never read or rewritten (mtime-tested).
     Deleting ids not in the index is a no-op (idempotent replays).
     Returns one row: (n_partitions_touched, n_entries_deleted)."""
-    from pyspark import StorageLevel
-
     meta = read_index_meta(spark, index_path)
     df = _read_partitioned_index(spark, index_path)
     part_col = (meta or {}).get("part_col") or next(
@@ -2396,13 +2443,24 @@ def delete_from_index(
             f"{df.columns})"
         )
     rid = ids.select(F.col(id_col).alias("index_id")).distinct()
-    touched = [
-        r[part_col]
-        for r in df.join(F.broadcast(rid), "index_id", "left_semi")
-        .select(part_col)
-        .distinct()
+    # rid is distinct, so the left join neither drops nor repeats rows
+    per_part = (
+        df.join(
+            F.broadcast(rid.withColumn("__del__", F.lit(True))),
+            "index_id",
+            "left",
+        )
+        .groupBy(part_col)
+        .agg(
+            F.count("__del__").alias("n_del"),
+            F.count(F.when(F.col("__del__").isNull(), 1)).alias("n_keep"),
+        )
+        .filter(F.col("n_del") > 0)
         .collect()
-    ]
+    )
+    touched = [r[part_col] for r in per_part]
+    kept_parts = [r[part_col] for r in per_part if r["n_keep"] > 0]
+    n_deleted = sum(r["n_del"] for r in per_part)
 
     def _stats_row(parts, n):
         return spark.range(1).select(
@@ -2412,58 +2470,54 @@ def delete_from_index(
 
     if not touched:
         return _stats_row(0, 0)
-    old = _read_partitioned_index(spark, index_path).filter(
-        F.col(part_col).isin(touched)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(index_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        n_deleted = old.join(rid, "index_id", "left_semi").count()
-        remaining = old.join(rid, "index_id", "left_anti")
+    committed = None
+    if kept_parts:
+        remaining = df.filter(F.col(part_col).isin(kept_parts)).join(
+            F.broadcast(rid), "index_id", "left_anti"
+        )
         staging = index_path.rstrip("/") + "__staging__"
         spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
         try:
             # staged pre-hash-partitioned on part_col: the final
             # partitionBy write then needs no exchange (the
             # _staged_partition_upsert discipline)
-            remaining.repartition(part_col).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            staged = spark.read.parquet(staging)
-            kept_parts = {
-                r[part_col]
-                for r in staged.select(part_col).distinct().collect()
-            }
-            if kept_parts:
-                prev_mode = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
+            staged = write_read_back(remaining.repartition(part_col), staging)
+            prev_mode = spark.conf.get(
+                "spark.sql.sources.partitionOverwriteMode", "static"
+            )
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", "dynamic"
+            )
+            try:
+                staged.write.partitionBy(
+                    part_col
+                ).mode("overwrite").parquet(index_path)
+            finally:
                 spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
+                    "spark.sql.sources.partitionOverwriteMode", prev_mode
                 )
-                try:
-                    staged.write.partitionBy(
-                        part_col
-                    ).mode("overwrite").parquet(index_path)
-                finally:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode",
-                        prev_mode,
-                    )
         finally:
             fs.delete(spath, True)
-        # fully-retired partitions: no rows remained, so the dynamic
-        # overwrite never touched their directories — remove them
-        for part in set(touched) - kept_parts:
-            fs.delete(
-                spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{index_path.rstrip('/')}/{part_col}={part}"
-                ),
-                True,
-            )
-        return _stats_row(len(touched), n_deleted)
-    finally:
-        old.unpersist()
+        committed = _index_schema(staged.schema, part_col)
+    # fully-retired partitions: no rows remained, so the dynamic
+    # overwrite never touched their directories — remove them
+    for part in set(touched) - set(kept_parts):
+        fs.delete(
+            spark._jvm.org.apache.hadoop.fs.Path(
+                f"{index_path.rstrip('/')}/{part_col}={part}"
+            ),
+            True,
+        )
+    _record_index_schema(
+        spark,
+        index_path,
+        committed
+        if committed == df.schema and len(kept_parts) == len(touched)
+        else None,
+    )
+    return _stats_row(len(touched), n_deleted)
 
 
 def compact_index(
@@ -2521,17 +2575,14 @@ def compact_index(
 
     if not fat:
         return _stats_row(0, 0, 0)
-    old = _read_partitioned_index(spark, index_path).filter(
-        F.col(part_col).isin(fat)
-    )
+    old = df.filter(F.col(part_col).isin(fat))
     staging = index_path.rstrip("/") + "__staging__"
     spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
     try:
         # staged pre-hash-partitioned on part_col: the final
         # partitionBy write then needs no exchange (the
         # _staged_partition_upsert discipline)
-        old.repartition(part_col).write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
+        staged = write_read_back(old.repartition(part_col), staging)
         prev_mode = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static"
         )
@@ -2548,6 +2599,8 @@ def compact_index(
             )
     finally:
         fs.delete(spath, True)
+    # rows and column order unchanged, every compacted partition kept
+    _record_index_schema(spark, index_path, df.schema)
     n_after = 0
     for part in fat:
         pdir = spark._jvm.org.apache.hadoop.fs.Path(

@@ -19,7 +19,6 @@ the query with Spark's own expression parser; parse failure ⇒ empty list.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import re
 from typing import Any
 
@@ -168,7 +167,3 @@ def assertion_group_to_json(
         "outputKey": output_key,
         "assertionReports": [assertion_report_to_json(r, spark) for r in reports],
     }
-
-
-def to_json_str(obj: Any) -> str:
-    return json.dumps(obj, indent=2, sort_keys=False, default=str)

@@ -44,6 +44,16 @@ _DEFAULTS: dict[str, str] = {
     # pipeline is 6.3s under eviction, 3.0s cached). Sized for the whole
     # catalog; memory cost is tens of MB of class metadata.
     "spark.sql.codegen.cache.maxEntries": "5000",
+    # PySpark's DataFrame-debugging call-site capture wraps every
+    # DataFrame API call in a Python stack walk plus about five py4j
+    # round trips to pin the caller in the JVM — half of all py4j calls
+    # of a plan run (about 8,800 -> 4,500 per pass of the plans
+    # benchmark, measured on a 4-core host). It only
+    # adds the Python call site to the error context of DataFrame-API
+    # errors, which for plan runs points into topnotch_spark anyway; SQL
+    # error context stays. Re-enable with get_spark(extra_conf=
+    # {"spark.python.sql.dataFrameDebugging.enabled": "true"}).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -14,9 +14,139 @@ for QC-plan inputs (the reference's contract), but plans can pass
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+# Parquet schema registry: the schema of every local parquet path this
+# process has read or written, so a later read passes it to the reader
+# instead of scheduling a schema-inference job (a footer-reading Spark
+# job, about 60 ms per read at small scale against about 10 ms with the
+# schema given) — the role a table catalog plays at real scale. Only
+# schemas are kept, never data or plans. One entry per path: the
+# (relative path, mtime, size) of every file under it, and the schema
+# per setting of the session confs that change what inference returns
+# (an index is read both with and without partition-type inference).
+# A rewritten, added or removed file replaces the entry, and a conf
+# setting not seen for the current files infers; a path os.stat cannot
+# see (another scheme, a glob) is never registered and always infers.
+_SCHEMAS: dict[str, tuple[tuple, dict[tuple, StructType]]] = {}
+
+_INFERENCE_CONFS = (
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+
+# (py4j gateway, working directory of its JVM): fetched once per JVM
+_jvm_cwd: tuple = (None, "")
+
+
+def _local_path(spark: SparkSession, path: str) -> str:
+    """``path`` as the JVM resolves it: relative to the JVM's working
+    directory, which need not be this process's current one."""
+    global _jvm_cwd
+    if os.path.isabs(path):
+        return path
+    gateway = spark.sparkContext._gateway
+    if _jvm_cwd[0] is not gateway:
+        _jvm_cwd = (gateway, spark._jvm.System.getProperty("user.dir"))
+    return os.path.join(_jvm_cwd[1], path)
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative path, mtime_ns, size) of every file under ``path``, or
+    None when it is not a local file or directory."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return ((".", st.st_mtime_ns, st.st_size),)
+        out = []
+        for parent, dirs, files in os.walk(path, followlinks=True):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(parent, name)
+                fst = os.stat(full)
+                out.append(
+                    (os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size)
+                )
+        return tuple(out)
+    except (OSError, ValueError):  # not local, or changed mid-walk
+        return None
+
+
+def _confs(spark: SparkSession) -> tuple:
+    # no default: an unset conf reads as Spark's default, equal to the
+    # same value set explicitly
+    return tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def _register(path: str, files: tuple, confs: tuple, schema: StructType) -> None:
+    entry = _SCHEMAS.get(path)
+    if entry is None or entry[0] != files:
+        entry = _SCHEMAS[path] = (files, {})
+    entry[1][confs] = schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema from the registry
+    when the path's files and the inference confs are unchanged since
+    it was last read or recorded; otherwise infer and register."""
+    local = _local_path(spark, path)
+    files = _file_identity(local)
+    if files is None:
+        return spark.read.parquet(path)
+    confs = _confs(spark)
+    entry = _SCHEMAS.get(local)
+    if entry is not None and entry[0] == files and confs in entry[1]:
+        return spark.read.schema(entry[1][confs]).parquet(path)
+    df = spark.read.parquet(path)
+    _register(local, files, confs, df.schema)
+    return df
+
+
+def record_schema(spark: SparkSession, path: str, schema: StructType | None) -> None:
+    """Register the schema a writer just committed at ``path`` (what a
+    read under the current confs would infer), or with ``None`` drop the
+    path's entry so the next read infers."""
+    local = _local_path(spark, path)
+    files = _file_identity(local) if schema is not None else None
+    if files is None:
+        _SCHEMAS.pop(local, None)
+    else:
+        _register(local, files, _confs(spark), schema)
+
+
+def nullable(dt: DataType) -> DataType:
+    """``dt`` as a parquet read returns it: every field, array element
+    and map value nullable (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+    return dt
+
+
+def write_read_back(df: DataFrame, path: str) -> DataFrame:
+    """Overwrite ``path`` with ``df`` as unpartitioned parquet and read it
+    back with the schema just written: the hard lineage break of staged
+    commits and checkpoints, without a schema-inference job."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 @dataclass(frozen=True)
@@ -80,7 +210,9 @@ def load_input(
     if fmt == "orc":
         return reader.orc(inp.ref)
     if fmt == "parquet":
-        return reader.parquet(inp.ref)
+        if inp.schema:
+            return reader.parquet(inp.ref)
+        return read_parquet(spark, inp.ref)
     if fmt == "text":
         # Raw text corpora (the LLM-ingest shape): one row per LINE by
         # default, or one row per FILE with {"wholetext": true}. Columns:

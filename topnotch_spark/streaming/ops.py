@@ -40,6 +40,8 @@ from topnotch_spark.operators.assertions import (
     AssertionResult,
     run_assertions,
 )
+from topnotch_spark.sources.inputs import read_parquet
+
 
 def _default_checkpoint_root() -> str:
     """Root for the SINGLE-USE checkpoints of memory-sink runs (each
@@ -166,12 +168,9 @@ def stream_from_parquet(
     sequence of micro-batches — how the tests drive multi-batch behavior.
     """
     if schema is None:
-        from topnotch_spark.catalog import _read_parquet_cached_schema
-
-        # stat-keyed schema memo (catalog.load's): the batch probe reads
-        # the parquet footer every call otherwise; a rebuilt dir has a
-        # fresh mtime and re-infers
-        schema = _read_parquet_cached_schema(spark, path).schema
+        # the parquet schema registry: the batch probe reads the footer
+        # in a Spark job otherwise; a rebuilt dir misses and re-infers
+        schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -374,15 +373,13 @@ def run_streaming_drift(
         for row in rows:
             cur_counts[row["bucket"]] = cur_counts.get(row["bucket"], 0) + row["n"]
 
-    name = f"tn_drift_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", f"{DEFAULT_CHECKPOINT_ROOT}/{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(f"{DEFAULT_CHECKPOINT_ROOT}/{name}", ignore_errors=True)
+    ckpt = f"{DEFAULT_CHECKPOINT_ROOT}/tn_drift_{uuid.uuid4().hex[:12]}"
+    try:
+        stream.writeStream.foreachBatch(_process).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     joined = spark.createDataFrame(
         [
@@ -454,15 +451,13 @@ def run_streaming_wasserstein(
                 cur_counts.get(row["bucket"], 0) + row["n"]
             )
 
-    name = f"tn_w1_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", f"{DEFAULT_CHECKPOINT_ROOT}/{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(f"{DEFAULT_CHECKPOINT_ROOT}/{name}", ignore_errors=True)
+    ckpt = f"{DEFAULT_CHECKPOINT_ROOT}/tn_w1_{uuid.uuid4().hex[:12]}"
+    try:
+        stream.writeStream.foreachBatch(_process).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     joined = spark.createDataFrame(
         [
@@ -600,15 +595,13 @@ def run_streaming_assertions(
 
     name = f"tn_assert_{uuid.uuid4().hex[:12]}"
     ckpt = checkpoint_dir or f"{DEFAULT_CHECKPOINT_ROOT}/{name}"
-    q = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if checkpoint_dir is None:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        stream_df.writeStream.foreachBatch(_process).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
     grand_total = sum(b.total for b in batches)
     merged: list[AssertionReport] = []
