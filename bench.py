@@ -34,7 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from topnotch_spark.operators.dedup import (  # noqa: E402
+from topnotch_spark.runtime import (  # noqa: E402
     dedup_scope,
     snapshot_intermediates,
 )

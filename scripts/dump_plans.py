@@ -19,7 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from topnotch_spark.operators.dedup import dedup_scope  # noqa: E402
+from topnotch_spark.runtime import dedup_scope  # noqa: E402
 from topnotch_spark.session import get_spark  # noqa: E402
 
 

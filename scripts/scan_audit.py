@@ -77,7 +77,7 @@ ALLOWED_MULTI: dict[str, str] = {
         "prune-early trade, not an operator recompute bug"
     ),
     "text_bm25_topk": (
-        "bm25's shared tf table is SIZE-GATED (dedup._persist_if_large, "
+        "bm25's shared tf table is SIZE-GATED (runtime.persist_if_large, "
         "r9): below 64 MiB of input, re-tokenizing the small corpus per "
         "branch (4 scans) is measurably cheaper than materializing the "
         "tf table (sf0.1: 1.57s vs 2.90s). At/above the threshold — the "

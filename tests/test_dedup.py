@@ -169,7 +169,7 @@ def test_dedup_persist_lifecycle(spark):
     """Two corpora through minhash/jaccard/simhash without clearCache():
     dedup_scope releases every tracked intermediate, storage returns to
     baseline."""
-    from topnotch_spark.operators.dedup import (
+    from topnotch_spark.runtime import (
         _PERSISTED,
         dedup_scope,
         unpersist_intermediates,
@@ -209,19 +209,19 @@ def test_dedup_persist_lifecycle(spark):
 
 
 def test_release_new_intermediates_identity_scoping(spark):
-    from topnotch_spark.operators import dedup
+    from topnotch_spark import runtime
 
-    dedup.unpersist_intermediates()  # clean slate
-    a = dedup._persist(spark.range(3).toDF("a"))
-    snap = dedup.snapshot_intermediates()
-    dedup._persist(spark.range(4).toDF("b"))
+    runtime.unpersist_intermediates()  # clean slate
+    a = runtime.persist(spark.range(3).toDF("a"))
+    snap = runtime.snapshot_intermediates()
+    runtime.persist(spark.range(4).toDF("b"))
     # interleaved foreign entry AFTER the snapshot of another owner
-    dedup._persist(spark.range(5).toDF("c"))
+    runtime.persist(spark.range(5).toDF("c"))
     # snapshot-scoped release frees exactly the post-snapshot entries,
     # preserving the pre-existing one
-    assert dedup.release_new_intermediates(snap) == 2
-    assert dedup._PERSISTED == [a]
-    assert dedup.unpersist_intermediates() == 1
+    assert runtime.release_new_intermediates(snap) == 2
+    assert runtime._PERSISTED == [a]
+    assert runtime.unpersist_intermediates() == 1
 
 
 def test_containment_directed_catches_subset_jaccard_misses(spark):

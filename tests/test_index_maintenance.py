@@ -152,3 +152,15 @@ class TestJobCounts:
         stats, jobs = count_jobs(spark, lambda: _delete(spark, idx, [victim]))
         assert stats == (1, 1)
         assert jobs == DELETE_JOBS
+
+
+def test_commits_leave_the_session_overwrite_mode_alone(spark, tmp_path):
+    """Upsert and delete overwrite their partitions with a per-write
+    dynamic overwrite option, not by flipping the session conf."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    idx = str(tmp_path / "idx")
+    _build(spark, idx, n=10)
+    _build(spark, idx, n=20)  # update path
+    _delete(spark, idx, [3])
+    assert spark.conf.get(key) == before

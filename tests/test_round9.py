@@ -109,10 +109,10 @@ def test_persist_if_large_gates_on_input_size(spark):
     threshold), a forced True/False must win over the estimate, and an
     unknown size (in-memory source) must persist — the 100 TB-safe
     default."""
-    from topnotch_spark.operators.dedup import (
+    from topnotch_spark.runtime import (
         _estimated_input_bytes,
-        _persist_if_large,
         dedup_scope,
+        persist_if_large,
         snapshot_intermediates,
     )
 
@@ -124,13 +124,13 @@ def test_persist_if_large_gates_on_input_size(spark):
 
     with dedup_scope():
         base = len(snapshot_intermediates())
-        _persist_if_large(small.select("doc_id"), small)  # small: skipped
+        persist_if_large(small.select("doc_id"), small)  # small: skipped
         assert len(snapshot_intermediates()) == base
-        _persist_if_large(mem.select("doc_id"), mem)  # unknown: persisted
+        persist_if_large(mem.select("doc_id"), mem)  # unknown: persisted
         assert len(snapshot_intermediates()) == base + 1
-        _persist_if_large(small.select("doc_id"), small, persist=True)
+        persist_if_large(small.select("doc_id"), small, force=True)
         assert len(snapshot_intermediates()) == base + 2
-        _persist_if_large(mem.select("doc_id"), mem, persist=False)
+        persist_if_large(mem.select("doc_id"), mem, force=False)
         assert len(snapshot_intermediates()) == base + 2
 
 

@@ -585,19 +585,28 @@ def test_python_state_rounding_matches_spark_round(spark):
         assert row["r"] == py, v
 
 
-@pytest.mark.parametrize("runner", ["drift", "wasserstein", "assertions"])
+@pytest.mark.parametrize(
+    "runner,scheme",
+    [
+        pytest.param(r, s, id=r + ("-uri" if s else ""))
+        for s in ("", "file://")
+        for r in ("drift", "wasserstein", "assertions", "memory_sink")
+    ],
+)
 def test_failed_foreach_batch_leaves_no_checkpoint(
-    spark, tmp_path, monkeypatch, runner
+    spark, tmp_path, monkeypatch, runner, scheme
 ):
-    """A micro-batch body that raises fails the query; the run's
-    single-use checkpoint is still deleted."""
+    """A micro-batch body (or, for the memory sink, a row) that raises
+    fails the query; the run's single-use checkpoint is still deleted,
+    also when the checkpoint root is a URI."""
     from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
 
     from topnotch_spark.streaming import ops
 
     root = tmp_path / "ckpt"
     root.mkdir()
-    monkeypatch.setattr(ops, "DEFAULT_CHECKPOINT_ROOT", str(root))
+    monkeypatch.setattr(ops, "DEFAULT_CHECKPOINT_ROOT", scheme + str(root))
     src = str(tmp_path / "src")
     spark.range(20).selectExpr("id AS event_id", "CAST(id AS double) AS x") \
         .coalesce(1).write.parquet(src)
@@ -610,6 +619,12 @@ def test_failed_foreach_batch_leaves_no_checkpoint(
         "wasserstein": lambda: ops.run_streaming_wasserstein(ref, stream, "value"),
         "assertions": lambda: ops.run_streaming_assertions(
             stream, [AssertionRule(query="value > 0", description="v", threshold=0.0)]
+        ),
+        "memory_sink": lambda: ops.run_stream_to_table(
+            stream.select(
+                F.when(F.col("x") >= 0, F.raise_error(F.lit("boom"))).alias("e")
+            ),
+            output_mode="append",
         ),
     }[runner]
     with pytest.raises(StreamingQueryException):

@@ -19,6 +19,7 @@ from topnotch_spark.operators.assertions import (
 )
 from topnotch_spark.operators.diff import DiffParams, DiffSide, create_diff
 from topnotch_spark.operators.view import ViewParams, create_view
+from topnotch_spark.runtime import delete_path, own_paths, persist
 from topnotch_spark.sources.inputs import read_parquet
 
 TABLES = (
@@ -494,7 +495,6 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key (not the global min id), which is exactly what the
     round-ordered oracle replays."""
     from topnotch_spark.operators.dedup import (
-        _persist,
         build_dedup_index,
         dedup_against_index,
     )
@@ -504,7 +504,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on-disk index upsert_dedup_index maintains in production, and
     # what keeps round k+1 from re-deriving (re-scanning) every prior
     # round's lineage (the scan-count plan guard)
-    index = _persist(
+    index = persist(
         build_dedup_index(docs.filter("doc_id % 3 = 0"), "doc_id", "text")
     )
     for r in (1, 2):
@@ -514,7 +514,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter("keep")
             .select("dup_key", F.col("doc_id").alias("index_id"))
         )
-        index = _persist(index.unionByName(accepted))
+        index = persist(index.unionByName(accepted))
     return index
 
 
@@ -535,7 +535,6 @@ def dedup_index_retirement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from topnotch_spark.operators.dedup import (
         _read_partitioned_index,
-        _register_checkpoints,
         build_dedup_index,
         dedup_against_index,
         delete_from_index,
@@ -562,7 +561,7 @@ def dedup_index_retirement(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup_against_index(
         docs.filter("doc_id % 2 = 1"), index, "doc_id", "text"
     )
-    _register_checkpoints(out, [root])
+    own_paths(out, [root])
     return out
 
 
@@ -618,7 +617,6 @@ def dedup_semantic_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from topnotch_spark.operators.dedup import (
-        _register_checkpoints,
         build_semantic_index,
         dedup_batch_against_semantic_index,
         read_semantic_centroids,
@@ -671,7 +669,7 @@ def dedup_semantic_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = read_semantic_index(spark, idx_path).select(
         "index_id", "centroid_id", F.round("nrm", 6).alias("nrm")
     )
-    _register_checkpoints(out, [root])
+    own_paths(out, [root])
     return out
 
 
@@ -694,9 +692,7 @@ def dedup_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from topnotch_spark.operators.dedup import (
-        _persist,
         _read_partitioned_index,
-        _register_checkpoints,
         build_minhash_index,
         dedup_batch_against_minhash_index,
         upsert_minhash_index,
@@ -720,7 +716,7 @@ def dedup_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one signature build per round (r13): the persisted batch
         # index feeds the screen AND, semi-joined to the accepted ids,
         # the upsert entries — the batch is never re-shingled
-        bidx = _persist(build_minhash_index(batch, "doc_id", "text"))
+        bidx = persist(build_minhash_index(batch, "doc_id", "text"))
         accepted = (
             dedup_batch_against_minhash_index(
                 batch, index, "doc_id", "text", threshold=0.5,
@@ -745,7 +741,7 @@ def dedup_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the temp index root is released (deleted) with the run's other
     # intermediates once the output frame is done
-    _register_checkpoints(out, [root])
+    own_paths(out, [root])
     return out
 
 
@@ -755,14 +751,13 @@ def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are the filter's false positives — visible and bounded; false
     negatives are impossible by construction. m=2048 bits is deliberately
     small so the sf0.1 run shows the saturated-filter regime too."""
-    from topnotch_spark.operators.dedup import _persist
     from topnotch_spark.operators.membership import bloom_build, bloom_probe
 
     docs = load(spark, sf_dir, "documents")
     key = F.coalesce(F.col("text"), F.lit(""))
     # hash ONCE into a persisted 2-column projection; build, probe, and
     # the exact check all read it (4 corpus scans -> 1)
-    hashed = _persist(
+    hashed = persist(
         docs.select("doc_id", F.md5(key).alias("k"))
     )
     seen = hashed.filter("doc_id % 2 = 0")
@@ -2058,7 +2053,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output (o_custkey, exact_count, est_count, overestimate) shows the
     one-sided error live: est_count >= exact_count always, excess
     bounded by colliding keys (~N/width per row, min over depth)."""
-    from topnotch_spark.operators.dedup import _persist
     from topnotch_spark.operators.sketch import cms_build, cms_query
 
     orders = load(spark, sf_dir, "orders").select("o_custkey")
@@ -2069,7 +2063,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # TakeOrdered top-10 (never a global sort); persisted — it feeds the
     # probe AND the final join-back
-    top = _persist(
+    top = persist(
         counts.orderBy(
             F.col("exact_count").desc(), F.col("o_custkey").asc()
         ).limit(10)
@@ -2677,13 +2671,13 @@ def streaming_incremental_dedup(
 
     from topnotch_spark.operators.dedup import (
         _read_partitioned_index,
-        _register_checkpoints,
         dedup_against_index,
         keyed_dedup,
         upsert_dedup_index,
     )
     from topnotch_spark.streaming.ops import (
         events_replay_dir,
+        run_available_now,
         stream_from_parquet,
     )
 
@@ -2750,19 +2744,21 @@ def streaming_incremental_dedup(
             )
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", root + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        run_available_now(
+            stream, "tn_stream_incdedup", foreach_batch=ingest,
+            checkpoint_dir=root + "/ckpt",
+        )
+    except BaseException:
+        # the root is handed to the output frame only on success
+        delete_path(spark, root)
+        raise
     out = spark.createDataFrame(
         sorted(ledger),
         "batch_id long, n_rows long, n_known_keys long, "
         "n_new_keys long, cum_index_keys long",
     )
-    _register_checkpoints(out, [root])
+    own_paths(out, [root])
     return out
 
 
@@ -3318,13 +3314,12 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_recall,
     )
 
-    from topnotch_spark.operators.dedup import _persist
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 5")
     # shared by both report branches — without the persist the
     # brute-force scan would run once per branch
-    exact = _persist(brute_force_topk(emb, q, k=10, dim=64))
+    exact = persist(brute_force_topk(emb, q, k=10, dim=64))
     srp = topk_recall(
         srp_ann_topk(emb, q, k=10, n_planes=8, dim=64), exact
     ).select(F.lit("srp").alias("method"), "*")
@@ -3527,12 +3522,11 @@ def scd2_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (every 3rd customer re-priced / re-segmented, five brand-new
     keys) applied to the customer dim — exercises passthrough, close +
     insert, and new-key insert in one deterministic result."""
-    from topnotch_spark.operators.dedup import _persist
     from topnotch_spark.operators.scd import scd2_merge
 
     # the derived update batch re-reads the dim it is applied to — persist
     # the 3-column projection once (current + 2 update branches read it)
-    cust = _persist(
+    cust = persist(
         load(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment", "c_acctbal"
         )
@@ -4022,13 +4016,12 @@ def cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak — applied to the orders snapshot. Latest change per key
     wins: the delete overrides the upsert where both exist. One window
     + one anti-join/union pass."""
-    from topnotch_spark.operators.dedup import _persist
     from topnotch_spark.operators.scd import cdc_apply
 
     # the synthetic change log derives from the snapshot itself, so the
     # snapshot/upsert/delete branches would re-scan orders 3x — persist
     # the used-column projection once (a real CDC feed reads its own log)
-    orders = _persist(
+    orders = persist(
         load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus",
             "o_totalprice", "o_orderdate", "o_orderpriority",

@@ -82,8 +82,8 @@ class TnEngine:
 
         # plan-level "checkpointDir": spill dedup-family intermediates to
         # parquet under this dir for the duration of the plan (the 100 TB
-        # valve — see operators/dedup.py set_checkpoint_dir)
-        from topnotch_spark.operators.dedup import set_checkpoint_dir
+        # valve — see runtime.set_checkpoint_dir)
+        from topnotch_spark.runtime import set_checkpoint_dir
 
         ckpt = root.get("checkpointDir") if isinstance(root, dict) else None
         prev = set_checkpoint_dir(ckpt) if ckpt else None
@@ -101,6 +101,8 @@ class TnEngine:
         writer.add_section(
             [self._cmd_echo(c) for c in cmds if not isinstance(c, ErrorCmd)]
         )
+        # resolved from operators.dedup at call time: perfbench's probes
+        # patch that attribute to count what each plan releases
         from topnotch_spark.operators.dedup import (
             release_new_intermediates,
             snapshot_intermediates,

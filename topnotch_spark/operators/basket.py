@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 
 def market_basket_pairs(
     df: DataFrame,
@@ -39,14 +41,12 @@ def market_basket_pairs(
     unordered item pair co-occurring in >= ``min_support`` baskets.
     Presence is set semantics: duplicate (basket, item) rows count once.
     """
-    from topnotch_spark.operators.dedup import _persist
-
     items = df.select(
         F.col(basket_col).alias("__b__"), F.col(item_col).alias("__i__")
     ).where(F.col(item_col).isNotNull()).distinct()
     # four consumers (margins, totals, both join sides) — materialize once;
     # registered in the dedup-scope registry so plan runs / bench release it
-    items = _persist(items)
+    items = persist(items)
     margins = items.groupBy(F.col("__i__")).agg(
         F.count(F.lit(1)).alias("__cnt__")
     )

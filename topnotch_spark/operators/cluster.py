@@ -42,30 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from topnotch_spark.sources.inputs import write_read_back
-
-
-def _truncate_round(
-    df: DataFrame, prev_path: str | None, eager: bool = True
-) -> tuple[DataFrame, str | None]:
-    """Per-round lineage truncation: localCheckpoint normally; a parquet
-    roundtrip when the dedup-family checkpoint dir is set (survives
-    executor loss — the real-cluster path). Deletes the previous round's
-    files once the new round is materialized. ``eager=False`` defers the
-    local checkpoint to the first action (fewer scheduled jobs for
-    fixed-iteration loops that never inspect intermediate rounds; the
-    convergence-checked CC loop keeps the eager default, and the parquet
-    path is inherently eager)."""
-    from topnotch_spark.operators import dedup as _d
-
-    if _d._CHECKPOINT_DIR is None:
-        return df.localCheckpoint(eager=eager), None
-    _d._CHECKPOINT_SEQ += 1
-    path = f"{_d._CHECKPOINT_DIR.rstrip('/')}/cc_round_{_d._CHECKPOINT_SEQ}"
-    out = write_read_back(df, path)
-    if prev_path is not None:
-        _d._delete_path(out, prev_path)
-    return out, path
+from topnotch_spark.runtime import delete_path, own_paths, truncate_round
 
 
 def connected_components(
@@ -100,7 +77,7 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # start: own id, tightened by direct neighbors (saves one round)
-    labels, ckpt_path = _truncate_round(
+    labels, ckpt_path = truncate_round(
         sym.groupBy("a")
         .agg(F.min("b").alias("nbr_min"))
         .select(
@@ -149,25 +126,19 @@ def connected_components(
                         F.coalesce(F.col("jump_comp"), F.col("new_comp")),
                     ).alias("new_comp"),
                 )
-            proposed, ckpt_path = _truncate_round(proposed, ckpt_path)
+            proposed, ckpt_path = truncate_round(proposed, ckpt_path)
             changed = (
                 proposed.filter(F.col("new_comp") != F.col("comp")).limit(1).count()
             )
             labels = proposed.select("id", F.col("new_comp").alias("comp"))
             if changed == 0:
-                if ckpt_path is not None:
-                    # the returned frame reads the final round's parquet:
-                    # hand the path to the dedup registry so dedup_scope /
-                    # the plan engine deletes it on release
-                    from topnotch_spark.operators import dedup as _d
-
-                    _d._PERSISTED.append(labels)
-                    _d._CHECKPOINTED[id(labels)] = ckpt_path
+                # the returned frame reads the final round's parquet:
+                # hand the path to the registry so dedup_scope / the
+                # plan engine deletes it on release
+                own_paths(labels, [ckpt_path])
                 return labels
         if ckpt_path is not None:
-            from topnotch_spark.operators import dedup as _d
-
-            _d._delete_path(sym, ckpt_path)
+            delete_path(sym.sparkSession, ckpt_path)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "pathological chain graph — use more rounds or star contraction"

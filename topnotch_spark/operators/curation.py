@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 # ---------------------------------------------------------------------------
 # PII redaction
 # ---------------------------------------------------------------------------
@@ -274,7 +276,6 @@ def cross_corpus_overlap(
     ``dedup_scope()`` or call ``unpersist_intermediates()`` to release
     the storage."""
     from topnotch_spark.operators.dedup import (
-        _persist,
         shingle_arrays,
         spread_cpu,
     )
@@ -283,7 +284,7 @@ def cross_corpus_overlap(
     # scan→shingle map stage onto the cores (guide §2/§6); the bench
     # side stays unspread (a filtered slice, broadcast anyway)
     corpus = spread_cpu(corpus, id_col)
-    c = _persist(
+    c = persist(
         shingle_arrays(corpus, id_col, text_col, shingle_n).select(
             F.col("id").alias("corpus_id"), F.explode("shs").alias("sh")
         )
@@ -612,10 +613,9 @@ def dedup_lines(
     """
     import re as _re
 
-    from topnotch_spark.operators.dedup import _persist
 
     text = F.coalesce(F.col(text_col), F.lit(""))
-    lines = _persist(
+    lines = persist(
         df.select(
             F.col(id_col).alias("id"),
             F.posexplode(F.split(text, _re.escape(sep))).alias("pos", "line"),
@@ -686,9 +686,8 @@ def source_mix_weights(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokens(text_col)).cast("long")).alias("n_tokens"),
     )
-    from topnotch_spark.operators.dedup import _persist
 
-    per = _persist(per)
+    per = persist(per)
     tot = per.agg(
         F.sum("n_tokens").alias("__total__"),
         F.sum(F.pow(F.col("n_tokens").cast("double"), alpha)).alias("__z__"),
@@ -750,7 +749,6 @@ def mixture_allocate(
     (global windows there are deliberate and bounded — the
     mixture-planning frame is dozens of rows, not corpus-sized)."""
     from topnotch_spark.functions.text import tokens as _toks
-    from topnotch_spark.operators.dedup import _persist
 
     if budget_tokens <= 0:
         raise ValueError("mixture_allocate: budget_tokens must be > 0")
@@ -762,7 +760,7 @@ def mixture_allocate(
         "('{}', {}L)".format(str(s).replace("'", "''"), int(m))
         for s, m in sorted(targets_milli.items())
     )
-    per = _persist(
+    per = persist(
         df.groupBy(F.col(group_col).alias("__g__")).agg(
             F.sum(F.size(_toks(text_col)).cast("long")).alias("avail")
         )
@@ -822,7 +820,7 @@ def mixture_allocate(
             )
         ).alias("capped"),
     )
-    staged = _persist(staged)
+    staged = persist(staged)
     pool = staged.filter(F.col("capped")).agg(
         F.coalesce(F.sum("cap"), F.lit(0).cast("long")).alias("__csat__")
     )
@@ -920,7 +918,6 @@ def dsir_weights(
     value-identical to re-tokenizing the slice — and the second
     tokenize+hash pass over the target text disappears.
     """
-    from topnotch_spark.operators.dedup import _persist
     from topnotch_spark.functions.text import tokens
 
     if n_buckets < 2:
@@ -962,8 +959,8 @@ def dsir_weights(
         # through the (doc, bucket) group keys changes no counts
         cols.append(target_pred.cast("boolean").alias("__tgt__"))
         grp_extra = ["__tgt__"]
-    arr = _persist(raw.select(*cols))
-    docbkt = _persist(
+    arr = persist(raw.select(*cols))
+    docbkt = persist(
         arr.select("__id__", *grp_extra, F.explode("__f__").alias("__feat__"))
         .select("__id__", *grp_extra, bucket(F.col("__feat__")).alias("__b__"))
         .groupBy("__id__", "__b__", *grp_extra)
@@ -973,13 +970,13 @@ def dsir_weights(
     # p feeds both its own total (np_) and the lam join — persist the
     # <= n_buckets rows so the target corpus is scanned exactly once
     if target_pred is not None:
-        p = _persist(
+        p = persist(
             docbkt.filter(F.col("__tgt__"))
             .groupBy("__b__")
             .agg(F.sum("__c__").alias("c_p"))
         )
     else:
-        p = _persist(
+        p = persist(
             target.select(F.explode(features(text_col)).alias("__feat__"))
             .select(bucket(F.col("__feat__")).alias("__b__"))
             .groupBy("__b__")
@@ -1030,7 +1027,7 @@ def dsir_weights(
     zero = F.lit(0).cast("long")
     # the scored frame is consumed twice (winner TakeOrdered + final
     # flag join) — persist so the scoring join runs once
-    full = _persist(
+    full = persist(
         arr.select("__id__")
         .join(scored, "__id__", "left")
         .select(
@@ -1336,7 +1333,7 @@ def split_leakage(
     ``unpersist_intermediates()`` to release it (under
     ``set_checkpoint_dir`` the persist is an eager parquet spill).
     """
-    from topnotch_spark.operators.dedup import _persist, shingle_arrays
+    from topnotch_spark.operators.dedup import shingle_arrays
 
     fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     # split is a pure function of md5(id), so assign it AFTER the shingle
@@ -1344,7 +1341,7 @@ def split_leakage(
     # PERSISTED: three branches read it (train side, train-df cap,
     # holdout side); without the persist each branch re-runs the regex
     # shingle extraction over the full corpus.
-    arr = _persist(
+    arr = persist(
         hash_split(
             shingle_arrays(df, id_col, text_col, shingle_n),
             "id",

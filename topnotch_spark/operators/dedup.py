@@ -22,25 +22,11 @@ For 100 TB corpora the band/bucket keys are the partitioning keys; tune
 ``num_minhashes``/``bands``/``n_planes`` to trade candidate recall vs
 join fan-out.
 
-Cache lifecycle: minhash/jaccard/simhash persist their shingle tables
-(multi-branch plans); the returned DataFrame is lazily derived from the
-cached one, so the operator itself cannot unpersist. Every such persist
-is tracked: consume the result (an action), then call
-``unpersist_intermediates()`` — or wrap the whole consume in a
-``dedup_scope()`` context manager — to release the storage without the
-``spark.catalog.clearCache()`` sledgehammer. The plan engine does this
-automatically at the end of every plan run
-(engine.execute_commands → unpersist_intermediates), so back-to-back
-plans in one session do not accumulate storage; direct API callers
-manage the scope themselves. Unpersisting before the result is consumed
-is safe but recomputes the lineage. At real scale, replace the persist
-with a parquet checkpoint (SCALE.md §6).
+Cache lifecycle: the intermediates these operators persist are owned by
+``topnotch_spark.runtime`` (release them with ``dedup_scope()``).
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -48,54 +34,22 @@ from pyspark.storagelevel import StorageLevel
 
 from topnotch_spark.functions.text import sorted_token_fingerprint, tokens
 from topnotch_spark.functions.vectors import srp_bucket
+# dedup_scope, snapshot_intermediates and release_new_intermediates keep
+# their historical home here: callers and perfbench's probes use them
+from topnotch_spark.runtime import (  # noqa: F401
+    dedup_scope,
+    delete_path,
+    persist,
+    pinned_conf,
+    release_new_intermediates,
+    snapshot_intermediates,
+)
 from topnotch_spark.sources.inputs import (
     nullable,
     read_parquet,
     record_schema,
     write_read_back,
 )
-
-# Intermediates persisted by the operators below (and by
-# temporal.resample_timeseries, which shares this registry), in creation
-# order. Intentionally process-global: the plan engine frees its own
-# plan's entries per run (mark-scoped), and direct API callers use
-# unpersist_intermediates()/dedup_scope().
-_PERSISTED: list[DataFrame] = []
-
-# When set, _persist() spills intermediates to parquet under this
-# directory instead of executor storage (SCALE.md §6: at 100 TB the
-# shingle/signature tables of a multi-branch dedup plan do not fit the
-# BlockManager; a parquet checkpoint also truncates lineage). Entries
-# are tracked in _CHECKPOINTED (id(df) → path or list of paths) and
-# the path(s) are deleted on release. Set via set_checkpoint_dir(), the
-# checkpoint_dir argument of dedup_scope(), or a plan-level
-# "checkpointDir" field.
-_CHECKPOINT_DIR: str | None = None
-_CHECKPOINTED: dict[int, str | list[str]] = {}
-_CHECKPOINT_SEQ = 0
-
-
-def set_checkpoint_dir(path: str | None) -> str | None:
-    """Route subsequent dedup-family intermediates to parquet under
-    ``path`` (any Hadoop-FS scheme) instead of persist(MEMORY_AND_DISK);
-    ``None`` restores in-memory persist. Returns the previous setting."""
-    global _CHECKPOINT_DIR
-    prev = _CHECKPOINT_DIR
-    _CHECKPOINT_DIR = path
-    return prev
-
-
-def _delete_path(df: DataFrame, path: str) -> None:
-    """Best-effort recursive delete via the Hadoop FileSystem API (works
-    for local paths, HDFS, and object stores alike)."""
-    try:
-        spark = df.sparkSession
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    except Exception:  # cleanup must never fail the query
-        pass
-
 
 def lsh_tuning(
     spark,
@@ -151,170 +105,6 @@ def lsh_tuning(
         F.round(p_at(hi), round_digits).alias("p_above"),
         F.round(s_half, round_digits).alias("s_half"),
     )
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Materialize + register an intermediate for reuse across branches:
-    parquet checkpoint when a checkpoint dir is set (scale path), else
-    persist(MEMORY_AND_DISK). Released by unpersist_intermediates() /
-    release_new_intermediates()."""
-    global _CHECKPOINT_SEQ
-    if _CHECKPOINT_DIR is not None:
-        _CHECKPOINT_SEQ += 1
-        path = f"{_CHECKPOINT_DIR.rstrip('/')}/tn_ckpt_{_CHECKPOINT_SEQ}"
-        out = write_read_back(df, path)
-        _PERSISTED.append(out)
-        _CHECKPOINTED[id(out)] = path
-        return out
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(out)
-    return out
-
-
-def _estimated_input_bytes(df: DataFrame) -> int | None:
-    """Sum of the on-disk sizes of the files feeding ``df``'s scan, via
-    the Hadoop FileSystem API (works for local paths, HDFS, object
-    stores). Returns None when unknowable (non-file source, registry
-    input, any error) — callers must treat None as "assume large".
-    More than 200 files short-circuits to a large sentinel rather than
-    paying one RPC per file: a many-file input IS the large case."""
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        if len(files) > 200:
-            return 1 << 60
-        spark = df.sparkSession
-        conf = spark._jsc.hadoopConfiguration()
-        total = 0
-        for f in files:
-            jp = spark._jvm.org.apache.hadoop.fs.Path(f)
-            total += jp.getFileSystem(conf).getFileStatus(jp).getLen()
-        return total
-    except Exception:
-        return None
-
-
-# Below this input size, a multi-branch operator's shared intermediate
-# is cheaper to recompute per branch than to materialize: persist()
-# write+read of the exploded table costs more than the 2-4 extra scans
-# of a small source (measured on bm25: sf0.1's 584 KB documents table
-# ran 1.6x slower WITH the tf persist). At/above it — the cluster-scale
-# case the persist exists for — materialize once.
-PERSIST_INPUT_THRESHOLD_BYTES = 64 << 20
-
-
-def _persist_if_large(
-    df: DataFrame,
-    source: DataFrame,
-    persist: bool | None = None,
-    threshold_bytes: int = PERSIST_INPUT_THRESHOLD_BYTES,
-) -> DataFrame:
-    """``_persist(df)`` gated on the estimated input size of ``source``:
-    persist when forced (``persist=True``), when the source size is
-    unknown (conservative: at 100 TB a missed persist re-tokenizes the
-    corpus per branch), or when it meets ``threshold_bytes``. With
-    ``persist=False`` or a measurably small source, return ``df``
-    unchanged and let the branches recompute the cheap lineage."""
-    if persist is False:
-        return df
-    if persist is True:
-        return _persist(df)
-    est = _estimated_input_bytes(source)
-    if est is not None and est < threshold_bytes:
-        return df
-    return _persist(df)
-
-
-def _release(df: DataFrame, blocking: bool = False) -> None:
-    """Free one registry entry: drop the parquet checkpoint(s) or
-    unpersist. An entry may own several checkpoint directories (a
-    greedy loop's per-round files, see _register_checkpoints)."""
-    paths = _CHECKPOINTED.pop(id(df), None)
-    if paths is not None:
-        for p in [paths] if isinstance(paths, str) else paths:
-            _delete_path(df, p)
-    else:
-        df.unpersist(blocking)
-
-
-def _register_checkpoints(out: DataFrame, paths: list[str | None]) -> None:
-    """Defer deletion of per-round checkpoint directories that still
-    back ``out``'s lineage to release time. Greedy loops (mmr_rerank,
-    kcenter_select) checkpoint every round's pick, and the anti-join /
-    union lineage of the FINAL output still scans those files — so a
-    round may never delete its predecessor's path eagerly (the frames
-    are not superseded, unlike a pagerank walk's ranks). The paths are
-    keyed to ``out`` in the registry and deleted only when the owning
-    scope/run releases the output."""
-    live = [p for p in paths if p is not None]
-    if not live:
-        return
-    if id(out) not in _CHECKPOINTED:
-        _PERSISTED.append(out)
-        _CHECKPOINTED[id(out)] = list(live)
-    else:
-        prev = _CHECKPOINTED[id(out)]
-        merged = [prev] if isinstance(prev, str) else list(prev)
-        _CHECKPOINTED[id(out)] = merged + live
-
-
-def snapshot_intermediates() -> set[int]:
-    """Identity snapshot of the current registry; pass to
-    ``release_new_intermediates`` to free exactly the entries created
-    AFTER the snapshot — correct even when another engine or scope in
-    the same process interleaves its own persists (a positional mark
-    would pop the other owner's live tables)."""
-    return {id(df) for df in _PERSISTED}
-
-
-def release_new_intermediates(
-    snapshot: set[int], blocking: bool = False
-) -> int:
-    """Unpersist and remove every registry entry not in ``snapshot``,
-    leaving pre-existing (other owners') entries untouched and in
-    order. Returns the number released."""
-    mine = [df for df in _PERSISTED if id(df) not in snapshot]
-    _PERSISTED[:] = [df for df in _PERSISTED if id(df) in snapshot]
-    for df in mine:
-        _release(df, blocking)
-    return len(mine)
-
-
-def unpersist_intermediates(blocking: bool = False) -> int:
-    """Release every intermediate persisted by dedup-family operators so
-    far (the whole registry — use snapshot/release for scoped cleanup).
-
-    Call after the returned DataFrames have been consumed (actions run).
-    Returns the number of tables released. Safe to call twice."""
-    n = 0
-    while _PERSISTED:
-        _release(_PERSISTED.pop(), blocking)
-        n += 1
-    return n
-
-
-@contextmanager
-def dedup_scope(checkpoint_dir: str | None = None) -> Iterator[None]:
-    """Scope whose exit releases intermediates created inside it
-    (identity-scoped — safe alongside other concurrent scopes)::
-
-        with dedup_scope():
-            pairs = minhash_lsh_dedup(docs, "doc_id", "text")
-            pairs.write.parquet(out)   # consume INSIDE the scope
-
-    With ``checkpoint_dir`` set, intermediates inside the scope spill to
-    parquet under that directory instead of executor storage (and the
-    files are deleted on exit) — the 100 TB valve for multi-branch dedup
-    plans whose shingle/signature tables exceed BlockManager capacity."""
-    snap = snapshot_intermediates()
-    prev = set_checkpoint_dir(checkpoint_dir) if checkpoint_dir else _CHECKPOINT_DIR
-    try:
-        yield
-    finally:
-        if checkpoint_dir:
-            set_checkpoint_dir(prev)
-        release_new_intermediates(snap)
 
 
 def spread_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -467,7 +257,7 @@ def minhash_lsh_dedup(
     # loops go through build_minhash_index, which stays unspread — the
     # r13 A/B showed spreading their 1/3-sized batches costs more in
     # added exchanges than the map stage gains.
-    arr = _persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
+    arr = persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
     a_co, b_co = minhash_coeffs(num_hashes)
 
     exploded = arr.select("id", F.explode("shs").alias("sh")).select(
@@ -501,7 +291,7 @@ def minhash_lsh_dedup(
     # without this the whole explode→md5→16-way min-agg signature
     # pipeline runs twice over the corpus. The bucket table itself is
     # tiny (bands rows of (id, band_idx, md5) per doc).
-    buckets = _persist(
+    buckets = persist(
         banded.selectExpr(
             "id", f"stack({bands}, {stack_expr}) as (band_idx, bucket)"
         )
@@ -555,14 +345,14 @@ def ngram_jaccard_pairs(
     shingle's document frequency)."""
     # feeds explode + both size joins; spread: full-corpus entry whose
     # shingle map stage is otherwise fused onto the row-group-limited scan
-    arr = _persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
+    arr = persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
     exploded = arr.select("id", F.explode("shs").alias("shingle"))
     sizes = arr.select("id", F.size("shs").alias("n_sh"))
     if max_shingle_df is not None:
         # persisted: the anti-join below sits on BOTH sides of the
         # self-join, so an unpersisted hot table would re-aggregate the
         # whole exploded corpus twice
-        hot = _persist(
+        hot = persist(
             exploded.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_shingle_df)
@@ -614,13 +404,13 @@ def containment_pairs(
     leave the JOIN only, sizes still count them — strictly conservative
     for the containment score."""
     # spread: same full-corpus-entry rationale as ngram_jaccard_pairs
-    arr = _persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
+    arr = persist(shingle_arrays(spread_cpu(df, id_col), id_col, text_col, shingle_n))
     exploded = arr.select("id", F.explode("shs").alias("shingle"))
     sizes = arr.select("id", F.size("shs").alias("n_sh"))
     if max_shingle_df is not None:
         # persisted for the same both-sides-of-the-self-join reason as
         # ngram_jaccard_pairs
-        hot = _persist(
+        hot = persist(
             exploded.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_shingle_df)
@@ -698,7 +488,7 @@ def simhash_dedup(
         + ", ".join(f"if(v_{b} > 0, '1', '0')" for b in range(bits))
         + ")"
     )
-    base = _persist(votes.select("id", sh_col.alias("sh")))
+    base = persist(votes.select("id", sh_col.alias("sh")))
     return bitstring_band_pairs(base, bits, band_bits, max_hamming)
 
 
@@ -785,8 +575,8 @@ def bitstring_recall(
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-    exact = _persist(exact.select("id_1", "id_2"))
-    found = _persist(
+    exact = persist(exact.select("id_1", "id_2"))
+    found = persist(
         bitstring_band_pairs(base, bits, band_bits, max_hamming).select(
             "id_1", "id_2"
         )
@@ -1233,7 +1023,7 @@ def duplicate_spans(
             "pos", "span"
         ),
     ).select("id", "pos", F.md5("span").alias("span_key"))
-    spans = _persist(spans)  # feeds both the count and the join-back
+    spans = persist(spans)  # feeds both the count and the join-back
     counts = (
         spans.groupBy("span_key")
         .agg(
@@ -1306,14 +1096,14 @@ def rewrite_duplicate_spans(
     # narrow stage (span windows, posexplode, per-doc totals) would
     # otherwise run at 1-3 tasks (guide §2/§6)
     df = spread_cpu(df, id_col)
-    ta = _persist(
+    ta = persist(
         df.select(
             F.col(id_col).alias("id"),
             tokens(text_col).alias("__t__"),
             *raw_cols,
         )
     )
-    spans = _persist(
+    spans = persist(
         ta.select(
             "id",
             F.posexplode(
@@ -1356,7 +1146,7 @@ def rewrite_duplicate_spans(
     if emit_cut_ranges:
         # the cut-position set feeds both the anti join and the
         # gaps-and-islands rollup below
-        cuts = _persist(cuts)
+        cuts = persist(cuts)
     kept = (
         ta.select("id", F.posexplode("__t__").alias("tpos", "tok"))
         .join(cuts, ["id", "tpos"], "left_anti")
@@ -1505,7 +1295,7 @@ def semantic_dedup(
     w = Window.partitionBy("id").orderBy(
         F.col("__cc__").desc(), F.col("centroid_id").asc()
     )
-    members = _persist(
+    members = persist(
         scored.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
         .select("id", "vec", "nrm", "centroid_id")
@@ -1565,31 +1355,26 @@ def build_dedup_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-@contextmanager
-def _string_partitions(spark) -> Iterator[None]:
-    """Partition-value type inference DISABLED for the block: all-digit
-    hex partition values like "00" must come back as the 2-char strings
-    they were written as, not integer 0. An inferred-int partition
-    column silently SPLITS the layout on the next upsert — the merged
-    rows coerce back to string "0" and rewrite under bucket=0 while the
-    stale bucket=00 directory survives the dynamic overwrite,
-    duplicating every key in it."""
-    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(conf_key, prev)
+# Partition-value type inference DISABLED while an index is read or its
+# schema recorded: all-digit hex partition values like "00" must come
+# back as the 2-char strings they were written as, not integer 0. An
+# inferred-int partition column silently SPLITS the layout on the next
+# upsert — the merged rows coerce back to string "0" and rewrite under
+# bucket=0 while the stale bucket=00 directory survives the dynamic
+# overwrite, duplicating every key in it.
+_STRING_PARTITIONS = (
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "false",
+)
 
 
 def _read_partitioned_index(spark, index_path: str) -> DataFrame:
     """Read a bucket/pfx-partitioned on-disk index with string partition
-    values (:func:`_string_partitions`), the schema served by the
+    values (``_STRING_PARTITIONS``), the schema served by the
     parquet schema registry when the index is unchanged since it was
     last read or written. Schema and partition discovery happen eagerly
     at read time, so restoring the conf afterwards cannot re-infer."""
-    with _string_partitions(spark):
+    with pinned_conf(spark, *_STRING_PARTITIONS):
         return read_parquet(spark, index_path)
 
 
@@ -1612,7 +1397,7 @@ def _record_index_schema(spark, index_path: str, schema) -> None:
     candidate first file agrees on: writers pass the committed schema
     only when it equals the schema read before the rewrite and no
     partition directory disappeared."""
-    with _string_partitions(spark):
+    with pinned_conf(spark, *_STRING_PARTITIONS):
         record_schema(spark, index_path, schema)
 
 
@@ -1697,6 +1482,33 @@ def _check_index_meta(spark, index_path: str, expected: dict, caller: str):
     return meta
 
 
+def _commit_staged(
+    spark, index_path: str, rows: DataFrame, part_col: str
+) -> DataFrame:
+    """Commit ``rows`` into the partitions of the index they hold: stage
+    them next to the index, then overwrite exactly those partition
+    directories (a per-write dynamic partition overwrite; the session
+    conf is left alone). Returns the staged frame, whose schema is the
+    one committed.
+
+    Staged UNPARTITIONED: the partition key stays a real string column
+    — a partitioned staging dir would round-trip "00" through
+    partition-value type inference as integer 0. Callers pass ``rows``
+    PRE-HASH-PARTITIONED on ``part_col``: the final partitionBy write
+    then needs no exchange of its own (each staged file holds whole
+    partition-value groups, so every write task still emits one file
+    per value it owns — same file count, one less shuffle)."""
+    staging = index_path.rstrip("/") + "__staging__"
+    try:
+        staged = write_read_back(rows, staging)
+        staged.write.partitionBy(part_col).mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(index_path)
+    finally:
+        delete_path(spark, staging)
+    return staged
+
+
 def _staged_partition_upsert(
     spark,
     index_path: str,
@@ -1740,8 +1552,6 @@ def _staged_partition_upsert(
     strings for the hex layouts, k for the semantic one). Writes commit
     through Spark's FileOutputCommitter, so a failed upsert leaves the
     previous index intact."""
-    from pyspark import StorageLevel
-
     # function-local persist: the upsert issues several actions over
     # the entries (partition list, staging write) and the caller's
     # lineage is typically a whole screen-batch pipeline — without this
@@ -1808,34 +1618,7 @@ def _staged_partition_upsert(
             .select(*entries.columns)
             .unionByName(entries)
         )
-        staging = index_path.rstrip("/") + "__staging__"
-        spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-        try:
-            # staged UNPARTITIONED: the partition key stays a real
-            # string column — a partitioned staging dir would
-            # round-trip "00" through partition-value type inference
-            # as integer 0. Staged PRE-HASH-PARTITIONED on part_col:
-            # the final partitionBy write then needs no exchange of
-            # its own (each staged file holds whole partition-value
-            # groups, so every write task still emits one file per
-            # value it owns — same file count, one less shuffle).
-            staged = write_read_back(_counted(merged), staging)
-            prev_mode = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                staged.write.partitionBy(
-                    part_col
-                ).mode("overwrite").parquet(index_path)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-        finally:
-            fs.delete(spath, True)
+        staged = _commit_staged(spark, index_path, _counted(merged), part_col)
         committed = _index_schema(staged.schema, part_col)
         _record_index_schema(
             spark, index_path, committed if committed == index.schema else None
@@ -2112,7 +1895,7 @@ def dedup_batch_against_minhash_index(
     bidx = (
         batch_index
         if batch_index is not None
-        else _persist(
+        else persist(
             build_minhash_index(
                 batch, id_col, text_col, num_hashes, bands, shingle_n
             )
@@ -2477,29 +2260,9 @@ def delete_from_index(
         remaining = df.filter(F.col(part_col).isin(kept_parts)).join(
             F.broadcast(rid), "index_id", "left_anti"
         )
-        staging = index_path.rstrip("/") + "__staging__"
-        spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-        try:
-            # staged pre-hash-partitioned on part_col: the final
-            # partitionBy write then needs no exchange (the
-            # _staged_partition_upsert discipline)
-            staged = write_read_back(remaining.repartition(part_col), staging)
-            prev_mode = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                staged.write.partitionBy(
-                    part_col
-                ).mode("overwrite").parquet(index_path)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-        finally:
-            fs.delete(spath, True)
+        staged = _commit_staged(
+            spark, index_path, remaining.repartition(part_col), part_col
+        )
         committed = _index_schema(staged.schema, part_col)
     # fully-retired partitions: no rows remained, so the dynamic
     # overwrite never touched their directories — remove them
@@ -2576,29 +2339,7 @@ def compact_index(
     if not fat:
         return _stats_row(0, 0, 0)
     old = df.filter(F.col(part_col).isin(fat))
-    staging = index_path.rstrip("/") + "__staging__"
-    spath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-    try:
-        # staged pre-hash-partitioned on part_col: the final
-        # partitionBy write then needs no exchange (the
-        # _staged_partition_upsert discipline)
-        staged = write_read_back(old.repartition(part_col), staging)
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            staged.write.partitionBy(
-                part_col
-            ).mode("overwrite").parquet(index_path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-    finally:
-        fs.delete(spath, True)
+    _commit_staged(spark, index_path, old.repartition(part_col), part_col)
     # rows and column order unchanged, every compacted partition kept
     _record_index_schema(spark, index_path, df.schema)
     n_after = 0
@@ -2714,7 +2455,7 @@ def route_batch_to_centroids(
     w = Window.partitionBy("__bid__").orderBy(
         F.col("__ccm__").desc(), F.col("centroid_id").asc()
     )
-    return _persist(
+    return persist(
         batch.select(
             F.col(id_col).alias("__bid__"),
             F.col(vec_col).alias("__bv__"),
@@ -2866,12 +2607,12 @@ def minhash_recall(
     the semi-join), one (id_1, id_2) semi-join, two 1-row aggregates
     cross-joined. Nothing here is corpus-sized beyond the pair
     generators themselves."""
-    exact = _persist(
+    exact = persist(
         ngram_jaccard_pairs(
             df, id_col, text_col, threshold, shingle_n, max_shingle_df=None
         ).select("id_1", "id_2")
     )
-    found = _persist(
+    found = persist(
         minhash_lsh_dedup(
             df, id_col, text_col, num_hashes, bands, threshold, shingle_n
         ).select("id_1", "id_2")

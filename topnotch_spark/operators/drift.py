@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 
 def histogram_drift(
     ref: DataFrame,
@@ -364,8 +366,6 @@ def groupwise_ks(
     shuffle — then everything runs on the |groups|·bins frame: a
     broadcast spine join, two windows partitioned by group, a final
     per-group max."""
-    from topnotch_spark.operators.dedup import _persist
-
     vals = df.filter(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("g"),
         F.col(value_col).cast("double").alias("x"),
@@ -385,7 +385,7 @@ def groupwise_ks(
         ),
         F.lit(bins - 1),
     )
-    cnt = _persist(
+    cnt = persist(
         vals.select("g", idx.alias("bucket"))
         .groupBy("g", "bucket")
         .agg(F.count(F.lit(1)).alias("c_g"))
@@ -490,12 +490,11 @@ def token_distribution_drift(
             .agg(F.count(F.lit(1)).alias(out))
         )
 
-    from topnotch_spark.operators.dedup import _persist
 
     # Persisted (registry-scoped, checkpointable) because BOTH the
     # broadcast totals and the divergence sums consume it — without it
     # the explode+groupBy lineage runs twice.
-    joined = _persist(
+    joined = persist(
         vocab_counts(ref, "n_ref")
         .join(vocab_counts(cur, "n_cur"), "token", "full_outer")
         .na.fill(0, ["n_ref", "n_cur"])
@@ -614,9 +613,8 @@ def mutual_information(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
     )
-    from topnotch_spark.operators.dedup import _persist
 
-    joint = _persist(joint)
+    joint = persist(joint)
     ma = joint.groupBy("a").agg(F.sum("c_ab").alias("c_a"))
     mb = joint.groupBy("b").agg(F.sum("c_ab").alias("c_b"))
     tot = F.broadcast(joint.agg(F.sum("c_ab").alias("n")))
@@ -720,9 +718,8 @@ def psi_trend(
     # spine, the grid join) — without the persist each branch re-scans
     # and re-aggregates the source. With it the source is read exactly
     # twice (bounds + counts), both with 2-column pruned scans.
-    from topnotch_spark.operators.dedup import _persist
 
-    counts = _persist(
+    counts = persist(
         base.select("period", idx.alias("bucket"))
         .groupBy("period", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 
 def _deletion_keys(s: str) -> F.Column:
     """All 1-deletion variants of column `s`, plus the string itself."""
@@ -65,14 +67,14 @@ def fuzzy_match_pairs(
             "implemented); got "
             f"{max_distance}"
         )
-    from topnotch_spark.operators.dedup import _persist, spread_cpu
+    from topnotch_spark.operators.dedup import spread_cpu
 
     # spread BEFORE the persist: a parallelism-starved scan (single
     # row group) would otherwise cache as one partition, serializing
     # the deletion-neighborhood explode and both verify-join sides on
     # one task (measured: 1.25-1.6s single-task stage at sf0.1;
     # spread_cpu is a no-op when the scan already has partitions)
-    base = _persist(
+    base = persist(
         spread_cpu(
             df.select(
                 F.col(id_col).alias("__id__"),

@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import own_paths, persist, truncate_round
+
 # lineage-truncation cadence of the pagerank/PPR walk loops: one
 # checkpoint every _CKPT_CADENCE rounds (plus the final round).
 # Module-level so the SCALE.md cadence experiment can override it.
@@ -75,9 +77,7 @@ def basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     callers that ALSO need a per-item basket count (e.g. a popularity
     seed ranking) can pass it back via the ``items`` parameter and pay
     the fact-table distinct exactly once instead of once per consumer."""
-    from topnotch_spark.operators.dedup import _persist
-
-    return _persist(
+    return persist(
         df.select(F.col(basket_col).alias("__b__"), F.col(item_col).alias("__i__"))
         .where(F.col(item_col).isNotNull())
         .distinct()
@@ -177,8 +177,6 @@ def pagerank(
     itself exceeds executor memory; the equi-join path then reuses the
     same hash partitioning across rounds.
     """
-    from topnotch_spark.operators.dedup import _persist
-
     # The symmetric edge set is persisted HASH-PARTITIONED BY dst — the
     # key every round's contribution aggregate groups on. A broadcast
     # hash join on src preserves the streamed side's partitioning, so
@@ -186,12 +184,12 @@ def pagerank(
     # exchange: the only per-round data movement is the node-sized
     # shares broadcast. (Unpartitioned, each round shuffles
     # |map tasks| x |nodes| partial-agg rows — measured 2.5x slower.)
-    sym = _persist(
+    sym = persist(
         _directed(edges.select("src", "dst")).repartition(
             edges.sparkSession.sparkContext.defaultParallelism, "dst"
         )
     )
-    deg = _persist(
+    deg = persist(
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     )
     # 1-row node-count frame rides into the plan via a broadcast cross
@@ -205,7 +203,7 @@ def pagerank(
     # ranks frame, `shares` is a pure projection of the previous
     # checkpoint (no join) and the final output needs no deg join.
     # Same integer expressions, computed once — values unchanged.
-    tpf = _persist(
+    tpf = persist(
         deg.crossJoin(nn).select(
             F.col("src").alias("node"),
             F.expr(
@@ -260,11 +258,7 @@ def pagerank(
     )
     if tol_scaled is not None:
         out = out.withColumn("n_rounds", F.lit(realized))
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(out)
-        _d._CHECKPOINTED[id(out)] = ckpt
+    own_paths(out, [ckpt])
     return out
 
 
@@ -304,9 +298,6 @@ def label_propagation(
     truncated every _CKPT_CADENCE rounds like pagerank. The final
     community-size rollup is one extra label-sized groupBy + join.
     """
-    from topnotch_spark.operators.cluster import _truncate_round
-    from topnotch_spark.operators.dedup import _persist
-
     if iters < 1:
         raise ValueError(f"label_propagation: iters must be >= 1, got {iters}")
     w = (
@@ -315,7 +306,7 @@ def label_propagation(
         else F.lit(1).cast("long")
     )
     e = edges.select("src", "dst", w.alias("__w__"))
-    sym = _persist(
+    sym = persist(
         e.union(
             e.select(
                 F.col("dst").alias("src"),
@@ -329,7 +320,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     hint = F.broadcast if broadcast_labels else (lambda df: df)
-    labels, ckpt = _truncate_round(
+    labels, ckpt = truncate_round(
         sym.select("src").distinct().select(
             F.col("src").alias("node"), F.col("src").alias("community")
         ),
@@ -350,18 +341,14 @@ def label_propagation(
             .select(F.col("src").alias("node"), "community")
         )
         if it % _CKPT_CADENCE == _CKPT_CADENCE - 1 or it == iters - 1:
-            labels, ckpt = _truncate_round(labels, ckpt)
+            labels, ckpt = truncate_round(labels, ckpt)
     sizes = labels.groupBy("community").agg(
         F.count(F.lit(1)).alias("community_size")
     )
     out = labels.join(sizes, "community").select(
         "node", "community", "community_size"
     )
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(out)
-        _d._CHECKPOINTED[id(out)] = ckpt
+    own_paths(out, [ckpt])
     return out
 
 
@@ -392,19 +379,16 @@ def k_core(
     survivor set (broadcast when it fits), one map-side-combined degree
     groupBy, and a 1-scalar survivor count (the early-exit probe, the
     tol_scaled convention); lineage truncated per round."""
-    from topnotch_spark.operators.cluster import _truncate_round
-    from topnotch_spark.operators.dedup import _persist
-
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"k_core: max_rounds must be >= 1, got {max_rounds}")
-    sym = _persist(
+    sym = persist(
         _directed(edges.select("src", "dst")).repartition(
             edges.sparkSession.sparkContext.defaultParallelism, "src"
         )
     )
-    full_deg = _persist(
+    full_deg = persist(
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     )
     alive = full_deg.select("src")
@@ -419,11 +403,11 @@ def k_core(
             F.count(F.lit(1)).alias("core_degree")
         )
         # prev-path handoff: round r's survivor set is superseded the
-        # moment round r+1's is materialized — _truncate_round deletes
+        # moment round r+1's is materialized — truncate_round deletes
         # the previous round's files only after writing the new ones.
         # The LAST path backs `alive` through the final recomputation,
         # so it is registered on the output for release-time deletion.
-        new_alive, ckpt = _truncate_round(
+        new_alive, ckpt = truncate_round(
             core_deg.filter(F.col("core_degree") >= k).select("src"), ckpt
         )
         n_new = new_alive.count()
@@ -448,9 +432,7 @@ def k_core(
         )
     )
     if ckpt is not None:
-        from topnotch_spark.operators.dedup import _register_checkpoints
-
-        _register_checkpoints(out, [ckpt])
+        own_paths(out, [ckpt])
     return out
 
 
@@ -468,16 +450,14 @@ def _truncate_probe(
     checkpoint reads the cache instead of recomputing the 2-round plan
     — previously the probe and the lazy checkpoint each computed it.
     Probe-before-truncate also keeps the parquet-checkpoint path safe:
-    ``prev``'s files are deleted by _truncate_round only after the
+    ``prev``'s files are deleted by truncate_round only after the
     probe has read them."""
-    from topnotch_spark.operators.cluster import _truncate_round
-
     if tol_scaled is None:
-        ranks, ckpt = _truncate_round(ranks, ckpt, eager=False)
+        ranks, ckpt = truncate_round(ranks, ckpt, eager=False)
         return ranks, ckpt, False
     cached = ranks.persist()
     converged = _delta_below(cached, prev, tol_scaled)
-    ranks, ckpt = _truncate_round(cached, ckpt)
+    ranks, ckpt = truncate_round(cached, ckpt)
     cached.unpersist()
     return ranks, ckpt, converged
 
@@ -509,9 +489,7 @@ def triangle_counts(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     ``2·tri / (deg·(deg-1))`` and rounds to ``round_digits`` in both
     engines (the lift convention of operators/basket.py).
     """
-    from topnotch_spark.operators.dedup import _persist
-
-    e = _persist(edges.select("src", "dst"))
+    e = persist(edges.select("src", "dst"))
     deg = (
         _directed(e)
         .groupBy(F.col("src").alias("node"))
@@ -527,7 +505,7 @@ def triangle_counts(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     # stages and ~5s of first-plan analysis on the tripled tree at
     # sf0.1). Cached, the join runs once and the plan carries one
     # InMemoryRelation; |tris| is three longs per triangle.
-    tris = _persist(
+    tris = persist(
         wedges.join(
             e.select(F.col("src").alias("a"), F.col("dst").alias("c")),
             ["a", "c"],
@@ -604,28 +582,26 @@ def personalized_pagerank(
     ``tol_scaled`` adds the same per-checkpoint delta early-exit (and
     ``n_rounds`` output column) as :func:`pagerank`; ``iters`` caps.
     """
-    from topnotch_spark.operators.dedup import _persist
-
     w = (
         F.col(weight_col).cast("long")
         if weight_col is not None
         else F.lit(1).cast("long")
     )
     e = edges.select("src", "dst", w.alias("w"))
-    sym = _persist(
+    sym = persist(
         e.union(
             e.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
         ).repartition(edges.sparkSession.sparkContext.defaultParallelism, "dst")
     )
-    deg = _persist(
+    deg = persist(
         sym.groupBy("src").agg(
             F.count(F.lit(1)).alias("outdeg"),
             F.sum("w").alias("wout"),
         )
     )
-    seeds = _persist(
+    seeds = persist(
         deg.select("src")
         .join(
             F.broadcast(seed_nodes.select(F.col("node").alias("src")).distinct()),
@@ -655,7 +631,7 @@ def personalized_pagerank(
     # materialization. With wout carried inside the ranks frame,
     # `shares` is a pure projection; outdeg rides along for the final
     # output. Same integer expressions — values unchanged.
-    tpf = _persist(
+    tpf = persist(
         deg.select(F.col("src").alias("node"), "outdeg", "wout")
         .join(F.broadcast(seeds), "node", "left")
         .crossJoin(ns)
@@ -715,9 +691,5 @@ def personalized_pagerank(
     )
     if tol_scaled is not None:
         out = out.withColumn("n_rounds", F.lit(realized))
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(out)
-        _d._CHECKPOINTED[id(out)] = ckpt
+    own_paths(out, [ckpt])
     return out

@@ -32,6 +32,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 
 def referential_integrity(
     child: DataFrame,
@@ -192,12 +194,10 @@ def fd_check(
     pair is ONE map-side-combined groupBy(determinant) with a
     count-distinct, reduced to a 1-row summary — |pairs| bounded
     aggregates over one scan."""
-    from topnotch_spark.operators.dedup import _persist
-
     if not pairs:
         raise ValueError("fd_check: pairs must be non-empty")
     cols = sorted({c for p in pairs for c in p})
-    base = _persist(df.select(*cols))
+    base = persist(df.select(*cols))
     out = None
     for det, dep in pairs:
         sent = F.coalesce(F.col(dep).cast("string"), F.lit("__NULL__"))
@@ -267,7 +267,6 @@ def t_closeness(
     """
     if not 0.0 <= t <= 1.0:
         raise ValueError(f"t_closeness: t must be in [0, 1], got {t}")
-    from topnotch_spark.operators.dedup import _persist
 
     sens = F.coalesce(
         F.col(sensitive_col).cast("string"), F.lit("__NULL__")
@@ -276,7 +275,7 @@ def t_closeness(
     # total, and the per-cell terms) — persist it so the source is
     # scanned ONCE; it is the distinct (quasi, value) frame, already the
     # big reduction
-    cell = _persist(
+    cell = persist(
         df.groupBy(*quasi_cols, sens.alias("__sens__")).agg(
             F.count(F.lit(1)).alias("n_gs")
         )

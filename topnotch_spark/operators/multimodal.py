@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 HIST_BINS = 16  # high-nibble histogram: exact-integer, oracle-checkable
 
 # magic-byte table for real-world sniffing (JVM-side, no Python)
@@ -349,7 +351,7 @@ def phash_near_dups(
     registered in the dedup persist registry (it feeds both join
     sides); consume inside ``dedup_scope()`` or call
     ``unpersist_intermediates()`` to release it."""
-    from topnotch_spark.operators.dedup import _persist, bitstring_band_pairs
+    from topnotch_spark.operators.dedup import bitstring_band_pairs
 
     bits = grid * grid
     if bits % band_bits:
@@ -357,7 +359,7 @@ def phash_near_dups(
             f"phash_near_dups: band_bits={band_bits} must divide "
             f"grid²={bits}"
         )
-    base = _persist(
+    base = persist(
         perceptual_hash(
             df, bin_col, keep_cols=(id_col,), hash_type=hash_type, grid=grid
         ).select(F.col(id_col).alias("id"), F.col("phash").alias("sh"))
@@ -424,10 +426,7 @@ def dedup_batch_against_phash_index(
     with best = (hamming asc, index_id asc) and keep iff no candidate
     is within ``max_hamming``. An index built with a different grid
     raises instead of silently comparing misaligned bit-strings."""
-    from topnotch_spark.operators.dedup import (
-        _persist,
-        dedup_batch_against_bitsig_index,
-    )
+    from topnotch_spark.operators.dedup import dedup_batch_against_bitsig_index
 
     bits = grid * grid
     if bits % band_bits:
@@ -435,7 +434,7 @@ def dedup_batch_against_phash_index(
             f"dedup_batch_against_phash_index: band_bits={band_bits} "
             f"must divide grid²={bits}"
         )
-    bsig = _persist(
+    bsig = persist(
         perceptual_hash(
             batch, bin_col, keep_cols=(id_col,), hash_type=hash_type,
             grid=grid,
@@ -487,17 +486,14 @@ def dedup_batch_against_audio_index(
     bucket probes, exact Hamming verify, per-clip (id, n_candidates,
     best_match_id, best_hamming, keep); old clips never re-decode and
     a width-mismatched index raises."""
-    from topnotch_spark.operators.dedup import (
-        _persist,
-        dedup_batch_against_bitsig_index,
-    )
+    from topnotch_spark.operators.dedup import dedup_batch_against_bitsig_index
 
     if n_frames % band_bits:
         raise ValueError(
             f"dedup_batch_against_audio_index: band_bits={band_bits} "
             f"must divide n_frames={n_frames}"
         )
-    bsig = _persist(
+    bsig = persist(
         audio_fingerprint(
             batch, bin_col, keep_cols=(id_col,), n_frames=n_frames
         ).select(F.col(id_col).alias("id"), F.col("afp").alias("sh"))
@@ -574,10 +570,9 @@ def dedup_batch_against_video_index(
     layout."""
     from pyspark.sql import Window
 
-    from topnotch_spark.operators.dedup import _persist
 
     bits = grid * grid
-    bsig = _persist(
+    bsig = persist(
         video_frame_hashes(
             batch, bin_col, keep_cols=(id_col,), hash_type=hash_type,
             grid=grid, every_n=every_n,
@@ -670,7 +665,7 @@ def phash_recall(
     with data and quantifies the loss for looser configs. The exact
     side is a broadcast-NLJ over the tiny (id, hash) table — signatures
     only, blobs never join; sample at 100 TB as with minhash_recall."""
-    from topnotch_spark.operators.dedup import _persist, bitstring_recall
+    from topnotch_spark.operators.dedup import bitstring_recall
 
     bits = grid * grid
     if bits % band_bits:
@@ -678,7 +673,7 @@ def phash_recall(
             f"phash_recall: band_bits={band_bits} must divide "
             f"grid²={bits}"
         )
-    base = _persist(
+    base = persist(
         perceptual_hash(
             df, bin_col, keep_cols=(id_col,), hash_type=hash_type, grid=grid
         ).select(F.col(id_col).alias("id"), F.col("phash").alias("sh"))
@@ -773,9 +768,7 @@ def video_near_dups(
     registry (it feeds both join sides); consume inside
     ``dedup_scope()`` or call ``unpersist_intermediates()`` to release
     it."""
-    from topnotch_spark.operators.dedup import _persist
-
-    fh = _persist(
+    fh = persist(
         video_frame_hashes(
             df, bin_col, keep_cols=(id_col,), hash_type=hash_type,
             grid=grid, every_n=every_n,
@@ -878,14 +871,14 @@ def audio_near_dups(
     in the dedup persist registry (it feeds both join sides); consume
     inside ``dedup_scope()`` or call ``unpersist_intermediates()`` to
     release it."""
-    from topnotch_spark.operators.dedup import _persist, bitstring_band_pairs
+    from topnotch_spark.operators.dedup import bitstring_band_pairs
 
     if n_frames % band_bits:
         raise ValueError(
             f"audio_near_dups: band_bits={band_bits} must divide "
             f"n_frames={n_frames}"
         )
-    base = _persist(
+    base = persist(
         audio_fingerprint(
             df, bin_col, keep_cols=(id_col,), n_frames=n_frames
         ).select(F.col(id_col).alias("id"), F.col("afp").alias("sh"))

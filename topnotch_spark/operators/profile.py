@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from topnotch_spark.runtime import persist
+
 
 def profile_columns(
     df: DataFrame,
@@ -264,9 +266,7 @@ def mad_outliers(
     median pass, the MAD pass, and the final projection — 4 source scans
     without it); consume inside ``dedup_scope()`` or call
     ``unpersist_intermediates()`` to release the storage."""
-    from topnotch_spark.operators.dedup import _persist
-
-    df = _persist(df)
+    df = persist(df)
     gcols = list(group_cols or [])
     med_col, mad_col = "__med__", "__mad__"
     while med_col in df.columns or mad_col in df.columns:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from topnotch_spark.functions.text import tokens
-from topnotch_spark.operators.dedup import _persist_if_large
+from topnotch_spark.runtime import persist_if_large
 
 
 def bm25_topk(
@@ -56,7 +56,7 @@ def bm25_topk(
     (plan option ``persistTf``) controls it: True forces the persist,
     False skips it, None (default) auto-gates on the estimated input
     size of ``docs`` — a source below
-    ``dedup.PERSIST_INPUT_THRESHOLD_BYTES`` (64 MiB) recomputes its
+    ``runtime.PERSIST_INPUT_THRESHOLD_BYTES`` (64 MiB) recomputes its
     cheap tokenize lineage per branch instead of paying a
     materialization that costs more than it saves (the r8 verdict's
     measured finding: sf0.1's 584 KB corpus ran 1.6x slower WITH the
@@ -85,10 +85,10 @@ def bm25_topk(
         F.col(id_col).alias("__id__"), F.explode(tokens(text_col)).alias("token")
     )
     # one tokenize/explode/agg pass, reused by all four downstream branches
-    tf = _persist_if_large(
+    tf = persist_if_large(
         tok.groupBy("__id__", "token").agg(F.count(F.lit(1)).alias("tf")),
         docs,
-        persist=persist_tf,
+        force=persist_tf,
     )
     doclen = tf.groupBy("__id__").agg(F.sum("tf").alias("dl"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 
 def scd2_merge(
     current: DataFrame,
@@ -181,9 +183,8 @@ def cdc_apply(
     from pyspark.sql import Window
 
     w = Window.partitionBy(*keys).orderBy(*order)
-    from topnotch_spark.operators.dedup import _persist
 
-    latest = _persist(
+    latest = persist(
         changes.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
         .drop("__rn__")

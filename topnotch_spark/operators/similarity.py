@@ -19,6 +19,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from topnotch_spark.functions.vectors import dot, norm, srp_bucket
+from topnotch_spark.runtime import (
+    delete_path,
+    own_paths,
+    persist,
+    truncate_round,
+)
 
 
 def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -142,13 +148,12 @@ def mmr_rerank(
     rel_cos = dot("__qv__", "__cv__", dim) / (
         F.col("__qn__") * F.col("__cn__")
     )
-    from topnotch_spark.operators.dedup import _persist
 
     # persisted: the candidate frame feeds BOTH sides of the pairwise
     # sims join AND the packing join — without the persist each
     # consumer re-runs the broadcast scan + top-n window (the
     # scan_audit guard rejects 3 uncached scans, rightly)
-    cand = _persist(
+    cand = persist(
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -376,8 +381,6 @@ def ivf_topk(
     ``set_checkpoint_dir`` the persist spills to parquet EAGERLY at
     construction time, like the dedup family).
     """
-    from topnotch_spark.operators.dedup import _persist
-
     if centroids is not None:
         cents = centroids.select(
             "centroid_id", F.col("centroid").alias("__cvec__")
@@ -387,7 +390,7 @@ def ivf_topk(
         # a corpus orderBy/limit — it is broadcast into BOTH assign()
         # branches (corpus lists + query probes), and without the persist
         # each branch re-scans and re-sorts the corpus to rebuild it.
-        cents = _persist(
+        cents = persist(
             corpus.orderBy(id_col)
             .limit(n_centroids)
             .select(
@@ -757,14 +760,13 @@ def kmeans_centroids_exact(
         )
     if n_rounds < 1:
         raise ValueError(f"kmeans_centroids_exact: n_rounds must be >= 1")
-    from topnotch_spark.operators.dedup import _persist
 
     spark = df.sparkSession
     # persisted: the (id, v) projection feeds the seeds collect, one
     # assignment cross-join PER ROUND and the final assignment pass —
     # 2·n_rounds+2 corpus scans unpersisted (measured: four 32-task
     # 0.5s scan+cast stages per cataloged 2-round train at sf0.1)
-    base = _persist(
+    base = persist(
         df.select(
             F.col(id_col).alias("id"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -953,10 +955,8 @@ def topk_recall(
     (brute force always returns k rows for a non-trivial corpus);
     queries missing from ``approx`` (e.g. every probed bucket empty)
     surface as recall 0, not as dropped rows."""
-    from topnotch_spark.operators.dedup import _persist
-
-    e = _persist(exact.select(F.col(query_col), F.col(neighbor_col)))
-    a = _persist(approx.select(F.col(query_col), F.col(neighbor_col)))
+    e = persist(exact.select(F.col(query_col), F.col(neighbor_col)))
+    a = persist(approx.select(F.col(query_col), F.col(neighbor_col)))
     totals = e.groupBy(query_col).agg(F.count(F.lit(1)).alias("n_exact"))
     hits = (
         e.join(a, [query_col, neighbor_col], "left_semi")
@@ -1412,12 +1412,11 @@ def ivfpq_recall(
     and an m-lookup integer sum per candidate. The exact pass exists
     only to grade."""
     from topnotch_spark.functions.vectors import cosine as cos_fn
-    from topnotch_spark.operators.dedup import _persist
 
     if dim % m != 0:
         raise ValueError(f"ivfpq_recall: dim={dim} not divisible by m={m}")
     sd = dim // m
-    base = _persist(
+    base = persist(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
@@ -1427,7 +1426,7 @@ def ivfpq_recall(
     )
     # --- IVF: seeded centroids, corpus assignment, query probes -------
     wseed = Window.orderBy("vid")
-    cents = _persist(
+    cents = persist(
         base.orderBy("vid")
         .limit(n_centroids)
         .withColumn("centroid_id", F.row_number().over(wseed) - 1)
@@ -1436,7 +1435,7 @@ def ivfpq_recall(
     wassign = Window.partitionBy("vid").orderBy(
         F.col("__cc__").desc(), F.col("centroid_id").asc()
     )
-    assign = _persist(
+    assign = persist(
         base.crossJoin(F.broadcast(cents))
         .withColumn("__cc__", cos_fn(F.col("v"), F.col("cvec_full")))
         .withColumn("__rn__", F.row_number().over(wassign))
@@ -1464,8 +1463,8 @@ def ivfpq_recall(
         .select("query_id", "vid")
     )
     # --- PQ: codebooks, codes, per-query ADC tables --------------------
-    cb = _persist(_pq_codebook(base, m, sd, n_codes))
-    codes = _persist(_pq_encode(base, cb, m, sd))
+    cb = persist(_pq_codebook(base, m, sd, n_codes))
+    codes = persist(_pq_encode(base, cb, m, sd))
     qsub = q.select(
         "query_id",
         "qn",
@@ -1604,12 +1603,10 @@ def pq_recall(
     subspace) argmin window; the ADC table is n_queries·m·n_codes rows
     (broadcast); scoring joins the code table once and aggregates —
     never touches the raw vectors again (that is the point of PQ)."""
-    from topnotch_spark.operators.dedup import _persist
-
     if dim % m != 0:
         raise ValueError(f"pq_recall: dim={dim} not divisible by m={m}")
     sd = dim // m
-    base = _persist(
+    base = persist(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
@@ -1617,8 +1614,8 @@ def pq_recall(
             ),
         )
     )
-    cb = _persist(_pq_codebook(base, m, sd, n_codes))
-    codes = _persist(_pq_encode(base, cb, m, sd))
+    cb = persist(_pq_codebook(base, m, sd, n_codes))
+    codes = persist(_pq_encode(base, cb, m, sd))
     # ADC lookup table per query: micro-int partial dots + code norms
     q = base.filter(F.col("vid") < n_queries).select(
         F.col("vid").alias("query_id"),
@@ -1747,12 +1744,9 @@ def kcenter_select(
     each round is ONE broadcast of the single new pick + a projection
     (least of two integers) + a TakeOrdered(1) — k linear passes,
     lineage truncated per round, no pairwise materialization ever."""
-    from topnotch_spark.operators.cluster import _truncate_round
-    from topnotch_spark.operators.dedup import _persist
-
     if k < 1:
         raise ValueError(f"kcenter_select: k must be >= 1, got {k}")
-    base = _persist(
+    base = persist(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
@@ -1795,13 +1789,13 @@ def kcenter_select(
     # was read from), while every pick's files back the final union and
     # must live until the OUTPUT is released. Conflating the two (one
     # shared prev path) deleted files that live frames still scanned.
-    st, st_ckpt = _truncate_round(st, None)
+    st, st_ckpt = truncate_round(st, None)
     pick_paths: list[str | None] = []
     for r in range(2, k + 1):
         p = st.orderBy(
             F.col("__mind__").desc(), F.col("vid").asc()
         ).limit(1)
-        p, pick_path = _truncate_round(p, None)
+        p, pick_path = truncate_round(p, None)
         pick_paths.append(pick_path)
         picks.append(
             p.select(
@@ -1826,17 +1820,15 @@ def kcenter_select(
             )
         )
         if r < k:
-            st, st_ckpt = _truncate_round(st, st_ckpt)
+            st, st_ckpt = truncate_round(st, st_ckpt)
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)
-    from topnotch_spark.operators import dedup as _d
-
     if st_ckpt is not None:
         # the last state checkpoint's only consumer was the final pick,
         # already materialized above — safe to drop immediately
-        _d._delete_path(out, st_ckpt)
-    _d._register_checkpoints(out, pick_paths)
+        delete_path(out.sparkSession, st_ckpt)
+    own_paths(out, pick_paths)
     return out
 
 
@@ -1865,11 +1857,9 @@ def quantize_recall(
     persisted once and feeds all four branches. floor(x + 0.5) not
     round() — round-half rules differ across engines; every intermediate
     is the same IEEE double expression in the DuckDB mirror."""
-    from topnotch_spark.operators.dedup import _persist
-
     # cast to double up front — the proven quantize_embeddings contract
     # (both engines then run the identical IEEE double expressions)
-    base = _persist(
+    base = persist(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.transform(

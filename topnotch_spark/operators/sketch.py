@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topnotch_spark.runtime import persist
+
 SKETCH_COL = "__hll_sketch__"
 
 
@@ -349,7 +351,6 @@ def kmv_group_jaccard(
     join is the expensive part and exists only in the audit form."""
     from pyspark.sql import Window
 
-    from topnotch_spark.operators.dedup import _persist
 
     if k < 2:
         raise ValueError(f"kmv_group_jaccard: k must be >= 2, got {k}")
@@ -360,9 +361,9 @@ def kmv_group_jaccard(
     )
     dv = df.select(F.col(group_col).alias("g"), h.alias("__h__")).distinct()
     if grade_exact:
-        dv = _persist(dv)
+        dv = persist(dv)
     wg = Window.partitionBy("g").orderBy("__h__")
-    sk = _persist(
+    sk = persist(
         dv.withColumn("__rn__", F.row_number().over(wg))
         .filter(F.col("__rn__") <= k)
         .drop("__rn__")
@@ -485,9 +486,8 @@ def kmv_accuracy(
     this verdict query, production reads the persisted sketch."""
     from pyspark.sql import Window
 
-    from topnotch_spark.operators.dedup import _persist
 
-    vals = _persist(
+    vals = persist(
         df.select(
             F.col(id_col).cast("string").alias("__id__"),
             F.col(value_col).cast("double").alias("value"),

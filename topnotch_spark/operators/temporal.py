@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from topnotch_spark.runtime import persist
+
 
 def asof_join(
     left: DataFrame,
@@ -343,14 +345,12 @@ def sequence_likelihood(
     shuffle) persisted — it feeds the transition matrix, the row-count
     prior, and the scoring join; the model is the bounded |states|²
     matrix broadcast back; one final groupBy(key)."""
-    from topnotch_spark.operators.dedup import _persist
-
     if k <= 0:
         raise ValueError(f"sequence_likelihood: k must be > 0, got {k}")
     w = Window.partitionBy(key_col).orderBy(
         F.col(ts_col).asc(), F.col(tiebreak_col).asc()
     )
-    pairs = _persist(
+    pairs = persist(
         df.select(
             F.col(key_col).alias("__k__"),
             F.lag(F.col(state_col)).over(w).alias("__prev__"),
@@ -447,15 +447,13 @@ def cusum_changepoints(
 
     Execution shape: one per-key aggregate joined back (broadcast), two
     ordered window passes on the key shuffle, one final groupBy(key)."""
-    from topnotch_spark.operators.dedup import _persist
-
     if decimals < 0:
         raise ValueError(f"cusum_changepoints: decimals must be >= 0")
     scale = 10 ** decimals
     k_s = round(float(drift_k) * scale)
     h_s = round(float(threshold_h) * scale)
     dec = "decimal(38,0)"
-    base = _persist(
+    base = persist(
         df.select(
             F.col(key_col).alias("__k__"),
             F.col(ts_col).alias("__ts__"),
@@ -621,7 +619,6 @@ def resample_timeseries(
     keeps lineage (unlike a localCheckpoint), so losing a cached block
     on a real cluster recomputes instead of failing the job.
     Scan-bound at any scale."""
-    from topnotch_spark.operators.dedup import _persist
     win = F.window(F.col(ts_col), bucket)
     per = (
         df.groupBy(win.alias("w"), F.col(group_col))
@@ -636,7 +633,7 @@ def resample_timeseries(
             "sum_value",
         )
     )
-    per = _persist(per)
+    per = persist(per)
     bounds = per.agg(
         F.min("bucket_start").alias("mn"), F.max("bucket_start").alias("mx")
     ).collect()[0]
@@ -689,11 +686,9 @@ def funnel_stages(
     counted on the driver. Output: (stage_idx, stage, n_users),
     n_users non-increasing.
     """
-    from topnotch_spark.operators.dedup import _persist
-
     if not stages:
         raise ValueError("funnel_stages: stages must be non-empty")
-    prev = _persist(
+    prev = persist(
         df.filter(F.col(state_col) == stages[0])
         .groupBy(F.col(user_col).alias("__u__"))
         .agg(F.min(ts_col).alias("__t__"))
@@ -706,7 +701,7 @@ def funnel_stages(
         )
     ]
     for i, stage in enumerate(stages[1:], start=1):
-        prev = _persist(
+        prev = persist(
             df.filter(F.col(state_col) == stage)
             .join(
                 prev,
@@ -751,9 +746,7 @@ def retention_cohorts(
     cohort-size aggregate, and the cell aggregate (4 source scans
     without it); consume inside ``dedup_scope()`` or call
     ``unpersist_intermediates()`` to release the storage."""
-    from topnotch_spark.operators.dedup import _persist
-
-    df = _persist(df.select(F.col(key_col), F.col(ts_col)))
+    df = persist(df.select(F.col(key_col), F.col(ts_col)))
     first = df.groupBy(key_col).agg(F.min(ts_col).alias("__first_ts__"))
     first = first.select(
         key_col,

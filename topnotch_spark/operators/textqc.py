@@ -21,6 +21,7 @@ from topnotch_spark.functions.text import (
     stopword_ratio,
     tokens,
 )
+from topnotch_spark.runtime import own_paths, persist, truncate_round
 
 # tiny marker lexicons for the language-ID heuristic (n-gram/stopword
 # scoring); deliberately small + deterministic
@@ -320,13 +321,11 @@ def unigram_logprob(
     mean, left-joined to the id spine so empty docs survive with NULL
     score. Two shuffles (vocab, doc) over exploded tokens — the same
     shape as TF-IDF, scan-bound at corpus scale."""
-    from topnotch_spark.operators.dedup import _persist
-
-    arr = _persist(
+    arr = persist(
         df.select(F.col(id_col).alias("__id__"), tokens(text_col).alias("__toks__"))
     )
     tok = arr.select("__id__", F.explode("__toks__").alias("token"))
-    vocab = _persist(tok.groupBy("token").agg(F.count(F.lit(1)).alias("c")))
+    vocab = persist(tok.groupBy("token").agg(F.count(F.lit(1)).alias("c")))
     total = vocab.agg(F.sum("c").alias("total"))
     logp = vocab.crossJoin(F.broadcast(total)).select(
         "token", F.log(F.col("c") / F.col("total")).alias("__lp__")
@@ -409,9 +408,7 @@ def vocab_overlap(
     persist registry — it feeds the size aggregate and both join sides
     (4 source scans without it); consume inside ``dedup_scope()`` or
     call ``unpersist_intermediates()`` to release the storage."""
-    from topnotch_spark.operators.dedup import _persist
-
-    vocab = _persist(
+    vocab = persist(
         df.select(
             F.col(group_col).alias("g"),
             F.explode(tokens(text_col)).alias("token"),
@@ -487,9 +484,7 @@ def bigram_logprob(
     bigrams), then ONE groupBy(doc) for the mean. Same two-shuffle
     shape and determinism contract as unigram_logprob (ln over
     identical IEEE doubles on both engines)."""
-    from topnotch_spark.operators.dedup import _persist
-
-    arr = _persist(
+    arr = persist(
         df.select(F.col(id_col).alias("__id__"), tokens(text_col).alias("__toks__"))
     )
     n = F.size("__toks__")
@@ -503,7 +498,7 @@ def bigram_logprob(
     ).otherwise(F.array().cast("array<string>"))
     big = arr.select("__id__", F.explode(bigrams).alias("bg"))
     tok = arr.select(F.explode("__toks__").alias("token"))
-    uni = _persist(tok.groupBy("token").agg(F.count(F.lit(1)).alias("c1")))
+    uni = persist(tok.groupBy("token").agg(F.count(F.lit(1)).alias("c1")))
     vsize = uni.agg(F.count(F.lit(1)).alias("v"))
     bg_counts = big.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     lp = (
@@ -933,14 +928,13 @@ def ngram_novelty(
     counter row, never a pair blow-up, so the plan is skew-safe at any
     corpus size."""
     from topnotch_spark.operators.dedup import (
-        _persist,
         shingle_rows,
         spread_cpu,
     )
 
     # full-corpus shingle entry: spread the fused scan→shingle map
     # stage onto the cores (guide §2/§6, the pair-mining discipline)
-    sh = _persist(shingle_rows(spread_cpu(df, id_col), id_col, text_col, shingle_n))
+    sh = persist(shingle_rows(spread_cpu(df, id_col), id_col, text_col, shingle_n))
     dfc = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df__"))
     return (
         sh.join(dfc, "sh")
@@ -1085,11 +1079,7 @@ def bpe_merge_sequence(
         )
         .orderBy("merge_rank")
     )
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(result)
-        _d._CHECKPOINTED[id(result)] = ckpt
+    own_paths(result, [ckpt])
     return result
 
 
@@ -1105,12 +1095,10 @@ def word_counts(
     scan + word shuffle per consumer (the graph ``basket_items`` /
     DSIR ``target_pred`` sharing pattern). ``max_word_len`` must match
     the consumers' trainer contract."""
-    from topnotch_spark.operators.dedup import _persist
-
     w = df.select(F.explode(tokens(text_col)).alias("word"))
     if max_word_len is not None:
         w = w.filter(F.length("word") <= max_word_len)
-    return _persist(w.groupBy("word").agg(F.count(F.lit(1)).alias("wc")))
+    return persist(w.groupBy("word").agg(F.count(F.lit(1)).alias("wc")))
 
 
 def bpe_corpus_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -1119,9 +1107,7 @@ def bpe_corpus_vocab(df: DataFrame, text_col: str) -> DataFrame:
     the BPE lifecycle (pass to :func:`bpe_merge_sequence` via ``vocab``
     and to :func:`bpe_segment` via ``words`` so a train→apply pipeline
     reduces the corpus exactly once)."""
-    from topnotch_spark.operators.dedup import _persist
-
-    return _persist(_bpe_vocab(df, text_col))
+    return persist(_bpe_vocab(df, text_col))
 
 
 _BPE_SYMS = "filter(split(s, '  '), x -> x <> '')"
@@ -1164,9 +1150,7 @@ def _bpe_rounds(
     callers that only consume the merge sequence. Round lineage is
     truncated per round (connected-components checkpoint helper); every
     frame in the loop is vocab-sized."""
-    from topnotch_spark.operators.cluster import _truncate_round
-
-    state, ckpt = _truncate_round(state0, None)
+    state, ckpt = truncate_round(state0, None)
     spark = state0.sparkSession
     pair_list = (
         f"transform(sequence(1, size({_BPE_SYMS}) - 1), "
@@ -1197,7 +1181,7 @@ def _bpe_rounds(
         )
         bests.append(best)
         if r < n_merges or apply_last:
-            state, ckpt = _truncate_round(
+            state, ckpt = truncate_round(
                 state.crossJoin(F.broadcast(best.select("pair"))).select(
                     "word",
                     F.expr(
@@ -1276,11 +1260,7 @@ def bpe_fertility_by_group(
             ).alias("chars_per_subword"),
         )
     )
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(result)
-        _d._CHECKPOINTED[id(result)] = ckpt
+    own_paths(result, [ckpt])
     return result
 
 
@@ -1321,8 +1301,6 @@ def bpe_segment(
     one corpus-tokens → word equi-join + map-side-combined groupBy(doc)
     rolls the counts up. No per-merge join, no corpus rewrite, no
     Python in the loop."""
-    from topnotch_spark.operators.dedup import _persist
-
     mrow = F.broadcast(
         merges.select(
             F.struct(
@@ -1338,7 +1316,7 @@ def bpe_segment(
     if words is not None:
         words = words.select("word", "s")
     else:
-        words = _persist(
+        words = persist(
             target.select(F.explode(tokens(text_col)).alias("word"))
             .distinct()
             .select(
@@ -1421,9 +1399,7 @@ def collocations(
     persisted (id, tokens) frame feeding both the unigram and bigram
     passes (one map-side-combined groupBy each); the model join is
     bigram-table-sized; TakeOrdered(k) before the rank window."""
-    from topnotch_spark.operators.dedup import _persist
-
-    toked = _persist(
+    toked = persist(
         df.select(tokens(text_col).alias("__t__")).filter(
             F.size("__t__") >= 1
         )
@@ -1685,11 +1661,7 @@ def unigram_lm_vocab(
         "freq",
         "lp_milli",
     ).orderBy("rank")
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(result)
-        _d._CHECKPOINTED[id(result)] = ckpt
+    own_paths(result, [ckpt])
     return result
 
 
@@ -1705,11 +1677,8 @@ def _unigram_train(
 ) -> tuple[DataFrame, DataFrame, str | None]:
     """The unigram-LM EM loop shared by :func:`unigram_lm_vocab` and
     :func:`unigram_fertility_by_group`: returns (words, final lp frame,
-    checkpoint path). ``words`` is persisted in the dedup registry;
+    checkpoint path). ``words`` is persisted in the runtime registry;
     ``lp`` is checkpoint-truncated per round."""
-    from topnotch_spark.operators.cluster import _truncate_round
-    from topnotch_spark.operators.dedup import _persist
-
     if n_rounds < 1:
         raise ValueError("unigram_lm_vocab: n_rounds must be >= 1")
     if max_piece_len < 2:
@@ -1719,7 +1688,7 @@ def _unigram_train(
     # ``words`` optionally supplies a precomputed :func:`word_counts`
     # (word, wc) frame (already persisted, same max_word_len contract)
     if words is None:
-        words = _persist(
+        words = persist(
             df.select(F.explode(tokens(text_col)).alias("word"))
             .filter(F.length("word") <= max_word_len)
             .groupBy("word")
@@ -1745,7 +1714,7 @@ def _unigram_train(
         .limit(seed_size)
     )
     chars = subs.filter(F.length("piece") == 1)
-    lp, ckpt = _truncate_round(
+    lp, ckpt = truncate_round(
         _unigram_lp(seed_multi.unionByName(chars)), None
     )
     for _ in range(n_rounds):
@@ -1772,7 +1741,7 @@ def _unigram_train(
                 ),
             )
         )
-        lp, ckpt = _truncate_round(
+        lp, ckpt = truncate_round(
             _unigram_lp(top.unionByName(kept_chars)), ckpt
         )
     return words, lp, ckpt
@@ -1843,11 +1812,7 @@ def unigram_fertility_by_group(
             ).alias("chars_per_subword"),
         )
     )
-    if ckpt is not None:
-        from topnotch_spark.operators import dedup as _d
-
-        _d._PERSISTED.append(result)
-        _d._CHECKPOINTED[id(result)] = ckpt
+    own_paths(result, [ckpt])
     return result
 
 
@@ -1964,11 +1929,9 @@ def cross_perplexity(
     OOV lp riding in via the 1-row totals broadcast) + one
     groupBy(doc). Two shuffles over exploded tokens, same shape as
     unigram_logprob."""
-    from topnotch_spark.operators.dedup import _persist
-
     if k <= 0:
         raise ValueError("cross_perplexity: k must be > 0")
-    vocab = _persist(
+    vocab = persist(
         reference.select(F.explode(tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1977,7 +1940,7 @@ def cross_perplexity(
         F.sum("c").alias("__T__"), F.count(F.lit(1)).alias("__V__")
     )
     denom = F.col("__T__") + F.lit(k) * (F.col("__V__") + 1)
-    arr = _persist(
+    arr = persist(
         target.select(
             F.col(id_col).alias("__id__"), tokens(text_col).alias("__toks__")
         )
@@ -2263,9 +2226,8 @@ def heaps_fit(
         )
     from pyspark.sql import Window as W
 
-    from topnotch_spark.operators.dedup import _persist
 
-    toked = _persist(
+    toked = persist(
         df.select(
             F.col(id_col).cast("double").alias("__id__"),
             tokens(text_col).alias("__toks__"),
@@ -2424,9 +2386,7 @@ def nb_train_score(
     the weight table — partitioning-independent.
 
     Raises if either class has no documents (priors undefined)."""
-    from topnotch_spark.operators.dedup import _persist
-
-    lab = _persist(
+    lab = persist(
         df.filter(F.col(label_col).isNotNull()).select(
             F.col(id_col).alias("__id__"),
             F.col(label_col).cast("boolean").alias("__y__"),
@@ -2536,8 +2496,6 @@ def stupid_backoff(
     count tables (broadcast when they fit, hash join on the n-gram key
     at corpus scale — Brants' hash-by-ngram distribution) + one
     groupBy(doc)."""
-    from topnotch_spark.operators.dedup import _persist
-
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"stupid_backoff: alpha must be in (0, 1], got {alpha}")
     a2 = alpha * alpha
@@ -2555,14 +2513,14 @@ def stupid_backoff(
             F.array().cast("array<string>")
         )
 
-    ref_arr = _persist(reference.select(tokens(text_col).alias("__toks__")))
-    uni = _persist(
+    ref_arr = persist(reference.select(tokens(text_col).alias("__toks__")))
+    uni = persist(
         ref_arr.select(F.explode("__toks__").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
     nn = uni.agg(F.sum("c1").alias("__N__"))
-    bi = _persist(
+    bi = persist(
         ref_arr.select(F.explode(grams(F.col("__toks__"), 2)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c2"))
@@ -2572,7 +2530,7 @@ def stupid_backoff(
         .groupBy("tg")
         .agg(F.count(F.lit(1)).alias("c3"))
     )
-    arr = _persist(
+    arr = persist(
         target.select(
             F.col(id_col).alias("__id__"), tokens(text_col).alias("__toks__")
         )
@@ -2693,14 +2651,12 @@ def unigram_segment(
     equi-join + groupBy(doc) rolls the counts up — the
     bpe/unigram-fertility shape with a per-doc instead of per-group
     tail."""
-    from topnotch_spark.operators.dedup import _persist
-
     lp = vocab.select("piece", "lp_milli")
     # ``words`` optionally supplies a precomputed :func:`word_counts`
     # frame (same max_word_len contract) so a train→apply pipeline
     # reduces the corpus exactly once
     if words is None:
-        words = _persist(
+        words = persist(
             target.select(F.explode(tokens(text_col)).alias("word"))
             .filter(F.length("word") <= max_word_len)
             .groupBy("word")
@@ -2789,9 +2745,7 @@ def wordpiece_vocab(
     if words is not None:
         wc = words
     else:
-        from topnotch_spark.operators.dedup import _persist
-
-        wc = _persist(
+        wc = persist(
             df.select(F.explode(tokens(text_col)).alias("word"))
             .filter(F.length("word") <= max_word_len)
             .groupBy("word")
@@ -2853,8 +2807,6 @@ def _wordpiece_walk(
     identically on both engines. See :func:`wordpiece_segment` for the
     plan-size discipline notes (eager truncation of the longest-match
     table, per-round coalesce, cadence-3 lazy truncation)."""
-    from topnotch_spark.operators.cluster import _truncate_round
-
     pieces = F.broadcast(vocab.select("piece").distinct())
     # longest-match table: step(word, pos) = max piece length matching
     # at 0-based pos, candidates never reading past the word end.
@@ -2863,7 +2815,7 @@ def _wordpiece_walk(
     # lambda-heavy subtree (nested HOFs + the vocab windows behind the
     # broadcast) costs ~3 s PER PLANNING in Catalyst — truncating it to
     # an RDD scan once cut segment construction 12 s → ~2 s
-    lmatch, lm_ckpt = _truncate_round(
+    lmatch, lm_ckpt = truncate_round(
         words.select(
             "word",
             F.explode(
@@ -2886,7 +2838,7 @@ def _wordpiece_walk(
     # Greedy pointer-chasing walk. Each round references the previous
     # state TWICE (finished passthrough + advance join), so without
     # per-round lineage truncation the logical plan doubles per round
-    # (2^max_word_len nodes); _truncate_round caps it at one round's
+    # (2^max_word_len nodes); truncate_round caps it at one round's
     # shape. eager=False keeps the whole walk ONE job (each lazy
     # checkpoint materializes once and both same-round references share
     # it — the pagerank fixed-iteration convention; measured: 12 eager
@@ -2895,7 +2847,7 @@ def _wordpiece_walk(
     # supersedes the last once materialized); the FINAL path backs
     # word_sub through the output, so the caller registers it for
     # release-time deletion.
-    state, ckpt = _truncate_round(
+    state, ckpt = truncate_round(
         words.select(
             "word",
             F.lit(0).alias("pos"),
@@ -2929,7 +2881,7 @@ def _wordpiece_walk(
             advanced
         ).coalesce(n_parts)
         if r % 3 == 0 or r == max_word_len:
-            state, ckpt = _truncate_round(state, ckpt, eager=False)
+            state, ckpt = truncate_round(state, ckpt, eager=False)
     word_sub = state.filter(F.col("pos") == F.col("__len__")).select(
         "word",
         F.col("n").cast("long").alias("__nsub__"),
@@ -2974,11 +2926,6 @@ def wordpiece_segment(
     (deterministic pointer-chasing, constant partition width, lazy
     cadence-3 truncation); one corpus-tokens → word equi-join +
     groupBy(doc) rolls the counts up."""
-    from topnotch_spark.operators.dedup import (
-        _persist,
-        _register_checkpoints,
-    )
-
     if max_word_len < 1:
         raise ValueError(
             f"wordpiece_segment: max_word_len must be >= 1, got {max_word_len}"
@@ -2989,7 +2936,7 @@ def wordpiece_segment(
     if words is not None:
         words = words.select("word")
     else:
-        words = _persist(
+        words = persist(
             target.select(F.explode(tokens(text_col)).alias("word"))
             .filter(F.length("word") <= max_word_len)
             .distinct()
@@ -3025,7 +2972,7 @@ def wordpiece_segment(
             ).alias("fertility"),
         )
     )
-    _register_checkpoints(out, ckpts)
+    own_paths(out, ckpts)
     return out
 
 
@@ -3063,15 +3010,10 @@ def wordpiece_fertility_by_group(
     groupBy(group) rolls the slice sums up — the corpus is never
     rewritten (the bpe/unigram fertility shape). ``id_col`` unused
     (uniform text-op signature)."""
-    from topnotch_spark.operators.dedup import (
-        _persist,
-        _register_checkpoints,
-    )
-
     vocab = wordpiece_vocab(
         df, id_col, text_col, max_piece_len, vocab_size, max_word_len
     )
-    words = _persist(
+    words = persist(
         df.select(F.explode(tokens(text_col)).alias("word"))
         .filter(F.length("word") <= max_word_len)
         .distinct()
@@ -3103,5 +3045,5 @@ def wordpiece_fertility_by_group(
             ).alias("chars_per_subword"),
         )
     )
-    _register_checkpoints(result, ckpts)
+    own_paths(result, ckpts)
     return result

@@ -40,13 +40,14 @@ from topnotch_spark.operators.assertions import (
     AssertionResult,
     run_assertions,
 )
+from topnotch_spark.runtime import delete_path, pinned_conf
 from topnotch_spark.sources.inputs import read_parquet
 
 
 def _default_checkpoint_root() -> str:
-    """Root for the SINGLE-USE checkpoints of memory-sink runs (each
-    run creates a fresh directory and deletes it on completion — see
-    run_stream_to_table). Because these checkpoints are throwaway by
+    """Root for the SINGLE-USE checkpoints of availableNow runs (each
+    run creates a fresh directory and deletes it when it ends — see
+    run_available_now). Because these checkpoints are throwaway by
     construction, a RAM-backed filesystem is the right default where
     one exists: the HDFS-backed state store writes a snapshot + commit
     log per state partition per micro-batch, and at bench cadence the
@@ -224,6 +225,53 @@ def windowed_event_metrics(
     )
 
 
+def run_available_now(
+    stream_df: DataFrame,
+    prefix: str,
+    foreach_batch=None,
+    output_mode: str = "append",
+    checkpoint_dir: str | None = None,
+    state_partitions: int | None = None,
+) -> str:
+    """Run a streaming DataFrame to completion with the availableNow
+    trigger: into ``foreach_batch`` when given, else into a memory-sink
+    table. Returns the run's name (``prefix`` plus a fresh suffix),
+    which is also the memory-sink table name.
+
+    Without ``checkpoint_dir`` the run checkpoints under
+    DEFAULT_CHECKPOINT_ROOT in a directory of its own and deletes it
+    when the query ends, also when the query raises; a caller's
+    ``checkpoint_dir`` is durable and left alone. Cleanup goes through
+    the Hadoop FS, so a URI root (``file://``, HDFS, object store) is
+    deleted the same way Spark created it.
+
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
+    run: stateful streaming creates one state store (files, commit log)
+    PER shuffle partition per batch, so an oversized default (e.g. 200
+    from a vanilla session) multiplies checkpoint I/O for no parallelism
+    gain at test scale. On a cluster pass None and size the session
+    conf to the key cardinality instead."""
+    spark = stream_df.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+    ckpt = checkpoint_dir or f"{DEFAULT_CHECKPOINT_ROOT}/{name}"
+    writer = stream_df.writeStream.option("checkpointLocation", ckpt).trigger(
+        availableNow=True
+    )
+    if foreach_batch is not None:
+        writer = writer.foreachBatch(foreach_batch)
+    else:
+        writer = writer.format("memory").queryName(name).outputMode(output_mode)
+    try:
+        with pinned_conf(spark, "spark.sql.shuffle.partitions", state_partitions):
+            writer.start().awaitTermination()
+    finally:
+        if checkpoint_dir is None:
+            # single-use (fresh name per call): a long session would
+            # otherwise accumulate hundreds of dead commit-log dirs
+            delete_path(spark, ckpt)
+    return name
+
+
 def run_stream_to_table(
     stream_df: DataFrame,
     output_mode: str = "complete",
@@ -233,13 +281,8 @@ def run_stream_to_table(
     """Run a streaming DataFrame to completion (availableNow) into an
     in-memory sink and return the result table. Each call uses a fresh
     checkpoint + sink name, so it is safe to re-invoke (bench loops).
-
-    ``state_partitions`` temporarily pins ``spark.sql.shuffle.partitions``
-    for the run: stateful streaming creates one state store (files,
-    commit log) PER shuffle partition per batch, so an oversized default
-    (e.g. 200 from a vanilla session) multiplies checkpoint I/O for no
-    parallelism gain at test scale. On a cluster pass None and size the
-    session conf to the key cardinality instead.
+    ``checkpoint_dir`` and ``state_partitions`` as in
+    :func:`run_available_now`.
 
     The memory-sink table is NOT left registered: dozens of leaked
     result tables would otherwise hold their rows in driver memory for
@@ -249,37 +292,15 @@ def run_stream_to_table(
     reference dies, instead of never.
     """
     spark = stream_df.sparkSession
-    name = f"tn_stream_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_dir or f"{DEFAULT_CHECKPOINT_ROOT}/{name}"
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            if prev is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            else:
-                # conf was never explicitly set: unset back to the
-                # built-in default instead of pinning our override
-                spark.conf.unset("spark.sql.shuffle.partitions")
+    name = run_available_now(
+        stream_df,
+        "tn_stream",
+        output_mode=output_mode,
+        checkpoint_dir=checkpoint_dir,
+        state_partitions=state_partitions,
+    )
     out = spark.table(name)
     spark.catalog.dropTempView(name)
-    if checkpoint_dir is None:
-        # the auto-generated checkpoint is single-use (fresh name per
-        # call) — drop it now or a long session accumulates hundreds of
-        # dead commit-log directories
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 
@@ -308,38 +329,30 @@ def dedup_stream(
     return s.dropDuplicates(keys)
 
 
-def run_streaming_drift(
+def _stream_bucket_counts(
     ref: DataFrame,
     stream: DataFrame,
     col: str,
-    n_buckets: int = 10,
-    eps: float = 1e-6,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Streaming PSI drift monitor: histogram a STREAM against a static
-    reference distribution.
-
-    Bucket bounds come from the batch reference (one 2-scalar fetch,
-    exactly as histogram_drift); each micro-batch is reduced to its
-    per-bucket counts (≤ n_buckets rows to the driver per batch — the
-    foreachBatch body runs driver-side, same pattern as
-    run_streaming_assertions) and the integer counts accumulate across
-    batches, so the result is bit-identical to running the batch
-    operator over the whole stream. The final table reuses
-    drift.psi_table — the SAME expression code as the batch path. No
-    streaming state store at all: the only state is n_buckets longs on
-    the driver."""
-    from topnotch_spark.operators.drift import psi_table
-
+    n_buckets: int,
+    caller: str,
+    prefix: str,
+) -> tuple[DataFrame, float, float]:
+    """The shared core of the streaming drift monitors: bucket bounds
+    from the batch reference (one 2-scalar fetch), then each
+    micro-batch reduced to its per-bucket counts (≤ n_buckets rows to
+    the driver per batch — the foreachBatch body runs driver-side, same
+    pattern as run_streaming_assertions) with the integer counts
+    accumulated across batches. No streaming state store at all: the
+    only state is n_buckets longs on the driver. Returns the
+    (bucket, n_ref, n_cur) frame, the reference minimum and the bucket
+    width."""
     spark = ref.sparkSession
     r = ref.filter(F.col(col).isNotNull()).select(
         F.col(col).cast("double").alias("x")
     )
     mn, mx = r.agg(F.min("x"), F.max("x")).collect()[0]
     if mn is None or mx == mn:
-        raise ValueError(
-            f"run_streaming_drift: reference '{col}' is empty or constant"
-        )
+        raise ValueError(f"{caller}: reference '{col}' is empty or constant")
     mn, mx = float(mn), float(mx)
     width = (mx - mn) / n_buckets
 
@@ -373,20 +386,38 @@ def run_streaming_drift(
         for row in rows:
             cur_counts[row["bucket"]] = cur_counts.get(row["bucket"], 0) + row["n"]
 
-    ckpt = f"{DEFAULT_CHECKPOINT_ROOT}/tn_drift_{uuid.uuid4().hex[:12]}"
-    try:
-        stream.writeStream.foreachBatch(_process).option(
-            "checkpointLocation", ckpt
-        ).trigger(availableNow=True).start().awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
+    run_available_now(stream, prefix, foreach_batch=_process)
     joined = spark.createDataFrame(
         [
             (b, ref_counts.get(b, 0), cur_counts.get(b, 0))
             for b in range(n_buckets)
         ],
         "bucket int, n_ref long, n_cur long",
+    )
+    return joined, mn, width
+
+
+def run_streaming_drift(
+    ref: DataFrame,
+    stream: DataFrame,
+    col: str,
+    n_buckets: int = 10,
+    eps: float = 1e-6,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Streaming PSI drift monitor: histogram a STREAM against a static
+    reference distribution.
+
+    Bucket bounds come from the batch reference, exactly as
+    histogram_drift; per-micro-batch bucket counts accumulate on the
+    driver (:func:`_stream_bucket_counts`), so the result is
+    bit-identical to running the batch operator over the whole stream.
+    The final table reuses drift.psi_table — the SAME expression code
+    as the batch path."""
+    from topnotch_spark.operators.drift import psi_table
+
+    joined, mn, width = _stream_bucket_counts(
+        ref, stream, col, n_buckets, "run_streaming_drift", "tn_drift"
     )
     return psi_table(joined, mn, width, eps, round_digits)
 
@@ -408,63 +439,8 @@ def run_streaming_wasserstein(
     whole stream."""
     from topnotch_spark.operators.drift import w1_table
 
-    spark = ref.sparkSession
-    r = ref.filter(F.col(col).isNotNull()).select(
-        F.col(col).cast("double").alias("x")
-    )
-    mn, mx = r.agg(F.min("x"), F.max("x")).collect()[0]
-    if mn is None or mx == mn:
-        raise ValueError(
-            f"run_streaming_wasserstein: reference '{col}' is empty or "
-            "constant"
-        )
-    mn, mx = float(mn), float(mx)
-    width = (mx - mn) / n_buckets
-
-    def idx(frame: DataFrame) -> DataFrame:
-        b = F.least(
-            F.greatest(
-                F.floor((F.col("x") - F.lit(mn)) / F.lit(width)).cast("int"),
-                F.lit(0),
-            ),
-            F.lit(n_buckets - 1),
-        )
-        return frame.select(b.alias("bucket")).groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-
-    ref_counts = {row["bucket"]: row["n"] for row in idx(r).collect()}
-    cur_counts: dict[int, int] = {}
-    seen_batches: set[int] = set()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in seen_batches:
-            return
-        seen_batches.add(batch_id)
-        rows = idx(
-            batch_df.filter(F.col(col).isNotNull()).select(
-                F.col(col).cast("double").alias("x")
-            )
-        ).collect()
-        for row in rows:
-            cur_counts[row["bucket"]] = (
-                cur_counts.get(row["bucket"], 0) + row["n"]
-            )
-
-    ckpt = f"{DEFAULT_CHECKPOINT_ROOT}/tn_w1_{uuid.uuid4().hex[:12]}"
-    try:
-        stream.writeStream.foreachBatch(_process).option(
-            "checkpointLocation", ckpt
-        ).trigger(availableNow=True).start().awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    joined = spark.createDataFrame(
-        [
-            (b, ref_counts.get(b, 0), cur_counts.get(b, 0))
-            for b in range(n_buckets)
-        ],
-        "bucket int, n_ref long, n_cur long",
+    joined, _, width = _stream_bucket_counts(
+        ref, stream, col, n_buckets, "run_streaming_wasserstein", "tn_w1"
     )
     return w1_table(joined, width, n_buckets, round_digits)
 
@@ -593,15 +569,10 @@ def run_streaming_assertions(
         )
         batches.append(StreamingBatchResult(batch_id, total, res))
 
-    name = f"tn_assert_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_dir or f"{DEFAULT_CHECKPOINT_ROOT}/{name}"
-    try:
-        stream_df.writeStream.foreachBatch(_process).option(
-            "checkpointLocation", ckpt
-        ).trigger(availableNow=True).start().awaitTermination()
-    finally:
-        if checkpoint_dir is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    run_available_now(
+        stream_df, "tn_assert", foreach_batch=_process,
+        checkpoint_dir=checkpoint_dir,
+    )
 
     grand_total = sum(b.total for b in batches)
     merged: list[AssertionReport] = []
@@ -692,13 +663,10 @@ def write_stream_idempotent(
         with open(marker, "w") as f:
             f.write(f"{batch_id}\n")
 
-    q = (
-        stream_df.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream_df, "tn_idem", foreach_batch=commit_batch,
+        checkpoint_dir=checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def topk_types_per_window(agg: DataFrame, k: int = 3) -> DataFrame:
