@@ -1253,21 +1253,21 @@ def test_bad_plans_fail_with_clear_messages(spark, tmp_path):
          "reference": inp, "current": inp,
          "params": {"column": "o_totalprice", "method": "nope"},
          "outputKey": "x"},
-        r"unknown drift method",
+        r"drift: unknown method",
     )
     _expect_plan_error(
         spark, tmp_path,
         {"command": "sequence", "input": inp,
          "params": {"method": "warp", "keyColumn": "o_custkey"},
          "outputKey": "x"},
-        r"unknown sequence method",
+        r"sequence: unknown method",
     )
     _expect_plan_error(
         spark, tmp_path,
         {"command": "decontaminate", "corpus": inp, "benchmark": inp,
          "params": {"method": "telepathy", "idColumn": "o_orderkey"},
          "outputKey": "x"},
-        r"unknown decontaminate method",
+        r"decontaminate: unknown method",
     )
 
 

@@ -330,7 +330,11 @@ class TestBpeSegment:
     def test_tokenize_plan_rejects_unigram_options_for_bpe(self):
         from topnotch_spark.plans.extensions import TokenizeCmd
 
-        with pytest.raises(ValueError, match="not valid for method 'bpe'"):
+        with pytest.raises(
+            ValueError,
+            match=r"tokenize method 'bpe' does not accept options "
+            r"\['maxPieceLen'\]",
+        ):
             TokenizeCmd.from_json(
                 {
                     "command": "tokenize",
@@ -644,25 +648,19 @@ class TestIncrementalMinhash:
         assert rows[0]["keep"] is False  # doc 0 matches itself in index
         assert rows[3]["keep"] is True
 
-    def test_plan_requires_index_input(self, spark):
+    def test_plan_requires_index_input(self):
         from topnotch_spark.plans.extensions import DedupCmd
 
-        cmd = DedupCmd.from_json(
-            {
-                "command": "dedup",
-                "input": {"ref": "a", "onDisk": False},
-                "params": {"method": "incrementalMinhash",
-                           "idColumn": "doc_id"},
-                "outputKey": "x",
-            }
-        )
-        engine = type(
-            "E",
-            (),
-            {"spark": spark, "registry": {"a": self._docs(spark)}},
-        )()
         with pytest.raises(ValueError, match='requires an .index. input'):
-            cmd.execute(engine)
+            DedupCmd.from_json(
+                {
+                    "command": "dedup",
+                    "input": {"ref": "a", "onDisk": False},
+                    "params": {"method": "incrementalMinhash",
+                               "idColumn": "doc_id"},
+                    "outputKey": "x",
+                }
+            )
 
 
 # ---------------------------------------------------------------------------

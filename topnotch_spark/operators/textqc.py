@@ -1001,16 +1001,12 @@ def linear_classifier_score(
         .groupBy(id_col)
         .agg(F.sum("w_milli").alias("__dot__"))
     )
+    logit = F.coalesce(F.col("__dot__"), F.lit(0)) + F.lit(int(bias_milli))
     return per_doc.join(scored, id_col, "left").select(
         id_col,
         "n_tokens",
-        (F.coalesce(F.col("__dot__"), F.lit(0)) + F.lit(bias_milli)).alias(
-            "logit_milli"
-        ),
-        (
-            F.coalesce(F.col("__dot__"), F.lit(0)) + F.lit(bias_milli)
-            > 0
-        ).alias("keep"),
+        logit.alias("logit_milli"),
+        (logit > 0).alias("keep"),
     )
 
 

@@ -19,10 +19,32 @@ A user plan mixes them freely with assertion/diff/view:
 Each command implements ``execute(engine) -> DataFrame`` (duck-typed
 hook in engine.run_command) and registers itself in
 ``parser.EXTENSION_COMMANDS`` when this module loads.
+
+A command that takes a ``method`` param is a :class:`MethodCmd`: its
+``TABLE`` maps each method to one :class:`Method` row, which names
+
+- the operator, as ``"module:function"`` under
+  ``topnotch_spark.operators``, imported at first use (importing this
+  module imports no operator module);
+- the positional arguments it takes from the command's fields or
+  params; a param without a default is required;
+- the inputs the method requires;
+- the options it drops on purpose.
+
+The options a method accepts are its operator's keyword parameters,
+read once with ``inspect.signature``. ``from_json`` checks a plan
+against the row (unknown method, missing params or inputs, options the
+operator does not take) and the one ``MethodCmd.execute`` makes the
+call, so the two cannot drift apart: adding a method means adding one
+row.
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
+import inspect
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -32,33 +54,295 @@ from topnotch_spark.plans.model import Command
 from topnotch_spark.sources.inputs import Input, load_input
 
 
-def _require_method(params: dict, known: tuple[str, ...], cmd: str) -> None:
+def _snake(name: str) -> str:
+    """camelCase JSON name -> snake_case kwarg name; a run of capitals is
+    one word (``targetFileMB`` -> ``target_file_mb``)."""
+    return re.sub(
+        r"(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])", "_", name
+    ).lower()
+
+
+def _opt(params: dict, *names: str) -> dict[str, Any]:
+    """Pick camelCase JSON options into snake_case kwargs, skipping absents."""
+    return {_snake(name): params[name] for name in names if name in params}
+
+
+def _method_of(
+    params: dict, known, cmd: str, default: str | None = None
+) -> str:
     """Plan-parse-time method validation: a params dict missing 'method'
-    (or naming an unknown one) raises a uniform ValueError instead of a
-    bare KeyError from deep inside execute()."""
-    method = params.get("method")
+    (with no default) or naming an unknown one raises a uniform
+    ValueError instead of a bare KeyError from deep inside execute()."""
+    method = params.get("method", default)
     if method is None:
         raise ValueError(f"{cmd}: params.method is required")
     if method not in known:
         raise ValueError(
             f"{cmd}: unknown method {method!r} (known: {', '.join(known)})"
         )
+    return method
 
 
-def _opt(params: dict, *names: str) -> dict[str, Any]:
-    """Pick camelCase JSON options into snake_case kwargs, skipping absents."""
-    out: dict[str, Any] = {}
-    for name in names:
-        snake = "".join(
-            f"_{c.lower()}" if c.isupper() else c for c in name
-        ).lstrip("_")
-        if name in params:
-            out[snake] = params[name]
-    return out
+def _operator(ref: str):
+    module, name = ref.split(":")
+    return getattr(
+        importlib.import_module(f"topnotch_spark.operators.{module}"), name
+    )
+
+
+def _keywords(fn, n_args: int) -> frozenset[str]:
+    """The options ``fn`` takes after its first ``n_args`` positional
+    arguments: the parameters with a default, frames excepted (a frame
+    comes from an input, never from params)."""
+    params = list(inspect.signature(fn).parameters.values())[n_args:]
+    return frozenset(
+        p.name
+        for p in params
+        if p.default is not p.empty and "DataFrame" not in str(p.annotation)
+    )
 
 
 @dataclass(frozen=True)
-class DedupCmd(Command):
+class Method:
+    """One row of a method table (see the module docstring).
+
+    Each ``args`` entry is ``"spark"`` (the session), ``None``, a field
+    of the command (an Input is loaded, a tuple becomes a list), a
+    ``_name`` the command's ``_arg`` derives, or a camelCase param taken
+    from the options (or from the field of that name), where
+    ``"name=default"`` gives it a default. ``centroids`` names an
+    optional input passed as the operator's ``centroids`` keyword, which
+    must be a trained (centroid_id, centroid) frame; ``then`` is an
+    operator applied to the result."""
+
+    op: str
+    args: tuple = ()
+    inputs: tuple[str, ...] = ()
+    drops: tuple[str, ...] = ()
+    centroids: str | None = None
+    then: str | None = None
+
+    @functools.cached_property
+    def fn(self):
+        return _operator(self.op)
+
+    @functools.cached_property
+    def accepted(self) -> frozenset[str]:
+        return _keywords(self.fn, len(self.args))
+
+
+@dataclass(frozen=True)
+class Screen(Method):
+    """An incremental dedup screen of a batch against the "index" input.
+    The index is prebuilt when it carries the ``prebuilt`` columns;
+    otherwise it is a raw snapshot that ``build`` indexes first, called
+    with ``build_args`` and the options ``build`` takes."""
+
+    prebuilt: frozenset[str] = frozenset()
+    build: str = ""
+    build_args: tuple = ("index", "id_column", "value_column")
+
+    @functools.cached_property
+    def build_fn(self):
+        return _operator(self.build)
+
+    @functools.cached_property
+    def build_accepted(self) -> frozenset[str]:
+        return _keywords(self.build_fn, len(self.build_args))
+
+
+@functools.cache
+def _vocabulary(cls) -> frozenset[str]:
+    """Every option some method of ``cls`` takes: a param in this set
+    that the plan's method does not take is an error, not ignored."""
+    return frozenset().union(
+        *(row.accepted | set(row.drops) for row in cls.TABLE.values())
+    )
+
+
+def _value_column(params: dict) -> str:
+    """The value column of the dedup and index families: text, vectors
+    or media blobs."""
+    return params.get(
+        "textColumn",
+        params.get("vecColumn", params.get("binColumn", "text")),
+    )
+
+
+class MethodCmd(Command):
+    """A command whose ``method`` param picks one row of ``TABLE``."""
+
+    NAME = ""  # the JSON command name
+    TABLE: dict[str, Method] = {}
+    DEFAULT: str | None = None  # the method when params name none
+
+    @classmethod
+    def _params(cls, row: Method) -> dict[str, bool]:
+        """The row's arguments that are plan params: name -> whether it
+        has a default."""
+        own = cls.__dataclass_fields__
+        return {
+            name: bool(eq)
+            for name, eq, _ in (
+                arg.partition("=")
+                for arg in row.args
+                if arg is not None and arg != "spark"
+                and arg not in own and arg[0] != "_"
+            )
+        }
+
+    @classmethod
+    def _required_params(cls, row: Method) -> list[str]:
+        return [n for n, default in cls._params(row).items() if not default]
+
+    @classmethod
+    def _parse(cls, obj: dict) -> tuple[str, dict]:
+        """Check ``obj`` against its method's row at parse time. Returns
+        the method and its options: the params it takes, by kwarg name."""
+        p = obj["params"]
+        method = _method_of(p, tuple(cls.TABLE), cls.NAME, cls.DEFAULT)
+        row = cls.TABLE[method]
+        for name in row.inputs:
+            if name not in obj:
+                article = "an" if name[0] in "aeiou" else "a"
+                raise ValueError(
+                    f"{cls.NAME} {method} requires {article} {name!r} input"
+                )
+        for name in cls._required_params(row):
+            if name not in p:
+                raise ValueError(
+                    f"{cls.NAME} {method} requires param {name!r}"
+                )
+        # a param naming a field (indexPath, keyColumn) stays out of options
+        params = {_snake(name) for name in cls._params(row)}
+        takes = row.accepted | set(row.drops) | (
+            params - set(cls.__dataclass_fields__)
+        )
+        stray = [
+            k for k in p
+            if _snake(k) in _vocabulary(cls) and _snake(k) not in takes
+        ]
+        if stray:
+            raise ValueError(
+                f"{cls.NAME} method {method!r} does not accept options "
+                f"{stray}"
+            )
+        opts = {_snake(k): v for k, v in p.items() if k != "method"}
+        return method, {k: v for k, v in opts.items() if k in takes}
+
+    def _options(self) -> dict:
+        return dict(self.options)
+
+    def _arg(self, name, engine, opts: dict, frames: dict):
+        """One positional argument of the row (see :class:`Method`);
+        ``frames`` holds the inputs loaded so far, so each loads once."""
+        if name is None:
+            return None
+        if name == "spark":
+            return engine.spark
+        if name in frames:
+            return frames[name]
+        name, _, default = name.partition("=")
+        own = self.__dataclass_fields__
+        if name not in own:
+            key = _snake(name)
+            if key in opts:
+                return opts.pop(key)
+            return getattr(self, key) if key in own else default
+        value = getattr(self, name)
+        if isinstance(value, Input):
+            value = frames[name] = load_input(
+                engine.spark, value, engine.registry
+            )
+        elif isinstance(value, tuple):
+            value = [
+                load_input(engine.spark, v, engine.registry)
+                if isinstance(v, Input)
+                else v
+                for v in value
+            ]
+        return value
+
+    def execute(self, engine) -> DataFrame:
+        row = self.TABLE[self.method]
+        opts = self._options()
+        frames: dict[str, DataFrame] = {}
+
+        def arg(name):
+            return self._arg(name, engine, opts, frames)
+
+        if isinstance(row, Screen):
+            index = arg("index")
+            if not row.prebuilt <= set(index.columns):
+                frames["index"] = row.build_fn(
+                    *map(arg, row.build_args),
+                    **{
+                        k: v for k, v in opts.items()
+                        if k in row.build_accepted
+                    },
+                )
+        args = [arg(a) for a in row.args]
+        kwargs = {
+            k: v
+            for k, v in opts.items()
+            if k in row.accepted and k not in row.drops
+        }
+        if row.centroids and getattr(self, row.centroids) is not None:
+            cents = arg(row.centroids)
+            if not {"centroid_id", "centroid"} <= set(cents.columns):
+                raise ValueError(
+                    f"{self.NAME} {self.method}: the {row.centroids!r} "
+                    "input must carry centroid_id/centroid columns (a "
+                    "trained centroids frame, e.g. similarity method "
+                    "'kmeans' output)"
+                )
+            kwargs["centroids"] = cents
+        out = row.fn(*args, **kwargs)
+        if row.then is not None:
+            out = _operator(row.then)(out)
+        # an operator returning (frame, extras) contributes its frame
+        return out[0] if isinstance(out, tuple) else out
+
+
+class _KeyedCmd(MethodCmd):
+    """cms and bloom hash their key columns as strings, NULL as ''."""
+
+    def _arg(self, name, engine, opts, frames):
+        value = super()._arg(name, engine, opts, frames)
+        if name not in ("keyColumn", "rightKeyColumn"):
+            return value
+        from pyspark.sql import functions as F
+
+        return F.coalesce(F.col(value).cast("string"), F.lit(""))
+
+
+class _AllParamsCmd(MethodCmd):
+    """sequence and corpusStats keep every param in ``params`` (their
+    plan echo) and take the method's options from there."""
+
+    @classmethod
+    def from_json(cls, obj: dict) -> "_AllParamsCmd":
+        method, _ = cls._parse(obj)
+        p = dict(obj["params"])
+        p.pop("method")
+        return cls(
+            input=Input.from_json(obj["input"]),
+            method=method,
+            params=tuple(sorted(p.items())),
+            **cls._common(obj),
+        )
+
+    def _options(self) -> dict:
+        return {_snake(k): v for k, v in self.params}
+
+
+_ID_VALUE = ("input", "id_column", "value_column")
+_SCREEN = ("input", "index", "id_column", "value_column")
+_MEDIA_INDEX = frozenset({"index_id", "band_idx", "bucket", "sh"})
+
+
+@dataclass(frozen=True)
+class DedupCmd(MethodCmd):
     """{"command": "dedup", "params": {"method": exact|fingerprint|minhash|
     jaccard|containment|simhash|embedding|clusters|lines|spans|fuzzy|
     phash|audio|video, "idColumn",
@@ -107,36 +391,76 @@ class DedupCmd(Command):
     value_column: str = "text"
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return (
-            [self.input]
-            + ([self.index] if self.index is not None else [])
-            + ([self.centroids] if self.centroids is not None else [])
-        )
-
-    METHODS = (
-        "exact", "fingerprint", "minhash", "jaccard", "containment",
-        "simhash", "embedding", "semantic", "clusters", "lines", "spans",
-        "spansRewrite", "fuzzy", "phash", "audio", "video", "incremental",
-        "incrementalMinhash", "incrementalSemantic", "incrementalPhash",
-        "incrementalAudio", "incrementalVideo", "sourceMatrix",
-        "minhashRecall", "phashRecall",
-    )
+    NAME = "dedup"
+    TABLE = {
+        "exact": Method("dedup:exact_dedup", _ID_VALUE),
+        "fingerprint": Method("dedup:fingerprint_dedup", _ID_VALUE),
+        "minhash": Method("dedup:minhash_lsh_dedup", _ID_VALUE),
+        "jaccard": Method("dedup:ngram_jaccard_pairs", _ID_VALUE),
+        "containment": Method("dedup:containment_pairs", _ID_VALUE),
+        "simhash": Method("dedup:simhash_dedup", _ID_VALUE),
+        "embedding": Method("dedup:embedding_near_dups", _ID_VALUE),
+        # trained-clustering SemDeDup: the optional "index" input is a
+        # (centroid_id, centroid) frame, e.g. a similarity "kmeans" output
+        "semantic": Method(
+            "dedup:semantic_dedup", _ID_VALUE, centroids="index"
+        ),
+        "clusters": Method(
+            "dedup:minhash_lsh_dedup", _ID_VALUE, then="cluster:dup_clusters"
+        ),
+        "lines": Method("curation:dedup_lines", _ID_VALUE),
+        "spans": Method("dedup:duplicate_spans", _ID_VALUE),
+        "spansRewrite": Method("dedup:rewrite_duplicate_spans", _ID_VALUE),
+        "fuzzy": Method("fuzzy:fuzzy_match_pairs", _ID_VALUE),
+        "phash": Method("multimodal:phash_near_dups", _ID_VALUE),
+        "audio": Method("multimodal:audio_near_dups", _ID_VALUE),
+        "video": Method("multimodal:video_near_dups", _ID_VALUE),
+        "sourceMatrix": Method(
+            "dedup:cross_source_dup_matrix", (*_ID_VALUE, "sourceColumn")
+        ),
+        "minhashRecall": Method("dedup:minhash_recall", _ID_VALUE),
+        "phashRecall": Method("multimodal:phash_recall", _ID_VALUE),
+        "incremental": Screen(
+            "dedup:dedup_against_index", _SCREEN, ("index",),
+            prebuilt=frozenset({"dup_key", "index_id"}),
+            build="dedup:build_dedup_index",
+        ),
+        "incrementalMinhash": Screen(
+            "dedup:dedup_batch_against_minhash_index", _SCREEN, ("index",),
+            prebuilt=frozenset({"index_id", "band_idx", "bucket", "sigs"}),
+            build="dedup:build_minhash_index",
+        ),
+        "incrementalSemantic": Screen(
+            "dedup:dedup_batch_against_semantic_index",
+            ("input", "index", "centroids", "id_column", "value_column"),
+            ("index", "centroids"),
+            prebuilt=frozenset({"index_id", "vec", "nrm", "centroid_id"}),
+            build="dedup:build_semantic_index",
+            build_args=("index", None, "id_column", "value_column",
+                        "centroids"),
+        ),
+        "incrementalPhash": Screen(
+            "multimodal:dedup_batch_against_phash_index", _SCREEN,
+            ("index",), prebuilt=_MEDIA_INDEX,
+            build="multimodal:build_phash_index",
+        ),
+        "incrementalAudio": Screen(
+            "multimodal:dedup_batch_against_audio_index", _SCREEN,
+            ("index",), prebuilt=_MEDIA_INDEX,
+            build="multimodal:build_audio_index",
+        ),
+        "incrementalVideo": Screen(
+            "multimodal:dedup_batch_against_video_index", _SCREEN,
+            ("index",),
+            prebuilt=frozenset({"index_id", "frame_idx", "sh", "n_hashed"}),
+            build="multimodal:build_video_index",
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "DedupCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "dedup")
-        if p["method"] == "sourceMatrix" and "sourceColumn" not in p:
-            raise ValueError(
-                'dedup: method "sourceMatrix" requires param "sourceColumn"'
-            )
-        if p["method"] == "incrementalSemantic" and "centroids" not in obj:
-            raise ValueError(
-                'dedup: method "incrementalSemantic" requires a '
-                '"centroids" input (centroid_id, centroid)'
-            )
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
             index=(
@@ -147,235 +471,20 @@ class DedupCmd(Command):
                 if "centroids" in obj
                 else None
             ),
-            method=p["method"],
+            method=method,
             id_column=p["idColumn"],
-            value_column=p.get(
-                "textColumn", p.get("vecColumn", p.get("binColumn", "text"))
-            ),
-            options=_opt(
-                p, "numHashes", "bands", "threshold", "shingleN", "bits",
-                "bandBits", "maxHamming", "nPlanes", "dim", "maxShingleDf",
-                "roundDigits", "sep", "maxLineDf", "minChars", "spanTokens",
-                "minOccurrences", "nClusters", "maxDistance", "maxKeyDf",
-                "hashType", "grid", "nFrames", "everyN", "minMatchFrac",
-                "sourceColumn", "emitCutRanges",
-            ),
+            value_column=_value_column(p),
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import dedup as D
 
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "semantic" and self.index is not None:
-            # trained-clustering SemDeDup: the optional "index" input is
-            # a (centroid_id, centroid) frame — e.g. a similarity
-            # method "kmeans" output read back from the registry
-            cents = load_input(engine.spark, self.index, engine.registry)
-            if not {"centroid_id", "centroid"} <= set(cents.columns):
-                raise ValueError(
-                    'dedup: method "semantic" index input must carry '
-                    "centroid_id/centroid columns (a trained centroids "
-                    "frame, e.g. similarity method 'kmeans' output)"
-                )
-            return D.semantic_dedup(
-                df, self.id_column, self.value_column,
-                centroids=cents, **self.options,
-            )
-        if self.method == "incremental":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incremental" requires an "index" input '
-                    "(the prior snapshot, raw or prebuilt)"
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            # accept either a prebuilt (dup_key, index_id) table — the
-            # persisted artifact of a previous run — or the raw snapshot
-            if not {"dup_key", "index_id"} <= set(idx.columns):
-                idx = D.build_dedup_index(
-                    idx, self.id_column, self.value_column
-                )
-            return D.dedup_against_index(
-                df, idx, self.id_column, self.value_column
-            )
-        if self.method == "incrementalMinhash":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incrementalMinhash" requires an '
-                    '"index" input (the prior snapshot, raw or a '
-                    "prebuilt signature index)"
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            opts = dict(self.options)
-            build_opts = {
-                k: opts[k]
-                for k in ("num_hashes", "bands", "shingle_n")
-                if k in opts
-            }
-            # accept either a prebuilt signature/bucket index — the
-            # persisted artifact of a previous run — or the raw snapshot
-            if not {"index_id", "band_idx", "bucket", "sigs"} <= set(
-                idx.columns
-            ):
-                idx = D.build_minhash_index(
-                    idx, self.id_column, self.value_column, **build_opts
-                )
-            return D.dedup_batch_against_minhash_index(
-                df, idx, self.id_column, self.value_column, **opts
-            )
-        if self.method in (
-            "incrementalPhash", "incrementalAudio", "incrementalVideo"
-        ):
-            # media legs of the incremental family: screen a blob batch
-            # against an "index" input — a prebuilt signature index (the
-            # persisted artifact of a previous run, e.g. an IndexCmd
-            # buildPhash/buildAudio/buildVideo output or the on-disk
-            # upsert layouts read back) or the raw snapshot blobs
-            if self.index is None:
-                raise ValueError(
-                    f'dedup: method "{self.method}" requires an "index" '
-                    "input (the prior snapshot blobs or a prebuilt "
-                    "signature index)"
-                )
-            from topnotch_spark.operators import multimodal as M
-
-            idx = load_input(engine.spark, self.index, engine.registry)
-            opts = dict(self.options)
-            if self.method == "incrementalVideo":
-                build_keys = ("hash_type", "grid", "every_n")
-                prebuilt = {"index_id", "frame_idx", "sh", "n_hashed"}
-                build, screen = (
-                    M.build_video_index,
-                    M.dedup_batch_against_video_index,
-                )
-            elif self.method == "incrementalPhash":
-                build_keys = ("hash_type", "grid", "band_bits")
-                prebuilt = {"index_id", "band_idx", "bucket", "sh"}
-                build, screen = (
-                    M.build_phash_index,
-                    M.dedup_batch_against_phash_index,
-                )
-            else:
-                build_keys = ("n_frames", "band_bits")
-                prebuilt = {"index_id", "band_idx", "bucket", "sh"}
-                build, screen = (
-                    M.build_audio_index,
-                    M.dedup_batch_against_audio_index,
-                )
-            if not prebuilt <= set(idx.columns):
-                idx = build(
-                    idx, self.id_column, self.value_column,
-                    **{k: opts[k] for k in build_keys if k in opts},
-                )
-            return screen(
-                df, idx, self.id_column, self.value_column, **opts
-            )
-        if self.method == "incrementalSemantic":
-            if self.index is None:
-                raise ValueError(
-                    'dedup: method "incrementalSemantic" requires an '
-                    '"index" input (the member table or raw snapshot)'
-                )
-            idx = load_input(engine.spark, self.index, engine.registry)
-            cents = load_input(
-                engine.spark, self.centroids, engine.registry
-            )
-            # accept either a prebuilt member table — the persisted
-            # artifact of a previous run — or the raw snapshot
-            if not {"index_id", "vec", "nrm", "centroid_id"} <= set(
-                idx.columns
-            ):
-                idx = D.build_semantic_index(
-                    idx, None, self.id_column, self.value_column,
-                    centroids=cents,
-                )
-            return D.dedup_batch_against_semantic_index(
-                df, idx, cents, self.id_column, self.value_column,
-                **self.options,
-            )
-        fns = {
-            "exact": D.exact_dedup,
-            "fingerprint": D.fingerprint_dedup,
-            "minhash": D.minhash_lsh_dedup,
-            "jaccard": D.ngram_jaccard_pairs,
-            "containment": D.containment_pairs,
-            "simhash": D.simhash_dedup,
-            "embedding": D.embedding_near_dups,
-            "semantic": D.semantic_dedup,
-            "clusters": self._clusters,
-            "lines": self._lines,
-            "spans": D.duplicate_spans,
-            "spansRewrite": D.rewrite_duplicate_spans,
-            "fuzzy": self._fuzzy,
-            "phash": self._phash,
-            "audio": self._audio,
-            "video": self._video,
-            "sourceMatrix": self._source_matrix,
-            "minhashRecall": D.minhash_recall,
-            "phashRecall": self._phash_recall,
-        }
-        if self.method not in fns:
-            raise ValueError(f"unknown dedup method: {self.method}")
-        return fns[self.method](df, self.id_column, self.value_column, **self.options)
-
-    @staticmethod
-    def _clusters(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.cluster import dup_clusters
-        from topnotch_spark.operators.dedup import minhash_lsh_dedup
-
-        return dup_clusters(minhash_lsh_dedup(df, id_col, text_col, **opts))
-
-    @staticmethod
-    def _lines(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.curation import dedup_lines
-
-        return dedup_lines(df, id_col, text_col, **opts)
-
-    @staticmethod
-    def _fuzzy(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.fuzzy import fuzzy_match_pairs
-
-        return fuzzy_match_pairs(df, id_col, text_col, **opts)
-
-    @staticmethod
-    def _source_matrix(
-        df: DataFrame, id_col: str, text_col: str, **opts
-    ) -> DataFrame:
-        from topnotch_spark.operators.dedup import cross_source_dup_matrix
-
-        return cross_source_dup_matrix(
-            df, id_col, text_col, opts.pop("source_column"), **opts
-        )
-
-    @staticmethod
-    def _phash(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import phash_near_dups
-
-        return phash_near_dups(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _phash_recall(
-        df: DataFrame, id_col: str, bin_col: str, **opts
-    ) -> DataFrame:
-        from topnotch_spark.operators.multimodal import phash_recall
-
-        return phash_recall(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _audio(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import audio_near_dups
-
-        return audio_near_dups(df, id_col, bin_col, **opts)
-
-    @staticmethod
-    def _video(df: DataFrame, id_col: str, bin_col: str, **opts) -> DataFrame:
-        from topnotch_spark.operators.multimodal import video_near_dups
-
-        return video_near_dups(df, id_col, bin_col, **opts)
+_ID_TEXT = ("input", "id_column", "text_column")
+_PER_GROUP = (*_ID_TEXT, "partitionCol")
 
 
 @dataclass(frozen=True)
-class TextCmd(Command):
+class TextCmd(MethodCmd):
     """{"command": "text", "params": {"method": tokenStats|quality|langid|
     fingerprints|chunk|piiScrub|qualityFilter|vocabTopK|packShards|
     repetition|tfidfKeywords|normalize|tokenEntropy|readability|
@@ -429,184 +538,83 @@ class TextCmd(Command):
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
-    METHODS = (
-        "tokenStats", "quality", "langid", "fingerprints", "chunk",
-        "piiScrub", "qualityFilter", "vocabTopK", "packShards",
-        "repetition", "tfidfKeywords", "normalize", "unigramLogprob",
-        "bigramLogprob", "gopher", "tokenEntropy", "readability",
-        "calibrateRanks", "oovRate", "novelty", "bpeMerges",
-        "bpeMergeSequence", "bpeFertility", "classifierScore",
-        "collocations", "unigramLm", "unigramFertility", "langidAccuracy",
-        "nbWeights", "nbClassifier", "zipf", "heaps", "c4",
-        "vocabCoverage", "wordpieceVocab", "wordpieceFertility",
-    )
+    NAME = "text"
+    TABLE = {
+        "tokenStats": Method("textqc:token_stats", _ID_TEXT),
+        "quality": Method("textqc:quality_scores", _ID_TEXT),
+        "langid": Method("textqc:language_id", _ID_TEXT),
+        "fingerprints": Method("textqc:fingerprints", _ID_TEXT),
+        "chunk": Method("chunking:chunk_documents", _ID_TEXT),
+        "piiScrub": Method("curation:pii_scrub", _ID_TEXT),
+        "qualityFilter": Method("curation:quality_filter", _ID_TEXT),
+        "vocabTopK": Method("textqc:vocab_topk", _ID_TEXT),
+        "packShards": Method("curation:pack_token_shards", _ID_TEXT),
+        "repetition": Method("textqc:repetition_stats", _ID_TEXT),
+        "tfidfKeywords": Method("textqc:tfidf_keywords", _ID_TEXT),
+        "normalize": Method("curation:normalize_text", _ID_TEXT),
+        "unigramLogprob": Method("textqc:unigram_logprob", _ID_TEXT),
+        "bigramLogprob": Method("textqc:bigram_logprob", _ID_TEXT),
+        "gopher": Method("textqc:gopher_rules", _ID_TEXT),
+        "tokenEntropy": Method("textqc:token_entropy", _ID_TEXT),
+        "readability": Method("textqc:readability", _ID_TEXT),
+        "calibrateRanks": Method(
+            "textqc:quality_rank_calibrate",
+            ("input", "id_column", "orderCol", "partitionCol"),
+        ),
+        "oovRate": Method("textqc:vocab_oov_rate", _PER_GROUP),
+        "novelty": Method("textqc:ngram_novelty", _ID_TEXT),
+        "bpeMerges": Method("textqc:bpe_top_merges", _ID_TEXT),
+        "bpeMergeSequence": Method("textqc:bpe_merge_sequence", _ID_TEXT),
+        "bpeFertility": Method("textqc:bpe_fertility_by_group", _PER_GROUP),
+        "classifierScore": Method(
+            "textqc:linear_classifier_score", (*_ID_TEXT, "weights")
+        ),
+        "collocations": Method("textqc:collocations", _ID_TEXT),
+        "unigramLm": Method("textqc:unigram_lm_vocab", _ID_TEXT),
+        "unigramFertility": Method(
+            "textqc:unigram_fertility_by_group", _PER_GROUP
+        ),
+        "langidAccuracy": Method(
+            "textqc:langid_accuracy", (*_ID_TEXT, "trueCol")
+        ),
+        "nbWeights": Method(
+            "textqc:nb_token_weights", ("input", "text_column", "labelColumn")
+        ),
+        "nbClassifier": Method(
+            "textqc:nb_train_score", (*_ID_TEXT, "labelColumn")
+        ),
+        "zipf": Method("textqc:zipf_fit", ("input", "text_column")),
+        "heaps": Method("textqc:heaps_fit", _ID_TEXT),
+        "c4": Method("textqc:c4_rules", _ID_TEXT),
+        "vocabCoverage": Method(
+            "textqc:vocab_coverage", ("input", "text_column")
+        ),
+        "wordpieceVocab": Method("textqc:wordpiece_vocab", _ID_TEXT),
+        "wordpieceFertility": Method(
+            "textqc:wordpiece_fertility_by_group", _PER_GROUP
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "TextCmd":
         p = obj["params"]
-        # plan-validation-time (not run-time) checks — the pattern every
-        # other command form follows: a malformed plan fails at parse with
-        # a uniform ValueError, never a KeyError mid-run
-        _require_method(p, cls.METHODS, "text")
-        required = {
-            "calibrateRanks": ("orderCol", "partitionCol"),
-            "oovRate": ("partitionCol",),
-            "bpeFertility": ("partitionCol",),
-            "unigramFertility": ("partitionCol",),
-            "wordpieceFertility": ("partitionCol",),
-            "classifierScore": ("weights",),
-            "langidAccuracy": ("trueCol",),
-            "nbWeights": ("labelColumn",),
-            "nbClassifier": ("labelColumn",),
-        }
-        for name in required.get(p["method"], ()):
-            if name not in p:
-                raise ValueError(
-                    f"text method {p['method']!r} requires param {name!r}"
-                )
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
-            method=p["method"],
+            method=method,
             id_column=p["idColumn"],
             text_column=p.get("textColumn", "text"),
-            options=_opt(
-                p, "stopwords", "size", "overlap", "k", "budget",
-                "partitionCol", "shingleN", "globalOrdering",
-                "minWords", "maxWords", "minMeanLen", "maxMeanLen",
-                "maxSymbolRatio", "maxBulletRatio", "maxEllipsisRatio",
-                "minAlphaRatio", "minStopHits", "orderCol", "roundDigits",
-                "vocabK", "weights", "biasMilli", "nMerges", "minCount",
-                "maxWordLen", "maxPieceLen", "seedSize", "vocabSize",
-                "nRounds", "trueCol", "labelColumn", "scale",
-                "nCheckpoints", "minSentences", "minLineWords", "maxLog2K",
-            ),
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import curation as C
-        from topnotch_spark.operators import textqc as T
-        from topnotch_spark.operators.chunking import chunk_documents
 
-        df = load_input(engine.spark, self.input, engine.registry)
-        fns = {
-            "tokenStats": T.token_stats,
-            "quality": T.quality_scores,
-            "langid": T.language_id,
-            "fingerprints": T.fingerprints,
-            "chunk": chunk_documents,
-            "piiScrub": C.pii_scrub,
-            "qualityFilter": C.quality_filter,
-            "vocabTopK": T.vocab_topk,
-            "packShards": C.pack_token_shards,
-            "repetition": T.repetition_stats,
-            "tfidfKeywords": T.tfidf_keywords,
-            "normalize": C.normalize_text,
-            "unigramLogprob": T.unigram_logprob,
-            "bigramLogprob": T.bigram_logprob,
-            "gopher": T.gopher_rules,
-            "tokenEntropy": T.token_entropy,
-            "readability": T.readability,
-            "novelty": T.ngram_novelty,
-            "bpeMerges": T.bpe_top_merges,
-            "bpeMergeSequence": T.bpe_merge_sequence,
-            "collocations": T.collocations,
-            "unigramLm": T.unigram_lm_vocab,
-            "wordpieceVocab": T.wordpiece_vocab,
-            "c4": T.c4_rules,
-        }
-        if self.method == "calibrateRanks":
-            opts = dict(self.options)
-            return T.quality_rank_calibrate(
-                df,
-                self.id_column,
-                opts.pop("order_col"),
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "classifierScore":
-            opts = dict(self.options)
-            return T.linear_classifier_score(
-                df,
-                self.id_column,
-                self.text_column,
-                {t: int(m) for t, m in dict(opts.pop("weights")).items()},
-                bias_milli=int(opts.pop("bias_milli", 0)),
-            )
-        if self.method == "langidAccuracy":
-            opts = dict(self.options)
-            return T.langid_accuracy(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("true_col"),
-                **opts,
-            )
-        if self.method == "bpeFertility":
-            opts = dict(self.options)
-            return T.bpe_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "unigramFertility":
-            opts = dict(self.options)
-            return T.unigram_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "wordpieceFertility":
-            opts = dict(self.options)
-            return T.wordpiece_fertility_by_group(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method == "zipf":
-            return T.zipf_fit(df, self.text_column, **self.options)
-        if self.method == "vocabCoverage":
-            return T.vocab_coverage(df, self.text_column, **self.options)
-        if self.method == "heaps":
-            return T.heaps_fit(
-                df, self.id_column, self.text_column, **self.options
-            )
-        if self.method == "nbWeights":
-            opts = dict(self.options)
-            return T.nb_token_weights(
-                df, self.text_column, opts.pop("label_column"), **opts
-            )
-        if self.method == "nbClassifier":
-            opts = dict(self.options)
-            return T.nb_train_score(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("label_column"),
-                **opts,
-            )
-        if self.method == "oovRate":
-            opts = dict(self.options)
-            return T.vocab_oov_rate(
-                df,
-                self.id_column,
-                self.text_column,
-                opts.pop("partition_col"),
-                **opts,
-            )
-        if self.method not in fns:
-            raise ValueError(f"unknown text method: {self.method}")
-        return fns[self.method](df, self.id_column, self.text_column, **self.options)
+_CORPUS = ("corpus", "id_column", "vec_column")
+_SEARCH = ("corpus", "queries", "id_column", "vec_column")
 
 
 @dataclass(frozen=True)
-class SimilarityCmd(Command):
+class SimilarityCmd(MethodCmd):
     """{"command": "similarity", "params": {"method": bruteForce|ann|
     labelAgreement|contrastive, "idColumn", "vecColumn", "k",
     ["nPlanes", "dim", "roundDigits"]}, "corpus": <input>,
@@ -651,37 +659,40 @@ class SimilarityCmd(Command):
     vec_column: str = "embedding"
     options: dict = field(default_factory=dict)
 
-    # parser discovers inputs via `inputs` attribute (duck-typed)
-    @property
-    def inputs(self) -> list[Input]:
-        return [
-            i
-            for i in (self.corpus, self.queries, self.centroids)
-            if i is not None
-        ]
-
-    METHODS = (
-        "bruteForce", "ann", "labelAgreement", "contrastive", "silhouette",
-        "quantizeRecall", "mmr", "pqRecall", "kcenter", "ivfpqRecall",
-        "dimStats", "kmeans",
-    )
+    NAME = "similarity"
+    TABLE = {
+        "bruteForce": Method(
+            "similarity:brute_force_topk", _SEARCH, ("queries",)
+        ),
+        "ann": Method("similarity:srp_ann_topk", _SEARCH, ("queries",)),
+        "labelAgreement": Method(
+            "similarity:label_knn_agreement", (*_CORPUS, "labelColumn=label")
+        ),
+        # the exact scorer needs no plane literals: "dim" is dropped
+        "contrastive": Method(
+            "similarity:contrastive_pairs", (*_SEARCH, "labelColumn=label"),
+            ("queries",), drops=("dim",),
+        ),
+        "silhouette": Method(
+            "similarity:cluster_silhouette", _CORPUS, drops=("dim",),
+            centroids="centroids",
+        ),
+        "quantizeRecall": Method("similarity:quantize_recall", _CORPUS),
+        "mmr": Method("similarity:mmr_rerank", _SEARCH, ("queries",)),
+        "pqRecall": Method("similarity:pq_recall", _CORPUS),
+        "kcenter": Method("similarity:kcenter_select", _CORPUS),
+        "ivfpqRecall": Method("similarity:ivfpq_recall", _CORPUS),
+        "dimStats": Method(
+            "similarity:embedding_dim_stats", ("corpus", "vec_column")
+        ),
+        "kmeans": Method("similarity:kmeans_centroids_exact", _CORPUS),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "SimilarityCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "similarity")
-        if (
-            p["method"] not in ("labelAgreement", "silhouette",
-                                "quantizeRecall", "pqRecall", "kcenter",
-                                "ivfpqRecall", "dimStats", "kmeans")
-            and "queries" not in obj
-        ):
-            raise ValueError(
-                f"similarity method {p['method']!r} requires a 'queries' "
-                "input (labelAgreement, silhouette, quantizeRecall and "
-                "pqRecall are corpus-only)"
-            )
-        if "centroids" in obj and p["method"] != "silhouette":
+        method, options = cls._parse(obj)
+        if "centroids" in obj and method != "silhouette":
             raise ValueError(
                 "similarity: a 'centroids' input is only valid for "
                 "method 'silhouette' (trained-clustering grading)"
@@ -696,169 +707,11 @@ class SimilarityCmd(Command):
                 if "centroids" in obj
                 else None
             ),
-            method=p["method"],
+            method=method,
             id_column=p.get("idColumn", "vec_id"),
             vec_column=p.get("vecColumn", "embedding"),
-            options=_opt(
-                p, "k", "nPlanes", "dim", "roundDigits", "labelColumn",
-                "minAgree", "nCentroids", "nQueries", "nCandidates",
-                "lambdaMilli", "m", "nCodes", "nProbe", "nRounds",
-            ),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import similarity as S
-
-        corpus = load_input(engine.spark, self.corpus, engine.registry)
-        if self.method == "quantizeRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids"}
-                & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'quantizeRecall' does not accept "
-                    f"option(s) {bad}; supported: k, nQueries, dim, "
-                    "roundDigits"
-                )
-            return S.quantize_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "dimStats":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"round_digits"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'dimStats' does not accept "
-                    f"option(s) {bad}; supported: roundDigits"
-                )
-            return S.embedding_dim_stats(
-                corpus, vec_col=self.vec_column, **opts
-            )
-        if self.method == "ivfpqRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_candidates",
-                 "lambda_milli"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'ivfpqRecall' does not accept "
-                    f"option(s) {bad}; supported: dim, m, nCodes, "
-                    "nCentroids, nProbe, k, nQueries, roundDigits"
-                )
-            return S.ivfpq_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "kmeans":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"n_centroids", "n_rounds"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'kmeans' does not accept "
-                    f"option(s) {bad}; supported: nCentroids, nRounds"
-                )
-            cents, _ = S.kmeans_centroids_exact(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-            return cents
-        if self.method == "kcenter":
-            opts = dict(self.options)
-            bad = sorted(set(opts) - {"k", "dim"})
-            if bad:
-                raise ValueError(
-                    "similarity method 'kcenter' does not accept "
-                    f"option(s) {bad}; supported: k, dim"
-                )
-            return S.kcenter_select(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "pqRecall":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids",
-                 "n_candidates", "lambda_milli"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'pqRecall' does not accept "
-                    f"option(s) {bad}; supported: dim, m, nCodes, k, "
-                    "nQueries, roundDigits"
-                )
-            return S.pq_recall(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "silhouette":
-            opts = dict(self.options)
-            opts.pop("dim", None)  # exact cosine path needs no literals
-            bad = sorted(
-                {"k", "n_planes", "label_column", "min_agree"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'silhouette' does not accept "
-                    f"option(s) {bad}; supported: nCentroids, roundDigits"
-                )
-            if self.centroids is not None:
-                cents = load_input(
-                    engine.spark, self.centroids, engine.registry
-                )
-                if not {"centroid_id", "centroid"} <= set(cents.columns):
-                    raise ValueError(
-                        "similarity: silhouette 'centroids' input must "
-                        "carry centroid_id/centroid columns (a trained "
-                        "centroids frame, e.g. method 'kmeans' output)"
-                    )
-                opts["centroids"] = cents
-            return S.cluster_silhouette(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                **opts,
-            )
-        if self.method == "labelAgreement":
-            opts = dict(self.options)
-            label_col = opts.pop("label_column", "label")
-            return S.label_knn_agreement(
-                corpus, id_col=self.id_column, vec_col=self.vec_column,
-                label_col=label_col, **opts,
-            )
-        queries = load_input(engine.spark, self.queries, engine.registry)
-        if self.method == "mmr":
-            opts = dict(self.options)
-            bad = sorted(
-                {"n_planes", "label_column", "min_agree", "n_centroids",
-                 "n_queries"} & opts.keys()
-            )
-            if bad:
-                raise ValueError(
-                    "similarity method 'mmr' does not accept option(s) "
-                    f"{bad}; supported: k, nCandidates, lambdaMilli, dim, "
-                    "roundDigits"
-                )
-            return S.mmr_rerank(
-                corpus, queries, id_col=self.id_column,
-                vec_col=self.vec_column, **opts,
-            )
-        if self.method == "contrastive":
-            opts = dict(self.options)
-            opts.pop("dim", None)  # exact scorer needs no plane literals
-            label_col = opts.pop("label_column", "label")
-            return S.contrastive_pairs(
-                corpus, queries, id_col=self.id_column,
-                vec_col=self.vec_column, label_col=label_col, **opts,
-            )
-        fns = {"bruteForce": S.brute_force_topk, "ann": S.srp_ann_topk}
-        if self.method not in fns:
-            raise ValueError(f"unknown similarity method: {self.method}")
-        return fns[self.method](
-            corpus, queries, id_col=self.id_column, vec_col=self.vec_column,
-            **self.options,
         )
 
 
@@ -878,10 +731,6 @@ class FuseCmd(Command):
     doc_column: str = "doc_id"
     rank_column: str = "rank"
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return list(self.runs)
 
     @classmethod
     def from_json(cls, obj: dict) -> "FuseCmd":
@@ -923,10 +772,6 @@ class AsofCmd(Command):
     right_ts: str = "ts"
     right_cols: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.left, self.right]
 
     @classmethod
     def from_json(cls, obj: dict) -> "AsofCmd":
@@ -1025,8 +870,11 @@ class ProfileCmd(Command):
         return profile_columns(df, cols, **self.options)
 
 
+_OUTLIER_ARGS = ("input", "value_column", "group_columns")
+
+
 @dataclass(frozen=True)
-class OutliersCmd(Command):
+class OutliersCmd(MethodCmd):
     """{"command": "outliers", "input": <input>, "params": {"method":
     zscore|mad, "valueColumn", ["groupColumns", "k", "roundDigits"]}} —
     mean/stddev z-score flags or robust median/MAD flags (the screen
@@ -1038,31 +886,26 @@ class OutliersCmd(Command):
     group_columns: tuple[str, ...] | None = None
     options: dict = field(default_factory=dict)
 
+    NAME = "outliers"
+    DEFAULT = "zscore"
+    TABLE = {
+        "zscore": Method("profile:zscore_outliers", _OUTLIER_ARGS),
+        "mad": Method("profile:mad_outliers", _OUTLIER_ARGS),
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "OutliersCmd":
         p = obj["params"]
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
-            method=p.get("method", "zscore"),
+            method=method,
             value_column=p["valueColumn"],
             group_columns=(
                 tuple(p["groupColumns"]) if "groupColumns" in p else None
             ),
-            options=_opt(p, "k", "roundDigits"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.profile import mad_outliers, zscore_outliers
-
-        fns = {"zscore": zscore_outliers, "mad": mad_outliers}
-        if self.method not in fns:
-            raise ValueError(f"unknown outliers method: {self.method}")
-        return fns[self.method](
-            load_input(engine.spark, self.input, engine.registry),
-            self.value_column,
-            list(self.group_columns) if self.group_columns else None,
-            **self.options,
         )
 
 
@@ -1106,8 +949,11 @@ class PivotCmd(Command):
         )
 
 
+_TWO_SLICES = ("reference", "current", "column")
+
+
 @dataclass(frozen=True)
-class DriftCmd(Command):
+class DriftCmd(MethodCmd):
     """{"command": "drift", "reference": <input>, "current": <input>,
     "params": {"column", ["method":
     psi|ks|wasserstein|chi2|tokens|tokenRankShift],
@@ -1141,125 +987,50 @@ class DriftCmd(Command):
     method: str = "psi"
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.reference, self.current]
+    NAME = "drift"
+    DEFAULT = "psi"
+    # the one-dataset forms read "input" as both reference and current
+    TABLE = {
+        "psi": Method("drift:histogram_drift", _TWO_SLICES),
+        "ks": Method("drift:ks_statistic", _TWO_SLICES),
+        "wasserstein": Method("drift:wasserstein_binned", _TWO_SLICES),
+        "chi2": Method("drift:chi2_drift", _TWO_SLICES),
+        "tokens": Method("drift:token_distribution_drift", _TWO_SLICES),
+        "tokenRankShift": Method("drift:token_rank_shift", _TWO_SLICES),
+        "groupKs": Method(
+            "drift:groupwise_ks", ("reference", "groupColumn", "column"),
+            ("input",),
+        ),
+        "trend": Method(
+            "drift:psi_trend", ("reference", "tsColumn=ts", "column"),
+            ("input",),
+        ),
+        "benford": Method(
+            "drift:benford_first_digit", ("reference", "column"), ("input",)
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "DriftCmd":
         p = obj["params"]
-        method = p.get("method", "psi")
-        if method == "groupKs":
-            if "groupColumn" not in p:
-                raise ValueError(
-                    "drift method 'groupKs' requires param 'groupColumn'"
-                )
-            inp = Input.from_json(obj["input"])
-            return cls(
-                reference=inp,
-                current=inp,
-                column=p["column"],
-                method=method,
-                options=_opt(p, "groupColumn", "bins", "roundDigits"),
-                **cls._common(obj),
-            )
-        if method in ("trend", "benford"):
-            if "bins" in p:
-                raise ValueError(
-                    f"drift method '{method}' does not accept 'bins' "
-                    "(use nBuckets)"
-                )
-            inp = Input.from_json(obj["input"])
-            return cls(
-                reference=inp,
-                current=inp,
-                column=p["column"],
-                method=method,
-                options=_opt(
-                    p, "tsColumn", "period", "nBuckets", "eps",
-                    "roundDigits", "intScale",
-                ),
-                **cls._common(obj),
-            )
+        method, options = cls._parse(obj)
+        if "input" in cls.TABLE[method].inputs:
+            reference = current = Input.from_json(obj["input"])
+        else:
+            reference = Input.from_json(obj["reference"])
+            current = Input.from_json(obj["current"])
         return cls(
-            reference=Input.from_json(obj["reference"]),
-            current=Input.from_json(obj["current"]),
+            reference=reference,
+            current=current,
             column=p["column"],
             method=method,
-            options=_opt(
-                p, "nBuckets", "eps", "roundDigits", "bins", "vocabK", "k"
-            ),
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.drift import (
-            chi2_drift,
-            histogram_drift,
-            ks_statistic,
-            token_distribution_drift,
-        )
-
-        ref = load_input(engine.spark, self.reference, engine.registry)
-        cur = load_input(engine.spark, self.current, engine.registry)
-        allowed = {
-            "ks": {"round_digits", "bins"},
-            "wasserstein": {"n_buckets", "round_digits"},
-            "psi": {"n_buckets", "eps", "round_digits"},
-            "chi2": {"round_digits"},
-            "tokens": {"round_digits"},
-            "trend": {"ts_column", "period", "n_buckets", "eps",
-                      "round_digits"},
-            "benford": {"int_scale", "round_digits"},
-            "tokenRankShift": {"vocab_k", "k"},
-            "groupKs": {"group_column", "bins", "round_digits"},
-        }
-        if self.method not in allowed:
-            raise ValueError(f"unknown drift method: {self.method}")
-        stray = set(self.options) - allowed[self.method]
-        if stray:
-            raise ValueError(
-                f"drift method '{self.method}' does not accept options "
-                f"{sorted(stray)}; allowed: {sorted(allowed[self.method])}"
-            )
-        if self.method == "benford":
-            from topnotch_spark.operators.drift import benford_first_digit
-
-            return benford_first_digit(ref, self.column, **self.options)
-        if self.method == "groupKs":
-            from topnotch_spark.operators.drift import groupwise_ks
-
-            opts = dict(self.options)
-            return groupwise_ks(
-                ref, opts.pop("group_column"), self.column, **opts
-            )
-        if self.method == "trend":
-            from topnotch_spark.operators.drift import psi_trend
-
-            opts = dict(self.options)
-            ts_col = opts.pop("ts_column", "ts")
-            return psi_trend(ref, ts_col, self.column, **opts)
-        if self.method == "ks":
-            return ks_statistic(ref, cur, self.column, **self.options)
-        if self.method == "wasserstein":
-            from topnotch_spark.operators.drift import wasserstein_binned
-
-            return wasserstein_binned(ref, cur, self.column, **self.options)
-        if self.method == "chi2":
-            return chi2_drift(ref, cur, self.column, **self.options)
-        if self.method == "tokens":
-            return token_distribution_drift(
-                ref, cur, self.column, **self.options
-            )
-        if self.method == "tokenRankShift":
-            from topnotch_spark.operators.drift import token_rank_shift
-
-            return token_rank_shift(ref, cur, self.column, **self.options)
-        return histogram_drift(ref, cur, self.column, **self.options)
-
 
 @dataclass(frozen=True)
-class DeconCmd(Command):
+class DeconCmd(MethodCmd):
     """{"command": "decontaminate", "corpus": <input>, "benchmark":
     <input>, "params": {"idColumn", "textColumn", ["shingleN",
     "minCommon", "maxShingleDf"]}} — cross-corpus n-gram overlap.
@@ -1275,18 +1046,23 @@ class DeconCmd(Command):
     vec_column: str = "embedding"
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.corpus, self.benchmark]
+    NAME = "decontaminate"
+    DEFAULT = "ngram"
+    TABLE = {
+        "ngram": Method(
+            "curation:cross_corpus_overlap",
+            ("corpus", "benchmark", "id_column", "text_column"),
+        ),
+        "embedding": Method(
+            "curation:embedding_decontaminate",
+            ("corpus", "benchmark", "id_column", "vec_column"),
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "DeconCmd":
         p = obj["params"]
-        method = p.get("method", "ngram")
-        if method == "embedding":
-            opts = _opt(p, "threshold", "nPlanes", "dim", "roundDigits")
-        else:
-            opts = _opt(p, "shingleN", "minCommon", "maxShingleDf")
+        method, options = cls._parse(obj)
         return cls(
             corpus=Input.from_json(obj["corpus"]),
             benchmark=Input.from_json(obj["benchmark"]),
@@ -1294,26 +1070,8 @@ class DeconCmd(Command):
             id_column=p["idColumn"],
             text_column=p.get("textColumn", "text"),
             vec_column=p.get("vecColumn", "embedding"),
-            options=opts,
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            cross_corpus_overlap,
-            embedding_decontaminate,
-        )
-
-        corpus = load_input(engine.spark, self.corpus, engine.registry)
-        bench = load_input(engine.spark, self.benchmark, engine.registry)
-        if self.method == "embedding":
-            return embedding_decontaminate(
-                corpus, bench, self.id_column, self.vec_column, **self.options
-            )
-        if self.method != "ngram":
-            raise ValueError(f"unknown decontaminate method: {self.method}")
-        return cross_corpus_overlap(
-            corpus, bench, self.id_column, self.text_column, **self.options
         )
 
 
@@ -1332,10 +1090,6 @@ class DsirCmd(Command):
     id_column: str = "id"
     text_column: str = "text"
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.raw, self.target]
 
     @classmethod
     def from_json(cls, obj: dict) -> "DsirCmd":
@@ -1359,8 +1113,11 @@ class DsirCmd(Command):
         )
 
 
+_LM_ARGS = ("target", "reference", "id_column", "text_column")
+
+
 @dataclass(frozen=True)
-class LmScoreCmd(Command):
+class LmScoreCmd(MethodCmd):
     """{"command": "lmScore", "target": <input>, "reference": <input>,
     "params": {"idColumn", ["method": addkUnigram|stupidBackoff,
     "textColumn", "k", "alpha", "roundDigits"]}} —
@@ -1380,63 +1137,45 @@ class LmScoreCmd(Command):
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
-    METHODS = ("addkUnigram", "stupidBackoff")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.target, self.reference]
+    NAME = "lmScore"
+    DEFAULT = "addkUnigram"
+    TABLE = {
+        "addkUnigram": Method("textqc:cross_perplexity", _LM_ARGS),
+        "stupidBackoff": Method("textqc:stupid_backoff", _LM_ARGS),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "LmScoreCmd":
         p = obj["params"]
-        method = p.get("method", "addkUnigram")
-        if method not in cls.METHODS:
+        # the two smoothing params are easy to swap: name the right one
+        method = p.get("method", cls.DEFAULT)
+        if method == "stupidBackoff" and "k" in p:
             raise ValueError(
-                f"lmScore: unknown method {method!r} "
-                f"(known: {', '.join(cls.METHODS)})"
+                'lmScore: "k" is the addkUnigram smoothing param; '
+                'stupidBackoff takes "alpha"'
             )
-        if method == "stupidBackoff":
-            if "k" in p:
-                raise ValueError(
-                    'lmScore: "k" is the addkUnigram smoothing param; '
-                    'stupidBackoff takes "alpha"'
-                )
-            opts = _opt(p, "alpha", "roundDigits")
-        else:
-            if "alpha" in p:
-                raise ValueError(
-                    'lmScore: "alpha" is the stupidBackoff penalty; '
-                    'addkUnigram takes "k"'
-                )
-            opts = _opt(p, "k", "roundDigits")
+        if method == "addkUnigram" and "alpha" in p:
+            raise ValueError(
+                'lmScore: "alpha" is the stupidBackoff penalty; '
+                'addkUnigram takes "k"'
+            )
+        method, options = cls._parse(obj)
         return cls(
             target=Input.from_json(obj["target"]),
             reference=Input.from_json(obj["reference"]),
             method=method,
             id_column=p["idColumn"],
             text_column=p.get("textColumn", "text"),
-            options=opts,
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.textqc import (
-            cross_perplexity,
-            stupid_backoff,
-        )
 
-        tgt = load_input(engine.spark, self.target, engine.registry)
-        ref = load_input(engine.spark, self.reference, engine.registry)
-        fn = (
-            stupid_backoff
-            if self.method == "stupidBackoff"
-            else cross_perplexity
-        )
-        return fn(tgt, ref, self.id_column, self.text_column, **self.options)
+_SEGMENT_ARGS = ("input", "vocab", "id_column", "text_column")
 
 
 @dataclass(frozen=True)
-class TokenizeCmd(Command):
+class TokenizeCmd(MethodCmd):
     """{"command": "tokenize", "input": <target>, "vocab": <input>,
     "params": {"idColumn", ["method", "textColumn", "maxPieceLen",
     "maxWordLen", "roundDigits"]}} — apply a TRAINED tokenizer to
@@ -1460,53 +1199,27 @@ class TokenizeCmd(Command):
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input, self.vocab]
+    NAME = "tokenize"
+    DEFAULT = "unigram"
+    TABLE = {
+        "unigram": Method("textqc:unigram_segment", _SEGMENT_ARGS),
+        "bpe": Method("textqc:bpe_segment", _SEGMENT_ARGS),
+        "wordpiece": Method("textqc:wordpiece_segment", _SEGMENT_ARGS),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "TokenizeCmd":
         p = obj["params"]
-        method = p.get("method", "unigram")
-        if method not in ("unigram", "bpe", "wordpiece"):
-            raise ValueError(
-                f"tokenize: unknown method {method!r} "
-                "(expected 'unigram', 'bpe', or 'wordpiece')"
-            )
-        if method == "bpe":
-            bad = {"maxPieceLen", "maxWordLen"} & p.keys()
-            if bad:
-                raise ValueError(
-                    f"tokenize: {sorted(bad)} not valid for method 'bpe'"
-                )
-            opts = _opt(p, "roundDigits")
-        else:
-            opts = _opt(p, "maxPieceLen", "maxWordLen", "roundDigits")
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
             vocab=Input.from_json(obj["vocab"]),
             method=method,
             id_column=p["idColumn"],
             text_column=p.get("textColumn", "text"),
-            options=opts,
+            options=options,
             **cls._common(obj),
         )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.textqc import (
-            bpe_segment,
-            unigram_segment,
-            wordpiece_segment,
-        )
-
-        tgt = load_input(engine.spark, self.input, engine.registry)
-        voc = load_input(engine.spark, self.vocab, engine.registry)
-        fn = {
-            "bpe": bpe_segment,
-            "unigram": unigram_segment,
-            "wordpiece": wordpiece_segment,
-        }[self.method]
-        return fn(tgt, voc, self.id_column, self.text_column, **self.options)
 
 
 @dataclass(frozen=True)
@@ -1640,10 +1353,6 @@ class FdCheckCmd(Command):
     pairs: tuple[tuple[str, str], ...] = ()
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
     @classmethod
     def from_json(cls, obj: dict) -> "FdCheckCmd":
         p = obj["params"]
@@ -1680,13 +1389,6 @@ class IntegrityCmd(Command):
 
     relations: tuple[tuple[str, Input, tuple[str, ...], Input, tuple[str, ...]], ...] = ()
 
-    @property
-    def inputs(self) -> list[Input]:
-        out: list[Input] = []
-        for _, child, _, parent, _ in self.relations:
-            out.extend([child, parent])
-        return out
-
     @classmethod
     def from_json(cls, obj: dict) -> "IntegrityCmd":
         rels = tuple(
@@ -1718,7 +1420,7 @@ class IntegrityCmd(Command):
 
 
 @dataclass(frozen=True)
-class SkewCmd(Command):
+class SkewCmd(MethodCmd):
     """{"command": "skewProfile", "input": <input>, "params":
     {"keys": [...], ["method": topk|saltPlan, "k",
     "targetRowsPerTask", "maxSalt"]}} — ``topk`` (default): the
@@ -1732,37 +1434,24 @@ class SkewCmd(Command):
     method: str = "topk"
     options: dict = field(default_factory=dict)
 
-    METHODS = ("topk", "saltPlan")
+    NAME = "skewProfile"
+    DEFAULT = "topk"
+    TABLE = {
+        "topk": Method("skew:key_skew_topk", ("input", "keys")),
+        "saltPlan": Method("skew:salt_plan", ("input", "keys")),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "SkewCmd":
         p = obj["params"]
-        method = p.get("method", "topk")
-        if method not in cls.METHODS:
-            raise ValueError(
-                f"skewProfile: unknown method {method!r} "
-                f"(known: {', '.join(cls.METHODS)})"
-            )
-        opts = (
-            _opt(p, "targetRowsPerTask", "maxSalt", "roundDigits")
-            if method == "saltPlan"
-            else _opt(p, "k")
-        )
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
             keys=tuple(p["keys"]),
             method=method,
-            options=opts,
+            options=options,
             **cls._common(obj),
         )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.skew import key_skew_topk, salt_plan
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "saltPlan":
-            return salt_plan(df, list(self.keys), **self.options)
-        return key_skew_topk(df, list(self.keys), **self.options)
 
 
 @dataclass(frozen=True)
@@ -1850,8 +1539,14 @@ class SplitCmd(Command):
         )
 
 
+_TS = "tsColumn=ts"
+# default matches the events-table convention used throughout the repo
+_TIEBREAK = "tiebreakColumn=event_id"
+_KEY_TS = ("input", "keyColumn", _TS)
+
+
 @dataclass(frozen=True)
-class SequenceCmd(Command):
+class SequenceCmd(_AllParamsCmd):
     """{"command": "sequence", "input": <input>, "params": {"method":
     throttle|transitions|funnel|retention|rolling|trend|ewma|anomaly|gaps|
     paths, "tsColumn", "tiebreakColumn",
@@ -1879,94 +1574,43 @@ class SequenceCmd(Command):
     method: str = "throttle"
     params: tuple[tuple[str, Any], ...] = ()
 
-    @classmethod
-    def from_json(cls, obj: dict) -> "SequenceCmd":
-        p = dict(obj["params"])
-        method = p.pop("method")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=method,
-            params=tuple(sorted(p.items())),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import temporal as Tm
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        p = dict(self.params)
-        ts = p.get("tsColumn", "ts")
-        # default matches the events-table convention used throughout the
-        # repo (an 'id' default resolved to nothing and failed obscurely)
-        tiebreak = p.get("tiebreakColumn", "event_id")
-        if self.method == "throttle":
-            return Tm.throttle_dedup(
-                df, list(p["keyColumns"]), ts, tiebreak, p["minGapSeconds"]
-            )
-        if self.method == "transitions":
-            return Tm.transition_counts(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"]
-            )
-        if self.method == "cusum":
-            kwargs = {}
-            for src, dst in (("driftK", "drift_k"),
-                             ("thresholdH", "threshold_h"),
-                             ("decimals", "decimals"),
-                             ("roundDigits", "round_digits")):
-                if src in p:
-                    kwargs[dst] = p[src]
-            return Tm.cusum_changepoints(
-                df, p["keyColumn"], ts, tiebreak, p["valueColumn"], **kwargs
-            )
-        if self.method == "likelihood":
-            kwargs = {}
-            if "k" in p:
-                kwargs["k"] = p["k"]
-            if "roundDigits" in p:
-                kwargs["round_digits"] = p["roundDigits"]
-            return Tm.sequence_likelihood(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"], **kwargs
-            )
-        if self.method == "funnel":
-            return Tm.funnel_stages(
-                df, p["userColumn"], ts, p["stateColumn"], list(p["stages"])
-            )
-        if self.method == "retention":
-            return Tm.retention_cohorts(df, p["keyColumn"], ts)
-        if self.method == "rolling":
-            kwargs = {}
-            if "windowSeconds" in p:
-                kwargs["window_seconds"] = p["windowSeconds"]
-            if "decimals" in p:
-                kwargs["decimals"] = p["decimals"]
-            return Tm.rolling_window_agg(
-                df, p["keyColumn"], ts, p["valueColumn"], **kwargs
-            )
-        if self.method == "trend":
-            kwargs = {}
-            if "decimals" in p:
-                kwargs["decimals"] = p["decimals"]
-            return Tm.trend_per_key(
-                df, p["keyColumn"], ts, p["valueColumn"], **kwargs
-            )
-        if self.method == "ewma":
-            kwargs = _opt(p, "terms", "decimals")
-            return Tm.ewma_per_key(
-                df, p["keyColumn"], ts, p["valueColumn"], tiebreak, **kwargs
-            )
-        if self.method == "anomaly":
-            kwargs = _opt(p, "windowRows", "threshold", "minRows", "decimals")
-            return Tm.rolling_zscore_anomalies(
-                df, p["keyColumn"], ts, p["valueColumn"], tiebreak, **kwargs
-            )
-        if self.method == "gaps":
-            return Tm.interarrival_stats(df, p["keyColumn"], ts, tiebreak)
-        if self.method == "paths":
-            kwargs = _opt(p, "nSteps", "k")
-            return Tm.frequent_paths(
-                df, p["keyColumn"], ts, tiebreak, p["stateColumn"], **kwargs
-            )
-        raise ValueError(f"unknown sequence method: {self.method}")
+    NAME = "sequence"
+    TABLE = {
+        "throttle": Method(
+            "temporal:throttle_dedup",
+            ("input", "keyColumns", _TS, _TIEBREAK, "minGapSeconds"),
+        ),
+        "transitions": Method(
+            "temporal:transition_counts", (*_KEY_TS, _TIEBREAK, "stateColumn")
+        ),
+        "funnel": Method(
+            "temporal:funnel_stages",
+            ("input", "userColumn", _TS, "stateColumn", "stages"),
+        ),
+        "retention": Method("temporal:retention_cohorts", _KEY_TS),
+        "rolling": Method(
+            "temporal:rolling_window_agg", (*_KEY_TS, "valueColumn")
+        ),
+        "trend": Method("temporal:trend_per_key", (*_KEY_TS, "valueColumn")),
+        "ewma": Method(
+            "temporal:ewma_per_key", (*_KEY_TS, "valueColumn", _TIEBREAK)
+        ),
+        "anomaly": Method(
+            "temporal:rolling_zscore_anomalies",
+            (*_KEY_TS, "valueColumn", _TIEBREAK),
+        ),
+        "gaps": Method("temporal:interarrival_stats", (*_KEY_TS, _TIEBREAK)),
+        "paths": Method(
+            "temporal:frequent_paths", (*_KEY_TS, _TIEBREAK, "stateColumn")
+        ),
+        "likelihood": Method(
+            "temporal:sequence_likelihood",
+            (*_KEY_TS, _TIEBREAK, "stateColumn"),
+        ),
+        "cusum": Method(
+            "temporal:cusum_changepoints", (*_KEY_TS, _TIEBREAK, "valueColumn")
+        ),
+    }
 
 
 @dataclass(frozen=True)
@@ -2003,8 +1647,11 @@ class WinsorizeCmd(Command):
         )
 
 
+_TEXT = "textColumn=text"
+
+
 @dataclass(frozen=True)
-class CorpusStatsCmd(Command):
+class CorpusStatsCmd(_AllParamsCmd):
     """{"command": "corpusStats", "input": <input>, "params": {"method":
     mix|mixturePlan|dedupRate|tokenHistogram|qualityBands|vocabOverlap|
     diversity, per-method columns}} — corpus-level rollups for
@@ -2018,80 +1665,36 @@ class CorpusStatsCmd(Command):
     method: str = "mix"
     params: tuple[tuple[str, Any], ...] = ()
 
-    @classmethod
-    def from_json(cls, obj: dict) -> "CorpusStatsCmd":
-        p = dict(obj["params"])
-        method = p.pop("method")
-        return cls(
-            input=Input.from_json(obj["input"]),
-            method=method,
-            params=tuple(sorted(p.items())),
-            **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import source_mix_weights
-        from topnotch_spark.operators.dedup import dedup_rate_by_group
-        from topnotch_spark.operators.textqc import (
-            quality_bands,
-            token_length_histogram,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        p = dict(self.params)
-        text = p.get("textColumn", "text")
-        if self.method == "mix":
-            return source_mix_weights(
-                df, p["groupColumn"], text, alpha=p.get("alpha", 0.5)
-            )
-        if self.method == "mixturePlan":
-            from topnotch_spark.operators.curation import mixture_allocate
-
-            for req in ("groupColumn", "targetsMilli", "budgetTokens"):
-                if req not in p:
-                    raise ValueError(
-                        f"corpusStats mixturePlan requires param {req!r}"
-                    )
-            return mixture_allocate(
-                df,
-                p["groupColumn"],
-                text,
-                {s: int(m) for s, m in dict(p["targetsMilli"]).items()},
-                int(p["budgetTokens"]),
-                max_repeat_milli=int(p.get("maxRepeatMilli", 1000)),
-                round_digits=p.get("roundDigits", 6),
-            )
-        if self.method == "dedupRate":
-            return dedup_rate_by_group(
-                df, p["idColumn"], text, p["groupColumn"]
-            )
-        if self.method == "tokenHistogram":
-            return token_length_histogram(df, text)
-        if self.method == "vocabOverlap":
-            from topnotch_spark.operators.textqc import vocab_overlap
-
-            return vocab_overlap(df, text, p["groupColumn"])
-        if self.method == "diversity":
-            from topnotch_spark.operators.curation import corpus_diversity
-
-            return corpus_diversity(
-                df, p["groupColumn"], p["catColumn"],
-                round_digits=p.get("roundDigits", 6),
-            )
-        if self.method == "qualityBands":
-            return quality_bands(
-                df,
-                p["idColumn"],
-                p["orderColumn"],
-                p.get("partitionCol"),
-                p.get("nBands", 4),
-                global_ordering=bool(p.get("globalOrdering", False)),
-            )
-        raise ValueError(f"unknown corpusStats method: {self.method}")
+    NAME = "corpusStats"
+    TABLE = {
+        "mix": Method(
+            "curation:source_mix_weights", ("input", "groupColumn", _TEXT)
+        ),
+        "mixturePlan": Method(
+            "curation:mixture_allocate",
+            ("input", "groupColumn", _TEXT, "targetsMilli", "budgetTokens"),
+        ),
+        "dedupRate": Method(
+            "dedup:dedup_rate_by_group",
+            ("input", "idColumn", _TEXT, "groupColumn"),
+        ),
+        "tokenHistogram": Method(
+            "textqc:token_length_histogram", ("input", _TEXT)
+        ),
+        "qualityBands": Method(
+            "textqc:quality_bands", ("input", "idColumn", "orderColumn")
+        ),
+        "vocabOverlap": Method(
+            "textqc:vocab_overlap", ("input", _TEXT, "groupColumn")
+        ),
+        "diversity": Method(
+            "curation:corpus_diversity", ("input", "groupColumn", "catColumn")
+        ),
+    }
 
 
 @dataclass(frozen=True)
-class CmsCmd(Command):
+class CmsCmd(_KeyedCmd):
     """{"command": "cms", "input": <input>, "params": {"method":
     build|query|joinSize, "keyColumn", ["idColumn", "width", "depth",
     "rightKeyColumn", "roundDigits"]},
@@ -2116,29 +1719,25 @@ class CmsCmd(Command):
     id_column: str = "id"
     options: dict = field(default_factory=dict)
 
-    METHODS = ("build", "query", "joinSize")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return (
-            [self.input]
-            + ([self.sketch_input] if self.sketch_input is not None else [])
-            + ([self.right_input] if self.right_input is not None else [])
-        )
+    NAME = "cms"
+    TABLE = {
+        "build": Method("sketch:cms_build", ("input", "keyColumn")),
+        "query": Method(
+            "sketch:cms_query",
+            ("input", "id_column", "keyColumn", "sketch_input"),
+            ("sketch",),
+        ),
+        "joinSize": Method(
+            "sketch:cms_join_size",
+            ("input", "keyColumn", "right_input", "rightKeyColumn"),
+            ("right",),
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "CmsCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "cms")
-        if p["method"] == "joinSize":
-            if "right" not in obj or "rightKeyColumn" not in p:
-                raise ValueError(
-                    'cms: method "joinSize" requires a "right" input and '
-                    'param "rightKeyColumn"'
-                )
-            opts = _opt(p, "width", "depth", "roundDigits")
-        else:
-            opts = _opt(p, "width", "depth")
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
             sketch_input=(
@@ -2147,38 +1746,13 @@ class CmsCmd(Command):
             right_input=(
                 Input.from_json(obj["right"]) if "right" in obj else None
             ),
-            method=p["method"],
+            method=method,
             key_column=p["keyColumn"],
             right_key_column=p.get("rightKeyColumn"),
             id_column=p.get("idColumn", "id"),
-            options=opts,
+            options=options,
             **cls._common(obj),
         )
-
-    def execute(self, engine) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from topnotch_spark.operators.sketch import cms_build, cms_query
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        key = F.coalesce(F.col(self.key_column).cast("string"), F.lit(""))
-        if self.method == "joinSize":
-            from topnotch_spark.operators.sketch import cms_join_size
-
-            right = load_input(engine.spark, self.right_input, engine.registry)
-            rkey = F.coalesce(
-                F.col(self.right_key_column).cast("string"), F.lit("")
-            )
-            return cms_join_size(df, key, right, rkey, **self.options)
-        if self.method == "build":
-            return cms_build(df, key, **self.options)
-        if self.sketch_input is None:
-            raise ValueError(
-                'cms: method "query" requires a "sketch" input '
-                "(the built cell table)"
-            )
-        sk = load_input(engine.spark, self.sketch_input, engine.registry)
-        return cms_query(df, self.id_column, key, sk, **self.options)
 
 
 @dataclass(frozen=True)
@@ -2222,14 +1796,10 @@ class GraphCmd(Command):
         "pagerank", "ppr", "triangles", "components", "labelProp", "kcore",
     )
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
     @classmethod
     def from_json(cls, obj: dict) -> "GraphCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "graph")
+        _method_of(p, cls.METHODS, "graph")
         has_edges = "srcColumn" in p and "dstColumn" in p
         has_basket = "basketColumn" in p and "itemColumn" in p
         if not has_edges and not has_basket:
@@ -2355,7 +1925,7 @@ class GraphCmd(Command):
 
 
 @dataclass(frozen=True)
-class QuantileSketchCmd(Command):
+class QuantileSketchCmd(MethodCmd):
     """{"command": "quantileSketch", "input": <input>, "params":
     {"method": build|merge|accuracy|groupJaccard, "idColumn",
     "valueColumn",
@@ -2382,19 +1952,22 @@ class QuantileSketchCmd(Command):
     text_column: str | None = None
     options: dict = field(default_factory=dict)
 
-    METHODS = ("build", "merge", "accuracy", "groupJaccard")
-
-    @property
-    def inputs(self) -> list[Input]:
-        return ([self.input] if self.input is not None else []) + list(
-            self.parts
-        )
+    NAME = "quantileSketch"
+    TABLE = {
+        "build": Method("sketch:kmv_build", _ID_VALUE),
+        "merge": Method("sketch:kmv_merge", ("parts",)),
+        "accuracy": Method("sketch:kmv_accuracy", _ID_VALUE),
+        "groupJaccard": Method(
+            "sketch:kmv_group_jaccard",
+            ("_values", "groupColumn", "_value_column"),
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "QuantileSketchCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "quantileSketch")
-        if p["method"] == "merge":
+        method, options = cls._parse(obj)
+        if method == "merge":
             if len(obj.get("parts", ())) < 2:
                 raise ValueError(
                     'quantileSketch: method "merge" requires a "parts" '
@@ -2402,23 +1975,17 @@ class QuantileSketchCmd(Command):
                 )
         elif "input" not in obj:
             raise ValueError(
-                f"quantileSketch method {p['method']!r} requires an "
-                '"input"'
+                f'quantileSketch method {method!r} requires an "input"'
             )
-        if p["method"] == "groupJaccard":
-            if "groupColumn" not in p:
-                raise ValueError(
-                    'quantileSketch: method "groupJaccard" requires '
-                    'param "groupColumn"'
-                )
-            if "textColumn" not in p and "valueColumn" not in p:
-                raise ValueError(
-                    'quantileSketch: method "groupJaccard" requires '
-                    '"valueColumn" or "textColumn"'
-                )
-            opts = _opt(p, "k", "salt", "roundDigits", "gradeExact")
-        else:
-            opts = _opt(p, "k", "salt", "qs", "roundDigits")
+        if (
+            method == "groupJaccard"
+            and "textColumn" not in p
+            and "valueColumn" not in p
+        ):
+            raise ValueError(
+                'quantileSketch: method "groupJaccard" requires '
+                '"valueColumn" or "textColumn"'
+            )
         return cls(
             input=(
                 Input.from_json(obj["input"]) if "input" in obj else None
@@ -2426,59 +1993,37 @@ class QuantileSketchCmd(Command):
             parts=tuple(
                 Input.from_json(x) for x in obj.get("parts", ())
             ),
-            method=p["method"],
+            method=method,
             id_column=p.get("idColumn", "id"),
             value_column=p.get("valueColumn", "value"),
             group_column=p.get("groupColumn"),
             text_column=p.get("textColumn"),
-            options=opts,
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.sketch import (
-            kmv_accuracy,
-            kmv_build,
-            kmv_merge,
+    def _arg(self, name, engine, opts, frames):
+        # groupJaccard sketches the value column, or with "textColumn"
+        # the token vocabulary: one exploded row per (group, token)
+        if name == "_value_column":
+            return self.value_column if self.text_column is None else "__v__"
+        if name != "_values":
+            return super()._arg(name, engine, opts, frames)
+        df = super()._arg("input", engine, opts, frames)
+        if self.text_column is None:
+            return df
+        from pyspark.sql import functions as F
+
+        from topnotch_spark.functions.text import tokens
+
+        return df.select(
+            self.group_column,
+            F.explode(tokens(self.text_column)).alias("__v__"),
         )
-
-        opts = dict(self.options)
-        if "qs" in opts:
-            opts["qs"] = tuple(opts["qs"])
-        if self.method == "merge":
-            frames = [
-                load_input(engine.spark, i, engine.registry)
-                for i in self.parts
-            ]
-            return kmv_merge(frames, **{
-                k: v for k, v in opts.items() if k == "k"
-            })
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "groupJaccard":
-            from pyspark.sql import functions as F
-
-            from topnotch_spark.functions.text import tokens
-            from topnotch_spark.operators.sketch import kmv_group_jaccard
-
-            value_col = self.value_column
-            if self.text_column is not None:
-                value_col = "__v__"
-                df = df.select(
-                    self.group_column,
-                    F.explode(tokens(self.text_column)).alias(value_col),
-                )
-            return kmv_group_jaccard(
-                df, self.group_column, value_col, **opts
-            )
-        fn = kmv_build if self.method == "build" else kmv_accuracy
-        if self.method == "build":
-            opts.pop("qs", None)
-            opts.pop("round_digits", None)
-        return fn(df, self.id_column, self.value_column, **opts)
 
 
 @dataclass(frozen=True)
-class MembershipCmd(Command):
+class MembershipCmd(_KeyedCmd):
     """{"command": "bloom", "input": <input>, "params": {"method":
     build|probe, "keyColumn", ["idColumn", "mBits", "kHashes"]},
     ["filter": <input>]} — distributed Bloom seen-set. ``build`` emits
@@ -2493,53 +2038,31 @@ class MembershipCmd(Command):
     id_column: str = "id"
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input] + (
-            [self.filter_input] if self.filter_input is not None else []
-        )
-
-    METHODS = ("build", "probe")
+    NAME = "bloom"
+    TABLE = {
+        "build": Method("membership:bloom_build", ("input", "keyColumn")),
+        "probe": Method(
+            "membership:bloom_probe",
+            ("input", "id_column", "keyColumn", "filter_input"),
+            ("filter",),
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "MembershipCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "bloom")
+        method, options = cls._parse(obj)
         return cls(
             input=Input.from_json(obj["input"]),
             filter_input=(
                 Input.from_json(obj["filter"]) if "filter" in obj else None
             ),
-            method=p["method"],
+            method=method,
             key_column=p["keyColumn"],
             id_column=p.get("idColumn", "id"),
-            options=_opt(p, "mBits", "kHashes"),
+            options=options,
             **cls._common(obj),
         )
-
-    def execute(self, engine) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from topnotch_spark.operators.membership import (
-            bloom_build,
-            bloom_probe,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        key = F.coalesce(F.col(self.key_column).cast("string"), F.lit(""))
-        if self.method == "build":
-            return bloom_build(df, key, **self.options)
-        if self.method == "probe":
-            if self.filter_input is None:
-                raise ValueError(
-                    'bloom: method "probe" requires a "filter" input '
-                    "(the built filter table)"
-                )
-            bloom = load_input(engine.spark, self.filter_input, engine.registry)
-            return bloom_probe(
-                df, self.id_column, key, bloom, **self.options
-            )
-        raise ValueError(f"unknown bloom method: {self.method}")
 
 
 @dataclass(frozen=True)
@@ -2553,10 +2076,6 @@ class SpatialJoinCmd(Command):
     right: Input = None  # type: ignore[assignment]
     radius: float = 0.0
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.left, self.right]
 
     @classmethod
     def from_json(cls, obj: dict) -> "SpatialJoinCmd":
@@ -2609,10 +2128,6 @@ class SchemaCheckCmd(Command):
     columns: tuple[tuple[str, str], ...] = ()
     allow_extra: bool = True
     fail_on_violation: bool = False
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
 
     @classmethod
     def from_json(cls, obj: dict) -> "SchemaCheckCmd":
@@ -2668,10 +2183,6 @@ class BasketCmd(Command):
     item_column: str = ""
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
     @classmethod
     def from_json(cls, obj: dict) -> "BasketCmd":
         p = obj["params"]
@@ -2712,10 +2223,6 @@ class KAnonymityCmd(Command):
     sensitive_column: str | None = None
     mode: str = "k"
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
 
     @classmethod
     def from_json(cls, obj: dict) -> "KAnonymityCmd":
@@ -2789,10 +2296,6 @@ class ScdCmd(Command):
     effective_column: str = ""
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.current, self.updates]
-
     @classmethod
     def from_json(cls, obj: dict) -> "ScdCmd":
         p = obj["params"]
@@ -2834,10 +2337,6 @@ class SketchCmd(Command):
     value_column: str = ""
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.input]
-
     @classmethod
     def from_json(cls, obj: dict) -> "SketchCmd":
         p = obj["params"]
@@ -2877,10 +2376,6 @@ class CdcApplyCmd(Command):
     keys: tuple[str, ...] = ()
     ts_column: str = ""
     options: dict = field(default_factory=dict)
-
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.snapshot, self.changes]
 
     @classmethod
     def from_json(cls, obj: dict) -> "CdcApplyCmd":
@@ -2928,10 +2423,6 @@ class IntervalJoinCmd(Command):
     range_columns: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return [self.facts, self.ranges]
-
     @classmethod
     def from_json(cls, obj: dict) -> "IntervalJoinCmd":
         p = obj["params"]
@@ -2974,10 +2465,6 @@ class CompactCmd(Command):
     dest: str = ""
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return []
-
     @classmethod
     def from_json(cls, obj: dict) -> "CompactCmd":
         p = obj["params"]
@@ -2991,11 +2478,8 @@ class CompactCmd(Command):
     def execute(self, engine) -> DataFrame:
         from topnotch_spark.sources.maintenance import compact_table
 
-        opts = dict(self.options)
-        if "target_file_m_b" in opts:  # camelCase MB picks up extra underscore
-            opts["target_file_mb"] = opts.pop("target_file_m_b")
         return compact_table(
-            engine.spark, self.source, self.dest, **opts
+            engine.spark, self.source, self.dest, **self.options
         )
 
 
@@ -3046,13 +2530,17 @@ class RetrieveCmd(Command):
         )
 
 
+_UPSERT = ("spark", "indexPath", "input")
+
+
 @dataclass(frozen=True)
-class IndexCmd(Command):
+class IndexCmd(MethodCmd):
     """{"command": "index", "input": <accepted rows>, "params":
     {"method": buildExact|buildMinhash|buildSemantic|buildPhash|
     buildAudio|buildVideo|upsertExact|upsertMinhash|upsertSemantic|
     upsertBitsig|upsertVideo|delete|stats, "idColumn",
-    "textColumn"|"vecColumn" (binary column for the media builds),
+    "textColumn"|"vecColumn"|"binColumn" (the blob column of the media
+    builds, as in dedup),
     buildMinhash: numHashes/bands/shingleN, media builds:
     hashType/grid/bandBits/nFrames/everyN, upsert*/delete/stats:
     "indexPath" (+"pfxChars"/"bucketChars")}} — the persisted
@@ -3101,141 +2589,58 @@ class IndexCmd(Command):
     index_path: str | None = None
     options: dict = field(default_factory=dict)
 
-    @property
-    def inputs(self) -> list[Input]:
-        return ([self.input] if self.input is not None else []) + (
-            [self.centroids] if self.centroids is not None else []
-        )
-
-    METHODS = (
-        "buildExact", "buildMinhash", "buildSemantic", "buildPhash",
-        "buildAudio", "buildVideo", "upsertExact", "upsertMinhash",
-        "upsertSemantic", "upsertBitsig", "upsertVideo", "delete",
-        "stats", "compactFiles",
-    )
+    NAME = "index"
+    TABLE = {
+        "buildExact": Method("dedup:build_dedup_index", _ID_VALUE),
+        "buildMinhash": Method("dedup:build_minhash_index", _ID_VALUE),
+        "buildSemantic": Method(
+            "dedup:build_semantic_index",
+            ("input", None, "id_column", "value_column", "centroids"),
+            ("centroids",),
+        ),
+        "buildPhash": Method("multimodal:build_phash_index", _ID_VALUE),
+        "buildAudio": Method("multimodal:build_audio_index", _ID_VALUE),
+        "buildVideo": Method("multimodal:build_video_index", _ID_VALUE),
+        "upsertExact": Method("dedup:upsert_dedup_index", _UPSERT),
+        "upsertMinhash": Method("dedup:upsert_minhash_index", _UPSERT),
+        # an optional "centroids" input pins the routing matrix in the
+        # index's _tn_meta.json sidecar: later upserts with a re-trained
+        # matrix raise, and incrementalSemantic routes from the on-disk truth
+        "upsertSemantic": Method(
+            "dedup:upsert_semantic_index", (*_UPSERT, "centroids")
+        ),
+        "upsertBitsig": Method("dedup:upsert_bitsig_index", _UPSERT),
+        "upsertVideo": Method("dedup:upsert_video_index", _UPSERT),
+        # input = the retired-id frame; idColumn names its column
+        "delete": Method(
+            "dedup:delete_from_index", (*_UPSERT, "id_column")
+        ),
+        # no row input: both read the on-disk layout directly
+        "stats": Method("dedup:index_stats", ("spark", "indexPath")),
+        "compactFiles": Method("dedup:compact_index", ("spark", "indexPath")),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "IndexCmd":
         p = obj["params"]
-        _require_method(p, cls.METHODS, "index")
-        if (
-            p["method"].startswith("upsert")
-            or p["method"] in ("stats", "delete", "compactFiles")
-        ) and "indexPath" not in p:
-            raise ValueError(
-                f'index: method "{p["method"]}" requires param "indexPath"'
-            )
-        if p["method"] in ("stats", "compactFiles"):
-            # no row input: both read the on-disk layout directly
-            return cls(
-                input=None,
-                method=p["method"],
-                index_path=p["indexPath"],
-                options=_opt(p, "maxFilesPerPartition"),
-                **cls._common(obj),
-            )
-        if p["method"] == "buildSemantic" and "centroids" not in obj:
-            raise ValueError(
-                'index: method "buildSemantic" requires a "centroids" '
-                "input (centroid_id, centroid)"
-            )
+        method, options = cls._parse(obj)
         return cls(
-            input=Input.from_json(obj["input"]),
+            input=(
+                Input.from_json(obj["input"])
+                if "input" in cls.TABLE[method].args
+                else None
+            ),
             centroids=(
                 Input.from_json(obj["centroids"])
                 if "centroids" in obj
                 else None
             ),
-            method=p["method"],
+            method=method,
             id_column=p.get("idColumn", "id"),
-            value_column=p.get(
-                "textColumn", p.get("vecColumn", "text")
-            ),
+            value_column=_value_column(p),
             index_path=p.get("indexPath"),
-            options=_opt(
-                p, "numHashes", "bands", "shingleN", "pfxChars",
-                "hashType", "grid", "bandBits", "nFrames", "everyN",
-                "bucketChars",
-            ),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators import dedup as D
-        from topnotch_spark.operators import multimodal as M
-
-        if self.method == "stats":
-            return D.index_stats(engine.spark, self.index_path)
-        if self.method == "compactFiles":
-            # listing-driven tiny-file compaction (dedup.compact_index)
-            # — the maintenance step for what "stats" flags
-            return D.compact_index(
-                engine.spark, self.index_path, **self.options
-            )
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.method == "delete":
-            # input = the retired-id frame; idColumn names its column.
-            # Partition-pruned removal across any index layout
-            # (dedup.delete_from_index) — the retirement step.
-            return D.delete_from_index(
-                engine.spark, self.index_path, df,
-                id_col=self.id_column,
-            )
-        if self.method == "buildPhash":
-            return M.build_phash_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildAudio":
-            return M.build_audio_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildVideo":
-            return M.build_video_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "upsertBitsig":
-            return D.upsert_bitsig_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "upsertVideo":
-            return D.upsert_video_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "buildExact":
-            return D.build_dedup_index(
-                df, self.id_column, self.value_column
-            )
-        if self.method == "buildMinhash":
-            return D.build_minhash_index(
-                df, self.id_column, self.value_column, **self.options
-            )
-        if self.method == "buildSemantic":
-            cents = load_input(
-                engine.spark, self.centroids, engine.registry
-            )
-            return D.build_semantic_index(
-                df, None, self.id_column, self.value_column,
-                centroids=cents,
-            )
-        if self.method == "upsertExact":
-            return D.upsert_dedup_index(
-                engine.spark, self.index_path, df, **self.options
-            )
-        if self.method == "upsertSemantic":
-            # optional "centroids" input pins the routing matrix in the
-            # index _tn_meta.json sidecar (r13): later upserts with a
-            # re-trained matrix raise, and the incrementalSemantic
-            # screen can route from the on-disk truth
-            cents = (
-                load_input(engine.spark, self.centroids, engine.registry)
-                if self.centroids is not None
-                else None
-            )
-            return D.upsert_semantic_index(
-                engine.spark, self.index_path, df, centroids=cents
-            )
-        return D.upsert_minhash_index(
-            engine.spark, self.index_path, df, **self.options
         )
 
 

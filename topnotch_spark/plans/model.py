@@ -9,7 +9,7 @@ envelope: {"command": <name>, "params": {...}, "outputKey": ...}.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 from topnotch_spark.operators.assertions import AssertionRule
 from topnotch_spark.operators.diff import DEFAULT_DIFF_THRESHOLD, DiffParams
@@ -122,3 +122,18 @@ class ErrorCmd(Command):
             f"was: \n {self.error_str} \n\n END OF ERROR MESSAGE FOR COMMAND "
             f"IN POSITION {self.cmd_idx} \n\n"
         )
+
+
+def command_inputs(cmd: Command) -> list[Input]:
+    """The inputs a command reads, in field order: Input fields, tuples
+    of them (view inputs, fuse runs, sketch parts) and the Inputs inside
+    relation tuples (integrity's child/parent pairs)."""
+    out: list[Input] = []
+    for f in fields(cmd):
+        value = getattr(cmd, f.name)
+        for item in value if isinstance(value, tuple) else (value,):
+            if isinstance(item, tuple):
+                out.extend(x for x in item if isinstance(x, Input))
+            elif isinstance(item, Input):
+                out.append(item)
+    return out

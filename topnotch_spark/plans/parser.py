@@ -27,8 +27,8 @@ from topnotch_spark.plans.model import (
     DiffCmd,
     ErrorCmd,
     ViewCmd,
+    command_inputs,
 )
-from topnotch_spark.sources.inputs import Input
 
 # Extension command parsers register here: name -> from_json(obj) -> Command.
 # Populated by topnotch_spark.plans.extensions at import time.
@@ -74,18 +74,6 @@ def _path_exists(path: str, spark=None) -> bool:
         except Exception:
             return False
     return False
-
-
-def _cmd_inputs(cmd: Command) -> list[Input]:
-    if isinstance(cmd, AssertionCmd):
-        return [cmd.input]
-    if isinstance(cmd, DiffCmd):
-        return [cmd.input1, cmd.input2]
-    if isinstance(cmd, ViewCmd):
-        return list(cmd.inputs)
-    return [i for i in getattr(cmd, "inputs", []) or []] or (
-        [cmd.input] if getattr(cmd, "input", None) is not None else []
-    )
 
 
 def parse_commands(
@@ -149,7 +137,7 @@ def parse_commands(
                 continue
             invalid = [
                 inp.ref
-                for inp in _cmd_inputs(cmd)
+                for inp in command_inputs(cmd)
                 if not _input_exists(inp, defined_output_keys, spark)
                 # an on-disk path an EARLIER command of this plan writes
                 # (outputPath sink, index upsert indexPath) exists by
