@@ -139,6 +139,53 @@ def test_accepted_options_are_the_operator_keywords():
     }
 
 
+# keyword-only operator parameters are for Python callers: a plan naming
+# one has it rejected (when another method of the command takes that
+# option) or ignored, never applied
+KEYWORD_ONLY = [
+    ("bloom", "build", "prehashed", True),
+    ("bloom", "probe", "prehashed", True),
+    ("cms", "build", "prehashed", True),
+    ("cms", "query", "prehashed", True),
+    ("drift", "ks", "autoBins", 64),
+    ("drift", "ks", "autoDistinctThreshold", 10),
+    ("similarity", "ann", "hammingProbes", 0),
+    ("text", "langid", "extraCols", ["x"]),
+    ("text", "piiScrub", "patterns", []),
+    ("text", "qualityFilter", "rules", []),
+    ("corpusStats", "mix", "roundDigits", 3),
+    ("corpusStats", "vocabOverlap", "roundDigits", 3),
+    ("sequence", "retention", "roundDigits", 3),
+    ("sequence", "rolling", "roundDigits", 3),
+    ("sequence", "trend", "roundDigits", 3),
+    ("sequence", "ewma", "roundDigits", 3),
+    ("sequence", "anomaly", "roundDigits", 3),
+    ("sequence", "gaps", "roundDigits", 3),
+]
+
+
+@pytest.mark.parametrize(
+    "name,method,option,value", KEYWORD_ONLY,
+    ids=[f"{n}-{m}-{o}" for n, m, o, _ in KEYWORD_ONLY],
+)
+def test_keyword_only_parameters_are_not_plan_options(
+    name, method, option, value
+):
+    cls = _table_commands()[name]
+    assert _snake(option) not in cls.TABLE[method].accepted
+    obj = _full(name, method)
+    obj["params"][option] = value
+    try:
+        cmd = EXTENSION_COMMANDS[name](obj)
+    except ValueError as e:
+        assert str(e).startswith(
+            f"{name} method {method!r} does not accept options "
+            f"[{option!r}]"
+        )
+        return
+    assert _snake(option) not in cmd.options
+
+
 def test_snake_treats_a_run_of_capitals_as_one_word():
     assert _snake("targetFileMB") == "target_file_mb"
     assert _snake("maxLog2K") == "max_log2_k"

@@ -35,6 +35,7 @@ def pii_scrub(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    *,
     patterns: list[tuple[str, str, str]] | None = None,
 ) -> DataFrame:
     """Redact PII-shaped spans; replacements chained in pattern order,
@@ -79,8 +80,9 @@ def quality_filter(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    rules: list[tuple[str, str]] | None = None,
     stopwords: list[str] | None = None,
+    *,
+    rules: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Gopher-style rule chain: evaluate every drop-rule, keep docs that
     fail none, report the failed rule names. Metrics come from
@@ -668,6 +670,7 @@ def source_mix_weights(
     group_col: str,
     text_col: str,
     alpha: float = 0.5,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Temperature-scaled sampling weights per corpus source: token
@@ -1193,7 +1196,9 @@ def sample_to_token_budget(
 
     from topnotch_spark.functions.text import tokens
 
-    weights = source_mix_weights(df, group_col, text_col, alpha, round_digits)
+    weights = source_mix_weights(
+        df, group_col, text_col, alpha, round_digits=round_digits
+    )
     base = df.select(
         F.col(id_col),
         F.col(group_col),

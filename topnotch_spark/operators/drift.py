@@ -122,6 +122,7 @@ def ks_statistic(
     col: str,
     round_digits: int = 6,
     bins: int | str | None = "auto",
+    *,
     auto_bins: int = 1024,
     auto_distinct_threshold: int = 250_000,
 ) -> DataFrame:

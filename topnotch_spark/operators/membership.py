@@ -56,6 +56,7 @@ def bloom_build(
     key: Column | str,
     m_bits: int = 1 << 20,
     k_hashes: int = 3,
+    *,
     prehashed: bool = False,
 ) -> DataFrame:
     """Build the filter: (word_idx, word) rows, 32 bits per word, only
@@ -90,6 +91,7 @@ def bloom_probe(
     bloom: DataFrame,
     m_bits: int = 1 << 20,
     k_hashes: int = 3,
+    *,
     prehashed: bool = False,
 ) -> DataFrame:
     """Probe: (id, bloom_hit) per row — bloom_hit iff ALL k bits are set

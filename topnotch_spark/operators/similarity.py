@@ -449,6 +449,7 @@ def srp_ann_topk(
     n_planes: int = 8,
     round_digits: int = 6,
     dim: int | None = None,
+    *,
     hamming_probes: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's SRP bucket(s).

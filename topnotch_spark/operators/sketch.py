@@ -109,6 +109,7 @@ def cms_build(
     key,
     width: int = 1024,
     depth: int = 4,
+    *,
     prehashed: bool = False,
 ) -> DataFrame:
     """Build the sketch: (row_idx, col_idx, cnt) cells, only non-zero
@@ -148,6 +149,7 @@ def cms_query(
     cms: DataFrame,
     width: int = 1024,
     depth: int = 4,
+    *,
     prehashed: bool = False,
 ) -> DataFrame:
     """Estimate each row's key frequency: (id, est_count) with

@@ -728,6 +728,7 @@ def retention_cohorts(
     df: DataFrame,
     key_col: str,
     ts_col: str,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Classic cohort-retention rollup: cohort = ISO week of each key's
@@ -784,8 +785,9 @@ def rolling_window_agg(
     ts_col: str,
     value_col: str,
     window_seconds: int = 7 * 86400,
-    round_digits: int = 6,
     decimals: int | None = None,
+    *,
+    round_digits: int = 6,
 ) -> DataFrame:
     """Trailing time-range rolling aggregate per key: for every event,
     count/sum/avg of `value_col` over the preceding `window_seconds`
@@ -835,6 +837,7 @@ def trend_per_key(
     ts_col: str,
     value_col: str,
     decimals: int = 2,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Per-key least-squares linear trend of a fixed-point metric over
@@ -909,6 +912,7 @@ def ewma_per_key(
     tiebreak_col: str,
     terms: int = 16,
     decimals: int = 2,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Per-key exponentially weighted moving average (half-decay per
@@ -967,6 +971,7 @@ def rolling_zscore_anomalies(
     threshold: float = 3.0,
     min_rows: int = 12,
     decimals: int = 2,
+    *,
     round_digits: int = 4,
 ) -> DataFrame:
     """Per-key rolling-window anomaly detection: flag events whose value
@@ -1029,6 +1034,7 @@ def interarrival_stats(
     key_col: str,
     ts_col: str,
     tiebreak_col: str,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Per-key inter-event gap statistics: event count, gap count, and

@@ -94,6 +94,7 @@ def language_id(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    *,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Stopword-marker language ID with a CJK-character override.
@@ -387,6 +388,7 @@ def vocab_overlap(
     df: DataFrame,
     text_col: str,
     group_col: str,
+    *,
     round_digits: int = 6,
 ) -> DataFrame:
     """Pairwise vocabulary overlap between corpus slices: for every

@@ -31,12 +31,13 @@ A command that takes a ``method`` param is a :class:`MethodCmd`: its
 - the inputs the method requires;
 - the options it drops on purpose.
 
-The options a method accepts are its operator's keyword parameters,
-read once with ``inspect.signature``. ``from_json`` checks a plan
-against the row (unknown method, missing params or inputs, options the
-operator does not take) and the one ``MethodCmd.execute`` makes the
-call, so the two cannot drift apart: adding a method means adding one
-row.
+The options a method accepts are its operator's parameters with a
+default, read once with ``inspect.signature``; keyword-only parameters
+(after ``*``) are for Python callers and are never plan options.
+``from_json`` checks a plan against the row (unknown method, missing
+params or inputs, options the operator does not take) and the one
+``MethodCmd.execute`` makes the call, so the two cannot drift apart:
+adding a method means adding one row.
 """
 
 from __future__ import annotations
@@ -93,12 +94,15 @@ def _operator(ref: str):
 def _keywords(fn, n_args: int) -> frozenset[str]:
     """The options ``fn`` takes after its first ``n_args`` positional
     arguments: the parameters with a default, frames excepted (a frame
-    comes from an input, never from params)."""
+    comes from an input, never from params) and keyword-only ones
+    excepted (those are for Python callers, not plans)."""
     params = list(inspect.signature(fn).parameters.values())[n_args:]
     return frozenset(
         p.name
         for p in params
-        if p.default is not p.empty and "DataFrame" not in str(p.annotation)
+        if p.default is not p.empty
+        and p.kind is not p.KEYWORD_ONLY
+        and "DataFrame" not in str(p.annotation)
     )
 
 
@@ -880,14 +884,15 @@ class OutliersCmd(MethodCmd):
     mean/stddev z-score flags or robust median/MAD flags (the screen
     that survives heavy-tailed columns)."""
 
+    DEFAULT = "zscore"
+
     input: Input = None  # type: ignore[assignment]
-    method: str = "zscore"
+    method: str = DEFAULT
     value_column: str = "value"
     group_columns: tuple[str, ...] | None = None
     options: dict = field(default_factory=dict)
 
     NAME = "outliers"
-    DEFAULT = "zscore"
     TABLE = {
         "zscore": Method("profile:zscore_outliers", _OUTLIER_ARGS),
         "mad": Method("profile:mad_outliers", _OUTLIER_ARGS),
@@ -981,14 +986,15 @@ class DriftCmd(MethodCmd):
     first-significant-digit law audit of ONE dataset's positive
     numeric column (drift.benford_first_digit)."""
 
+    DEFAULT = "psi"
+
     reference: Input = None  # type: ignore[assignment]
     current: Input = None  # type: ignore[assignment]
     column: str = ""
-    method: str = "psi"
+    method: str = DEFAULT
     options: dict = field(default_factory=dict)
 
     NAME = "drift"
-    DEFAULT = "psi"
     # the one-dataset forms read "input" as both reference and current
     TABLE = {
         "psi": Method("drift:histogram_drift", _TWO_SLICES),
@@ -1038,16 +1044,17 @@ class DeconCmd(MethodCmd):
     "nPlanes", "dim"]} the screen is semantic instead: corpus vectors
     cosine-near a benchmark item (curation.embedding_decontaminate)."""
 
+    DEFAULT = "ngram"
+
     corpus: Input = None  # type: ignore[assignment]
     benchmark: Input = None  # type: ignore[assignment]
-    method: str = "ngram"
+    method: str = DEFAULT
     id_column: str = "id"
     text_column: str = "text"
     vec_column: str = "embedding"
     options: dict = field(default_factory=dict)
 
     NAME = "decontaminate"
-    DEFAULT = "ngram"
     TABLE = {
         "ngram": Method(
             "curation:cross_corpus_overlap",
@@ -1130,15 +1137,16 @@ class LmScoreCmd(MethodCmd):
     unigram profile). Feed the score into a downstream
     assertion/qualityFilter gate."""
 
+    DEFAULT = "addkUnigram"
+
     target: Input = None  # type: ignore[assignment]
     reference: Input = None  # type: ignore[assignment]
-    method: str = "addkUnigram"
+    method: str = DEFAULT
     id_column: str = "id"
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
     NAME = "lmScore"
-    DEFAULT = "addkUnigram"
     TABLE = {
         "addkUnigram": Method("textqc:cross_perplexity", _LM_ARGS),
         "stupidBackoff": Method("textqc:stupid_backoff", _LM_ARGS),
@@ -1192,15 +1200,16 @@ class TokenizeCmd(MethodCmd):
     fallback to characters needs no bounds) and are rejected under
     method "bpe"."""
 
+    DEFAULT = "unigram"
+
     input: Input = None  # type: ignore[assignment]
     vocab: Input = None  # type: ignore[assignment]
-    method: str = "unigram"
+    method: str = DEFAULT
     id_column: str = "id"
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
     NAME = "tokenize"
-    DEFAULT = "unigram"
     TABLE = {
         "unigram": Method("textqc:unigram_segment", _SEGMENT_ARGS),
         "bpe": Method("textqc:bpe_segment", _SEGMENT_ARGS),
@@ -1429,13 +1438,14 @@ class SkewCmd(MethodCmd):
     it to the target task size (the prescription salted_join then
     applies)."""
 
+    DEFAULT = "topk"
+
     input: Input = None  # type: ignore[assignment]
     keys: tuple[str, ...] = ()
-    method: str = "topk"
+    method: str = DEFAULT
     options: dict = field(default_factory=dict)
 
     NAME = "skewProfile"
-    DEFAULT = "topk"
     TABLE = {
         "topk": Method("skew:key_skew_topk", ("input", "keys")),
         "saltPlan": Method("skew:salt_plan", ("input", "keys")),
