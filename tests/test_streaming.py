@@ -245,41 +245,6 @@ def test_streaming_drift_equals_batch(spark, tmp_path):
     assert sorted(got, key=key) == sorted(want, key=key)
 
 
-def test_running_user_stats_gated_or_exact(spark, tmp_path):
-    """transformWithState surface: with protobuf present the stream's
-    final snapshots equal the batch aggregate; without it (this
-    container) the operator fails fast with a clear message instead of
-    an opaque mid-query worker crash."""
-    import pytest
-
-    from topnotch_spark.streaming.ops import run_stream_to_table, stream_from_parquet
-    from topnotch_spark.streaming.stateful import running_user_stats
-
-    rows = [(1, 100, 5.0), (2, 100, 1.0), (3, 200, 7.0), (4, 100, 3.0)]
-    schema = "event_id long, user_id long, value double"
-    df = spark.createDataFrame(rows, schema)
-    src = str(tmp_path / "tws")
-    for k in range(2):
-        df.filter(f"event_id % 2 = {k}").coalesce(1).write.parquet(f"{src}/p{k}")
-    stream = stream_from_parquet(spark, f"{src}/p*", schema=schema,
-                                 max_files_per_trigger=1)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            running_user_stats(stream)
-        return
-    out = run_stream_to_table(running_user_stats(stream), output_mode="append")
-    final = {
-        r["user_id"]: (r["n_events"], r["min_value"], r["max_value"])
-        for r in out.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "min_value", "max_value")).alias("s"))
-        .select("user_id", "s.*")
-        .collect()
-    }
-    assert final == {100: (3, 1.0, 5.0), 200: (1, 7.0, 7.0)}
-
-
 def test_session_window_end_at_final_watermark_oracle_parity(spark, tmp_path):
     """Boundary fixture for the closed-session filter: Spark append mode
     EMITS a session whose end EQUALS the final watermark (watermark >=
@@ -427,9 +392,14 @@ def test_funnel_stream_no_rerun_after_completion(spark, tmp_path):
     assert counts == {0: 2, 1: 1, 2: 1}  # u1+u2 view; only u1 click+buy
 
 
-def test_write_stream_idempotent_survives_checkpoint_loss(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "uri"])
+def test_write_stream_idempotent_survives_checkpoint_loss(
+    spark, tmp_path, monkeypatch, scheme
+):
     """The batch-id ledger prevents double-writes even when the
-    checkpoint is lost and the stream replays from scratch."""
+    checkpoint is lost and the stream replays from scratch. A URI
+    ledger path lands on its own filesystem, not under the working
+    directory."""
     import shutil
 
     from topnotch_spark.streaming.ops import (
@@ -437,20 +407,26 @@ def test_write_stream_idempotent_survives_checkpoint_loss(spark, tmp_path):
         write_stream_idempotent,
     )
 
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
     src = str(tmp_path / "src")
     spark.range(100).selectExpr("id", "id % 7 AS grp").coalesce(2).write.parquet(src)
     dest = str(tmp_path / "dest")
-    ledger = str(tmp_path / "ledger")
+    ledger = tmp_path / "ledger"
     ckpt = str(tmp_path / "ckpt")
 
     def run():
         write_stream_idempotent(
             stream_from_parquet(spark, src, max_files_per_trigger=1),
-            dest, ledger, ckpt,
+            dest, scheme + str(ledger), ckpt,
         )
 
     run()
     assert spark.read.parquet(dest).count() == 100
+    # one marker per input file, next to the sink; nothing under the CWD
+    assert len(list(ledger.glob("batch-*"))) == 2
+    assert os.listdir(cwd) == []
     # same checkpoint: Spark itself knows the files are done -> no-op
     run()
     assert spark.read.parquet(dest).count() == 100
@@ -558,6 +534,53 @@ def test_ewma_stream_cross_batch_window(spark, tmp_path):
         ).collect()
     }
     assert got == expected  # bit-identical, including rows 7-11 post-cut
+
+
+_READS_STATE = ["user_id", "ts", "event_type", "event_id"]
+_READS_VALUE = ["user_id", "ts", "value", "event_id"]
+
+
+@pytest.mark.parametrize(
+    "op,reads",
+    [
+        ("sessionize_stream", ["user_id", "ts"]),
+        ("transitions_stream", _READS_STATE),
+        ("funnel_stream", _READS_STATE),
+        ("anomaly_stream", _READS_VALUE),
+        ("ewma_stream", _READS_VALUE),
+        ("paths_stream", _READS_STATE),
+    ],
+)
+def test_python_state_operators_project_their_input(spark, tmp_path, op, reads):
+    """applyInPandasWithState is opaque to Catalyst, so each operator
+    projects its input itself: on a wide events stream the state node's
+    child outputs exactly the columns the operator reads."""
+    import datetime as dt
+
+    from topnotch_spark.streaming import stateful
+
+    src = str(tmp_path / "wide")
+    spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1), 7, "view", 1.5, "x", 2.0)],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, payload string, extra double",
+    ).write.parquet(src)
+    stream = stream_from_parquet(spark, src)
+    args = (["view", "click"],) if op == "funnel_stream" else ()
+    plan = getattr(stateful, op)(stream, *args)._jdf.queryExecution().analyzed()
+
+    def find(node):
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i))
+            if hit is not None:
+                return hit
+        return None
+
+    out = find(plan).child().output()
+    assert [out.apply(i).name() for i in range(out.size())] == reads
 
 
 def test_python_state_rounding_matches_spark_round(spark):

@@ -63,6 +63,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file-source stream over its replay dir
+    (streaming.ops.events_replay_dir): three time-cut files, one per
+    micro-batch. The dir is resolved per call, under the replay root
+    current at that time."""
+    from topnotch_spark.streaming.ops import (
+        events_replay_dir,
+        stream_from_parquet,
+    )
+
+    return stream_from_parquet(
+        spark, events_replay_dir(spark, sf_dir), max_files_per_trigger=1
+    )
+
+
 # --------------------------------------------------------------------------
 # O7 view: delegated SQL surface
 # --------------------------------------------------------------------------
@@ -2138,15 +2153,13 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers are md5-derived, so stream == batch == DuckDB oracle
     bit-for-bit (the engine-specific DataSketches family stays
     test-gated; this one is hash-gated like everything else)."""
-    from topnotch_spark.streaming import run_stream_to_table, stream_from_parquet
+    from topnotch_spark.streaming import run_stream_to_table
     from topnotch_spark.streaming.ops import (
-        events_replay_dir,
         hll_register_stream,
         windowed_distinct_estimate,
     )
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     regs = run_stream_to_table(
         hll_register_stream(stream, window_duration="1 hour"),
         output_mode="complete",
@@ -2507,13 +2520,10 @@ def streaming_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation over the events stream."""
     from topnotch_spark.streaming import (
         run_stream_to_table,
-        stream_from_parquet,
         windowed_event_metrics,
     )
-    from topnotch_spark.streaming.ops import events_replay_dir
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     # JVM-stateful aggs (unlike the Python-stateful ops, where 16 beat
     # 8) get ~30% faster with fewer state partitions at this key
     # cardinality — state-store/commit fixed cost dominates (measured
@@ -2535,16 +2545,11 @@ def streaming_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; the rank input is the bounded |windows|×|types| frame)."""
     from topnotch_spark.streaming import (
         run_stream_to_table,
-        stream_from_parquet,
         windowed_event_metrics,
     )
-    from topnotch_spark.streaming.ops import (
-        events_replay_dir,
-        topk_types_per_window,
-    )
+    from topnotch_spark.streaming.ops import topk_types_per_window
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     agg = run_stream_to_table(
         windowed_event_metrics(stream, window_duration="1 hour"),
         output_mode="complete",
@@ -2559,13 +2564,10 @@ def streaming_sliding_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key is windows-per-slide × groups, watermark-evicted."""
     from topnotch_spark.streaming import (
         run_stream_to_table,
-        stream_from_parquet,
         windowed_event_metrics,
     )
-    from topnotch_spark.streaming.ops import events_replay_dir
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_stream_to_table(
         windowed_event_metrics(
             stream, window_duration="2 hours", slide="1 hour"
@@ -2580,15 +2582,9 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events stream. Emits every session CLOSED by the final watermark:
     equals the batch sessionization minus sessions still open at
     max(ts) - 30min (the oracle encodes exactly that)."""
-    from topnotch_spark.streaming import (
-        run_stream_to_table,
-        sessionize_stream,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import run_stream_to_table, sessionize_stream
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     # Python-stateful ops are bound by per-partition pandas processing,
     # not state-store commits: 16 partitions beat 8 (5.3s vs 7.0s
     # measured idle at sf0.1) — keep the default parallelism
@@ -2675,14 +2671,9 @@ def streaming_incremental_dedup(
         keyed_dedup,
         upsert_dedup_index,
     )
-    from topnotch_spark.streaming.ops import (
-        events_replay_dir,
-        run_available_now,
-        stream_from_parquet,
-    )
+    from topnotch_spark.streaming.ops import run_available_now
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="tn_stream_incdedup_")
     idx_path = root + "/index"
     ledger: list[tuple[int, int, int, int, int]] = []
@@ -2765,15 +2756,9 @@ def streaming_incremental_dedup(
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: first arrival per (user_id, event_type)
     across micro-batches; final state = the distinct key set."""
-    from topnotch_spark.streaming import stream_from_parquet
-    from topnotch_spark.streaming.ops import (
-        dedup_stream,
-        events_replay_dir,
-        run_stream_to_table,
-    )
+    from topnotch_spark.streaming.ops import dedup_stream, run_stream_to_table
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     dd = dedup_stream(
         stream.select("user_id", "event_type"), ["user_id", "event_type"]
     )
@@ -2785,14 +2770,9 @@ def streaming_enriched_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the events stream enriched against the static
     customer dimension (broadcast — re-read per micro-batch, never
     stateful), then a watermarked daily window aggregation per nation."""
-    from topnotch_spark.streaming import (
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import run_stream_to_table
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
@@ -2822,14 +2802,9 @@ def streaming_assertion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule stream-level assertion metrics: the batch rule evaluator
     runs per micro-batch (foreachBatch), counts merge across batches."""
     from topnotch_spark.operators.assertions import AssertionRule
-    from topnotch_spark.streaming import (
-        run_streaming_assertions,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import run_streaming_assertions
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     rules = [AssertionRule(q, d, t) for q, d, t in STREAM_RULES]
     summary = run_streaming_assertions(stream, rules)
     rows = [
@@ -2846,14 +2821,12 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI drift of the streamed event values against the static 'click'
     distribution — per-bucket integer counts accumulate across
     micro-batches, so the stream result equals the batch operator."""
-    from topnotch_spark.streaming import stream_from_parquet
-    from topnotch_spark.streaming.ops import events_replay_dir, run_streaming_drift
+    from topnotch_spark.streaming.ops import run_streaming_drift
 
     ref = load(spark, sf_dir, "events").filter(
         F.col("event_type") == "click"
     )
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_streaming_drift(ref, stream, "value", n_buckets=10)
 
 
@@ -2863,32 +2836,24 @@ def streaming_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     W1 twin of streaming_drift_monitor — integer bucket counts
     accumulate across micro-batches, final arithmetic shared with the
     batch wasserstein_binned via drift.w1_table."""
-    from topnotch_spark.streaming import stream_from_parquet
-    from topnotch_spark.streaming.ops import (
-        events_replay_dir,
-        run_streaming_wasserstein,
-    )
+    from topnotch_spark.streaming.ops import run_streaming_wasserstein
 
     ref = load(spark, sf_dir, "events").filter(
         F.col("event_type") == "click"
     )
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_streaming_wasserstein(ref, stream, "value", n_buckets=32)
 
 
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessions via the built-in session_window state-store agg (the
     idiomatic counterpart to the applyInPandasWithState sessionizer)."""
-    from topnotch_spark.streaming import stream_from_parquet
     from topnotch_spark.streaming.ops import (
-        events_replay_dir,
         run_stream_to_table,
         session_window_metrics,
     )
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     # JVM-stateful: see the state_partitions note in streaming_window_metrics
     return run_stream_to_table(
         session_window_metrics(stream), output_mode="append",
@@ -2901,15 +2866,12 @@ def streaming_error_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired with the same user's clicks in the preceding hour. Both sides
     watermarked; state bounded by watermark + tolerance, not stream
     length."""
-    from topnotch_spark.streaming import stream_from_parquet
     from topnotch_spark.streaming.ops import (
-        events_replay_dir,
         run_stream_to_table,
         stream_stream_time_join,
     )
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     errors = stream.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"),
         "user_id",
@@ -3091,13 +3053,10 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle is the batch SQL."""
     from topnotch_spark.streaming import (
         run_stream_to_table,
-        stream_from_parquet,
         transitions_stream,
     )
-    from topnotch_spark.streaming.ops import events_replay_dir
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     pairs = run_stream_to_table(
         transitions_stream(stream), output_mode="append", state_partitions=16
     )
@@ -3118,15 +3077,10 @@ def streaming_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL."""
     from pyspark.sql import Window as W
 
-    from topnotch_spark.streaming import (
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import run_stream_to_table
     from topnotch_spark.streaming.stateful import paths_stream
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     paths = run_stream_to_table(
         paths_stream(stream, n_steps=3),
         output_mode="append",
@@ -3154,19 +3108,15 @@ def streaming_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of event_funnel: per-user stage advances emitted
-    from applyInPandasWithState (2 longs of state per active user,
-    dropped on completion); counts per stage equal the batch funnel for
+    from applyInPandasWithState (2 longs of state per user seen, kept
+    after completion as a terminal marker so a later batch cannot
+    re-run the funnel); counts per stage equal the batch funnel for
     time-ordered replay, so the oracle is the batch SQL. A literal
     stage spine keeps zero-user stages present."""
-    from topnotch_spark.streaming import (
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import run_stream_to_table
     from topnotch_spark.streaming.stateful import funnel_stream
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     advances = run_stream_to_table(
         funnel_stream(stream, FUNNEL_STAGES),
         output_mode="append",
@@ -3684,17 +3634,10 @@ def streaming_benford_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming.ops.windowed_benford) — a live fabricated-traffic
     monitor. Watermarked stateful windowed count (≤ 9 counters per open
     window); stream ≡ batch ≡ oracle."""
-    from topnotch_spark.streaming import (
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import (
-        events_replay_dir,
-        windowed_benford,
-    )
+    from topnotch_spark.streaming import run_stream_to_table
+    from topnotch_spark.streaming.ops import windowed_benford
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_stream_to_table(
         windowed_benford(stream, window_duration="1 day"),
         output_mode="complete",
@@ -3873,15 +3816,9 @@ def streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first 20 events of every batch), exact-integer sums and HALF_UP
     rounding identical to the batch op — stream ≡ batch, so the oracle
     is the batch SQL."""
-    from topnotch_spark.streaming import (
-        anomaly_stream,
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import anomaly_stream, run_stream_to_table
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_stream_to_table(
         anomaly_stream(stream), output_mode="append", state_partitions=16
     ).select("user_id", "ts", "event_id", "value", "n_window", "zscore")
@@ -3892,15 +3829,9 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rides across micro-batches in applyInPandasWithState;
     power-of-two weights over scaled ints + HALF_UP rounding make
     stream ≡ batch bit-for-bit, so the oracle is the batch SQL."""
-    from topnotch_spark.streaming import (
-        ewma_stream,
-        run_stream_to_table,
-        stream_from_parquet,
-    )
-    from topnotch_spark.streaming.ops import events_replay_dir
+    from topnotch_spark.streaming import ewma_stream, run_stream_to_table
 
-    src = events_replay_dir(spark, sf_dir)
-    stream = stream_from_parquet(spark, src, max_files_per_trigger=1)
+    stream = _events_stream(spark, sf_dir)
     return run_stream_to_table(
         ewma_stream(stream), output_mode="append", state_partitions=16
     ).select("user_id", "ts", "event_id", "value", "ewma")

@@ -629,13 +629,21 @@ def write_stream_idempotent(
     (create-if-absent is enough: Spark serializes micro-batches per
     query).
 
+    The ledger goes through the Hadoop FileSystem API, so a URI
+    ``ledger_path`` (``file://``, HDFS, an object store) resolves on its
+    own filesystem like the sink, not against the working directory.
+
     Runs the stream to completion with the availableNow trigger.
     """
     import hashlib
 
     from pyspark.sql import functions as F  # noqa: F401 (local rebind)
 
-    os.makedirs(ledger_path, exist_ok=True)
+    spark = stream_df.sparkSession
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    ledger = hpath(ledger_path)
+    fs = ledger.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.mkdirs(ledger)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         files = sorted(
@@ -656,12 +664,15 @@ def write_stream_idempotent(
                 return
             ident = f"content:{h['h']}:{h['n']}"
         digest = hashlib.sha256(ident.encode()).hexdigest()[:32]
-        marker = os.path.join(ledger_path, f"batch-{digest}")
-        if os.path.exists(marker):
+        marker = hpath(ledger, f"batch-{digest}")
+        if fs.exists(marker):
             return  # already committed by a previous incarnation
         batch_df.write.mode("append").format(output_format).save(dest)
-        with open(marker, "w") as f:
-            f.write(f"{batch_id}\n")
+        out = fs.create(marker, False)
+        try:
+            out.write(bytearray(f"{batch_id}\n".encode()))
+        finally:
+            out.close()
 
     run_available_now(
         stream_df, "tn_idem", foreach_batch=commit_batch,

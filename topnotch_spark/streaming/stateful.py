@@ -1,33 +1,41 @@
-"""Custom stateful streaming operator: gap-based sessionization via
-``applyInPandasWithState`` (SURVEY.md §7E; no counterpart in the
-batch-only reference).
+"""Keyed Python-state stream operators on ``applyInPandasWithState``
+(SURVEY.md §7E; no counterpart in the batch-only reference).
 
-A session is a maximal run of a user's events where consecutive events
-are no more than ``gap`` apart — the same definition as the batch
-``view_sessionize_events`` catalog query, which is the correctness
-oracle: every session this operator CLOSES must equal the corresponding
-batch session.
+Each operator carries a small per-user state across micro-batches so
+that its append stream equals a batch operator exactly for time-ordered
+replay — the batch op (or its SQL) is the correctness oracle:
 
-State per user: (session_start_us, last_event_us, n_events) as plain
-longs — epoch MICROS (the parquet timestamps' native precision, so
-session bounds round-trip exactly) avoid timezone/py-datetime
-marshalling across the Arrow state boundary. A session closes either (a) in-batch, when a later
-event arrives more than ``gap`` after the previous one, or (b) by
-event-time timeout, when the watermark passes last_event + gap. Open
-sessions whose timeout the final watermark never passes stay open — in a
-real deployment the stream keeps running; in availableNow tests only
-sessions closed by (a) or (b) are emitted.
+- ``sessionize_stream``: gap sessions (``view_sessionize_events``),
+  closed in-batch or by event-time timeout;
+- ``transitions_stream``: (previous state -> state) pairs
+  (``temporal.transition_counts``);
+- ``funnel_stream``: stage advances (``temporal.funnel_stages``);
+- ``anomaly_stream``: trailing-window z-score anomalies
+  (``temporal.rolling_zscore_anomalies``);
+- ``ewma_stream``: truncated power-of-two EWMA
+  (``temporal.ewma_per_key``);
+- ``paths_stream``: n-step state paths (``temporal.frequent_paths``).
 
-Scale: state is O(active users) x 24 bytes; shuffle is one exchange on
-the grouping key per micro-batch — the minimum any keyed stateful
-operator needs. Batches arrive per-group as Arrow record batches (no
-row-at-a-time Python).
+A stateless per-batch version of any of these drops or mis-scores
+whatever straddles a batch cut; the carried state closes exactly that
+gap. Every operator runs through one wrapper, ``_keyed_state``: it
+projects the columns the operator reads, watermarks, groups by user,
+picks the timeout conf, handles timed-out groups and hands the
+operator's ``fn(user_id, rows, state)`` one pandas frame per group.
+State values are plain longs/strings (timestamps as epoch micros, the
+parquet precision) so nothing timezone-dependent crosses the Arrow
+state boundary.
+
+Scale: state is O(active users) x a few bounded fields; shuffle is one
+exchange on the user key per micro-batch — the minimum any keyed
+stateful operator needs. Rows arrive per group as Arrow record batches
+(no row-at-a-time Python outside each operator's own scalar math).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -42,6 +50,71 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def _keyed_state(
+    events: DataFrame,
+    fn: Callable[[int, pd.DataFrame, GroupState], Iterator[pd.DataFrame]],
+    output: StructType,
+    state: StructType,
+    cols: tuple[str, ...],
+    user_col: str,
+    ts_col: str,
+    watermark_delay: str,
+    on_timeout: (
+        Callable[[int, GroupState], Iterator[pd.DataFrame]] | None
+    ) = None,
+) -> DataFrame:
+    """``fn(user_id, rows, state)`` per user and micro-batch over
+    ``events`` projected to (user, ts, *cols), as an append stream of
+    ``output`` rows carrying ``state`` per user.
+
+    ``on_timeout(user_id, state)`` runs for a group whose event-time
+    timeout fired (the operator sets it with ``setTimeoutTimestamp``);
+    without one no timeout is registered and a timed-out group only
+    drops its state."""
+
+    def per_group(
+        key: tuple, pdfs: Iterator[pd.DataFrame], gs: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        if gs.hasTimedOut:
+            if on_timeout is None:  # no timeouts registered; defensive
+                gs.remove()
+            else:
+                yield from on_timeout(user_id, gs)
+            return
+        chunks = list(pdfs)
+        yield from fn(
+            user_id, chunks[0] if len(chunks) == 1 else pd.concat(chunks), gs
+        )
+
+    return (
+        # explicit projection: applyInPandasWithState is opaque to
+        # Catalyst, so every child column would otherwise cross the
+        # Arrow boundary per group (guide §4)
+        events.select(user_col, ts_col, *cols)
+        .withWatermark(ts_col, watermark_delay)
+        .groupBy(user_col)
+        .applyInPandasWithState(
+            per_group,
+            outputStructType=output,
+            stateStructType=state,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout
+            if on_timeout is None
+            else GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+def _time_order(
+    rows: pd.DataFrame, ts_col: str, tiebreak_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row order by (ts, tiebreak), and the unsorted ts array."""
+    ts = rows[ts_col].to_numpy()
+    return np.lexsort((rows[tiebreak_col].to_numpy(), ts)), ts
+
 
 SESSION_SCHEMA = StructType(
     [
@@ -88,25 +161,30 @@ def sessionize_stream(
 ) -> DataFrame:
     """Gap-based sessions over a stream of (user, timestamp) events.
 
-    Output: one row per CLOSED session (user_id, session_start,
+    A session is a maximal run of a user's events where consecutive
+    events are no more than ``gap_seconds`` apart — the definition of
+    the batch ``view_sessionize_events`` query, the oracle for every
+    session this operator CLOSES. A session closes either (a) in-batch,
+    when a later event arrives more than the gap after the previous
+    one, or (b) by event-time timeout, when the watermark passes
+    last_event + gap. Sessions the final watermark never passes stay
+    open (a real deployment keeps running; availableNow runs emit only
+    sessions closed by (a) or (b)).
+
+    State per user: (session_start_us, last_event_us, n_events), three
+    longs. Output: one row per CLOSED session (user_id, session_start,
     session_end, n_events), append mode.
     """
     gap_us = gap_seconds * 1_000_000
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield _session_frame(user_id, [start_us], [last_us], [n])
-            return
+    def on_timeout(user_id: int, state: GroupState) -> Iterator[pd.DataFrame]:
+        start_us, last_us, n = state.get
+        state.remove()
+        yield _session_frame(user_id, [start_us], [last_us], [n])
 
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+    def fn(
+        user_id: int, rows: pd.DataFrame, state: GroupState
+    ) -> Iterator[pd.DataFrame]:
         # datetime64[ns] -> epoch micros (exact for parquet micro precision)
         ts_us = np.sort(rows[ts_col].to_numpy().astype("int64") // 1000)
         if state.exists:
@@ -134,116 +212,9 @@ def sessionize_stream(
         if c_start:
             yield _session_frame(user_id, c_start, c_last, c_n)
 
-    return (
-        # explicit projection: applyInPandasWithState is opaque to
-        # Catalyst, so every child column would otherwise cross the
-        # Arrow boundary per group (guide §4) — the fn reads only
-        # (user, ts)
-        events.select(user_col, ts_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4 next-gen arbitrary state API)
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class RunningUserStats(StatefulProcessor):
-    """StatefulProcessor for ``transformWithStateInPandas`` — the Spark 4
-    successor to applyInPandasWithState (typed state handles, composable
-    value/list/map state, timers). Maintains per-user running
-    (n_events, min_value, max_value) and emits the cumulative snapshot
-    whenever the user appears in a micro-batch.
-
-    The state is deliberately ORDER-INDEPENDENT arithmetic — a count and
-    two extrema — so the final snapshot is bit-identical to a batch
-    aggregate regardless of batch boundaries (a running double SUM would
-    drift by summation order; see the windowed-metrics avg note in
-    streaming/ops.py). State per user: one long + two doubles."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        self._state = handle.getValueState(
-            "stats",
-            StructType(
-                [
-                    StructField("n", LongType()),
-                    StructField("mn", DoubleType()),
-                    StructField("mx", DoubleType()),
-                ]
-            ),
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, mn, mx = (0, None, None)
-        if self._state.exists():
-            n, mn, mx = self._state.get()
-        for pdf in rows:
-            n += len(pdf)
-            vals = pdf["value"].dropna()
-            if len(vals):
-                bmn, bmx = float(vals.min()), float(vals.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-        self._state.update((n, mn, mx))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "min_value": [mn],
-                "max_value": [mx],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user cumulative stats via transformWithStateInPandas; emits a
-    snapshot row per (user, micro-batch-with-activity). Downstream, the
-    max-n snapshot per user equals the batch aggregate exactly.
-
-    Environment gate: the transformWithState state-server protocol
-    speaks protobuf between the JVM and the Python driver worker. When
-    ``google.protobuf`` is not installed (it is not a pyspark hard
-    dependency) the worker crashes opaquely mid-query — so we fail fast
-    and clearly here instead. ``applyInPandasWithState``
-    (sessionize_stream above) covers arbitrary-state needs without the
-    extra dependency."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "package (state-server protocol), which is not installed in "
-            "this environment; use applyInPandasWithState-based "
-            "operators (e.g. sessionize_stream) instead"
-        ) from e
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningUserStats(),
-        outputStructType=(
-            "user_id long, n_events long, min_value double, max_value double"
-        ),
-        outputMode="Append",
-        timeMode="None",
+    return _keyed_state(
+        events, fn, SESSION_SCHEMA, STATE_SCHEMA, (), user_col, ts_col,
+        watermark_delay, on_timeout,
     )
 
 
@@ -291,20 +262,9 @@ def transitions_stream(
     """
 
     def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
+        user_id: int, rows: pd.DataFrame, state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # no timeouts registered; defensive
-            state.remove()
-            return
-
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        ts_a = rows[ts_col].to_numpy()
-        tb_a = rows[tiebreak_col].to_numpy()
-        order = np.lexsort((tb_a, ts_a))
+        order, ts_a = _time_order(rows, ts_col, tiebreak_col)
         states = rows[state_col].to_numpy()[order].tolist()
         last_t = int(ts_a[order[-1]].astype("int64") // 1000)
         if state.exists:
@@ -326,19 +286,9 @@ def transitions_stream(
                 {"user_id": user_id, "prev_state": prev, "next_state": nxt}
             )
 
-    return (
-        # opaque-op projection (guide §4): fn reads (user, ts, state,
-        # tiebreak) only
-        events.select(user_col, ts_col, state_col, tiebreak_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TRANSITION_SCHEMA,
-            stateStructType=TRANSITION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events, fn, TRANSITION_SCHEMA, TRANSITION_STATE_SCHEMA,
+        (state_col, tiebreak_col), user_col, ts_col, watermark_delay,
     )
 
 
@@ -388,20 +338,9 @@ def funnel_stream(
     stage_of = {s: i for i, s in enumerate(stages)}
 
     def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
+        user_id: int, rows: pd.DataFrame, state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # no timeouts registered; defensive
-            state.remove()
-            return
-
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        ts_raw = rows[ts_col].to_numpy()
-        tb_a = rows[tiebreak_col].to_numpy()
-        order = np.lexsort((tb_a, ts_raw))
+        order, ts_raw = _time_order(rows, ts_col, tiebreak_col)
         states = rows[state_col].to_numpy()[order].tolist()
         ts_us = (ts_raw[order].astype("int64") // 1000).tolist()
         if state.exists:
@@ -433,19 +372,9 @@ def funnel_stream(
                 }
             )
 
-    return (
-        # opaque-op projection (guide §4): fn reads (user, ts, state,
-        # tiebreak) only
-        events.select(user_col, ts_col, state_col, tiebreak_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_ADVANCE_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events, fn, FUNNEL_ADVANCE_SCHEMA, FUNNEL_STATE_SCHEMA,
+        (state_col, tiebreak_col), user_col, ts_col, watermark_delay,
     )
 
 
@@ -505,20 +434,11 @@ def anomaly_stream(
     quantum = decimal.Decimal(1).scaleb(-round_digits)
 
     def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
+        user_id: int, rows: pd.DataFrame, state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # no timeouts registered; defensive
-            state.remove()
-            return
-
         # hot path: ~|users| invocations per micro-batch, so the pandas
         # plumbing (concat/sort_values/row-dict frames) costs more than
         # the math — keep it in numpy, loop only over scalar lists
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
         keep = rows[value_col].notna().to_numpy()
         if not keep.any():
             return
@@ -574,19 +494,9 @@ def anomaly_stream(
                 }
             )
 
-    return (
-        # opaque-op projection (guide §4): fn reads (user, ts, value,
-        # tiebreak) only
-        events.select(user_col, ts_col, value_col, tiebreak_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=ANOMALY_SCHEMA,
-            stateStructType=ANOMALY_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events, fn, ANOMALY_SCHEMA, ANOMALY_STATE_SCHEMA,
+        (value_col, tiebreak_col), user_col, ts_col, watermark_delay,
     )
 
 
@@ -642,19 +552,10 @@ def ewma_stream(
     dens = [sum(2.0 ** -k for k in range(n)) for n in range(terms + 1)]
 
     def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
+        user_id: int, rows: pd.DataFrame, state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # no timeouts registered; defensive
-            state.remove()
-            return
-
         # hot path: ~|users| invocations per micro-batch — numpy
         # plumbing, scalar loop only for the exact dyadic/Decimal math
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
         keep = rows[value_col].notna().to_numpy()
         if not keep.any():
             return
@@ -698,19 +599,9 @@ def ewma_stream(
             }
         )
 
-    return (
-        # opaque-op projection (guide §4): fn reads (user, ts, value,
-        # tiebreak) only
-        events.select(user_col, ts_col, value_col, tiebreak_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events, fn, EWMA_SCHEMA, EWMA_STATE_SCHEMA,
+        (value_col, tiebreak_col), user_col, ts_col, watermark_delay,
     )
 
 
@@ -785,20 +676,9 @@ def paths_stream(
         raise ValueError("paths_stream: n_steps must be >= 2")
 
     def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
+        user_id: int, rows: pd.DataFrame, state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # no timeouts registered; defensive
-            state.remove()
-            return
-
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        ts_a = rows[ts_col].to_numpy()
-        tb_a = rows[tiebreak_col].to_numpy()
-        order = np.lexsort((tb_a, ts_a))
+        order, _ = _time_order(rows, ts_col, tiebreak_col)
         states = [
             None if s is None or (isinstance(s, float) and pd.isna(s))
             else str(s)
@@ -829,17 +709,7 @@ def paths_stream(
         if paths:
             yield pd.DataFrame({"user_id": user_id, "path": paths})
 
-    return (
-        # opaque-op projection (guide §4): fn reads (user, ts, state,
-        # tiebreak) only
-        events.select(user_col, ts_col, state_col, tiebreak_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=PATHS_SCHEMA,
-            stateStructType=PATHS_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events, fn, PATHS_SCHEMA, PATHS_STATE_SCHEMA,
+        (state_col, tiebreak_col), user_col, ts_col, watermark_delay,
     )
