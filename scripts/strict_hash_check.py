@@ -32,8 +32,10 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def cell_key(v):

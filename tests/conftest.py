@@ -30,10 +30,13 @@ def _run_in_tmp_cwd(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def spark(_run_in_tmp_cwd):
+    # The live heap is about 1.5 GB after a full GC midway through the
+    # suite, but a 16 GB cap let the JVM keep up to 10.6 GB resident.
     s = get_spark(
         "topnotch_spark-tests",
         master="local[4]",
         shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "4g"},
     )
     yield s
     s.stop()

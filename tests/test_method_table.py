@@ -38,7 +38,69 @@ BASE = {
     "quantileSketch": {"input": X, "params": {"valueColumn": "v"}},
     "bloom": {"input": X, "params": {"keyColumn": "k"}},
     "index": {"input": X, "params": {}},
+    "fuse": {"runs": [X, X], "params": {}},
+    "asof": {
+        "left": X, "right": X,
+        "params": {"on": ["k"], "leftTs": "t", "rightTs": "t",
+                   "rightCols": ["c"]},
+    },
+    "pivot": {
+        "input": X,
+        "params": {"groupColumn": "g", "pivotColumn": "p",
+                   "pivotValues": ["a"]},
+    },
+    "dsir": {"raw": X, "target": X, "params": {"idColumn": "id"}},
+    "fdCheck": {"input": X, "params": {"pairs": [["a", "b"]]}},
+    "winsorize": {"input": X, "params": {"valueColumn": "v"}},
+    "spatialJoin": {"left": X, "right": X, "params": {"radius": 1.0}},
+    "basket": {
+        "input": X, "params": {"basketColumn": "b", "itemColumn": "i"},
+    },
+    "scd2": {
+        "current": X, "updates": X,
+        "params": {"keys": ["k"], "tracked": ["t"], "effectiveColumn": "e"},
+    },
+    "sketch": {
+        "input": X, "params": {"detailColumns": ["d"], "valueColumn": "v"},
+    },
+    "cdcApply": {
+        "snapshot": X, "changes": X,
+        "params": {"keys": ["k"], "tsColumn": "ts"},
+    },
+    "intervalJoin": {
+        "facts": X, "ranges": X,
+        "params": {"valueColumn": "v", "loColumn": "lo", "hiColumn": "hi",
+                   "rangeColumns": ["r"]},
+    },
+    "compact": {"params": {"source": "s", "dest": "d"}},
+    "retrieve": {"input": X, "params": {"queries": [[1, "q"]]}},
+    "profile": {"input": X, "params": {}},
+    "kAnonymity": {"input": X, "params": {"quasiColumns": ["q"]}},
+    "sample": {"input": X, "params": {"idColumn": "id"}},
+    "split": {"input": X, "params": {"idColumn": "id"}},
 }
+
+# the params that pick the row of a command without a method param
+FORMS = {
+    ("profile", "columns"): {},
+    ("profile", "histogram"): {"histogramColumn": "c"},
+    ("profile", "corr"): {"corrColumns": ["a", "b"]},
+    ("profile", "mi"): {"miColumns": ["a", "b"]},
+    ("kAnonymity", "k"): {},
+    ("kAnonymity", "l"): {"sensitiveColumn": "s"},
+    ("kAnonymity", "t"): {"sensitiveColumn": "s", "t": 0.2},
+    ("sample", "stratified"): {"stratColumn": "s", "rates": {"a": 0.5}},
+    ("sample", "weighted"): {"weightColumn": "w"},
+    ("sample", "weightedTopn"): {"weightColumn": "w", "n": 3},
+    ("sample", "budget"): {"groupColumn": "g", "budgetTokens": 100},
+    ("sample", "curriculum"): {"orderColumn": "o", "partitionColumn": "p"},
+    ("split", "hash"): {"fractions": {"train": 1.0}},
+    ("split", "leakage"): {"textColumn": "t"},
+    ("split", "clusterSafe"): {
+        "textColumn": "t", "clusterSafe": True, "fractions": {"train": 1.0},
+    },
+}
+PICKED = {name for name, _ in FORMS}
 
 
 def _table_commands() -> dict[str, type[MethodCmd]]:
@@ -56,7 +118,9 @@ def _cases():
             for inp in row.inputs:
                 yield name, method, "input", inp
             for param in cls._required_params(row):
-                yield name, method, "param", param
+                # a param that picks the form cannot be missing from it
+                if param not in FORMS.get((name, method), {}):
+                    yield name, method, "param", param
 
 
 CASES = list(_cases())
@@ -67,7 +131,9 @@ def _full(name: str, method: str) -> dict:
     row = cls.TABLE[method]
     base = BASE[name]
     obj = {**base, "command": name, "outputKey": "o"}
-    obj["params"] = {**base["params"], "method": method}
+    obj["params"] = {**base["params"], **FORMS.get((name, method), {})}
+    if len(cls.TABLE) > 1 and name not in PICKED:
+        obj["params"]["method"] = method
     obj.update({inp: X for inp in row.inputs})
     obj["params"].update({p: "x" for p in cls._required_params(row)})
     return obj
@@ -83,13 +149,73 @@ def test_every_table_command_has_a_base():
 )
 def test_missing_requirement_fails_at_parse(name, method, kind, missing):
     obj = _full(name, method)
-    EXTENSION_COMMANDS[name](obj)  # complete: parses
+    # complete: parses, to the row the case names
+    assert EXTENSION_COMMANDS[name](obj).method == method
     if kind == "input":
         del obj[missing]
     else:
         del obj["params"][missing]
-    with pytest.raises(ValueError, match=f"^{name} {method} requires"):
+    # a one-row command's messages name the command alone
+    one_row = len(_table_commands()[name].TABLE) == 1
+    who = name if one_row else f"{name} {method}"
+    with pytest.raises(ValueError, match=f"^{who} requires"):
         EXTENSION_COMMANDS[name](obj)
+
+
+def test_every_command_is_registered_under_its_name():
+    assert sorted(EXTENSION_COMMANDS) == sorted([
+        "asof", "basket", "bloom", "cdcApply", "cms", "compact",
+        "corpusStats", "decontaminate", "dedup", "drift", "dsir",
+        "fdCheck", "fuse", "graph", "index", "integrity", "intervalJoin",
+        "kAnonymity", "lmScore", "outliers", "pivot", "profile",
+        "quantileSketch", "retrieve", "sample", "scd2", "schemaCheck",
+        "sequence", "similarity", "sketch", "skewProfile", "spatialJoin",
+        "split", "text", "tokenize", "winsorize",
+    ])
+    for name, parse in EXTENSION_COMMANDS.items():
+        assert parse.__self__.NAME == name
+
+
+def test_profile_columns_rejects_n_buckets_at_parse():
+    obj = _full("profile", "columns")
+    obj["params"].update(columns=["c"], nBuckets=10)
+    with pytest.raises(
+        ValueError,
+        match=r"^profile method 'columns' does not accept options "
+        r"\['nBuckets'\]",
+    ):
+        EXTENSION_COMMANDS["profile"](obj)
+
+
+@pytest.mark.parametrize("param,value", [("l", 3), ("t", 0.2)])
+def test_k_anonymity_diversity_params_need_a_sensitive_column(param, value):
+    obj = _full("kAnonymity", "k")
+    obj["params"][param] = value
+    with pytest.raises(ValueError, match="^kAnonymity"):
+        EXTENSION_COMMANDS["kAnonymity"](obj)
+
+
+@pytest.mark.parametrize("method", ["hash", "clusterSafe"])
+@pytest.mark.parametrize("fractions", [None, {}])
+def test_split_fractions_must_be_non_empty_at_parse(method, fractions):
+    obj = _full("split", method)
+    obj["params"]["fractions"] = fractions
+    if fractions is None:
+        del obj["params"]["fractions"]
+    with pytest.raises(ValueError, match="fractions must be non-empty"):
+        EXTENSION_COMMANDS["split"](obj)
+    # the leakage form reports over the plan's fractions or the defaults
+    obj = _full("split", "leakage")
+    EXTENSION_COMMANDS["split"](obj)
+
+
+def test_omitted_renamed_params_keep_the_operator_default():
+    """valueColumn and opColumn/tiebreakColumn do not snake to the
+    operator keyword; omitted, the operator gets its own default."""
+    for name, want in (("pivot", [None]), ("cdcApply", ["op", None])):
+        cmd = EXTENSION_COMMANDS[name](_full(name, name))
+        args = cmd.TABLE[cmd.method].args[-len(want):]
+        assert [cmd._arg(a, None, {}, {}) for a in args] == want
 
 
 def test_every_corpus_only_similarity_method_parses_without_queries():
@@ -161,6 +287,9 @@ KEYWORD_ONLY = [
     ("sequence", "ewma", "roundDigits", 3),
     ("sequence", "anomaly", "roundDigits", 3),
     ("sequence", "gaps", "roundDigits", 3),
+    ("dsir", "dsir", "targetPred", "lang = 'en'"),
+    ("profile", "columns", "percentileAccuracy", 100),
+    ("profile", "histogram", "percentileAccuracy", 100),
 ]
 
 

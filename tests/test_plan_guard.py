@@ -30,6 +30,17 @@ BATCH_QUERIES = sorted(
 )
 
 
+# Each query is built once and its frame shared by the four guards below:
+# the module-scoped parameter groups the four tests of one query together,
+# and the frame is dropped when the next query starts.
+guarded = pytest.mark.parametrize("name", BATCH_QUERIES, scope="module")
+
+
+@pytest.fixture(scope="module")
+def built(spark, name):
+    return catalog.ALL[name](spark, SF)
+
+
 def _plan(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -37,9 +48,9 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-@pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_no_cartesian_product(spark, name):
-    plan = _plan(catalog.ALL[name](spark, SF))
+@guarded
+def test_no_cartesian_product(built, name):
+    plan = _plan(built)
     assert "CartesianProduct" not in plan, (
         f"{name}: plan degraded to a CartesianProduct — at 100 TB this is "
         f"|left| x |right| comparisons. Block the join (bucket/band/grid) "
@@ -226,9 +237,9 @@ def _bounded_build_side(jchild) -> bool:
     return False
 
 
-@pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_no_unbounded_global_window(spark, name):
-    df = catalog.ALL[name](spark, SF)
+@guarded
+def test_no_unbounded_global_window(built, name):
+    df = built
     offenders = [
         sn
         for sn, nd in _walk(df._jdf.queryExecution().executedPlan())
@@ -265,11 +276,11 @@ sys.path.insert(
 import scan_audit  # noqa: E402
 
 
-@pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_source_scans_bounded(spark, name):
+@guarded
+def test_source_scans_bounded(built, name):
     if name in scan_audit.ALLOWED_MULTI:
         return  # documented deliberate re-read
-    counts = scan_audit.scan_counts(catalog.ALL[name](spark, SF))
+    counts = scan_audit.scan_counts(built)
     worst = max(counts.values(), default=0)
     assert worst <= scan_audit.MAX_SCANS, (
         f"{name}: scans a relation {worst}x uncached ({counts}) — at 100 TB "
@@ -279,9 +290,9 @@ def test_source_scans_bounded(spark, name):
     )
 
 
-@pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_bnlj_broadcasts_bounded_frames(spark, name):
-    df = catalog.ALL[name](spark, SF)
+@guarded
+def test_bnlj_broadcasts_bounded_frames(built, name):
+    df = built
     for sn, nd in _walk(df._jdf.queryExecution().executedPlan()):
         if sn != "BroadcastNestedLoopJoinExec":
             continue

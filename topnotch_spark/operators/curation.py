@@ -879,6 +879,7 @@ def dsir_weights(
     smooth: float = 1.0,
     scale: int = 1000,
     salt: str = "dsir",
+    *,
     target_pred=None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS

@@ -31,6 +31,7 @@ def profile_columns(
     columns: list[str] | None = None,
     exact: bool = True,
     round_digits: int = 6,
+    *,
     percentile_accuracy: int = 10_000,
 ) -> DataFrame:
     """One row per profiled column:
@@ -341,6 +342,7 @@ def equidepth_histogram(
     n_buckets: int = 10,
     exact: bool = True,
     round_digits: int = 6,
+    *,
     percentile_accuracy: int = 10_000,
 ) -> DataFrame:
     """Equi-depth (equal-count) histogram: bucket boundaries at the

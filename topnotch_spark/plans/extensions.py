@@ -17,11 +17,11 @@ A user plan mixes them freely with assertion/diff/view:
     ]}
 
 Each command implements ``execute(engine) -> DataFrame`` (duck-typed
-hook in engine.run_command) and registers itself in
+hook in engine.run_command) and registers itself under its ``NAME`` in
 ``parser.EXTENSION_COMMANDS`` when this module loads.
 
-A command that takes a ``method`` param is a :class:`MethodCmd`: its
-``TABLE`` maps each method to one :class:`Method` row, which names
+Every command that forwards to one operator is a :class:`MethodCmd`:
+its ``TABLE`` maps each method to one :class:`Method` row, which names
 
 - the operator, as ``"module:function"`` under
   ``topnotch_spark.operators``, imported at first use (importing this
@@ -31,13 +31,20 @@ A command that takes a ``method`` param is a :class:`MethodCmd`: its
 - the inputs the method requires;
 - the options it drops on purpose.
 
+A command with a ``method`` param picks its row from that param. A
+single-operator command (scd2, retrieve, ...) has a one-row table, and
+profile, kAnonymity, sample and split pick their row from the params
+that name the form (``histogramColumn``, ``sensitiveColumn``, ...).
+
 The options a method accepts are its operator's parameters with a
 default, read once with ``inspect.signature``; keyword-only parameters
 (after ``*``) are for Python callers and are never plan options.
 ``from_json`` checks a plan against the row (unknown method, missing
 params or inputs, options the operator does not take) and the one
 ``MethodCmd.execute`` makes the call, so the two cannot drift apart:
-adding a method means adding one row.
+adding a method means adding one row. Three commands keep their own
+``execute``: graph (edge building and weight aliasing), integrity
+(relation tuples) and schemaCheck (no operator).
 """
 
 from __future__ import annotations
@@ -85,9 +92,12 @@ def _method_of(
 
 
 def _operator(ref: str):
+    """``"module:function"`` under topnotch_spark.operators; a module
+    with a leading dot is under topnotch_spark (``.sources.maintenance``)."""
     module, name = ref.split(":")
     return getattr(
-        importlib.import_module(f"topnotch_spark.operators.{module}"), name
+        importlib.import_module(f".{module}", "topnotch_spark.operators"),
+        name,
     )
 
 
@@ -114,10 +124,11 @@ class Method:
     of the command (an Input is loaded, a tuple becomes a list), a
     ``_name`` the command's ``_arg`` derives, or a camelCase param taken
     from the options (or from the field of that name), where
-    ``"name=default"`` gives it a default. ``centroids`` names an
-    optional input passed as the operator's ``centroids`` keyword, which
-    must be a trained (centroid_id, centroid) frame; ``then`` is an
-    operator applied to the result."""
+    ``"name=default"`` gives it a default (``"name="`` defaults it to
+    None). ``centroids`` names an optional input passed as the
+    operator's ``centroids`` keyword, which must be a trained
+    (centroid_id, centroid) frame; ``then`` is an operator applied to
+    the result."""
 
     op: str
     args: tuple = ()
@@ -159,9 +170,7 @@ class Screen(Method):
 def _vocabulary(cls) -> frozenset[str]:
     """Every option some method of ``cls`` takes: a param in this set
     that the plan's method does not take is an error, not ignored."""
-    return frozenset().union(
-        *(row.accepted | set(row.drops) for row in cls.TABLE.values())
-    )
+    return frozenset().union(*(row.accepted for row in cls.TABLE.values()))
 
 
 def _value_column(params: dict) -> str:
@@ -174,11 +183,16 @@ def _value_column(params: dict) -> str:
 
 
 class MethodCmd(Command):
-    """A command whose ``method`` param picks one row of ``TABLE``."""
+    """A command that runs one row of ``TABLE``: the one its ``method``
+    field names, else ``DEFAULT``."""
 
     NAME = ""  # the JSON command name
     TABLE: dict[str, Method] = {}
     DEFAULT: str | None = None  # the method when params name none
+
+    @property
+    def method(self) -> str:
+        return self.DEFAULT
 
     @classmethod
     def _params(cls, row: Method) -> dict[str, bool]:
@@ -200,23 +214,22 @@ class MethodCmd(Command):
         return [n for n, default in cls._params(row).items() if not default]
 
     @classmethod
-    def _parse(cls, obj: dict) -> tuple[str, dict]:
-        """Check ``obj`` against its method's row at parse time. Returns
-        the method and its options: the params it takes, by kwarg name."""
-        p = obj["params"]
-        method = _method_of(p, tuple(cls.TABLE), cls.NAME, cls.DEFAULT)
+    def _parse(cls, obj: dict, method: str | None = None) -> tuple[str, dict]:
+        """Check ``obj`` against its method's row at parse time: the
+        ``method`` given, else the one its params name. Returns the
+        method and its options: the params it takes, by kwarg name."""
+        p = obj.get("params", {})
+        if method is None:
+            method = _method_of(p, tuple(cls.TABLE), cls.NAME, cls.DEFAULT)
         row = cls.TABLE[method]
+        who = cls.NAME if len(cls.TABLE) == 1 else f"{cls.NAME} {method}"
         for name in row.inputs:
             if name not in obj:
                 article = "an" if name[0] in "aeiou" else "a"
-                raise ValueError(
-                    f"{cls.NAME} {method} requires {article} {name!r} input"
-                )
+                raise ValueError(f"{who} requires {article} {name!r} input")
         for name in cls._required_params(row):
             if name not in p:
-                raise ValueError(
-                    f"{cls.NAME} {method} requires param {name!r}"
-                )
+                raise ValueError(f"{who} requires param {name!r}")
         # a param naming a field (indexPath, keyColumn) stays out of options
         params = {_snake(name) for name in cls._params(row)}
         takes = row.accepted | set(row.drops) | (
@@ -252,7 +265,7 @@ class MethodCmd(Command):
             key = _snake(name)
             if key in opts:
                 return opts.pop(key)
-            return getattr(self, key) if key in own else default
+            return getattr(self, key) if key in own else default or None
         value = getattr(self, name)
         if isinstance(value, Input):
             value = frames[name] = load_input(
@@ -340,6 +353,7 @@ class _AllParamsCmd(MethodCmd):
         return {_snake(k): v for k, v in self.params}
 
 
+_IN = ("input",)
 _ID_VALUE = ("input", "id_column", "value_column")
 _SCREEN = ("input", "index", "id_column", "value_column")
 _MEDIA_INDEX = frozenset({"index_id", "band_idx", "bucket", "sh"})
@@ -720,7 +734,7 @@ class SimilarityCmd(MethodCmd):
 
 
 @dataclass(frozen=True)
-class FuseCmd(Command):
+class FuseCmd(MethodCmd):
     """{"command": "fuse", "runs": [<input>, <input>, ...], "params":
     {["queryColumn", "docColumn", "rankColumn", "k", "topk",
     "roundDigits"]}} — Reciprocal Rank Fusion of 2+ retrieval runs
@@ -736,35 +750,33 @@ class FuseCmd(Command):
     rank_column: str = "rank"
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "fuse"
+    TABLE = {
+        DEFAULT: Method(
+            "retrieval:rrf_fuse",
+            ("runs", "query_column", "doc_column", "rank_column"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "FuseCmd":
         p = obj.get("params", {})
         runs = tuple(Input.from_json(r) for r in obj.get("runs", ()))
         if len(runs) < 2:
             raise ValueError("fuse: at least 2 run inputs are required")
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             runs=runs,
             query_column=p.get("queryColumn", "query_id"),
             doc_column=p.get("docColumn", "doc_id"),
             rank_column=p.get("rankColumn", "rank"),
-            options=_opt(p, "k", "topk", "roundDigits"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.retrieval import rrf_fuse
-
-        return rrf_fuse(
-            [load_input(engine.spark, r, engine.registry) for r in self.runs],
-            query_col=self.query_column,
-            doc_col=self.doc_column,
-            rank_col=self.rank_column,
-            **self.options,
         )
 
 
 @dataclass(frozen=True)
-class AsofCmd(Command):
+class AsofCmd(MethodCmd):
     """{"command": "asof", "left": <input>, "right": <input>,
     "params": {"on": [...], "leftTs", "rightTs", "rightCols",
     ["suffix", "toleranceSeconds", "direction": backward|forward|nearest]}}"""
@@ -777,9 +789,19 @@ class AsofCmd(Command):
     right_cols: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "asof"
+    TABLE = {
+        DEFAULT: Method(
+            "temporal:asof_join",
+            ("left", "right", "on", "left_ts", "right_ts", "right_cols"),
+            ("left", "right"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "AsofCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             left=Input.from_json(obj["left"]),
             right=Input.from_json(obj["right"]),
@@ -787,26 +809,13 @@ class AsofCmd(Command):
             left_ts=p["leftTs"],
             right_ts=p["rightTs"],
             right_cols=tuple(p["rightCols"]),
-            options=_opt(p, "suffix", "toleranceSeconds", "direction"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.temporal import asof_join
-
-        return asof_join(
-            load_input(engine.spark, self.left, engine.registry),
-            load_input(engine.spark, self.right, engine.registry),
-            on=list(self.on),
-            left_ts=self.left_ts,
-            right_ts=self.right_ts,
-            right_cols=list(self.right_cols),
-            **self.options,
         )
 
 
 @dataclass(frozen=True)
-class ProfileCmd(Command):
+class ProfileCmd(MethodCmd):
     """{"command": "profile", "params": {["columns"], ["exact"],
     ["roundDigits"]}} — single-pass column statistics; or
     {"params": {"histogramColumn", ["nBuckets", "exact", "roundDigits"]}}
@@ -821,7 +830,22 @@ class ProfileCmd(Command):
     histogram_column: str | None = None
     corr_columns: tuple[str, ...] | None = None
     mi_columns: tuple[str, str] | None = None
+    method: str = "columns"
     options: dict = field(default_factory=dict)
+
+    NAME = "profile"
+    TABLE = {
+        "columns": Method(
+            "profile:profile_columns", ("input", "columns"), _IN
+        ),
+        "histogram": Method(
+            "profile:equidepth_histogram", ("input", "histogram_column"), _IN
+        ),
+        "corr": Method("profile:corr_matrix", ("input", "corr_columns"), _IN),
+        "mi": Method(
+            "drift:mutual_information", ("input", "_col_a", "_col_b"), _IN
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "ProfileCmd":
@@ -832,46 +856,34 @@ class ProfileCmd(Command):
             raise ValueError(
                 f"profile: miColumns takes exactly two columns, got {list(mi)}"
             )
-        if mi:
-            # mutual_information() takes roundDigits only — rejecting
-            # 'decimals' here turns an opaque TypeError into a plan error.
-            opts = _opt(p, "roundDigits")
-            if "decimals" in p:
-                raise ValueError(
-                    "profile: 'decimals' is not valid with miColumns "
-                    "(use roundDigits)"
-                )
-        elif corr:
-            opts = _opt(p, "decimals", "roundDigits")
-        else:
-            opts = _opt(p, "exact", "roundDigits", "nBuckets")
+        if mi is not None and "decimals" in p:
+            raise ValueError(
+                "profile: 'decimals' is not valid with miColumns "
+                "(use roundDigits)"
+            )
+        method = (
+            "mi" if mi is not None
+            else "corr" if corr is not None
+            else "histogram" if "histogramColumn" in p
+            else "columns"
+        )
+        _, options = cls._parse(obj, method)
         return cls(
             input=Input.from_json(obj["input"]),
             columns=tuple(p["columns"]) if "columns" in p else None,
             histogram_column=p.get("histogramColumn"),
             corr_columns=corr,
             mi_columns=mi,  # type: ignore[arg-type]
-            options=opts,
+            method=method,
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.drift import mutual_information
-        from topnotch_spark.operators.profile import (
-            corr_matrix,
-            equidepth_histogram,
-            profile_columns,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.mi_columns is not None:
-            return mutual_information(df, *self.mi_columns, **self.options)
-        if self.corr_columns is not None:
-            return corr_matrix(df, list(self.corr_columns), **self.options)
-        if self.histogram_column is not None:
-            return equidepth_histogram(df, self.histogram_column, **self.options)
-        cols = list(self.columns) if self.columns is not None else None
-        return profile_columns(df, cols, **self.options)
+    def _arg(self, name, engine, opts, frames):
+        # mutual_information takes the two columns as two arguments
+        if name in ("_col_a", "_col_b"):
+            return self.mi_columns[name == "_col_b"]
+        return super()._arg(name, engine, opts, frames)
 
 
 _OUTLIER_ARGS = ("input", "value_column", "group_columns")
@@ -915,7 +927,7 @@ class OutliersCmd(MethodCmd):
 
 
 @dataclass(frozen=True)
-class PivotCmd(Command):
+class PivotCmd(MethodCmd):
     """{"command": "pivot", "input": <input>, "params": {"groupColumn",
     "pivotColumn", "pivotValues": [...], ["valueColumn", "roundDigits"]}}
     — native cross-tab; the explicit value domain keeps it a single
@@ -927,30 +939,27 @@ class PivotCmd(Command):
     pivot_values: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "pivot"
+    TABLE = {
+        DEFAULT: Method(
+            "profile:pivot_counts",
+            ("input", "group_column", "pivot_column", "pivot_values",
+             "valueColumn="),
+            _IN,
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "PivotCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             group_column=p["groupColumn"],
             pivot_column=p["pivotColumn"],
             pivot_values=tuple(p["pivotValues"]),
-            options=_opt(p, "valueColumn", "roundDigits"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.profile import pivot_counts
-
-        opts = dict(self.options)
-        if "value_column" in opts:  # JSON valueColumn -> kwarg value_col
-            opts["value_col"] = opts.pop("value_column")
-        return pivot_counts(
-            load_input(engine.spark, self.input, engine.registry),
-            self.group_column,
-            self.pivot_column,
-            list(self.pivot_values),
-            **opts,
         )
 
 
@@ -1083,7 +1092,7 @@ class DeconCmd(MethodCmd):
 
 
 @dataclass(frozen=True)
-class DsirCmd(Command):
+class DsirCmd(MethodCmd):
     """{"command": "dsir", "raw": <input>, "target": <input>, "params":
     {"idColumn", ["textColumn", "nBuckets", "kSelect", "smooth",
     "scale", "salt"]}} — DSIR importance resampling (Xie 2023,
@@ -1098,25 +1107,26 @@ class DsirCmd(Command):
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "dsir"
+    TABLE = {
+        DEFAULT: Method(
+            "curation:dsir_weights",
+            ("raw", "target", "id_column", "text_column"),
+            ("raw", "target"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "DsirCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             raw=Input.from_json(obj["raw"]),
             target=Input.from_json(obj["target"]),
             id_column=p["idColumn"],
             text_column=p.get("textColumn", "text"),
-            options=_opt(p, "nBuckets", "kSelect", "smooth", "scale", "salt"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import dsir_weights
-
-        raw = load_input(engine.spark, self.raw, engine.registry)
-        tgt = load_input(engine.spark, self.target, engine.registry)
-        return dsir_weights(
-            raw, tgt, self.id_column, self.text_column, **self.options
         )
 
 
@@ -1232,7 +1242,7 @@ class TokenizeCmd(MethodCmd):
 
 
 @dataclass(frozen=True)
-class SampleCmd(Command):
+class SampleCmd(MethodCmd):
     """{"command": "sample", "input": <input>, "params": {"idColumn",
     "stratColumn", "rates": {stratum: rate}, ["defaultRate"]}} —
     deterministic md5-threshold stratified sampling. Alternative form:
@@ -1255,7 +1265,34 @@ class SampleCmd(Command):
     text_column: str = "text"
     budget_tokens: int = 0
     rates: tuple[tuple[str, float], ...] = ()
+    method: str = "stratified"
     options: dict = field(default_factory=dict)
+
+    NAME = "sample"
+    TABLE = {
+        "stratified": Method(
+            "curation:stratified_sample",
+            ("input", "id_column", "strat_column", "_rates"), _IN,
+        ),
+        "weighted": Method(
+            "curation:weighted_sample",
+            ("input", "id_column", "weight_column"), _IN,
+        ),
+        "weightedTopn": Method(
+            "curation:weighted_sample_topn",
+            ("input", "id_column", "weight_column", "n"), _IN,
+        ),
+        "budget": Method(
+            "curation:sample_to_token_budget",
+            ("input", "id_column", "text_column", "strat_column",
+             "budget_tokens"),
+            _IN,
+        ),
+        "curriculum": Method(
+            "curation:curriculum_sample",
+            ("input", "id_column", "order_column", "strat_column"), _IN,
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "SampleCmd":
@@ -1266,91 +1303,55 @@ class SampleCmd(Command):
                     "sample: budgetTokens and weightColumn/rates are "
                     "mutually exclusive"
                 )
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
+            method = "budget"
+            form = dict(
                 strat_column=p["groupColumn"],
                 text_column=p.get("textColumn", "text"),
                 budget_tokens=int(p["budgetTokens"]),
-                options=_opt(p, "alpha", "roundDigits"),
-                **cls._common(obj),
             )
-        if "orderColumn" in p:
+        elif "orderColumn" in p:
             if "weightColumn" in p or "rates" in p:
                 raise ValueError(
                     "sample: orderColumn (curriculum form) and "
                     "weightColumn/rates are mutually exclusive"
                 )
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
+            method = "curriculum"
+            form = dict(
                 strat_column=p["partitionColumn"],
                 order_column=p["orderColumn"],
-                options=_opt(p, "nBands", "salt"),
-                **cls._common(obj),
             )
-        if "weightColumn" in p:
+        elif "weightColumn" in p:
             if "stratColumn" in p or "rates" in p:
                 raise ValueError(
                     "sample: weightColumn and stratColumn/rates are "
                     "mutually exclusive"
                 )
-            opts = _opt(p, "salt")
-            if "n" in p:
-                opts["n"] = int(p["n"])
-            return cls(
-                input=Input.from_json(obj["input"]),
-                id_column=p["idColumn"],
-                weight_column=p["weightColumn"],
-                options=opts,
-                **cls._common(obj),
+            method = "weightedTopn" if "n" in p else "weighted"
+            form = dict(weight_column=p["weightColumn"])
+        else:
+            method = "stratified"
+            form = dict(
+                strat_column=p["stratColumn"],
+                rates=tuple(sorted(p["rates"].items())),
             )
+        _, options = cls._parse(obj, method)
         return cls(
             input=Input.from_json(obj["input"]),
             id_column=p["idColumn"],
-            strat_column=p["stratColumn"],
-            rates=tuple(sorted(p["rates"].items())),
-            options=_opt(p, "defaultRate"),
+            method=method,
+            options=options,
+            **form,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            sample_to_token_budget,
-            stratified_sample,
-            weighted_sample,
-            weighted_sample_topn,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.order_column:
-            from topnotch_spark.operators.curation import curriculum_sample
-
-            return curriculum_sample(
-                df, self.id_column, self.order_column, self.strat_column,
-                **self.options,
-            )
-        if self.budget_tokens:
-            return sample_to_token_budget(
-                df, self.id_column, self.text_column, self.strat_column,
-                self.budget_tokens, **self.options,
-            )
-        if self.weight_column:
-            if "n" in self.options:
-                return weighted_sample_topn(
-                    df, self.id_column, self.weight_column, **self.options
-                )
-            return weighted_sample(
-                df, self.id_column, self.weight_column, **self.options
-            )
-        return stratified_sample(
-            df, self.id_column, self.strat_column, dict(self.rates),
-            **self.options,
-        )
+    def _arg(self, name, engine, opts, frames):
+        if name == "_rates":
+            return dict(self.rates)
+        return super()._arg(name, engine, opts, frames)
 
 
 @dataclass(frozen=True)
-class FdCheckCmd(Command):
+class FdCheckCmd(MethodCmd):
     """{"command": "fdCheck", "input": <input>, "params": {"pairs":
     [["determinant", "dependent"], ...], ["roundDigits"]}} — functional-
     dependency audit (integrity.fd_check): one summary row per claimed
@@ -1361,6 +1362,9 @@ class FdCheckCmd(Command):
     input: Input = None  # type: ignore[assignment]
     pairs: tuple[tuple[str, str], ...] = ()
     options: dict = field(default_factory=dict)
+
+    NAME = DEFAULT = "fdCheck"
+    TABLE = {DEFAULT: Method("integrity:fd_check", ("input", "pairs"), _IN)}
 
     @classmethod
     def from_json(cls, obj: dict) -> "FdCheckCmd":
@@ -1376,18 +1380,13 @@ class FdCheckCmd(Command):
                     f"got {pair!r}"
                 )
             pairs.append((pair[0], pair[1]))
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             pairs=tuple(pairs),
-            options=_opt(p, "roundDigits"),
+            options=options,
             **cls._common(obj),
         )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.integrity import fd_check
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        return fd_check(df, list(self.pairs), **self.options)
 
 
 @dataclass(frozen=True)
@@ -1397,6 +1396,8 @@ class IntegrityCmd(Command):
     child→parent relation (orphans + NULL-FK accounting)."""
 
     relations: tuple[tuple[str, Input, tuple[str, ...], Input, tuple[str, ...]], ...] = ()
+
+    NAME = "integrity"
 
     @classmethod
     def from_json(cls, obj: dict) -> "IntegrityCmd":
@@ -1465,7 +1466,7 @@ class SkewCmd(MethodCmd):
 
 
 @dataclass(frozen=True)
-class SplitCmd(Command):
+class SplitCmd(MethodCmd):
     """{"command": "split", "input": <input>, "params": {"idColumn",
     "fractions": {split: fraction}, ["salt"]}} — deterministic
     hash-based train/val/test assignment (seedless, growth-stable).
@@ -1481,7 +1482,25 @@ class SplitCmd(Command):
     id_column: str = "id"
     text_column: str = ""
     fractions: tuple[tuple[str, float], ...] = ()
+    method: str = "hash"
     options: dict = field(default_factory=dict)
+
+    NAME = "split"
+    TABLE = {
+        "hash": Method(
+            "curation:hash_split", ("input", "id_column", "_fractions"), _IN
+        ),
+        "leakage": Method(
+            "curation:split_leakage",
+            ("input", "id_column", "text_column", "_fractions"), _IN,
+        ),
+        # the options keep the plan's "clusterSafe": true
+        "clusterSafe": Method(
+            "curation:cluster_safe_split",
+            ("input", "id_column", "text_column", "_fractions"), _IN,
+            drops=("cluster_safe",),
+        ),
+    }
 
     @classmethod
     def from_json(cls, obj: dict) -> "SplitCmd":
@@ -1492,61 +1511,27 @@ class SplitCmd(Command):
                     'split: "clusterSafe" requires "textColumn" (the '
                     "near-dup clustering needs document text)"
                 )
-            opts = _opt(
-                p, "numHashes", "bands", "threshold", "shingleN", "salt",
-            )
-            opts["cluster_safe"] = True
-        elif "textColumn" in p:
-            opts = _opt(
-                p, "holdoutSplit", "trainSplit", "shingleN",
-                "maxShingleDf", "salt",
-            )
+            method = "clusterSafe"
         else:
-            opts = _opt(p, "salt")
+            method = "leakage" if "textColumn" in p else "hash"
+        if method != "leakage" and not p.get("fractions"):
+            raise ValueError("split: fractions must be non-empty")
+        _, options = cls._parse(obj, method)
         return cls(
             input=Input.from_json(obj["input"]),
             id_column=p["idColumn"],
             text_column=p.get("textColumn", ""),
             # insertion order is the split-boundary order, so keep it
             fractions=tuple(p.get("fractions", {}).items()),
-            options=opts,
+            method=method,
+            options=options,
             **cls._common(obj),
         )
 
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import (
-            cluster_safe_split,
-            hash_split,
-            split_leakage,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.options.get("cluster_safe"):
-            opts = {
-                k: v for k, v in self.options.items() if k != "cluster_safe"
-            }
-            if not self.fractions:
-                raise ValueError("split: fractions must be non-empty")
-            return cluster_safe_split(
-                df,
-                self.id_column,
-                self.text_column,
-                dict(self.fractions),
-                **opts,
-            )
-        if self.text_column:
-            return split_leakage(
-                df,
-                self.id_column,
-                self.text_column,
-                fractions=dict(self.fractions) or None,
-                **self.options,
-            )
-        if not self.fractions:
-            raise ValueError("split: fractions must be non-empty")
-        return hash_split(
-            df, self.id_column, dict(self.fractions), **self.options
-        )
+    def _arg(self, name, engine, opts, frames):
+        if name == "_fractions":
+            return dict(self.fractions) or None
+        return super()._arg(name, engine, opts, frames)
 
 
 _TS = "tsColumn=ts"
@@ -1624,7 +1609,7 @@ class SequenceCmd(_AllParamsCmd):
 
 
 @dataclass(frozen=True)
-class WinsorizeCmd(Command):
+class WinsorizeCmd(MethodCmd):
     """{"command": "winsorize", "input": <input>, "params":
     {"valueColumn", ["groupColumns", "lowerP", "upperP", "exact",
     "roundDigits"]}} — percentile clipping; exact=false selects the
@@ -1635,25 +1620,24 @@ class WinsorizeCmd(Command):
     group_columns: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "winsorize"
+    TABLE = {
+        DEFAULT: Method(
+            "curation:winsorize",
+            ("input", "value_column", "group_columns"), _IN,
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "WinsorizeCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             value_column=p["valueColumn"],
             group_columns=tuple(p.get("groupColumns", [])),
-            options=_opt(p, "lowerP", "upperP", "exact", "roundDigits"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.curation import winsorize
-
-        return winsorize(
-            load_input(engine.spark, self.input, engine.registry),
-            self.value_column,
-            list(self.group_columns) or None,
-            **self.options,
         )
 
 
@@ -1802,6 +1786,7 @@ class GraphCmd(Command):
     item_column: str | None = None
     options: dict = field(default_factory=dict)
 
+    NAME = "graph"
     METHODS = (
         "pagerank", "ppr", "triangles", "components", "labelProp", "kcore",
     )
@@ -2076,7 +2061,7 @@ class MembershipCmd(_KeyedCmd):
 
 
 @dataclass(frozen=True)
-class SpatialJoinCmd(Command):
+class SpatialJoinCmd(MethodCmd):
     """{"command": "spatialJoin", "left": <input>, "right": <input>,
     "params": {"radius", ["leftXy": ["x","y"], "rightXy": ["x","y"],
     "suffixes": ["_l","_r"]]}} — grid-blocked within-radius join
@@ -2087,32 +2072,24 @@ class SpatialJoinCmd(Command):
     radius: float = 0.0
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "spatialJoin"
+    TABLE = {
+        DEFAULT: Method(
+            "spatial:within_radius_join",
+            ("left", "right", "radius"), ("left", "right"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "SpatialJoinCmd":
         p = obj["params"]
-        opts = {}
-        if "leftXy" in p:
-            opts["left_xy"] = tuple(p["leftXy"])
-        if "rightXy" in p:
-            opts["right_xy"] = tuple(p["rightXy"])
-        if "suffixes" in p:
-            opts["suffixes"] = tuple(p["suffixes"])
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             left=Input.from_json(obj["left"]),
             right=Input.from_json(obj["right"]),
             radius=float(p["radius"]),
-            options=opts,
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.spatial import within_radius_join
-
-        return within_radius_join(
-            load_input(engine.spark, self.left, engine.registry),
-            load_input(engine.spark, self.right, engine.registry),
-            radius=self.radius,
-            **self.options,
         )
 
 
@@ -2138,6 +2115,8 @@ class SchemaCheckCmd(Command):
     columns: tuple[tuple[str, str], ...] = ()
     allow_extra: bool = True
     fail_on_violation: bool = False
+
+    NAME = "schemaCheck"
 
     @classmethod
     def from_json(cls, obj: dict) -> "SchemaCheckCmd":
@@ -2182,7 +2161,7 @@ class SchemaCheckCmd(Command):
 
 
 @dataclass(frozen=True)
-class BasketCmd(Command):
+class BasketCmd(MethodCmd):
     """{"command": "basket", "input": <input>, "params":
     {"basketColumn", "itemColumn", ["minSupport", "maxBasketItems",
     "roundDigits"]}} — market-basket pair co-occurrence + lift
@@ -2193,30 +2172,29 @@ class BasketCmd(Command):
     item_column: str = ""
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "basket"
+    TABLE = {
+        DEFAULT: Method(
+            "basket:market_basket_pairs",
+            ("input", "basket_column", "item_column"), _IN,
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "BasketCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             basket_column=p["basketColumn"],
             item_column=p["itemColumn"],
-            options=_opt(p, "minSupport", "maxBasketItems", "roundDigits"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.basket import market_basket_pairs
-
-        return market_basket_pairs(
-            load_input(engine.spark, self.input, engine.registry),
-            basket_col=self.basket_column,
-            item_col=self.item_column,
-            **self.options,
         )
 
 
 @dataclass(frozen=True)
-class KAnonymityCmd(Command):
+class KAnonymityCmd(MethodCmd):
     """{"command": "kAnonymity", "input": <input>, "params":
     {"quasiColumns": [...], ["k", "riskyOnly"]}} — re-identifiable
     quasi-identifier groups (operators/integrity.k_anonymity). With
@@ -2234,6 +2212,23 @@ class KAnonymityCmd(Command):
     mode: str = "k"
     options: dict = field(default_factory=dict)
 
+    NAME = "kAnonymity"
+    TABLE = {
+        "k": Method("integrity:k_anonymity", ("input", "quasi_columns"), _IN),
+        "l": Method(
+            "integrity:l_diversity",
+            ("input", "quasi_columns", "sensitive_column"), _IN,
+        ),
+        "t": Method(
+            "integrity:t_closeness",
+            ("input", "quasi_columns", "sensitive_column"), _IN,
+        ),
+    }
+
+    @property
+    def method(self) -> str:
+        return self.mode
+
     @classmethod
     def from_json(cls, obj: dict) -> "KAnonymityCmd":
         p = obj["params"]
@@ -2248,52 +2243,20 @@ class KAnonymityCmd(Command):
                 "kAnonymity: params 't' and 'l' are mutually exclusive "
                 "(t-closeness vs l-diversity)"
             )
-        if sensitive and "t" in p:
-            mode, opts = "t", _opt(p, "t", "riskyOnly", "roundDigits")
-        elif sensitive:
-            mode, opts = "l", _opt(p, "l", "riskyOnly")
-        else:
-            mode, opts = "k", _opt(p, "k", "riskyOnly")
+        mode = ("t" if "t" in p else "l") if sensitive else "k"
+        _, options = cls._parse(obj, mode)
         return cls(
             input=Input.from_json(obj["input"]),
             quasi_columns=tuple(p["quasiColumns"]),
             sensitive_column=sensitive,
             mode=mode,
-            options=opts,
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.integrity import (
-            k_anonymity,
-            l_diversity,
-            t_closeness,
-        )
-
-        df = load_input(engine.spark, self.input, engine.registry)
-        if self.mode == "t":
-            return t_closeness(
-                df,
-                quasi_cols=list(self.quasi_columns),
-                sensitive_col=self.sensitive_column,
-                **self.options,
-            )
-        if self.mode == "l":
-            return l_diversity(
-                df,
-                quasi_cols=list(self.quasi_columns),
-                sensitive_col=self.sensitive_column,
-                **self.options,
-            )
-        return k_anonymity(
-            df,
-            quasi_cols=list(self.quasi_columns),
-            **self.options,
         )
 
 
 @dataclass(frozen=True)
-class ScdCmd(Command):
+class ScdCmd(MethodCmd):
     """{"command": "scd2", "current": <input>, "updates": <input>,
     "params": {"keys": [...], "tracked": [...], "effectiveColumn",
     ["validFrom", "validTo", "isCurrent", "validate"]}} — SCD2
@@ -2306,34 +2269,32 @@ class ScdCmd(Command):
     effective_column: str = ""
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "scd2"
+    TABLE = {
+        DEFAULT: Method(
+            "scd:scd2_merge",
+            ("current", "updates", "keys", "tracked", "effective_column"),
+            ("current", "updates"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "ScdCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             current=Input.from_json(obj["current"]),
             updates=Input.from_json(obj["updates"]),
             keys=tuple(p["keys"]),
             tracked=tuple(p["tracked"]),
             effective_column=p["effectiveColumn"],
-            options=_opt(p, "validFrom", "validTo", "isCurrent", "validate"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.scd import scd2_merge
-
-        return scd2_merge(
-            load_input(engine.spark, self.current, engine.registry),
-            load_input(engine.spark, self.updates, engine.registry),
-            keys=list(self.keys),
-            tracked=list(self.tracked),
-            effective_col=self.effective_column,
-            **self.options,
         )
 
 
 @dataclass(frozen=True)
-class SketchCmd(Command):
+class SketchCmd(MethodCmd):
     """{"command": "sketch", "input": <input>, "params":
     {"detailColumns": [...], "rollupColumns": [...], "valueColumn",
     ["lgK"]}} — mergeable HLL distinct-count rollup
@@ -2347,35 +2308,31 @@ class SketchCmd(Command):
     value_column: str = ""
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "sketch"
+    TABLE = {
+        DEFAULT: Method(
+            "sketch:distinct_rollup",
+            ("input", "detail_columns", "rollup_columns", "value_column"),
+            _IN,
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "SketchCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             detail_columns=tuple(p["detailColumns"]),
             rollup_columns=tuple(p.get("rollupColumns", [])),
             value_column=p["valueColumn"],
-            options=_opt(p, "lgK"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.sketch import distinct_rollup
-
-        kwargs = {}
-        if "lg_k" in self.options:
-            kwargs["lg_k"] = self.options["lg_k"]
-        return distinct_rollup(
-            load_input(engine.spark, self.input, engine.registry),
-            detail_cols=list(self.detail_columns),
-            rollup_cols=list(self.rollup_columns),
-            value_col=self.value_column,
-            **kwargs,
         )
 
 
 @dataclass(frozen=True)
-class CdcApplyCmd(Command):
+class CdcApplyCmd(MethodCmd):
     """{"command": "cdcApply", "snapshot": <input>, "changes": <input>,
     "params": {"keys": [...], "tsColumn", ["opColumn",
     "tiebreakColumn"]}} — apply an ordered CDC upsert/delete log to a
@@ -2387,38 +2344,32 @@ class CdcApplyCmd(Command):
     ts_column: str = ""
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "cdcApply"
+    TABLE = {
+        DEFAULT: Method(
+            "scd:cdc_apply",
+            ("snapshot", "changes", "keys", "ts_column", "opColumn=op",
+             "tiebreakColumn="),
+            ("snapshot", "changes"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "CdcApplyCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             snapshot=Input.from_json(obj["snapshot"]),
             changes=Input.from_json(obj["changes"]),
             keys=tuple(p["keys"]),
             ts_column=p["tsColumn"],
-            options=_opt(p, "opColumn", "tiebreakColumn"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.scd import cdc_apply
-
-        opts = dict(self.options)
-        kwargs = {}
-        if "op_column" in opts:
-            kwargs["op_col"] = opts["op_column"]
-        if "tiebreak_column" in opts:
-            kwargs["tiebreak_col"] = opts["tiebreak_column"]
-        return cdc_apply(
-            load_input(engine.spark, self.snapshot, engine.registry),
-            load_input(engine.spark, self.changes, engine.registry),
-            keys=list(self.keys),
-            ts_col=self.ts_column,
-            **kwargs,
         )
 
 
 @dataclass(frozen=True)
-class IntervalJoinCmd(Command):
+class IntervalJoinCmd(MethodCmd):
     """{"command": "intervalJoin", "facts": <input>, "ranges": <input>,
     "params": {"valueColumn", "loColumn", "hiColumn",
     "rangeColumns": [...], ["on": [...], "chunkWidth",
@@ -2433,9 +2384,20 @@ class IntervalJoinCmd(Command):
     range_columns: tuple[str, ...] = ()
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "intervalJoin"
+    TABLE = {
+        DEFAULT: Method(
+            "temporal:interval_join",
+            ("facts", "ranges", "value_column", "lo_column", "hi_column",
+             "range_columns"),
+            ("facts", "ranges"),
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "IntervalJoinCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             facts=Input.from_json(obj["facts"]),
             ranges=Input.from_json(obj["ranges"]),
@@ -2443,29 +2405,13 @@ class IntervalJoinCmd(Command):
             lo_column=p["loColumn"],
             hi_column=p["hiColumn"],
             range_columns=tuple(p["rangeColumns"]),
-            options=_opt(p, "on", "chunkWidth", "broadcastRanges"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.temporal import interval_join
-
-        opts = dict(self.options)
-        if "on" in opts:
-            opts["on"] = list(opts["on"])
-        return interval_join(
-            load_input(engine.spark, self.facts, engine.registry),
-            load_input(engine.spark, self.ranges, engine.registry),
-            value_col=self.value_column,
-            lo_col=self.lo_column,
-            hi_col=self.hi_column,
-            range_cols=list(self.range_columns),
-            **opts,
         )
 
 
 @dataclass(frozen=True)
-class CompactCmd(Command):
+class CompactCmd(MethodCmd):
     """{"command": "compact", "params": {"source", "dest",
     ["targetFileMB", "outputFormat"]}} — small-file compaction
     (sources/maintenance.compact_table); returns the one-row stats
@@ -2475,26 +2421,27 @@ class CompactCmd(Command):
     dest: str = ""
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "compact"
+    TABLE = {
+        DEFAULT: Method(
+            ".sources.maintenance:compact_table", ("spark", "source", "dest")
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "CompactCmd":
         p = obj["params"]
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             source=p["source"],
             dest=p["dest"],
-            options=_opt(p, "targetFileMB", "outputFormat"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.sources.maintenance import compact_table
-
-        return compact_table(
-            engine.spark, self.source, self.dest, **self.options
         )
 
 
 @dataclass(frozen=True)
-class RetrieveCmd(Command):
+class RetrieveCmd(MethodCmd):
     """{"command": "retrieve", "input": <input>, "params": {"queries":
     [[id, text], ...], ["idColumn", "textColumn", "k", "k1", "b",
     "maxTokenDf", "persistTf"]}} — BM25 top-k lexical retrieval over a
@@ -2512,31 +2459,28 @@ class RetrieveCmd(Command):
     text_column: str = "text"
     options: dict = field(default_factory=dict)
 
+    NAME = DEFAULT = "retrieve"
+    TABLE = {
+        DEFAULT: Method(
+            "retrieval:bm25_topk",
+            ("spark", "input", "queries", "id_column", "text_column"), _IN,
+        )
+    }
+
     @classmethod
     def from_json(cls, obj: dict) -> "RetrieveCmd":
         p = obj["params"]
         qs = tuple((int(q[0]), str(q[1])) for q in p["queries"])
         if not qs:
             raise ValueError("retrieve: queries must be non-empty")
+        _, options = cls._parse(obj, cls.DEFAULT)
         return cls(
             input=Input.from_json(obj["input"]),
             queries=qs,
             id_column=p.get("idColumn", "doc_id"),
             text_column=p.get("textColumn", "text"),
-            options=_opt(p, "k", "k1", "b", "maxTokenDf", "persistTf"),
+            options=options,
             **cls._common(obj),
-        )
-
-    def execute(self, engine) -> DataFrame:
-        from topnotch_spark.operators.retrieval import bm25_topk
-
-        return bm25_topk(
-            engine.spark,
-            load_input(engine.spark, self.input, engine.registry),
-            list(self.queries),
-            id_col=self.id_column,
-            text_col=self.text_column,
-            **self.options,
         )
 
 
@@ -2658,44 +2602,9 @@ def register() -> None:
     from topnotch_spark.plans.parser import EXTENSION_COMMANDS
 
     EXTENSION_COMMANDS.update(
-        {
-            "retrieve": RetrieveCmd.from_json,
-            "fuse": FuseCmd.from_json,
-            "dedup": DedupCmd.from_json,
-            "bloom": MembershipCmd.from_json,
-            "cms": CmsCmd.from_json,
-            "graph": GraphCmd.from_json,
-            "quantileSketch": QuantileSketchCmd.from_json,
-            "text": TextCmd.from_json,
-            "similarity": SimilarityCmd.from_json,
-            "asof": AsofCmd.from_json,
-            "profile": ProfileCmd.from_json,
-            "outliers": OutliersCmd.from_json,
-            "pivot": PivotCmd.from_json,
-            "drift": DriftCmd.from_json,
-            "sample": SampleCmd.from_json,
-            "decontaminate": DeconCmd.from_json,
-            "lmScore": LmScoreCmd.from_json,
-            "dsir": DsirCmd.from_json,
-            "tokenize": TokenizeCmd.from_json,
-            "integrity": IntegrityCmd.from_json,
-            "fdCheck": FdCheckCmd.from_json,
-            "skewProfile": SkewCmd.from_json,
-            "split": SplitCmd.from_json,
-            "sequence": SequenceCmd.from_json,
-            "winsorize": WinsorizeCmd.from_json,
-            "corpusStats": CorpusStatsCmd.from_json,
-            "scd2": ScdCmd.from_json,
-            "cdcApply": CdcApplyCmd.from_json,
-            "sketch": SketchCmd.from_json,
-            "kAnonymity": KAnonymityCmd.from_json,
-            "basket": BasketCmd.from_json,
-            "schemaCheck": SchemaCheckCmd.from_json,
-            "spatialJoin": SpatialJoinCmd.from_json,
-            "intervalJoin": IntervalJoinCmd.from_json,
-            "compact": CompactCmd.from_json,
-            "index": IndexCmd.from_json,
-        }
+        (cls.NAME, cls.from_json)
+        for cls in globals().values()
+        if isinstance(cls, type) and getattr(cls, "NAME", "")
     )
 
 

@@ -30,6 +30,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,11 +64,13 @@ def _default_checkpoint_root() -> str:
         return env
     if os.path.isdir("/dev/shm"):
         return "/dev/shm/topnotch_spark_checkpoints"
-    return "/root/repo/.tmp/checkpoints"
+    return f"{_SCRATCH}/checkpoints"
 
 
+# the .tmp dir of the checkout this module was imported from
+_SCRATCH = str(Path(__file__).resolve().parents[2] / ".tmp")
 DEFAULT_CHECKPOINT_ROOT = _default_checkpoint_root()
-REPLAY_ROOT = "/root/repo/.tmp/events_replay"
+REPLAY_ROOT = f"{_SCRATCH}/events_replay"
 REPLAY_CUTS = ("2024-01-11", "2024-01-21")
 # replay dirs whose ts dtype was already probed OK this process,
 # keyed (dest, marker mtime_ns) — see events_replay_dir
