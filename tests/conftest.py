@@ -1,11 +1,15 @@
 from __future__ import annotations
 
+import functools
 import os
 import uuid
+from pathlib import Path
 
 import pytest
 
 from topnotch_spark.session import get_spark
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="session", autouse=True)
@@ -15,8 +19,8 @@ def _run_in_tmp_cwd(tmp_path_factory):
     dirs) land under pytest's tmp tree instead of the repo root. Tests
     reference the repo and testdata by absolute path, so nothing else
     resolves against CWD."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # Python workers used to find topnotch_spark via CWD=/root/repo;
+    repo = str(REPO)
+    # Python workers used to find topnotch_spark via a CWD at the checkout;
     # with the scratch CWD they need it on PYTHONPATH explicitly (set
     # before the session starts so executors inherit it).
     pp = os.environ.get("PYTHONPATH", "")
@@ -40,6 +44,26 @@ def spark(_run_in_tmp_cwd):
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def ingestion_plan_run(spark, tmp_path_factory):
+    """``run(sf_dir)``: ``examples/incremental_ingestion_plan.json`` run
+    once per session and testdata dir, for every test that checks it, as
+    (engine, failed assertions, the plan's ``workDir``)."""
+    from topnotch_spark.engine import TnEngine
+
+    @functools.cache
+    def run(sf_dir: str):
+        work = tmp_path_factory.mktemp("ingestion") / "w"
+        engine = TnEngine(spark)
+        num_failed = engine.run(
+            str(REPO / "examples" / "incremental_ingestion_plan.json"),
+            variables={"sfDir": sf_dir, "workDir": str(work)},
+        )
+        return engine, num_failed, work
+
+    return run
 
 
 def df_equals(df1, df2, ignore_order=True) -> bool:

@@ -264,6 +264,18 @@ def test_halt_on_errors(engine, tmp_path):
         engine.run(plan, halt_if_potential_errors=True)
 
 
+def _after_each_command(engine, probe):
+    """Call ``probe(cmd)`` after each command ``engine`` runs."""
+    run_command = engine.run_command
+
+    def spy(cmd, writer=None):
+        n = run_command(cmd, writer)
+        probe(cmd)
+        return n
+
+    engine.run_command = spy
+
+
 def test_cache_flag(engine, tmp_path, input_parquet):
     plan = _write(
         tmp_path,
@@ -281,8 +293,87 @@ def test_cache_flag(engine, tmp_path, input_parquet):
             ],
         },
     )
+    levels = []
+    _after_each_command(
+        engine, lambda cmd: levels.append(engine.registry[cmd.output_key].storageLevel)
+    )
     engine.run(plan)
-    assert engine.registry["cached_out"].storageLevel.useMemory
+    # pinned while its plan runs, released when the plan ends
+    assert levels[0].useMemory
+    assert not engine.registry["cached_out"].storageLevel.useMemory
+
+
+def _cached_count_plan(tmp_path, data_dir):
+    return _write(
+        tmp_path,
+        "plan.json",
+        {
+            "io": {"writer": "hdfs", "dest": str(tmp_path / "reports")},
+            "commands": [
+                {
+                    "command": "view",
+                    "params": {"tableAliases": ["t"], "query": "SELECT * FROM t"},
+                    "inputs": [{"ref": data_dir, "onDisk": True}],
+                    "outputKey": "cached_rows",
+                    "cache": True,
+                },
+                {
+                    "command": "view",
+                    "params": {
+                        "tableAliases": ["c"],
+                        "query": "SELECT count(*) AS n FROM c",
+                    },
+                    "inputs": [{"ref": "cached_rows", "onDisk": False}],
+                    "outputKey": "row_count",
+                },
+            ],
+        },
+    )
+
+
+def _write_ids(data_dir, n):
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(data_dir, ignore_errors=True)
+    os.makedirs(data_dir)
+    pq.write_table(
+        pa.table({"id": list(range(n))}), os.path.join(data_dir, "part-0.parquet")
+    )
+
+
+def test_cached_output_does_not_outlive_its_plan(spark, tmp_path):
+    """A later plan over rewritten source files reads the new rows, not
+    the previous plan's cached ones."""
+    data_dir = str(tmp_path / "ids")
+    plan = _cached_count_plan(tmp_path, data_dir)
+    counts = []
+    for n in (10, 100):
+        _write_ids(data_dir, n)
+        engine = TnEngine(spark)
+        engine.run(plan)
+        counts.append(engine.registry["row_count"].first()["n"])
+    assert counts == [10, 100]
+
+
+def test_plan_run_leaves_no_rdd_cached(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    data_dir = str(tmp_path / "ids")
+    _write_ids(data_dir, 10)
+    engine = TnEngine(spark)
+    seen = []
+
+    def probe(cmd):
+        engine.registry[cmd.output_key].count()  # materialize the cache
+        seen.append(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    _after_each_command(engine, probe)
+    engine.run(_cached_count_plan(tmp_path, data_dir))
+    assert seen[-1]  # the cached output was materialized during the plan
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
 
 
 def test_table_mount(engine, tmp_path, input_parquet):

@@ -7,6 +7,7 @@ import json
 
 import pytest
 
+from tests.conftest import REPO
 from topnotch_spark.engine import TnEngine
 
 SF = "/root/testdata/sf0.001"
@@ -317,7 +318,7 @@ def test_llm_pipeline_plan_chains_stages(spark):
     output."""
     engine = TnEngine(spark)
     num_failed = engine.run(
-        "/root/repo/examples/llm_pipeline_plan.json",
+        str(REPO / "examples" / "llm_pipeline_plan.json"),
         variables={"sfDir": SF},
     )
     assert num_failed == 0
@@ -1120,7 +1121,7 @@ def test_retrieval_curation_plan(spark):
     calibration, and the OOV coverage check."""
     engine = TnEngine(spark)
     num_failed = engine.run(
-        "/root/repo/examples/retrieval_curation_plan.json",
+        str(REPO / "examples" / "retrieval_curation_plan.json"),
         variables={"sfDir": SF},
     )
     assert num_failed == 0
@@ -1139,7 +1140,7 @@ def test_corpus_monitoring_plan(spark, tmp_path):
     l-diversity, and a Z-ordered sink."""
     engine = TnEngine(spark)
     num_failed = engine.run(
-        "/root/repo/examples/corpus_monitoring_plan.json",
+        str(REPO / "examples" / "corpus_monitoring_plan.json"),
         variables={"sfDir": SF, "outDir": str(tmp_path)},
     )
     assert num_failed == 0
@@ -1275,11 +1276,7 @@ def test_bad_plans_fail_with_clear_messages(spark, tmp_path):
 # Every shipped example plan runs end-to-end (r8, VERDICT r7 #7)
 # ---------------------------------------------------------------------------
 
-EXAMPLE_PLANS = sorted(
-    str(p) for p in __import__("pathlib").Path(
-        "/root/repo/examples"
-    ).glob("*.json")
-)
+EXAMPLE_PLANS = sorted(str(p) for p in (REPO / "examples").glob("*.json"))
 
 
 def test_all_examples_are_covered():
@@ -1291,18 +1288,22 @@ def test_all_examples_are_covered():
 @pytest.mark.parametrize(
     "plan", EXAMPLE_PLANS, ids=[p.rsplit("/", 1)[-1] for p in EXAMPLE_PLANS]
 )
-def test_example_plan_runs_clean(spark, tmp_path, plan):
+def test_example_plan_runs_clean(spark, tmp_path, request, plan):
     """Each examples/*.json executes against sf0.001 with zero failed
     commands — the copy-paste-able user surface stays runnable."""
-    engine = TnEngine(spark)
-    num_failed = engine.run(
-        plan,
-        variables={
-            "sfDir": SF,
-            "workDir": str(tmp_path / "work"),
-            "outDir": str(tmp_path / "out"),
-            "minDate": "1995-01-01",  # documented orders_qc variable
-        },
-    )
+    if plan.endswith("/incremental_ingestion_plan.json"):
+        # the session's one run of it, which test_round12 checks in depth
+        engine, num_failed, _ = request.getfixturevalue("ingestion_plan_run")(SF)
+    else:
+        engine = TnEngine(spark)
+        num_failed = engine.run(
+            plan,
+            variables={
+                "sfDir": SF,
+                "workDir": str(tmp_path / "work"),
+                "outDir": str(tmp_path / "out"),
+                "minDate": "1995-01-01",  # documented orders_qc variable
+            },
+        )
     assert num_failed == 0
     assert engine.registry  # every example registers at least one output

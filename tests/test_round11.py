@@ -17,6 +17,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import REPO
+
 
 def _vecs(n: int, d: int, seed_mult: int = 7919):
     return {
@@ -354,7 +356,7 @@ class TestBpeSegment:
 
         import __spark_entry__ as entry
 
-        text = open("/root/repo/COVERAGE.md").read()
+        text = (REPO / "COVERAGE.md").read_text()
         m = re.search(r"Catalog total: (\d+) queries", text)
         assert m, "COVERAGE.md lost its 'Catalog total: N queries' marker"
         assert int(m.group(1)) == len(entry.queries())

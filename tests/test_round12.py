@@ -386,14 +386,8 @@ class TestMinhashIndexWidthGuard:
 
 
 class TestIngestionLifecyclePlan:
-    def test_example_plan_end_to_end(self, spark, tmp_path):
-        from topnotch_spark.engine import TnEngine
-
-        engine = TnEngine(spark)
-        num_failed = engine.run(
-            "/root/repo/examples/incremental_ingestion_plan.json",
-            variables={"sfDir": SF, "workDir": str(tmp_path / "w")},
-        )
+    def test_example_plan_end_to_end(self, spark, ingestion_plan_run):
+        engine, num_failed, work = ingestion_plan_run(SF)
         assert num_failed == 0
         reg = engine.registry
         # NOTE: registry frames are lazy — re-counting a screen frame
@@ -408,7 +402,7 @@ class TestIngestionLifecyclePlan:
             .distinct()
             .count()
         )
-        final = spark.read.parquet(str(tmp_path / "w" / "index/exact"))
+        final = spark.read.parquet(str(work / "index/exact"))
         # after seed + round-1 upsert the index owned exactly the
         # distinct content keys of both ingested rounds; the r13
         # retirement phase then deleted the %10==0 owners (literal
@@ -423,14 +417,14 @@ class TestIngestionLifecyclePlan:
         # minhash index exists, is pfx-partitioned, and carries complete
         # signature rows
         mh_final = spark.read.parquet(
-            str(tmp_path / "w" / "index/minhash")
+            str(work / "index/minhash")
         )
         assert mh_final.count() > 0
         assert {"index_id", "band_idx", "bucket", "sigs"} <= set(
             mh_final.columns
         )
         assert os.path.isdir(
-            str(tmp_path / "w" / "index/minhash")
+            str(work / "index/minhash")
         )
         mh_stats = reg["mhUpsertStats1"].collect()[0]
         assert mh_stats["n_partitions_touched"] <= 16

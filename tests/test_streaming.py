@@ -28,16 +28,13 @@ from topnotch_spark.streaming import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-BATCH_DIR = "/root/repo/.tmp/test_stream_events"
 CUTS = ("2024-01-11", "2024-01-21")
 
 
 @pytest.fixture(scope="module")
-def events_dir(spark):
+def events_dir(spark, tmp_path_factory):
     """events split into 3 time-ordered parquet files in one directory."""
-    if os.path.exists(BATCH_DIR):
-        shutil.rmtree(BATCH_DIR)
-    os.makedirs(BATCH_DIR)
+    batch_dir = str(tmp_path_factory.mktemp("stream_events"))
     # catalog.load converts the driver's TIMESTAMP(NANOS) ts to micros, so
     # the re-written batch files carry a plain timestamp column
     ev = catalog.load(spark, SF_DIR, "events")
@@ -47,13 +44,13 @@ def events_dir(spark):
         ev.filter(f"ts >= timestamp'{CUTS[1]}'"),
     ]
     for i, r in enumerate(ranges):
-        stage = f"{BATCH_DIR}/_stage{i}"
+        stage = f"{batch_dir}/_stage{i}"
         r.coalesce(1).write.mode("overwrite").parquet(stage)
         part = next(f for f in os.listdir(stage) if f.startswith("part-"))
-        shutil.move(os.path.join(stage, part), f"{BATCH_DIR}/{i:03d}.parquet")
+        shutil.move(os.path.join(stage, part), f"{batch_dir}/{i:03d}.parquet")
         shutil.rmtree(stage)
-    yield BATCH_DIR
-    shutil.rmtree(BATCH_DIR, ignore_errors=True)
+    yield batch_dir
+    shutil.rmtree(batch_dir, ignore_errors=True)
 
 
 def test_windowed_metrics_stream_matches_batch(spark, events_dir):

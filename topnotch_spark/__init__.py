@@ -48,9 +48,14 @@ def _install_zipimport_cache_guard() -> None:
     exactly the pre-existing semantics (a replaced archive is still
     picked up), just without the per-call re-parse.
 
-    Runs here (package import) so every Python worker that unpickles one
-    of our UDFs is patched for the rest of its (reused) life — the guard
-    pays back on every subsequent task the worker serves.
+    Runs here (package import), so a Python worker is patched for the
+    rest of its (reused) life once it imports the package — the guard
+    pays back on every subsequent task the worker serves. A worker
+    imports it only when the UDF it unpickles references a module-level
+    topnotch_spark object: cloudpickle pickles such objects by reference
+    and everything else (closures, lambdas) by value. The stateful
+    operators meet that condition in ``streaming.stateful._keyed_state``,
+    which hands Spark a partial of the module-level ``_per_group``.
     """
     import os
     import zipimport

@@ -49,6 +49,9 @@ class TnEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.registry: dict[str, DataFrame] = {}
+        # outputs persisted for ``cache: true``, released by the plan
+        # run that persisted them
+        self._cached: list[DataFrame] = []
 
     # ---- plan-level entry -------------------------------------------------
     def run(
@@ -109,6 +112,7 @@ class TnEngine:
         )
 
         snap = snapshot_intermediates()
+        cached_mark = len(self._cached)
         num_failed = 0
         try:
             for cmd in cmds:
@@ -123,6 +127,12 @@ class TnEngine:
             # MEMORY_AND_DISK intermediates. Registry outputs stay
             # valid — access after this point just recomputes.
             release_new_intermediates(snap)
+            # likewise the ``cache: true`` outputs: a pinned output would
+            # answer for any later plan whose plan matches it (same
+            # source path), even after its files were rewritten
+            for df in self._cached[cached_mark:]:
+                df.unpersist()
+            del self._cached[cached_mark:]
         return num_failed
 
     def run_command(self, cmd: Command, writer=None) -> int:
@@ -167,7 +177,7 @@ class TnEngine:
 
     # ---- helpers ----------------------------------------------------------
     def _store(self, df: DataFrame, cmd: Command) -> DataFrame:
-        return store_output(
+        df = store_output(
             self.spark,
             df,
             cmd.output_key,
@@ -184,6 +194,9 @@ class TnEngine:
             bucket_by=list(cmd.bucket_by) or None,
             num_buckets=cmd.num_buckets,
         )
+        if cmd.cache:
+            self._cached.append(df)
+        return df
 
     @staticmethod
     def _cmd_echo(cmd: Command) -> dict:

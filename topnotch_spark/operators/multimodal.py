@@ -886,6 +886,26 @@ def audio_near_dups(
     return bitstring_band_pairs(base, n_frames, band_bits, max_hamming)
 
 
+def _byte_stats(blob: bytes) -> dict[str, Any]:
+    """Size, high-nibble histogram and nibble entropy of one blob.
+    Module-level, like ``_decode_one``, so that unpickling the UDF that
+    calls it imports this package in the Python worker (and with it the
+    package's zipimport guard)."""
+    data = np.frombuffer(blob, dtype=np.uint8)
+    hist = np.bincount(data >> 4, minlength=HIST_BINS)
+    total = int(data.size)
+    ent = 0.0
+    for c in hist:  # fixed ascending-bin order = oracle's order
+        if c > 0:
+            p = c / total
+            ent -= p * math.log2(p)
+    return {
+        "size_bytes": total,
+        **{f"h{i}": int(hist[i]) for i in range(HIST_BINS)},
+        "nibble_entropy": round(ent, 6),
+    }
+
+
 def byte_stats(
     df: DataFrame, bin_col: str = "content", keep_cols: tuple[str, ...] = ("media_id",)
 ) -> DataFrame:
@@ -906,19 +926,9 @@ def byte_stats(
             rows = []
             keep_vals = [pdf[c].values for c in keep]
             for j, blob in enumerate(pdf[bin_col].values):
-                data = np.frombuffer(bytes(blob), dtype=np.uint8)
-                hist = np.bincount(data >> 4, minlength=HIST_BINS)
-                total = int(data.size)
-                ent = 0.0
-                for c in hist:  # fixed ascending-bin order = oracle's order
-                    if c > 0:
-                        p = c / total
-                        ent -= p * math.log2(p)
                 rows.append(
                     {**{c: v[j] for c, v in zip(keep, keep_vals)},
-                     "size_bytes": total,
-                     **{f"h{i}": int(hist[i]) for i in range(HIST_BINS)},
-                     "nibble_entropy": round(ent, 6)}
+                     **_byte_stats(bytes(blob))}
                 )
             if rows:
                 yield pd.DataFrame(rows)

@@ -34,6 +34,7 @@ stateful operator needs. Rows arrive per group as Arrow record batches
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Callable, Iterator
 
@@ -50,6 +51,28 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def _per_group(
+    fn: Callable[[int, pd.DataFrame, GroupState], Iterator[pd.DataFrame]],
+    on_timeout: Callable[[int, GroupState], Iterator[pd.DataFrame]] | None,
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    gs: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """One group of one micro-batch: ``on_timeout`` for a timed-out
+    group, else ``fn`` over the group's rows as one frame."""
+    (user_id,) = key
+    if gs.hasTimedOut:
+        if on_timeout is None:  # no timeouts registered; defensive
+            gs.remove()
+        else:
+            yield from on_timeout(user_id, gs)
+        return
+    chunks = list(pdfs)
+    yield from fn(
+        user_id, chunks[0] if len(chunks) == 1 else pd.concat(chunks), gs
+    )
 
 
 def _keyed_state(
@@ -72,23 +95,12 @@ def _keyed_state(
     ``on_timeout(user_id, state)`` runs for a group whose event-time
     timeout fired (the operator sets it with ``setTimeoutTimestamp``);
     without one no timeout is registered and a timed-out group only
-    drops its state."""
+    drops its state.
 
-    def per_group(
-        key: tuple, pdfs: Iterator[pd.DataFrame], gs: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if gs.hasTimedOut:
-            if on_timeout is None:  # no timeouts registered; defensive
-                gs.remove()
-            else:
-                yield from on_timeout(user_id, gs)
-            return
-        chunks = list(pdfs)
-        yield from fn(
-            user_id, chunks[0] if len(chunks) == 1 else pd.concat(chunks), gs
-        )
-
+    Spark gets a partial of the module-level ``_per_group``, which
+    cloudpickle pickles by reference: unpickling it imports this
+    package in the Python worker, and so installs the package's
+    zipimport guard for every later task that worker runs."""
     return (
         # explicit projection: applyInPandasWithState is opaque to
         # Catalyst, so every child column would otherwise cross the
@@ -97,7 +109,7 @@ def _keyed_state(
         .withWatermark(ts_col, watermark_delay)
         .groupBy(user_col)
         .applyInPandasWithState(
-            per_group,
+            functools.partial(_per_group, fn, on_timeout),
             outputStructType=output,
             stateStructType=state,
             outputMode="append",
