@@ -52,6 +52,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from topnotch_spark.runtime import dedup_scope
     from topnotch_spark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -72,12 +73,15 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = [c.lower() for c in sdf.columns]
-            srows = [
-                tuple(norm(r[c]) for c in sorted(scols))
-                for r in sdf.toDF(*scols).collect()
-            ]
+            # release what the query persisted before the next one runs
+            # (see strict_hash_check.spark_result)
+            with dedup_scope():
+                sdf = fn(spark, sf_dir)
+                scols = [c.lower() for c in sdf.columns]
+                srows = [
+                    tuple(norm(r[c]) for c in sorted(scols))
+                    for r in sdf.toDF(*scols).collect()
+                ]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1

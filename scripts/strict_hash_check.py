@@ -105,6 +105,28 @@ def complex_cols(sdf):
     ]
 
 
+def spark_result(spark, fn, sf_dir, con, sql):
+    """Build one catalog query and read what the checks need from it:
+    (complex columns, dtype mismatches, columns, rows), the later ones
+    None once a check fails. Runs inside ``dedup_scope``, so what the
+    query persisted is released before the next query runs. Left
+    cached, a later query persisting the same plan gets Spark's "Asked
+    to cache already cached data" no-op, and its frame silently
+    recomputes once the first query's storage is released."""
+    from topnotch_spark.runtime import dedup_scope
+
+    with dedup_scope():
+        sdf = fn(spark, sf_dir)
+        cc = complex_cols(sdf)
+        if cc:
+            return cc, None, None, None
+        dm = dtype_mismatches(sdf, con, sql)
+        if dm:
+            return cc, dm, None, None
+        scols = [c.lower() for c in sdf.columns]
+        return cc, dm, scols, [tuple(r) for r in sdf.toDF(*scols).collect()]
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_out = None
@@ -139,8 +161,9 @@ def main() -> int:
             results[name] = {"status": "skip", "reason": "no oracle"}
             continue
         t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        cc = complex_cols(sdf)
+        cc, dm, scols, srows = spark_result(
+            spark, fn, sf_dir, con, oracles[name]
+        )
         if cc:
             print(f"FAIL  {name}: complex-typed output columns {cc} — "
                   "the driver's pandas canonicalizer cannot sort these; "
@@ -148,7 +171,6 @@ def main() -> int:
             failures += 1
             results[name] = {"status": "fail", "reason": f"complex cols {cc}"}
             continue
-        dm = dtype_mismatches(sdf, con, oracles[name])
         if dm:
             print(f"FAIL  {name}: pandas dtype-kind mismatch "
                   f"(col, spark, duckdb): {dm} — the external driver's "
@@ -157,8 +179,6 @@ def main() -> int:
             failures += 1
             results[name] = {"status": "fail", "reason": f"dtype kinds {dm}"}
             continue
-        scols = [c.lower() for c in sdf.columns]
-        srows = [tuple(r) for r in sdf.toDF(*scols).collect()]
 
         res = con.execute(oracles[name])
         dcols = [d[0].lower() for d in res.description]

@@ -1,6 +1,7 @@
 """The lifecycle owner, ``topnotch_spark.runtime``: iterative operators
 that hand their final checkpoint round to the registry release it with
-the scope that created it, and ``pinned_conf`` restores what it pinned.
+the scope that created it, a scope releases only what it cached itself,
+and ``pinned_conf`` restores what it pinned.
 """
 
 from __future__ import annotations
@@ -8,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from topnotch_spark.operators.graph import (
     label_propagation,
@@ -18,7 +20,13 @@ from topnotch_spark.operators.textqc import (
     unigram_fertility_by_group,
     unigram_lm_vocab,
 )
-from topnotch_spark.runtime import dedup_scope, pinned_conf
+from topnotch_spark.runtime import (
+    dedup_scope,
+    persist,
+    pinned_conf,
+    release_new_intermediates,
+    snapshot_intermediates,
+)
 
 EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (7, 8)]
 DOCS = [
@@ -63,6 +71,22 @@ def test_final_round_checkpoint_released_with_scope(spark, tmp_path, op):
         assert any(d.startswith("cc_round_") for d in os.listdir(ckpt))
     assert got == baseline
     assert os.listdir(ckpt) == []
+
+
+def test_persist_of_a_cached_plan_registers_nothing(spark):
+    """A plan cached already reads that cache and stays its owner's to
+    release: releasing the scope frees only what the scope cached."""
+    owned = spark.range(10).selectExpr("id * 3 AS x").persist()
+    try:
+        snap = snapshot_intermediates()
+        again = persist(spark.range(10).selectExpr("id * 3 AS x"))
+        mine = persist(spark.range(10).selectExpr("id * 5 AS x"))
+        assert again.count() == mine.count() == 10
+        assert release_new_intermediates(snap) == 1
+        assert owned.storageLevel != StorageLevel.NONE
+        assert mine.storageLevel == StorageLevel.NONE
+    finally:
+        owned.unpersist()
 
 
 def test_pinned_conf_restores_a_set_value_and_unsets_an_unset_one(spark):

@@ -533,6 +533,86 @@ def test_ewma_stream_cross_batch_window(spark, tmp_path):
     assert got == expected  # bit-identical, including rows 7-11 post-cut
 
 
+def _offsets_conf(ckpt: str) -> str:
+    """Text of the newest offset-log entry of ``ckpt``."""
+    logs = [f for f in os.listdir(f"{ckpt}/offsets") if f.isdigit()]
+    with open(f"{ckpt}/offsets/{max(logs, key=int)}") as fh:
+        return fh.read()
+
+
+def test_state_partitions_capped_at_task_slots(spark, events_dir, tmp_path):
+    """A pinned ``state_partitions`` above the session's task slots
+    (local[4]) runs at 4 state partitions, the session conf is restored
+    after the run, and a restart on the durable checkpoint keeps the
+    count its offset log recorded, whatever it is asked for."""
+    from topnotch_spark.streaming import ewma_stream
+    from topnotch_spark.streaming.ops import run_available_now
+
+    key = "spark.sql.shuffle.partitions"
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    rows = []
+
+    def run(files, state_partitions):
+        for f in files:
+            shutil.copy(os.path.join(events_dir, f), src / f)
+        stream = stream_from_parquet(spark, str(src), max_files_per_trigger=1)
+        run_available_now(
+            ewma_stream(stream),
+            "cap",
+            foreach_batch=lambda df, _: rows.extend(df.collect()),
+            checkpoint_dir=ckpt,
+            state_partitions=state_partitions,
+        )
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        run(["000.parquet", "001.parquet"], 16)
+        assert spark.conf.get(key) == "7"
+        with open(f"{ckpt}/offsets/0") as fh:
+            assert '"spark.sql.shuffle.partitions":"4"' in fh.read()
+        parts = sorted(d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit())
+        assert parts == ["0", "1", "2", "3"]
+        n_first = len(rows)
+
+        run(["002.parquet"], 2)
+        assert spark.conf.get(key) == "7"
+        assert len(rows) > n_first  # the restart ran the new file
+        assert '"spark.sql.shuffle.partitions":"4"' in _offsets_conf(ckpt)
+        parts = sorted(d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit())
+        assert parts == ["0", "1", "2", "3"]
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("op", ["ewma", "windowed"])
+def test_stream_results_do_not_depend_on_state_partitions(spark, events_dir, op):
+    """Same sorted rows at 1 state partition and at 16 (capped to the
+    session's 4 task slots): keyed Python state and a JVM windowed
+    aggregation over 3 micro-batches."""
+    from topnotch_spark.streaming import ewma_stream
+
+    build, mode = {
+        "ewma": (ewma_stream, "append"),
+        "windowed": (
+            lambda s: windowed_event_metrics(s, window_duration="1 hour"),
+            "complete",
+        ),
+    }[op]
+
+    def rows(state_partitions):
+        stream = stream_from_parquet(spark, events_dir, max_files_per_trigger=1)
+        out = run_stream_to_table(
+            build(stream), output_mode=mode, state_partitions=state_partitions
+        )
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    one = rows(1)
+    assert one and one == rows(16)
+
+
 _READS_STATE = ["user_id", "ts", "event_type", "event_id"]
 _READS_VALUE = ["user_id", "ts", "value", "event_id"]
 

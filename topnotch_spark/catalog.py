@@ -2524,8 +2524,10 @@ def streaming_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = _events_stream(spark, sf_dir)
-    # JVM-stateful aggs (unlike the Python-stateful ops, where 16 beat
-    # 8) get ~30% faster with fewer state partitions at this key
+    # state_partitions constants are upper bounds tuned on 32 cores;
+    # run_available_now caps them at the session's task slots. JVM-
+    # stateful aggs (unlike the Python-stateful ops, where 16 beat 8)
+    # get ~30% faster with fewer state partitions at this key
     # cardinality — state-store/commit fixed cost dominates (measured
     # r6: 8 JVM streaming entries 19.4s @16 -> 14.4s @6). On a cluster,
     # size to key cardinality via the session conf instead.
@@ -2573,7 +2575,8 @@ def streaming_sliding_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, window_duration="2 hours", slide="1 hour"
         ),
         output_mode="complete",
-        state_partitions=6,  # JVM-stateful: see streaming_window_metrics
+        # JVM-stateful, a capped upper bound: see streaming_window_metrics
+        state_partitions=6,
     )
 
 
@@ -2586,8 +2589,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir)
     # Python-stateful ops are bound by per-partition pandas processing,
-    # not state-store commits: 16 partitions beat 8 (5.3s vs 7.0s
-    # measured idle at sf0.1) — keep the default parallelism
+    # not state-store commits: on 32 cores 16 partitions beat 8 (5.3s
+    # vs 7.0s measured idle at sf0.1). An upper bound: run_available_now
+    # caps it at the session's task slots, as every empty partition's
+    # task still pays its fixed state-store and Python-worker cost.
     return run_stream_to_table(
         sessionize_stream(stream, gap_seconds=1800),
         output_mode="append",
@@ -2762,7 +2767,8 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = dedup_stream(
         stream.select("user_id", "event_type"), ["user_id", "event_type"]
     )
-    # JVM-stateful: see the state_partitions note in streaming_window_metrics
+    # JVM-stateful, a capped upper bound: see the state_partitions
+    # note in streaming_window_metrics
     return run_stream_to_table(dd, output_mode="append", state_partitions=6)
 
 
@@ -2794,7 +2800,8 @@ def streaming_enriched_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    # JVM-stateful: see the state_partitions note in streaming_window_metrics
+    # JVM-stateful, a capped upper bound: see the state_partitions
+    # note in streaming_window_metrics
     return run_stream_to_table(agg, output_mode="complete", state_partitions=6)
 
 
@@ -2854,7 +2861,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = _events_stream(spark, sf_dir)
-    # JVM-stateful: see the state_partitions note in streaming_window_metrics
+    # JVM-stateful, a capped upper bound: see the state_partitions
+    # note in streaming_window_metrics
     return run_stream_to_table(
         session_window_metrics(stream), output_mode="append",
         state_partitions=6,

@@ -82,12 +82,20 @@ def persist(df: DataFrame) -> DataFrame:
     """Materialize + register an intermediate for reuse across branches:
     parquet checkpoint when a checkpoint dir is set (scale path), else
     persist(MEMORY_AND_DISK). Released by unpersist_intermediates() /
-    release_new_intermediates()."""
+    release_new_intermediates().
+
+    A plan that is cached already (by an earlier persist of the same
+    plan, in this scope, an enclosing one or by the caller) is returned
+    as is and not registered again: it reads that cache, and whoever
+    cached it releases it. Persisting it again would be a no-op in Spark
+    ("Asked to cache already cached data")."""
     if _CHECKPOINT_DIR is not None:
         path = _next_checkpoint_path("tn_ckpt")
         out = write_read_back(df, path)
         own_paths(out, [path])
         return out
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(out)
     return out

@@ -249,12 +249,22 @@ def run_available_now(
     deleted the same way Spark created it.
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    run: stateful streaming creates one state store (files, commit log)
-    PER shuffle partition per batch, so an oversized default (e.g. 200
-    from a vanilla session) multiplies checkpoint I/O for no parallelism
-    gain at test scale. On a cluster pass None and size the session
-    conf to the key cardinality instead."""
+    run, capped at the session's task slots
+    (``sparkContext.defaultParallelism``): stateful streaming creates
+    one state store (files, commit log) PER shuffle partition per batch,
+    and each store's task pays a fixed cost (state-store delta files,
+    the Python worker round trip) even when its partition is empty. So
+    more partitions than slots only adds waves of such tasks for no
+    parallelism gain: on 4 cores, 16 partitions ran 4 waves per batch.
+    The catalog's constants are upper bounds tuned on 32 cores. A
+    restart on a durable ``checkpoint_dir`` keeps the count its offset
+    log recorded, whatever is passed here. On a cluster pass None and
+    size the session conf to the key cardinality instead."""
     spark = stream_df.sparkSession
+    if state_partitions is not None:
+        state_partitions = min(
+            state_partitions, spark.sparkContext.defaultParallelism
+        )
     name = f"{prefix}_{uuid.uuid4().hex[:12]}"
     ckpt = checkpoint_dir or f"{DEFAULT_CHECKPOINT_ROOT}/{name}"
     writer = stream_df.writeStream.option("checkpointLocation", ckpt).trigger(
@@ -285,7 +295,8 @@ def run_stream_to_table(
     in-memory sink and return the result table. Each call uses a fresh
     checkpoint + sink name, so it is safe to re-invoke (bench loops).
     ``checkpoint_dir`` and ``state_partitions`` as in
-    :func:`run_available_now`.
+    :func:`run_available_now`, which caps the default 16 at the
+    session's task slots.
 
     The memory-sink table is NOT left registered: dozens of leaked
     result tables would otherwise hold their rows in driver memory for
