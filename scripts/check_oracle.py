@@ -49,21 +49,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
-
     import __spark_entry__ as entrymod
+    from strict_hash_check import oracle_connection
     from topnotch_spark.runtime import dedup_scope
     from topnotch_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -85,9 +77,6 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"skip  {name}: no oracle (rows-only check): {len(srows)} rows")
             continue
         try:
             ddf = con.execute(oracles[name]).fetch_arrow_table()

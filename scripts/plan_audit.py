@@ -16,21 +16,13 @@ Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
-import contextlib
-import io
+import os
 import re
 import sys
 
-import os
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from dump_plans import plan_text  # noqa: E402
 
 
 def main() -> int:

@@ -40,7 +40,9 @@ def job_rows(spark):
         out.append(
             {
                 "id": j.jobId(),
-                "dur_ms": (t1 - t0) if (t0 and t1) else None,
+                "dur_ms": (
+                    (t1 - t0) if t0 is not None and t1 is not None else None
+                ),
                 "t0": t0,
                 "stages": j.stageIds().size(),
                 "tasks": j.numTasks(),

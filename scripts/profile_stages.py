@@ -11,18 +11,13 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from topnotch_spark.runtime import dedup_scope  # noqa: E402
+from profile_query import run_once  # noqa: E402
 from topnotch_spark.session import get_spark  # noqa: E402
-
-
-def run_once(spark, fn, sf_dir):
-    with dedup_scope():
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
 
 
 def stage_rows(spark):
@@ -74,8 +69,6 @@ def main() -> None:
         fn = qs[name]
         for rep in range(reps):
             before = {r["id"] for r in stage_rows(spark)}
-            import time
-
             t0 = time.time()
             run_once(spark, fn, sf_dir)
             wall = time.time() - t0

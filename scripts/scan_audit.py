@@ -96,18 +96,19 @@ MAX_SCANS = 2  # a self-join reads its source twice; 3+ means recompute
 
 def audit(sf_dir: str, names=None, verbose: bool = True):
     """Run the audit; return [(query, max_scans)] offenders (ERRs as -1)."""
-    from topnotch_spark import catalog
+    import __spark_entry__ as entry
     from topnotch_spark.session import get_spark
 
     spark = get_spark("scan-audit")
+    queries = entry.queries()
     todo = [
-        n for n in sorted(catalog.ALL)
+        n for n in sorted(queries)
         if not n.startswith("streaming_") and (not names or n in set(names))
     ]
     offenders = []
     for name in todo:
         try:
-            counts = scan_counts(catalog.ALL[name](spark, sf_dir))
+            counts = scan_counts(queries[name](spark, sf_dir))
         except Exception as e:  # surface, keep auditing
             if verbose:
                 print(f"ERR   {name}: {type(e).__name__}: {e}")

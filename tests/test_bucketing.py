@@ -6,13 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from topnotch_spark.operators.diff import DiffParams, DiffSide, create_diff
-from topnotch_spark.sources.bucketing import (
-    plan_has_exchange,
-    read_table,
-    write_bucketed,
-)
+from topnotch_spark.sources.bucketing import write_bucketed
 
 SF = "/root/testdata/sf0.001"
+
+
+def plan_has_exchange(df) -> bool:
+    """True if the physical plan contains any Exchange (shuffle)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "Exchange" in plan
 
 
 @pytest.fixture(scope="module")
@@ -37,9 +39,9 @@ def bucketed_orders(spark):
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_orders):
     a, b = bucketed_orders
-    joined = read_table(spark, a).join(read_table(spark, b), "o_orderkey")
+    joined = spark.table(a).join(spark.table(b), "o_orderkey")
     assert not plan_has_exchange(joined)
-    assert joined.count() == read_table(spark, a).count()
+    assert joined.count() == spark.table(a).count()
 
 
 def test_create_diff_plan_has_no_exchange(spark, bucketed_orders):
@@ -48,9 +50,9 @@ def test_create_diff_plan_has_no_exchange(spark, bucketed_orders):
     write time (VERDICT r5 #7)."""
     a, b = bucketed_orders
     diff = create_diff(
-        read_table(spark, a),
+        spark.table(a),
         "a",
-        read_table(spark, b),
+        spark.table(b),
         "b",
         DiffParams(
             DiffSide(("o_orderkey",), ("o_totalprice",)),
@@ -99,7 +101,7 @@ def test_diff_command_over_bucketed_table_inputs(spark, bucketed_orders, tmp_pat
     assert engine.run(str(path)) == 0
     out = engine.registry["bucketedDiff"]
     assert not plan_has_exchange(out)
-    expect = read_table(spark, a).filter("o_orderkey % 10 = 0").count()
+    expect = spark.table(a).filter("o_orderkey % 10 = 0").count()
     assert out.count() == expect
 
     # a missing table name must fail static validation with the clear
@@ -118,7 +120,7 @@ def test_diff_command_over_bucketed_table_inputs(spark, bucketed_orders, tmp_pat
 
 def test_bucketed_diff_correct_and_shuffle_light(spark, bucketed_orders):
     a, b = bucketed_orders
-    df1, df2 = read_table(spark, a), read_table(spark, b)
+    df1, df2 = spark.table(a), spark.table(b)
     diff = create_diff(
         df1,
         "a",
@@ -241,7 +243,7 @@ def test_plan_declarative_bucketed_write_then_shuffle_free_diff(
         assert engine.run(str(dpath)) == 0
         out = engine.registry["bucketedDiff2"]
         assert not plan_has_exchange(out)
-        expect = read_table(spark, "plan_orders_a").filter(
+        expect = spark.table("plan_orders_a").filter(
             "o_orderkey % 10 = 0"
         ).count()
         assert out.count() == expect

@@ -42,15 +42,8 @@ def strict_hash_check():
 
 
 @pytest.fixture(scope="module")
-def con():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+def con(strict_hash_check):
+    con = strict_hash_check.oracle_connection(SF_DIR)
     yield con
     con.close()
 

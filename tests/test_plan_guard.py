@@ -21,12 +21,13 @@ import io
 
 import pytest
 
-from topnotch_spark import catalog
+import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 
+QUERIES = entry.queries()
 BATCH_QUERIES = sorted(
-    name for name in catalog.ALL if not name.startswith("streaming_")
+    name for name in QUERIES if not name.startswith("streaming_")
 )
 
 
@@ -38,7 +39,7 @@ guarded = pytest.mark.parametrize("name", BATCH_QUERIES, scope="module")
 
 @pytest.fixture(scope="module")
 def built(spark, name):
-    return catalog.ALL[name](spark, SF)
+    return QUERIES[name](spark, SF)
 
 
 def _plan(df) -> str:

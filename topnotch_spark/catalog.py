@@ -1,6 +1,7 @@
 """Query catalog: each entry demonstrates one implemented operator from
 SURVEY.md §2 on the driver's TPC-H-ish test tables, with a matching ANSI-SQL
-oracle (DuckDB) defined in ``__spark_entry__.py``.
+oracle (DuckDB) in ``__spark_entry__.ORACLES``, in the row named after
+the function.
 
 Each function takes (spark, sf_dir) and returns a DataFrame. Every computed
 column is aliased identically to the oracle SQL. Doubles coming from
@@ -358,7 +359,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return minhash_lsh_dedup(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        num_hashes=16, bands=4, threshold=0.5, shingle_n=5,
+        **MINHASH,
     )
 
 
@@ -372,7 +373,7 @@ def cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return cross_source_dup_matrix(
         load(spark, sf_dir, "documents"), "doc_id", "text", "source",
-        num_hashes=16, bands=4, threshold=0.5, shingle_n=5,
+        **MINHASH,
     )
 
 
@@ -381,7 +382,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        threshold=0.5, shingle_n=5,
+        threshold=0.5, **SHINGLES,
     )
 
 
@@ -433,7 +434,7 @@ def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cents, _ = kmeans_centroids_exact(
-        emb, "vec_id", "embedding", n_centroids=8, n_rounds=2
+        emb, "vec_id", "embedding", **SEMANTIC_KMEANS
     )
     dd = semantic_dedup(
         emb, "vec_id", "embedding", threshold=0.35, centroids=cents
@@ -601,7 +602,7 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.filter("vec_id % 2 = 0")
     cents, assigns = kmeans_centroids_exact(
-        corpus, "vec_id", "embedding", n_centroids=8, n_rounds=2
+        corpus, "vec_id", "embedding", **SEMANTIC_KMEANS
     )
     index = build_semantic_index(corpus, assigns, "vec_id", "embedding")
     return dedup_batch_against_semantic_index(
@@ -644,7 +645,7 @@ def dedup_semantic_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     seed = emb.filter("vec_id % 3 = 0")
     cents, assigns = kmeans_centroids_exact(
-        seed, "vec_id", "embedding", n_centroids=8, n_rounds=2
+        seed, "vec_id", "embedding", **SEMANTIC_KMEANS
     )
     root = tempfile.mkdtemp(prefix="tn_semantic_compaction_")
     idx_path = root + "/index"
@@ -801,7 +802,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_dedup(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        num_hashes=16, bands=4, threshold=0.5, shingle_n=5,
+        **MINHASH,
     )
     return dup_clusters(pairs)
 
@@ -817,7 +818,7 @@ def split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_safe_split(
         load(spark, sf_dir, "documents"), "doc_id", "text",
         fractions={"train": 0.9, "val": 0.1},
-        num_hashes=16, bands=4, threshold=0.5, shingle_n=5,
+        **MINHASH,
     )
 
 
@@ -832,7 +833,7 @@ def dedup_spans_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return rewrite_duplicate_spans(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        span_tokens=20, min_occurrences=2,
+        **DUP_SPANS,
     ).withColumnRenamed("id", "doc_id")
 
 
@@ -845,7 +846,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(
-        docs, "doc_id", "text", num_hashes=16, bands=4, threshold=0.5, shingle_n=5
+        docs, "doc_id", "text", **MINHASH
     )
     scores = quality_scores(docs, "doc_id", "text")
     return keep_best_in_cluster(pairs, scores, "quality_score", "doc_id")
@@ -887,14 +888,16 @@ def coreset_kcenter_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_dim_stats_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding health profile
     (similarity.embedding_dim_stats): dead-dim and scale-imbalance
     screen (micro-int exact sums) — the table to read before trusting
     the int8/PQ quantization audits."""
-    from topnotch_spark.operators.similarity import embedding_dim_stats
+    from topnotch_spark.operators.similarity import (
+        embedding_dim_stats as dim_stats,
+    )
 
-    return embedding_dim_stats(load(spark, sf_dir, "embeddings"))
+    return dim_stats(load(spark, sf_dir, "embeddings"))
 
 
 def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,8 +913,7 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=64,
         m=8,
         n_codes=16,
-        n_centroids=16,
-        n_probe=4,
+        **IVF,
         k=10,
         n_queries=5,
     )
@@ -988,8 +990,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk(
-        emb, emb.filter("vec_id < 5"), k=10, n_centroids=16, n_probe=4,
-        dim=64,
+        emb, emb.filter("vec_id < 5"), k=10, **IVF, dim=64,
     )
 
 
@@ -1079,6 +1080,24 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SAMPLE_RATES = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.25, "zh": 0.1}
+
+# Keyword-argument sets that several queries and their oracles in
+# __spark_entry__.ORACLES pass alike.
+# MinHash-LSH banding over 5-word shingles; the minhash index operators
+# default to 3-word shingles at the same banding
+MINHASH = dict(num_hashes=16, bands=4, threshold=0.5, shingle_n=5)
+INDEX_MINHASH = MINHASH | dict(shingle_n=3)
+# exact shingle joins: 5-word shingles, skipping those in over 1000 docs
+SHINGLES = dict(shingle_n=5, max_shingle_df=1000)
+# the semantic index's trained clustering (kmeans_centroids_exact)
+SEMANTIC_KMEANS = dict(n_centroids=8, n_rounds=2)
+IVF = dict(n_centroids=16, n_probe=4)
+UNIGRAM_LM = dict(
+    max_word_len=12, max_piece_len=4, seed_size=64, vocab_size=48, n_rounds=2
+)
+WORDPIECE = dict(max_piece_len=4, vocab_size=48, max_word_len=12)
+DUP_SPANS = dict(span_tokens=20, min_occurrences=2)
+EVENT_PATHS = dict(n_steps=3, k=20)
 
 # mixture_plan_sources fixture: skewed targets over the 20 documents
 # sources (src10-19 deliberately untargeted -> allocation 0), a budget
@@ -1223,7 +1242,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return containment_pairs(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        threshold=0.5, shingle_n=5,
+        threshold=0.5, **SHINGLES,
     )
 
 
@@ -1307,8 +1326,7 @@ def unigram_lm_vocab_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return unigram_lm_vocab(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        max_word_len=12, max_piece_len=4, seed_size=64, vocab_size=48,
-        n_rounds=2,
+        **UNIGRAM_LM,
     )
 
 
@@ -1325,8 +1343,7 @@ def unigram_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return unigram_fertility_by_group(
         load(spark, sf_dir, "documents"), "doc_id", "text", "source",
-        max_word_len=12, max_piece_len=4, seed_size=64, vocab_size=48,
-        n_rounds=2,
+        **UNIGRAM_LM,
     )
 
 
@@ -1371,8 +1388,7 @@ def unigram_segment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r13: each half otherwise re-scans + re-shuffles the corpus words)
     wc = word_counts(docs, "text", max_word_len=12)
     vocab = unigram_lm_vocab(
-        docs, "doc_id", "text", max_word_len=12, max_piece_len=4,
-        seed_size=64, vocab_size=48, n_rounds=2, words=wc,
+        docs, "doc_id", "text", **UNIGRAM_LM, words=wc,
     )
     return unigram_segment(docs, vocab, "doc_id", "text",
                            max_piece_len=4, max_word_len=12, words=wc)
@@ -1395,10 +1411,7 @@ def wordpiece_segment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # train and apply share ONE persisted (word, wc) corpus reduction
     # (r13: each half otherwise re-scans + re-shuffles the corpus words)
     wc = word_counts(docs, "text", max_word_len=12)
-    vocab = wordpiece_vocab(
-        docs, "doc_id", "text", max_piece_len=4, vocab_size=48,
-        max_word_len=12, words=wc,
-    )
+    vocab = wordpiece_vocab(docs, "doc_id", "text", **WORDPIECE, words=wc)
     return wordpiece_segment(
         docs, vocab, "doc_id", "text", max_piece_len=4, max_word_len=12,
         words=wc,
@@ -1423,7 +1436,7 @@ def wordpiece_fertility_by_source(
 
     return wordpiece_fertility_by_group(
         load(spark, sf_dir, "documents"), "doc_id", "text", "source",
-        max_piece_len=4, vocab_size=48, max_word_len=12,
+        **WORDPIECE,
     )
 
 
@@ -2970,7 +2983,7 @@ def event_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return frequent_paths(
         load(spark, sf_dir, "events"), "user_id", "ts", "event_id",
-        "event_type", n_steps=3, k=20,
+        "event_type", **EVENT_PATHS,
     )
 
 
@@ -3240,7 +3253,7 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return duplicate_spans(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        span_tokens=20, min_occurrences=2,
+        **DUP_SPANS,
     )
 
 
@@ -3282,7 +3295,7 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         srp_ann_topk(emb, q, k=10, n_planes=8, dim=64), exact
     ).select(F.lit("srp").alias("method"), "*")
     ivf = topk_recall(
-        ivf_topk(emb, q, k=10, n_centroids=16, n_probe=4, dim=64), exact
+        ivf_topk(emb, q, k=10, **IVF, dim=64), exact
     ).select(F.lit("ivf").alias("method"), "*")
     return srp.unionByName(ivf)
 
@@ -4036,10 +4049,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents"),
         "doc_id",
         "text",
-        threshold=0.5,
-        num_hashes=16,
-        bands=4,
-        shingle_n=5,
+        **MINHASH,
     )
 
 
@@ -4124,7 +4134,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return split_leakage(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        shingle_n=5, max_shingle_df=1000,
+        **SHINGLES,
     )
 
 
@@ -4163,248 +4173,3 @@ def vocab_oov_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents"), "doc_id", "text", "source",
         vocab_k=40,
     )
-
-
-# Ordering contract: the driver's CORRECTNESS gate records oracle rows for
-# the FIRST 50 entries only.  Round-8 rotation (executes the r07 verdict's
-# top task, closing the r7 TODO that sat here):
-#   slots 1-6   — the 6 round-6/7 additions that never had a driver row
-#                 (text_bm25_topk .. vocab_oov_by_source; each was
-#                 strict-hash-verified in r6/r7 sessions, but the driver
-#                 gate had never recorded them);
-#   slots 10-39 — the 30 entries whose last driver row is r04
-#                 (assertion/diff family, view_tpch_q1, dedup/similarity
-#                 core, computed by scanning CORRECTNESS_r01..r07 keys);
-#   slots 7-9   — multimodal_phash_dedup / _audio_dedup / _video_dedup,
-#                 new this round (no driver rows yet; each
-#                 strict-hash-exact at both SFs);
-#   slots 40-50 — the 11 alphabetically-first entries whose last driver
-#                 row is r05 (asof_error_click ..; the next three
-#                 displaced to 51+ by the new-query inserts).
-# With this rotation, every catalog query ever written has at least one
-# driver-side CORRECTNESS row, and the staleness frontier moves to r05.
-# Entries 51+ all carry an r05+ driver row AND are covered each round by
-# scripts/strict_hash_check.py (stricter than the driver gate), recorded
-# in the committed CORRECTNESS_FULL_r*.json artifacts at sf0.01 + sf0.1.
-ALL = {
-    # driver gate checks the LEADING 50 slots. r10 rotation:
-    # queries NEW this round first (a new query must earn a
-    # driver-side CORRECTNESS row in the round that ships it) —
-    # the 17 session-2 queries, then the 8 session-1 queries,
-    # then the 13 queries whose last driver row was r05 (the
-    # staleness tail the r9 verdict flagged), then the oldest
-    # of the r07 cohort; slots 51+ start with the remaining
-    # r07 queries so the r11 rotation is a shift.
-    "drift_wasserstein_totalprice": drift_wasserstein_totalprice,
-    "t_closeness_customers": t_closeness_customers,
-    "kmv_source_jaccard": kmv_source_jaccard,
-    "graph_communities_parts": graph_communities_parts,
-    "stupid_backoff_en": stupid_backoff_en,
-    "nb_en_classifier": nb_en_classifier,
-    "dsir_select_docs": dsir_select_docs,
-    "retrieval_mmr_topk": retrieval_mmr_topk,
-    "streaming_wasserstein": streaming_wasserstein,
-    "similarity_pq_recall": similarity_pq_recall,
-    "zipf_fit_docs": zipf_fit_docs,
-    "heaps_fit_docs": heaps_fit_docs,
-    "coreset_kcenter_embeddings": coreset_kcenter_embeddings,
-    "graph_kcore_parts": graph_kcore_parts,
-    "cms_join_size_orders_events": cms_join_size_orders_events,
-    "text_c4_rules": text_c4_rules,
-    "vocab_coverage_docs": vocab_coverage_docs,
-    "user_sequence_likelihood": user_sequence_likelihood,
-    "source_drift_ranking": source_drift_ranking,
-    "fd_check_orders": fd_check_orders,
-    "lsh_tuning_16": lsh_tuning_16,
-    "similarity_ivfpq_recall": similarity_ivfpq_recall,
-    "embedding_dim_stats": embedding_dim_stats_table,
-    "salt_plan_lineitem": salt_plan_lineitem,
-    "cusum_value_by_user": cusum_value_by_user,
-    "unigram_lm_vocab_docs": unigram_lm_vocab_docs,
-    "langid_accuracy": langid_accuracy,
-    "multimodal_phash_recall": multimodal_phash_recall,
-    "unigram_fertility_by_source": unigram_fertility_by_source,
-    "mixture_plan_sources": mixture_plan_sources,
-    "cross_perplexity_en": cross_perplexity_en,
-    "similarity_quantize_recall": similarity_quantize_recall,
-    "unigram_segment_docs": unigram_segment_docs,
-    "bpe_segment_docs": bpe_segment_docs,
-    "wordpiece_segment_docs": wordpiece_segment_docs,
-    "wordpiece_fertility_by_source": wordpiece_fertility_by_source,
-    "streaming_sessionize": streaming_sessionize,
-    "streaming_sliding_metrics": streaming_sliding_metrics,
-    "streaming_transitions": streaming_transitions,
-    "streaming_window_metrics": streaming_window_metrics,
-    "text_gopher_rules": text_gopher_rules,
-    "text_readability": text_readability,
-    "text_token_entropy": text_token_entropy,
-    "text_unigram_logprob": text_unigram_logprob,
-    "token_histogram": token_histogram,
-    "train_split_assign": train_split_assign,
-    "trend_value_by_user": trend_value_by_user,
-    "view_small_qty_revenue": view_small_qty_revenue,
-    "winsorize_totalprice": winsorize_totalprice,
-    "anomaly_value_zscore": anomaly_value_zscore,
-    "basket_brand_pairs": basket_brand_pairs,
-    "cdc_apply_orders": cdc_apply_orders,
-    "corr_lineitem_measures": corr_lineitem_measures,
-    "decontaminate_embedding": decontaminate_embedding,
-    "dedup_clusters": dedup_clusters,
-    "dedup_containment": dedup_containment,
-    "dedup_duplicate_spans": dedup_duplicate_spans,
-    "dedup_spans_rewrite": dedup_spans_rewrite,
-    "dedup_keep_best": dedup_keep_best,
-    "dedup_lines_footer": dedup_lines_footer,
-    "dedup_minhash_recall": dedup_minhash_recall,
-    "drift_ks_binned": drift_ks_binned,
-    "drift_ks_totalprice": drift_ks_totalprice,
-    "embedding_centroids": embedding_centroids,
-    "embedding_quantize": embedding_quantize,
-    "event_gaps_by_user": event_gaps_by_user,
-    "ewma_value_by_user": ewma_value_by_user,
-    "fk_integrity": fk_integrity,
-    "k_anonymity_customers": k_anonymity_customers,
-    "key_skew_orders": key_skew_orders,
-    "l_diversity_customers": l_diversity_customers,
-    "melt_part_measures": melt_part_measures,
-    "mi_priority_status": mi_priority_status,
-    "pack_token_shards": pack_token_shards,
-    "pack_token_shards_partitioned": pack_token_shards_partitioned,
-    "profile_lineitem_approx": profile_lineitem_approx,
-    "sample_stratified": sample_stratified,
-    "sample_stratified_topn": sample_stratified_topn,
-    "similarity_ann_recall": similarity_ann_recall,
-    # ---- below: not checked by the r10 driver gate ----
-    "spatial_customer_supplier": spatial_customer_supplier,
-    "streaming_anomaly": streaming_anomaly,
-    "streaming_ewma": streaming_ewma,
-    "text_bigram_logprob": text_bigram_logprob,
-    "text_chunks": text_chunks,
-    "text_normalize": text_normalize,
-    "text_pii_scrub": text_pii_scrub,
-    "text_quality_filter": text_quality_filter,
-    "text_repetition": text_repetition,
-    "text_tfidf_keywords": text_tfidf_keywords,
-    "text_vocab_topk": text_vocab_topk,
-    "token_drift_langs": token_drift_langs,
-    "view_big_qty_orders": view_big_qty_orders,
-    "view_cust_order_dist": view_cust_order_dist,
-    "view_late_orders_exists": view_late_orders_exists,
-    "view_nation_volume": view_nation_volume,
-    "view_rich_inactive_custs": view_rich_inactive_custs,
-    "vocab_overlap_langs": vocab_overlap_langs,
-    "weighted_sample_bylength": weighted_sample_bylength,
-    "weighted_topn_docs": weighted_topn_docs,
-    "zorder_customers": zorder_customers,
-    "bpe_merge_sequence_docs": bpe_merge_sequence_docs,
-    "bpe_fertility_by_source": bpe_fertility_by_source,
-    "event_paths_top": event_paths_top,
-    "benford_totalprice": benford_totalprice,
-    "cross_source_dups": cross_source_dups,
-    "cluster_silhouette_embeddings": cluster_silhouette_embeddings,
-    "streaming_event_paths": streaming_event_paths,
-    "token_rank_shift_langs": token_rank_shift_langs,
-    "collocations_docs": collocations_docs,
-    "streaming_benford_value": streaming_benford_value,
-    "view_revenue_by_nation": view_revenue_by_nation,
-    "view_sessionize_events": view_sessionize_events,
-    "view_topk_per_group": view_topk_per_group,
-    "view_tpch_q1": view_tpch_q1,
-    "asof_error_click": asof_error_click,
-    "asof_nearest_click": asof_nearest_click,
-    "bloom_membership": bloom_membership,
-    "dedup_incremental": dedup_incremental,
-    "dedup_index_compaction": dedup_index_compaction,
-    "dedup_index_retirement": dedup_index_retirement,
-    "dedup_incremental_minhash": dedup_incremental_minhash,
-    "dedup_minhash_compaction": dedup_minhash_compaction,
-    "dedup_incremental_semantic": dedup_incremental_semantic,
-    "dedup_semantic_compaction": dedup_semantic_compaction,
-    "dedup_rate_by_source": dedup_rate_by_source,
-    "dedup_semantic": dedup_semantic,
-    "dedup_semantic_trained": dedup_semantic_trained,
-    "drift_chi2_priority": drift_chi2_priority,
-    "drift_orders_totalprice": drift_orders_totalprice,
-    "embedding_norm_outliers": embedding_norm_outliers,
-    "embedding_project": embedding_project,
-    "event_funnel": event_funnel,
-    "event_transitions": event_transitions,
-    "events_throttle_dedup": events_throttle_dedup,
-    "fuzzy_customer_names": fuzzy_customer_names,
-    "histogram_equidepth_totalprice": histogram_equidepth_totalprice,
-    "interval_price_band": interval_price_band,
-    "multimodal_blob_dedup": multimodal_blob_dedup,
-    "multimodal_byte_stats": multimodal_byte_stats,
-    "outliers_mad_totalprice": outliers_mad_totalprice,
-    "pivot_order_status": pivot_order_status,
-    "profile_lineitem": profile_lineitem,
-    "quality_bands_by_source": quality_bands_by_source,
-    "range_join_events": range_join_events,
-    "retention_cohorts_weekly": retention_cohorts_weekly,
-    "rolling_value_7d": rolling_value_7d,
-    "sample_token_budget": sample_token_budget,
-    "scd2_customer_segment": scd2_customer_segment,
-    "source_lang_mix": source_lang_mix,
-    "source_mix": source_mix,
-    "streaming_assertion_metrics": streaming_assertion_metrics,
-    "streaming_dedup": streaming_dedup,
-    "streaming_incremental_dedup": streaming_incremental_dedup,
-    "streaming_drift_monitor": streaming_drift_monitor,
-    "streaming_enriched_metrics": streaming_enriched_metrics,
-    "streaming_error_click_join": streaming_error_click_join,
-    "streaming_funnel": streaming_funnel,
-    "streaming_session_window": streaming_session_window,
-    "text_classifier_quality": text_classifier_quality,
-    "streaming_distinct_users": streaming_distinct_users,
-    "graph_pagerank_parts": graph_pagerank_parts,
-    "graph_ppr_related_parts": graph_ppr_related_parts,
-    "graph_triangle_parts": graph_triangle_parts,
-    "retrieval_rrf_fused": retrieval_rrf_fused,
-    "cms_heavy_hitters": cms_heavy_hitters,
-    "text_novelty": text_novelty,
-    "corpus_diversity_by_source": corpus_diversity_by_source,
-    "label_noise_knn": label_noise_knn,
-    "contrastive_pairs_mined": contrastive_pairs_mined,
-    "quantile_sketch_accuracy": quantile_sketch_accuracy,
-    "streaming_topk_types": streaming_topk_types,
-    "bpe_top_merges_docs": bpe_top_merges_docs,
-    "split_cluster_safe": split_cluster_safe,
-    "text_bm25_topk": text_bm25_topk,
-    "curriculum_decile_sample": curriculum_decile_sample,
-    "split_leakage_report": split_leakage_report,
-    "drift_weekly_psi": drift_weekly_psi,
-    "quality_calibrated_ranks": quality_calibrated_ranks,
-    "vocab_oov_by_source": vocab_oov_by_source,
-    "multimodal_phash_dedup": multimodal_phash_dedup,
-    "dedup_incremental_phash": dedup_incremental_phash,
-    "dedup_incremental_audio": dedup_incremental_audio,
-    "dedup_incremental_video": dedup_incremental_video,
-    "multimodal_audio_dedup": multimodal_audio_dedup,
-    "multimodal_video_dedup": multimodal_video_dedup,
-    "assertion_invalid_rows": assertion_invalid_rows,
-    "assertion_metrics": assertion_metrics,
-    "assertion_window_context": assertion_window_context,
-    "customers_without_events": customers_without_events,
-    "decontaminate_overlap": decontaminate_overlap,
-    "dedup_embedding": dedup_embedding,
-    "dedup_exact": dedup_exact,
-    "dedup_fingerprint": dedup_fingerprint,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_simhash": dedup_simhash,
-    "diff_orders": diff_orders,
-    "diff_orders_changed_only": diff_orders_changed_only,
-    "events_json_props": events_json_props,
-    "latest_event_per_user": latest_event_per_user,
-    "outliers_totalprice": outliers_totalprice,
-    "salted_join_revenue": salted_join_revenue,
-    "similarity_ann": similarity_ann,
-    "similarity_ivf": similarity_ivf,
-    "similarity_topk": similarity_topk,
-    "text_fingerprints": text_fingerprints,
-    "text_langid": text_langid,
-    "text_quality": text_quality,
-    "text_token_stats": text_token_stats,
-    "timeseries_resample": timeseries_resample,
-    "view_cube_revenue": view_cube_revenue,
-}

@@ -4,8 +4,7 @@ A diff (outer join on keys) or any repeated join/groupBy on the same keys
 pays one full shuffle per side per run. Writing both sides bucketed (and
 sorted) on the join keys moves that cost to write time ONCE: Spark's
 bucketed scan then feeds sort-merge join directly — zero Exchange, zero
-Sort in the per-run plan (verified by tests/test_bucketing.py via
-``assert_no_exchange``).
+Sort in the per-run plan (verified by tests/test_bucketing.py).
 
 At cluster scale choose ``num_buckets`` ≈ input_size / 128 MB, and keep
 it identical on both sides — mismatched bucket counts fall back to a
@@ -15,7 +14,7 @@ match or one divides the other with bucketed-scan coalescing enabled).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -33,13 +32,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*bucket_cols)
     writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains any Exchange (shuffle)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" in plan
