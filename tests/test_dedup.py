@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from topnotch_spark.operators.dedup import (
     embedding_near_dups,
@@ -170,8 +171,8 @@ def test_dedup_persist_lifecycle(spark):
     dedup_scope releases every tracked intermediate, storage returns to
     baseline."""
     from topnotch_spark.runtime import (
-        _PERSISTED,
         dedup_scope,
+        snapshot_intermediates,
         unpersist_intermediates,
     )
 
@@ -203,8 +204,8 @@ def test_dedup_persist_lifecycle(spark):
             minhash_lsh_dedup(df, "doc_id", "text").count()
             ngram_jaccard_pairs(df, "doc_id", "text").count()
             simhash_dedup(df, "doc_id", "text").count()
-            assert len(_PERSISTED) >= 3
-        assert len(_PERSISTED) == 0
+            assert len(snapshot_intermediates()) >= 3
+        assert not snapshot_intermediates()
     assert settled_count(base) <= base
 
 
@@ -220,7 +221,8 @@ def test_release_new_intermediates_identity_scoping(spark):
     # snapshot-scoped release frees exactly the post-snapshot entries,
     # preserving the pre-existing one
     assert runtime.release_new_intermediates(snap) == 2
-    assert runtime._PERSISTED == [a]
+    assert runtime.snapshot_intermediates() == snap
+    assert a.storageLevel != StorageLevel.NONE
     assert runtime.unpersist_intermediates() == 1
 
 

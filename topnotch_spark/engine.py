@@ -30,6 +30,7 @@ from topnotch_spark.plans.parser import collect_errors, parse_commands
 from topnotch_spark.plans.readers import FileReader, RESTReader
 from topnotch_spark.reports.model import assertion_group_to_json
 from topnotch_spark.reports.writers import get_writer
+from topnotch_spark.runtime import spill_to
 from topnotch_spark.sources.inputs import load_input
 from topnotch_spark.sources.outputs import store_output
 
@@ -49,9 +50,6 @@ class TnEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.registry: dict[str, DataFrame] = {}
-        # outputs persisted for ``cache: true``, released by the plan
-        # run that persisted them
-        self._cached: list[DataFrame] = []
 
     # ---- plan-level entry -------------------------------------------------
     def run(
@@ -83,20 +81,14 @@ class TnEngine:
                 msg,
             )
 
-        # plan-level "checkpointDir": spill dedup-family intermediates to
-        # parquet under this dir for the duration of the plan (the 100 TB
-        # valve — see runtime.set_checkpoint_dir)
-        from topnotch_spark.runtime import set_checkpoint_dir
-
+        # plan-level "checkpointDir": spill dedup-family intermediates and
+        # iterative rounds to parquet under this dir for the duration of
+        # the plan (the 100 TB valve — see runtime.spill_to)
         ckpt = root.get("checkpointDir") if isinstance(root, dict) else None
-        prev = set_checkpoint_dir(ckpt) if ckpt else None
-        try:
+        with spill_to(ckpt):
             return self.execute_commands(
                 cmds, report_key or os.path.basename(plan_path), writer
             )
-        finally:
-            if ckpt:
-                set_checkpoint_dir(prev)
 
     # ---- command loop -----------------------------------------------------
     def execute_commands(self, cmds: list[Command], report_key: str, writer) -> int:
@@ -112,27 +104,20 @@ class TnEngine:
         )
 
         snap = snapshot_intermediates()
-        cached_mark = len(self._cached)
         num_failed = 0
         try:
             for cmd in cmds:
                 num_failed += self.run_command(cmd, writer)
             writer.write_report(report_key)
         finally:
-            # release shingle/signature tables persisted by dedup-family
-            # commands during THIS plan (identity-snapshot-scoped, so a
-            # concurrent engine's or an enclosing dedup_scope's entries
-            # are left alone even when interleaved): a long-lived
-            # session running many plans must not accumulate
-            # MEMORY_AND_DISK intermediates. Registry outputs stay
-            # valid — access after this point just recomputes.
-            release_new_intermediates(snap)
-            # likewise the ``cache: true`` outputs: a pinned output would
-            # answer for any later plan whose plan matches it (same
-            # source path), even after its files were rewritten
-            for df in self._cached[cached_mark:]:
-                df.unpersist()
-            del self._cached[cached_mark:]
+            # free what THIS plan persisted (identity-snapshot-scoped):
+            # intermediates, their parquet spills and ``cache: true``
+            # outputs (a pinned output would answer for a later plan that
+            # reads rewritten files). The checkpoints operators hand to
+            # their outputs stay, so those outputs stay readable; under a
+            # checkpointDir an output whose lineage reads a deleted
+            # persist spill (k_core, the dedup family) does not.
+            release_new_intermediates(snap, keep_owned=True)
         return num_failed
 
     def run_command(self, cmd: Command, writer=None) -> int:
@@ -177,7 +162,7 @@ class TnEngine:
 
     # ---- helpers ----------------------------------------------------------
     def _store(self, df: DataFrame, cmd: Command) -> DataFrame:
-        df = store_output(
+        return store_output(
             self.spark,
             df,
             cmd.output_key,
@@ -194,9 +179,6 @@ class TnEngine:
             bucket_by=list(cmd.bucket_by) or None,
             num_buckets=cmd.num_buckets,
         )
-        if cmd.cache:
-            self._cached.append(df)
-        return df
 
     @staticmethod
     def _cmd_echo(cmd: Command) -> dict:

@@ -23,14 +23,13 @@ Beyond", SoCC 2014, without its per-round edge-set rewriting): a
 convergence failure raises rather than silently under-merging.
 
 Scale notes (100 TB):
-- ``localCheckpoint`` after every round truncates lineage — without it
-  the plan doubles per iteration and Catalyst analysis time explodes.
-  On a real cluster prefer ``spark.sparkContext.setCheckpointDir`` +
-  ``checkpoint()`` (survives executor loss; localCheckpoint does not).
-  Prior rounds' checkpoint blocks are reclaimed asynchronously by
-  Spark's ContextCleaner once the loop rebinds the variable (the old
-  frame goes unreferenced), so steady-state footprint is ~2 label
-  frames, not O(rounds).
+- ``runtime.truncate_round`` after every round truncates lineage —
+  without it the plan doubles per iteration and Catalyst analysis time
+  explodes. It takes a local checkpoint, or a parquet roundtrip under a
+  checkpoint dir (survives executor loss; a local checkpoint does not),
+  and frees the previous round's storage once the new round is
+  materialized, so the steady-state footprint is one label frame, not
+  O(rounds).
 - The label frame is (id, comp): two longs per *node in a dup pair* —
   much smaller than the corpus, since most docs are in no pair.
 - Convergence check is a 1-row count per round (bounded driver data).
@@ -42,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from topnotch_spark.runtime import delete_path, own_paths, truncate_round
+from topnotch_spark.runtime import own_paths, truncate_round
 
 
 def connected_components(
@@ -77,7 +76,7 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # start: own id, tightened by direct neighbors (saves one round)
-    labels, ckpt_path = truncate_round(
+    labels, ckpt = truncate_round(
         sym.groupBy("a")
         .agg(F.min("b").alias("nbr_min"))
         .select(
@@ -126,19 +125,17 @@ def connected_components(
                         F.coalesce(F.col("jump_comp"), F.col("new_comp")),
                     ).alias("new_comp"),
                 )
-            proposed, ckpt_path = truncate_round(proposed, ckpt_path)
+            proposed, ckpt = truncate_round(proposed, ckpt)
             changed = (
                 proposed.filter(F.col("new_comp") != F.col("comp")).limit(1).count()
             )
             labels = proposed.select("id", F.col("new_comp").alias("comp"))
             if changed == 0:
-                # the returned frame reads the final round's parquet:
-                # hand the path to the registry so dedup_scope / the
-                # plan engine deletes it on release
-                own_paths(labels, [ckpt_path])
+                # the returned frame reads the final round's checkpoint:
+                # it is freed with the output (runtime.own_paths)
+                own_paths(labels, [ckpt])
                 return labels
-        if ckpt_path is not None:
-            delete_path(sym.sparkSession, ckpt_path)
+        # the last round is freed with the enclosing scope or plan run
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "pathological chain graph — use more rounds or star contraction"

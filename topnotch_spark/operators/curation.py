@@ -1336,8 +1336,8 @@ def split_leakage(
 
     The shared shingle frame is registered in the dedup persist
     registry; consume inside ``dedup_scope()`` or call
-    ``unpersist_intermediates()`` to release it (under
-    ``set_checkpoint_dir`` the persist is an eager parquet spill).
+    ``unpersist_intermediates()`` to release it (under a checkpoint dir
+    the persist is an eager parquet spill).
     """
     from topnotch_spark.operators.dedup import shingle_arrays
 

@@ -688,8 +688,8 @@ def psi_trend(
     The count grid is registered in the dedup persist registry (it
     feeds the reference slice, the per-period totals, and the PSI
     terms); consume inside ``dedup_scope()`` or call
-    ``unpersist_intermediates()`` to release it (under
-    ``set_checkpoint_dir`` the persist is an eager parquet spill)."""
+    ``unpersist_intermediates()`` to release it (under a checkpoint dir
+    the persist is an eager parquet spill)."""
     base = df.filter(
         F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
     ).select(

@@ -35,7 +35,7 @@ Execution shape / 100 TB notes:
   map-side-combined groupBy on dst + one join back to the node frame.
   Edges and degrees are persisted once (registered in the dedup-scope
   registry); per-round lineage is truncated exactly like
-  cluster.connected_components (localCheckpoint, or a parquet
+  cluster.connected_components (a local checkpoint, or a parquet
   roundtrip when the checkpoint dir is set — the executor-loss-safe
   real-cluster path).
 - Triangle counting uses the ordered-wedge trick (a<b<c): wedges are
@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from topnotch_spark.runtime import own_paths, persist, truncate_round
+from topnotch_spark.runtime import Handle, own_paths, persist, truncate_round
 
 # lineage-truncation cadence of the pagerank/PPR walk loops: one
 # checkpoint every _CKPT_CADENCE rounds (plus the final round).
@@ -170,7 +170,7 @@ def pagerank(
     ``broadcast_ranks`` (default True) hints the node-sized shares
     frame into the per-round edge join as a broadcast: it is |nodes|
     rows — orders of magnitude smaller than |edges| — and per-round
-    localCheckpoints erase its size stats, so without the hint Spark
+    local checkpoints erase its size stats, so without the hint Spark
     sort-merges the multi-million-row edge frame every round AND
     breaks the exchange-free groupBy(dst) (see the sym partitioning
     note in the body). Set False for web-scale graphs whose node set
@@ -215,7 +215,7 @@ def pagerank(
         )
     )
     ranks = tpf.select("node", F.col("__r0__").alias("rank"), "outdeg")
-    ckpt = None
+    ckpt: Handle = ()  # iters=0: no round, nothing to own
     hint = F.broadcast if broadcast_ranks else (lambda df: df)
     prev = ranks
     realized = iters
@@ -402,11 +402,11 @@ def k_core(
         core_deg = kept_edges.groupBy("src").agg(
             F.count(F.lit(1)).alias("core_degree")
         )
-        # prev-path handoff: round r's survivor set is superseded the
-        # moment round r+1's is materialized — truncate_round deletes
-        # the previous round's files only after writing the new ones.
-        # The LAST path backs `alive` through the final recomputation,
-        # so it is registered on the output for release-time deletion.
+        # prev-handle handoff: round r's survivor set is superseded the
+        # moment round r+1's is materialized — truncate_round frees the
+        # previous round only after materializing the new one. The LAST
+        # round backs `alive` through the final recomputation, so it is
+        # handed to the output for release with it.
         new_alive, ckpt = truncate_round(
             core_deg.filter(F.col("core_degree") >= k).select("src"), ckpt
         )
@@ -431,17 +431,16 @@ def k_core(
             "core_degree",
         )
     )
-    if ckpt is not None:
-        own_paths(out, [ckpt])
+    own_paths(out, [ckpt])
     return out
 
 
 def _truncate_probe(
     ranks: DataFrame,
     prev: DataFrame,
-    ckpt: str | None,
+    ckpt: Handle,
     tol_scaled: int | None,
-) -> tuple[DataFrame, str | None, bool]:
+) -> tuple[DataFrame, Handle, bool]:
     """Close a walk segment: truncate lineage, and when tol-gated also
     probe convergence — computing the segment exactly ONCE. Without a
     tolerance the checkpoint stays lazy (eager=False: zero jobs during
@@ -449,9 +448,8 @@ def _truncate_probe(
     so the delta probe's collect materializes it and the (eager)
     checkpoint reads the cache instead of recomputing the 2-round plan
     — previously the probe and the lazy checkpoint each computed it.
-    Probe-before-truncate also keeps the parquet-checkpoint path safe:
-    ``prev``'s files are deleted by truncate_round only after the
-    probe has read them."""
+    Probe-before-truncate also keeps ``prev`` readable: truncate_round
+    frees it only after the probe has read it."""
     if tol_scaled is None:
         ranks, ckpt = truncate_round(ranks, ckpt, eager=False)
         return ranks, ckpt, False
@@ -648,7 +646,7 @@ def personalized_pagerank(
         )
     )
     ranks = tpf.select("node", F.col("__r0__").alias("rank"), "outdeg", "wout")
-    ckpt = None
+    ckpt: Handle = ()  # iters=0: no round, nothing to own
     hint = F.broadcast if broadcast_ranks else (lambda df: df)
     prev = ranks
     realized = iters

@@ -70,9 +70,10 @@ def bm25_topk(
     corpus). N and avgdl are a 1-row broadcast bounds frame. Call inside
     ``dedup_scope()`` (or call ``unpersist_intermediates()``) to release
     the tf table after the result is consumed. Note: when a checkpoint
-    dir is set (``set_checkpoint_dir`` / plan ``checkpointDir``) the
-    persist spills to parquet EAGERLY at construction time — this
-    builder then triggers a Spark job on call, like the dedup family.
+    dir is set (``dedup_scope(checkpoint_dir=...)`` / plan
+    ``checkpointDir``) the persist spills to parquet EAGERLY at
+    construction time — this builder then triggers a Spark job on call,
+    like the dedup family.
     """
     if not queries:
         raise ValueError("bm25_topk: queries must be non-empty")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from topnotch_spark.functions.vectors import dot, norm, srp_bucket
 from topnotch_spark.runtime import (
-    delete_path,
+    Handle,
     own_paths,
     persist,
     truncate_round,
@@ -377,9 +377,10 @@ def ivf_topk(
 
     The default centroid seed frame is registered in the dedup persist
     registry; consume inside ``dedup_scope()`` or call
-    ``unpersist_intermediates()`` to release it (under
-    ``set_checkpoint_dir`` the persist spills to parquet EAGERLY at
-    construction time, like the dedup family).
+    ``unpersist_intermediates()`` to release it (under a checkpoint dir
+    — ``dedup_scope(checkpoint_dir=...)`` or a plan's ``checkpointDir``
+    — the persist spills to parquet EAGERLY at construction time, like
+    the dedup family).
     """
     if centroids is not None:
         cents = centroids.select(
@@ -648,7 +649,7 @@ def kmeans_centroids(
     cents = [
         (i, [float(x) for x in r["v"]]) for i, r in enumerate(seed_rows)
     ]
-    assignments = None
+    assignments = ckpt = None
     for _ in range(max_iter):
         cdf = spark.createDataFrame(
             cents, "centroid_id int, cvec array<double>"
@@ -663,13 +664,16 @@ def kmeans_centroids(
             scored.withColumn("__rn__", F.row_number().over(w))
             .filter(F.col("__rn__") == 1)
             .select("id", "v", "centroid_id")
-            .localCheckpoint(eager=True)
         )
         if assignments is not None:
+            # the previous assignment rides along, so the change probe
+            # reads only this round (truncate_round frees the last one)
+            prev = assignments.select("id", F.col("centroid_id").alias("__prev__"))
+            new_assign = new_assign.join(prev, "id")
+        new_assign, ckpt = truncate_round(new_assign, ckpt, local=True)
+        if assignments is not None:
             changed = (
-                new_assign.alias("n")
-                .join(assignments.alias("o"), "id")
-                .filter(F.col("n.centroid_id") != F.col("o.centroid_id"))
+                new_assign.filter(F.col("centroid_id") != F.col("__prev__"))
                 .limit(1)
                 .count()
             )
@@ -712,7 +716,10 @@ def kmeans_centroids(
         "centroid",
         F.coalesce("n_members", F.lit(0)).alias("n_members"),
     )
-    return centroids, assignments.select("id", "centroid_id")
+    out = assignments.select("id", "centroid_id")
+    # both frames read the final round's checkpoint
+    own_paths(out, [ckpt])
+    return centroids, out
 
 
 def kmeans_centroids_exact(
@@ -833,10 +840,10 @@ def kmeans_centroids_exact(
             )
             for cid, vec in cents
         ]
-    # localCheckpoint: the counts collect below and the caller's use of
+    # checkpointed: the counts collect below and the caller's use of
     # `assignments` share one materialization instead of re-running the
     # final assignment pass
-    assignments = assign(cents).localCheckpoint()
+    assignments, ckpt = truncate_round(assign(cents), local=True)
     # member counts collected driver-side (k rows — the same bounded
     # budget as the mean matrix) so the returned centroids frame is ONE
     # LocalTableScan: every downstream broadcast cross join against it
@@ -852,7 +859,9 @@ def kmeans_centroids_exact(
         [(cid, vec, int(counts.get(cid, 0))) for cid, vec in cents],
         "centroid_id int, centroid array<double>, n_members long",
     )
-    return centroids, assignments.select("id", "centroid_id")
+    out = assignments.select("id", "centroid_id")
+    own_paths(out, [ckpt])
+    return centroids, out
 
 
 def embedding_norm_outliers(
@@ -1783,21 +1792,19 @@ def kcenter_select(
         .filter(F.col("vid") != F.col("__pid__"))
         .select("vid", "v", "__n__", d_micro.alias("__mind__"))
     )
-    # Two checkpoint families with DIFFERENT lifetimes: the running
-    # state `st` is genuinely superseded once the next round's state is
-    # materialized (prev-path handoff, the pagerank pattern — each pick
-    # is checkpointed separately BEFORE the handoff deletes the state it
-    # was read from), while every pick's files back the final union and
-    # must live until the OUTPUT is released. Conflating the two (one
-    # shared prev path) deleted files that live frames still scanned.
+    # Two checkpoint families with DIFFERENT lifetimes: each state `st`
+    # is superseded by the next one (prev-handle handoff, after the pick
+    # read from it is checkpointed), while every pick backs the final
+    # union until the OUTPUT is released.
     st, st_ckpt = truncate_round(st, None)
-    pick_paths: list[str | None] = []
+    pick_ckpts: list[Handle] = []
     for r in range(2, k + 1):
         p = st.orderBy(
             F.col("__mind__").desc(), F.col("vid").asc()
         ).limit(1)
-        p, pick_path = truncate_round(p, None)
-        pick_paths.append(pick_path)
+        # the last pick is the last state's only reader: it frees it
+        p, pick_ckpt = truncate_round(p, st_ckpt if r == k else None)
+        pick_ckpts.append(pick_ckpt)
         picks.append(
             p.select(
                 F.lit(r).alias("pick_rank"),
@@ -1825,11 +1832,7 @@ def kcenter_select(
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)
-    if st_ckpt is not None:
-        # the last state checkpoint's only consumer was the final pick,
-        # already materialized above — safe to drop immediately
-        delete_path(out.sparkSession, st_ckpt)
-    own_paths(out, pick_paths)
+    own_paths(out, pick_ckpts)
     return out
 
 

@@ -616,7 +616,7 @@ def resample_timeseries(
     ``dedup_scope``/``unpersist_intermediates`` work for direct callers
     — and everything else (min/max bounds, distinct groups, the dense
     spine) derives from it, so the raw data is scanned once. Persist
-    keeps lineage (unlike a localCheckpoint), so losing a cached block
+    keeps lineage (unlike a local checkpoint), so losing a cached block
     on a real cluster recomputes instead of failing the job.
     Scan-bound at any scale."""
     win = F.window(F.col(ts_col), bucket)

@@ -21,7 +21,7 @@ from topnotch_spark.functions.text import (
     stopword_ratio,
     tokens,
 )
-from topnotch_spark.runtime import own_paths, persist, truncate_round
+from topnotch_spark.runtime import Handle, own_paths, persist, truncate_round
 
 # tiny marker lexicons for the language-ID heuristic (n-gram/stopword
 # scoring); deliberately small + deterministic
@@ -1056,7 +1056,7 @@ def bpe_merge_sequence(
         raise ValueError("bpe_merge_sequence: n_merges must be >= 1")
     # ``vocab`` optionally supplies a precomputed :func:`bpe_corpus_vocab`
     # (word, s, wc) frame so a train→apply pipeline reduces the corpus once
-    bests, _, ckpt = _bpe_rounds(
+    bests, _, ckpts = _bpe_rounds(
         vocab if vocab is not None else _bpe_vocab(df, text_col),
         n_merges,
         apply_last=False,
@@ -1077,7 +1077,7 @@ def bpe_merge_sequence(
         )
         .orderBy("merge_rank")
     )
-    own_paths(result, [ckpt])
+    own_paths(result, ckpts)
     return result
 
 
@@ -1139,11 +1139,12 @@ def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
 
 def _bpe_rounds(
     state0: DataFrame, n_merges: int, apply_last: bool
-) -> tuple[list[DataFrame], DataFrame, str | None]:
+) -> tuple[list[DataFrame], DataFrame, list[Handle]]:
     """``n_merges`` BPE rounds over a (word, s, wc) state frame:
     pair-count → top-1 (sentinel-padded so an exhausted corpus keeps an
     identity state instead of an empty one) → greedy merge-apply.
-    Returns (per-round 1-row best frames, final state, checkpoint path).
+    Returns (per-round 1-row best frames, final state, the checkpoint
+    handles both read, for the caller's :func:`own_paths`).
     ``apply_last=False`` skips the merge-apply of the final round for
     callers that only consume the merge sequence. Round lineage is
     truncated per round (connected-components checkpoint helper); every
@@ -1160,6 +1161,7 @@ def _bpe_rounds(
         F.lit(-1).cast("long").alias("n_occurrences"),
     )
     bests: list[DataFrame] = []
+    best_ckpts: list[Handle] = []
     for r in range(1, n_merges + 1):
         counts = (
             state.filter(F.expr(f"size({_BPE_SYMS}) >= 2"))
@@ -1167,17 +1169,20 @@ def _bpe_rounds(
             .groupBy("pair")
             .agg(F.sum("wc").alias("n_occurrences"))
         )
-        best = (
+        # 1-row frame consumed by BOTH the output union and the next
+        # round's merge-apply: checkpoint once so neither consumer
+        # recomputes the round's pair count
+        best, best_ckpt = truncate_round(
             counts.unionByName(sentinel)
             .orderBy(F.col("n_occurrences").desc(), F.col("pair").asc())
             .limit(1)
-            .select(F.lit(r).alias("merge_rank"), "pair", "n_occurrences")
-            # 1-row frame consumed by BOTH the output union and the next
-            # round's merge-apply: checkpoint once so neither consumer
-            # recomputes the round's pair count
-            .localCheckpoint(eager=False)
+            .select(F.lit(r).alias("merge_rank"), "pair", "n_occurrences"),
+            None,
+            eager=False,
+            local=True,
         )
         bests.append(best)
+        best_ckpts.append(best_ckpt)
         if r < n_merges or apply_last:
             state, ckpt = truncate_round(
                 state.crossJoin(F.broadcast(best.select("pair"))).select(
@@ -1193,7 +1198,7 @@ def _bpe_rounds(
                 ),
                 ckpt,
             )
-    return bests, state, ckpt
+    return bests, state, [*best_ckpts, ckpt]
 
 
 def bpe_fertility_by_group(
@@ -1226,7 +1231,7 @@ def bpe_fertility_by_group(
     ``id_col`` is unused (uniform text-operator signature)."""
     if n_merges < 1:
         raise ValueError("bpe_fertility_by_group: n_merges must be >= 1")
-    _, final, ckpt = _bpe_rounds(
+    _, final, ckpts = _bpe_rounds(
         _bpe_vocab(df, text_col), n_merges, apply_last=True
     )
     word_sub = final.select(
@@ -1258,7 +1263,7 @@ def bpe_fertility_by_group(
             ).alias("chars_per_subword"),
         )
     )
-    own_paths(result, [ckpt])
+    own_paths(result, ckpts)
     return result
 
 
@@ -1672,10 +1677,10 @@ def _unigram_train(
     vocab_size: int,
     n_rounds: int,
     words: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, str | None]:
+) -> tuple[DataFrame, DataFrame, Handle]:
     """The unigram-LM EM loop shared by :func:`unigram_lm_vocab` and
     :func:`unigram_fertility_by_group`: returns (words, final lp frame,
-    checkpoint path). ``words`` is persisted in the runtime registry;
+    its checkpoint handle). ``words`` is persisted in the runtime registry;
     ``lp`` is checkpoint-truncated per round."""
     if n_rounds < 1:
         raise ValueError("unigram_lm_vocab: n_rounds must be >= 1")
@@ -2799,8 +2804,8 @@ def _wordpiece_walk(
     and :func:`wordpiece_fertility_by_group` (per-slice audit).
     Returns ``(word_sub, checkpoints)``: one row per fully-walkable
     word — (word, __nsub__ subword count, __nchr__ char count) — plus
-    the checkpoint paths the caller must register on its output frame
-    for release-time deletion. Unsegmentable words (stuck at a
+    the checkpoint handles the caller hands to its output frame
+    (:func:`own_paths`). Unsegmentable words (stuck at a
     character the vocab lacks) never reach pos == len and are excluded,
     identically on both engines. See :func:`wordpiece_segment` for the
     plan-size discipline notes (eager truncation of the longest-match
@@ -2840,11 +2845,9 @@ def _wordpiece_walk(
     # shape. eager=False keeps the whole walk ONE job (each lazy
     # checkpoint materializes once and both same-round references share
     # it — the pagerank fixed-iteration convention; measured: 12 eager
-    # rounds cost ~30 s of scheduled jobs at sf0.01, lazy ~2 s). The
-    # prev-path handoff is valid on the parquet path (each state
-    # supersedes the last once materialized); the FINAL path backs
-    # word_sub through the output, so the caller registers it for
-    # release-time deletion.
+    # rounds cost ~30 s of scheduled jobs at sf0.01, lazy ~2 s). A lazy
+    # round's handle carries the rounds it reads; the FINAL handle backs
+    # word_sub through the output, so the caller hands it to the output.
     state, ckpt = truncate_round(
         words.select(
             "word",

@@ -1,64 +1,66 @@
-"""Lifecycle of what the engine materializes and later deletes.
+"""Lifecycle of what a scope or a plan run materializes: one registry
+owns it all. Each unit is registered when made: a frame persisted
+``MEMORY_AND_DISK`` (:func:`persist`, :func:`cache`), a local checkpoint
+(:func:`truncate_round`), or a parquet dir (a spill or round under a
+checkpoint dir, or a temp root handed to :func:`own_paths`).
 
-One owner for three things: the registry of persisted intermediates,
-their parquet checkpoints (and the per-round checkpoints of iterative
-operators), and the paths a query creates and must remove again.
-Operators call :func:`persist`, :func:`persist_if_large`,
-:func:`truncate_round` and :func:`own_paths`; nothing else touches the
-registry state.
+One release rule, in both checkpoint modes: :func:`truncate_round`
+frees a round once its successor is materialized; ``dedup_scope()``'s
+exit frees every unit made inside it; a plan run frees the same except
+what operators hand their outputs through :func:`own_paths`, which
+:func:`unpersist_intermediates` or an enclosing scope frees.
 
-Cache lifecycle: minhash/jaccard/simhash persist their shingle tables
-(multi-branch plans); the returned DataFrame is lazily derived from the
-cached one, so the operator itself cannot unpersist. Every such persist
-is tracked: consume the result (an action), then call
-``unpersist_intermediates()`` — or wrap the whole consume in a
-``dedup_scope()`` context manager — to release the storage without the
-``spark.catalog.clearCache()`` sledgehammer. The plan engine does this
-automatically at the end of every plan run
-(engine.execute_commands → release_new_intermediates), so back-to-back
-plans in one session do not accumulate storage; direct API callers
-manage the scope themselves. Unpersisting before the result is consumed
-is safe but recomputes the lineage. At real scale, replace the persist
-with a parquet checkpoint (SCALE.md §6).
+Consume a result inside its scope: a released persist recomputes, a
+released checkpoint cannot (so after a plan run under a checkpoint dir,
+an output whose lineage reads a ``persist`` spill fails). The checkpoint
+dir (:func:`spill_to`) is per thread and block; the registry is
+process-wide, so a scope also frees what other threads made inside it.
 """
 
 from __future__ import annotations
 
+import threading
+import uuid
 from contextlib import contextmanager
-from typing import Iterator
+from contextvars import ContextVar
+from dataclasses import dataclass
+from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from topnotch_spark.sources.inputs import write_read_back
 
-# Intermediates persisted by the operators, in creation order.
-# Intentionally process-global: the plan engine frees its own plan's
-# entries per run (snapshot-scoped), and direct API callers use
-# unpersist_intermediates()/dedup_scope().
-_PERSISTED: list[DataFrame] = []
 
-# When set, persist() spills intermediates to parquet under this
-# directory instead of executor storage (SCALE.md §6: at 100 TB the
-# shingle/signature tables of a multi-branch dedup plan do not fit the
-# BlockManager; a parquet checkpoint also truncates lineage). Entries
-# are tracked in _CHECKPOINTED (id(df) → the paths it owns) and the
-# paths are deleted on release. Set via set_checkpoint_dir(), the
-# checkpoint_dir argument of dedup_scope(), or a plan-level
-# "checkpointDir" field.
-_CHECKPOINT_DIR: str | None = None
-_CHECKPOINTED: dict[int, list[str]] = {}
-_CHECKPOINT_SEQ = 0
+@dataclass(eq=False)
+class _Unit:
+    """A persisted frame or checkpoint RDD, or a parquet path; a plan
+    run keeps an ``owned`` one."""
+
+    spark: SparkSession
+    storage: object
+    owned: bool = False
+
+    def free(self, blocking: bool = False) -> None:
+        if isinstance(self.storage, str):
+            delete_path(self.spark, self.storage)
+        else:
+            self.storage.unpersist(blocking)
 
 
-def set_checkpoint_dir(path: str | None) -> str | None:
-    """Route subsequent intermediates to parquet under ``path`` (any
-    Hadoop-FS scheme) instead of persist(MEMORY_AND_DISK); ``None``
-    restores in-memory persist. Returns the previous setting."""
-    global _CHECKPOINT_DIR
-    prev = _CHECKPOINT_DIR
-    _CHECKPOINT_DIR = path
-    return prev
+# A truncate_round handle: the round's unit, after the units of the
+# unmaterialized (lazy) rounds it still reads.
+Handle = tuple[_Unit, ...]
+
+# Every unit made and not yet freed, in creation order; _LOCK makes
+# picking units to free and unregistering them one step.
+_REGISTRY: list[_Unit] = []
+_LOCK = threading.Lock()
+
+# Where persist() and truncate_round() spill; None: executor storage.
+_checkpoint_dir: ContextVar[str | None] = ContextVar(
+    "topnotch_checkpoint_dir", default=None
+)
 
 
 def delete_path(spark: SparkSession, path: str) -> None:
@@ -72,33 +74,46 @@ def delete_path(spark: SparkSession, path: str) -> None:
         pass
 
 
-def _next_checkpoint_path(prefix: str) -> str:
-    global _CHECKPOINT_SEQ
-    _CHECKPOINT_SEQ += 1
-    return f"{_CHECKPOINT_DIR.rstrip('/')}/{prefix}_{_CHECKPOINT_SEQ}"
+def _register(spark: SparkSession, storage, owned: bool = False) -> _Unit:
+    unit = _Unit(spark, storage, owned)
+    _REGISTRY.append(unit)
+    return unit
+
+
+def _free(units: Iterable[_Unit], blocking: bool = False) -> int:
+    """Unregister and free ``units``; skip those another release took."""
+    with _LOCK:
+        live = set(_REGISTRY)
+        units = [u for u in units if u in live]
+        for unit in units:
+            _REGISTRY.remove(unit)
+    for unit in units:
+        unit.free(blocking)
+    return len(units)
+
+
+def _spill(df: DataFrame, prefix: str) -> tuple[DataFrame, _Unit]:
+    path = f"{_checkpoint_dir.get().rstrip('/')}/{prefix}_{uuid.uuid4().hex}"
+    out = write_read_back(df, path)
+    return out, _register(out.sparkSession, path)
+
+
+def cache(df: DataFrame) -> DataFrame:
+    """persist(MEMORY_AND_DISK) + register, whatever the checkpoint dir
+    (``cache: true`` plan outputs). A plan cached already is returned
+    as is and not registered: whoever cached it releases it."""
+    if df.storageLevel == StorageLevel.NONE:
+        _register(df.sparkSession, df.persist(StorageLevel.MEMORY_AND_DISK))
+    return df
 
 
 def persist(df: DataFrame) -> DataFrame:
     """Materialize + register an intermediate for reuse across branches:
-    parquet checkpoint when a checkpoint dir is set (scale path), else
-    persist(MEMORY_AND_DISK). Released by unpersist_intermediates() /
-    release_new_intermediates().
-
-    A plan that is cached already (by an earlier persist of the same
-    plan, in this scope, an enclosing one or by the caller) is returned
-    as is and not registered again: it reads that cache, and whoever
-    cached it releases it. Persisting it again would be a no-op in Spark
-    ("Asked to cache already cached data")."""
-    if _CHECKPOINT_DIR is not None:
-        path = _next_checkpoint_path("tn_ckpt")
-        out = write_read_back(df, path)
-        own_paths(out, [path])
-        return out
-    if df.storageLevel != StorageLevel.NONE:
-        return df
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(out)
-    return out
+    an eager parquet spill when a checkpoint dir is set (scale path),
+    else :func:`cache`."""
+    if _checkpoint_dir.get() is None:
+        return cache(df)
+    return _spill(df, "tn_ckpt")[0]
 
 
 def _estimated_input_bytes(df: DataFrame) -> int | None:
@@ -156,94 +171,85 @@ def persist_if_large(
 
 
 def truncate_round(
-    df: DataFrame, prev_path: str | None, eager: bool = True
-) -> tuple[DataFrame, str | None]:
-    """Per-round lineage truncation of an iterative operator:
-    localCheckpoint normally; a parquet roundtrip when the checkpoint
-    dir is set (survives executor loss — the real-cluster path).
-    Deletes the previous round's files once the new round is
-    materialized. ``eager=False`` defers the local checkpoint to the
-    first action (fewer scheduled jobs for fixed-iteration loops that
-    never inspect intermediate rounds; the convergence-checked CC loop
-    keeps the eager default, and the parquet path is inherently eager).
-    The caller hands the final round's path to :func:`own_paths` on its
-    output frame."""
-    if _CHECKPOINT_DIR is None:
-        return df.localCheckpoint(eager=eager), None
-    path = _next_checkpoint_path("cc_round")
-    out = write_read_back(df, path)
-    if prev_path is not None:
-        delete_path(out.sparkSession, prev_path)
-    return out, path
-
-
-def own_paths(out: DataFrame, paths: list[str | None]) -> None:
-    """Defer deletion of ``paths`` to the release of ``out``: checkpoint
-    directories that still back ``out``'s lineage (an iterative loop's
-    final round, a greedy loop's per-round picks — whose anti-join /
-    union lineage still scans every round's files, so no round may
-    delete its predecessor's path eagerly) or a query's temp root. The
-    paths are keyed to ``out`` in the registry and deleted only when
-    the owning scope/run releases it. ``None`` entries (the in-memory
-    path of :func:`truncate_round`) are skipped."""
-    live = [p for p in paths if p is not None]
-    if not live:
-        return
-    if id(out) not in _CHECKPOINTED:
-        _PERSISTED.append(out)
-        _CHECKPOINTED[id(out)] = live
+    df: DataFrame,
+    prev: Handle | None = None,
+    eager: bool = True,
+    local: bool = False,
+) -> tuple[DataFrame, Handle]:
+    """Per-round lineage truncation of an iterative operator: a local
+    checkpoint, or a parquet roundtrip under a checkpoint dir (survives
+    executor loss) unless ``local``. Returns the frame and its handle;
+    the next round takes it as ``prev`` and frees it once materialized.
+    ``eager=False`` defers a local checkpoint to the first action; such
+    a handle carries its unmaterialized predecessors. The caller hands
+    the final handle to :func:`own_paths` on its output frame."""
+    if not local and _checkpoint_dir.get() is not None:
+        out, unit = _spill(df, "cc_round")
+        eager = True
     else:
-        _CHECKPOINTED[id(out)] += live
+        out = df.localCheckpoint(eager=eager)
+        unit = _register(out.sparkSession, out._jdf.logicalPlan().rdd())
+    if not eager:
+        return out, (*(prev or ()), unit)
+    _free(prev or ())
+    return out, (unit,)
 
 
-def _release(df: DataFrame, blocking: bool = False) -> None:
-    """Free one registry entry: delete the paths it owns or unpersist."""
-    paths = _CHECKPOINTED.pop(id(df), None)
-    if paths is None:
-        df.unpersist(blocking)
-    for p in paths or ():
-        delete_path(df.sparkSession, p)
+def own_paths(out: DataFrame, handles: list[str | Handle]) -> None:
+    """Hand storage that backs ``out`` (:func:`truncate_round` handles,
+    or parquet paths such as a query's temp root) to ``out``: the scope
+    that made it frees it; a plan run keeps it for its outputs."""
+    for handle in handles:
+        if isinstance(handle, str):
+            _register(out.sparkSession, handle, owned=True)
+        else:
+            for unit in handle:
+                unit.owned = True
 
 
-def snapshot_intermediates() -> set[int]:
-    """Identity snapshot of the current registry; pass to
-    ``release_new_intermediates`` to free exactly the entries created
-    AFTER the snapshot — correct even when another engine or scope in
-    the same process interleaves its own persists (a positional mark
-    would pop the other owner's live tables)."""
-    return {id(df) for df in _PERSISTED}
+def snapshot_intermediates() -> set[_Unit]:
+    """Identity snapshot of the registry: ``release_new_intermediates``
+    frees exactly the units made after it, on any thread (a positional
+    mark would pop another owner's units)."""
+    return set(_REGISTRY)
 
 
 def release_new_intermediates(
-    snapshot: set[int], blocking: bool = False
+    snapshot: set[_Unit], blocking: bool = False, keep_owned: bool = False
 ) -> int:
-    """Unpersist and remove every registry entry not in ``snapshot``,
-    leaving pre-existing (other owners') entries untouched and in
-    order. Returns the number released."""
-    mine = [df for df in _PERSISTED if id(df) not in snapshot]
-    _PERSISTED[:] = [df for df in _PERSISTED if id(df) in snapshot]
-    for df in mine:
-        _release(df, blocking)
-    return len(mine)
+    """Free every registered unit not in ``snapshot`` (other owners'
+    units stay); ``keep_owned`` also keeps what :func:`own_paths` handed
+    to outputs (a plan run's rule). Returns the number freed."""
+    new = [u for u in _REGISTRY if u not in snapshot]
+    return _free([u for u in new if not (keep_owned and u.owned)], blocking)
 
 
 def unpersist_intermediates(blocking: bool = False) -> int:
-    """Release every registered intermediate so far (the whole
-    registry — use snapshot/release for scoped cleanup).
+    """Free the whole registry (use snapshot/release for scoped
+    cleanup) once the results are consumed. Returns the number freed."""
+    return _free(_REGISTRY[:], blocking)
 
-    Call after the returned DataFrames have been consumed (actions run).
-    Returns the number of tables released. Safe to call twice."""
-    n = 0
-    while _PERSISTED:
-        _release(_PERSISTED.pop(), blocking)
-        n += 1
-    return n
+
+@contextmanager
+def spill_to(checkpoint_dir: str | None) -> Iterator[None]:
+    """Spill persists and rounds made in the block to parquet under
+    ``checkpoint_dir`` (any Hadoop-FS scheme; SCALE.md §6); ``None``
+    keeps the enclosing setting. Frees nothing (see dedup_scope)."""
+    if not checkpoint_dir:
+        yield
+        return
+    token = _checkpoint_dir.set(checkpoint_dir)
+    try:
+        yield
+    finally:
+        _checkpoint_dir.reset(token)
 
 
 @contextmanager
 def dedup_scope(checkpoint_dir: str | None = None) -> Iterator[None]:
-    """Scope whose exit releases intermediates created inside it
-    (identity-scoped — safe alongside other concurrent scopes)::
+    """Scope whose exit frees every unit made inside it (identity-scoped:
+    an enclosing scope's units stay; units another thread makes while it
+    is open are freed with it)::
 
         with dedup_scope():
             pairs = minhash_lsh_dedup(docs, "doc_id", "text")
@@ -254,12 +260,10 @@ def dedup_scope(checkpoint_dir: str | None = None) -> Iterator[None]:
     files are deleted on exit) — the 100 TB valve for multi-branch dedup
     plans whose shingle/signature tables exceed BlockManager capacity."""
     snap = snapshot_intermediates()
-    prev = set_checkpoint_dir(checkpoint_dir) if checkpoint_dir else _CHECKPOINT_DIR
     try:
-        yield
+        with spill_to(checkpoint_dir):
+            yield
     finally:
-        if checkpoint_dir:
-            set_checkpoint_dir(prev)
         release_new_intermediates(snap)
 
 

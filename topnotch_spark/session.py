@@ -105,6 +105,13 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
+    # Python workers inherit the JVM's environment, this process's at
+    # session start: with the directory holding this package on
+    # PYTHONPATH, its UDFs unpickle there whatever the working directory
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (root, pp)))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -4,16 +4,18 @@ Reference semantics (tnengine/TnEngine.scala:214-229): every command's
 result is registered under its outputKey; ``cache`` pins it; ``outputPath``
 overwrite-writes Parquet; ``tableName`` mounts the written Parquet as an
 external table. We use MEMORY_AND_DISK persistence (safer than the
-reference's MEMORY_ONLY default at scale) and the modern
-``spark.catalog.createTable`` (Spark 2.x ``createExternalTable`` is gone).
+reference's MEMORY_ONLY default at scale), registered with
+``runtime.cache`` so the plan run that cached an output frees it, and
+the modern ``spark.catalog.createTable`` (Spark 2.x
+``createExternalTable`` is gone).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from topnotch_spark import runtime
 
 _SINK_FORMATS = ("parquet", "orc", "csv", "json")
 
@@ -93,7 +95,7 @@ def store_output(
                 "the table catalog (plain path writes cannot carry it)"
             )
     if cache:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        df = runtime.cache(df)
     registry[output_key] = df
     if bucket_by:
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
